@@ -85,24 +85,20 @@ class Graft(spark: SparkSession, dataDir: String,
   /** `copyTree(conn, target, paths, rootIds)` (`Main.java:142-155`):
     * walk the FK graph from root ids, stream each selection's rows to
     * the target; cardinality invariant enforced per selection
-    * (`CopyUtils.java:44-46`). */
+    * (`CopyUtils.java:44-46`).
+    *
+    * One lake scan per walked level: each level's rows (child ⋉ parent
+    * keys, all columns) are pinned as it is exported, its keys derived
+    * from them, and the invariant and the payload write read the pinned
+    * rows, which are released as soon as their payload is written. The
+    * key levels are released when the verb returns. */
   def copyTree(target: Target, paths: Seq[String], rootTable: String,
                rootIds: Seq[Long]): Seq[Selection] = {
-    val sels = TreeWalk.selectAlongPath(spark, loader, paths, pks, rootTable, rootIds)
+    // the export pins each level itself (TreeWalk's doc says why)
+    val sels = TreeWalk.selectAlongPath(spark, loader, paths, pks, rootTable, rootIds, cache = false)
     try {
       sels.zipWithIndex.foreach { case (sel, i) =>
-        val rows = TreeWalk.selectRows(loader, sel)
-        // cardinality invariant, checked BEFORE the payload is written:
-        // the distinct walk-key values among the selected rows must
-        // cover every selected key. Compared on distinct counts (not
-        // raw row counts) so tables whose walk key is a non-unique
-        // stand-in — many rows per key — export without spurious errors.
-        val nKeys = sel.keys.count()
-        val nRowKeys = rows.select(sel.columns.head, sel.columns.tail: _*).distinct().count()
-        if (nRowKeys != nKeys)
-          sys.error(s"Only $nRowKeys of $nKeys keys copied for ${sel.table}")
-        val payload = target.writePayload(s"${sel.table}_$i", rows)
-        target.apply(TableLoad(sel.table, payload))
+        DumpStore.exportSelection(target, sel, s"${sel.table}_$i")
       }
       sels
     } finally TreeWalk.release(sels)

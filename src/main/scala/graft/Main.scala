@@ -149,7 +149,10 @@ object Main {
         try g.deleteTree(t, f("path"), one("root"), ids("ids"))
         finally t.close()
       case "copy" =>
-        val g = graft(); val t = target(g, one("target"))
+        // constraints come from the declared PKs: the walk's stand-in
+        // key for lineitem is not unique and cannot be a PRIMARY KEY
+        val g = new Graft(spark, one("data"), catalog.SchemaCatalog.starPks)
+        val t = target(g, one("target"))
         try g.copy(t, f("tables").flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
         finally t.close()
       case "update" =>

@@ -31,12 +31,18 @@ final case class FkEdge(
   * DataFrame (not a driver-side List) so a selection scales to key sets
   * that never fit on the driver.
   *
+  * `rows` are the selected rows themselves, every column: for a walk
+  * level, child ⋉ parent keys; for the root, the id-filtered root rows.
+  * `keys` are the distinct key columns of those rows. An export writes
+  * `rows` and checks them against `keys`, so neither goes back to the
+  * table.
+  *
   * The reference models single-column selections only (it hard-errors
   * on composite PKs, `CopyUtils.java:410-412`); this engine extends the
   * shape to multi-column keys — `columns` and the key frame's columns
   * are positionally aligned.
   */
-final case class Selection(table: String, columns: Seq[String], keys: DataFrame) {
+final case class Selection(table: String, columns: Seq[String], keys: DataFrame, rows: DataFrame) {
   require(columns.nonEmpty && keys.columns.length == columns.length,
     s"Selection columns ${columns.mkString(",")} must align with key columns ${keys.columns.mkString(",")}")
   /** The single selection column — most walks; composite selections
@@ -48,11 +54,6 @@ final case class Selection(table: String, columns: Seq[String], keys: DataFrame)
   }
   def keyCols: Seq[String] = keys.columns.toSeq
   def keyCol: String = keyCols.head
-}
-object Selection {
-  /** Single-column form (the reference's shape). */
-  def apply(table: String, column: String, keys: DataFrame): Selection =
-    Selection(table, Seq(column), keys)
 }
 
 /** Replayable unit of work — the dump stream is a sequence of these

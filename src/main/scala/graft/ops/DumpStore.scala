@@ -1,9 +1,16 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
+
+import graft.{DumpTarget, Target}
 import graft.model.{FkEdge, Operation, Selection, TableDef}
 import graft.model.Operation._
 
@@ -104,32 +111,48 @@ object DumpStore {
   }
 
   /** Keyed export of tree-walk selections (the reference's
-    * `copySelections`, `CopyUtils.java:33-47`): for each selection,
-    * materialize child ⋉ keys and enforce the cardinality invariant —
-    * rows exported must equal keys selected (`:44-46`).
-    */
+    * `copySelections`, `CopyUtils.java:33-47`) into a dump: one
+    * [[exportSelection]] per selection, in walk order, then the
+    * manifest. Call [[TreeWalk.release]] on the selections afterwards. */
   def exportSelections(
       spark: SparkSession,
-      loader: String => DataFrame,
       selections: Seq[Selection],
       dumpDir: String): Seq[Operation] = {
+    val target = new DumpTarget(spark, dumpDir)
     val ops = selections.zipWithIndex.map { case (sel, i) =>
-      val payload = s"payloads/${sel.table}_$i"
-      val rows = TreeWalk.selectRows(loader, sel)
-      // invariant first (before any bytes land): distinct walk-key
-      // values among the selected rows must cover every selected key —
-      // distinct-vs-distinct, so non-unique stand-in keys (many rows
-      // per key) don't trip it
-      val nKeys = sel.keys.distinct().count()
-      val nRowKeys = rows.select(sel.columns.head, sel.columns.tail: _*).distinct().count()
-      if (nRowKeys != nKeys)
-        sys.error(s"Only $nRowKeys of $nKeys keys copied for ${sel.table} — cardinality invariant violated")
-      rows.write.mode(SaveMode.Overwrite).parquet(s"$dumpDir/$payload")
-      TableLoad(sel.table, payload)
+      exportSelection(target, sel, s"${sel.table}_$i")
     }
-    writeManifest(spark, dumpDir, ops)
+    target.close()
     ops
   }
+
+  /** Export one selection. Pins its rows, then its keys (so the keys
+    * read the pinned rows; a walk's already-cached key level is kept as
+    * is), and enforces the cardinality invariant — rows exported must
+    * cover the keys selected (`CopyUtils.java:44-46`) — before any bytes
+    * land. The invariant compares distinct key counts, so a non-unique
+    * stand-in key (many rows per key) exports cleanly, and it reads the
+    * rows handed to the write, never the table. The rows are
+    * unpersisted once written; the keys stay pinned for the next
+    * level's join, until [[TreeWalk.release]]. */
+  private[graft] def exportSelection(target: Target, sel: Selection, name: String): Operation = {
+    sel.rows.persist(StorageLevel.MEMORY_AND_DISK)
+    val payload = try {
+      if (sel.keys.storageLevel == StorageLevel.NONE) sel.keys.persist(StorageLevel.MEMORY_AND_DISK)
+      val nKeys = partitionCount(sel.keys)
+      val nRowKeys = partitionCount(sel.rows.select(sel.columns.map(col): _*).distinct())
+      if (nRowKeys != nKeys)
+        sys.error(s"Only $nRowKeys of $nKeys keys copied for ${sel.table} — cardinality invariant violated")
+      target.writePayload(name, sel.rows)
+    } finally sel.rows.unpersist(blocking = false)
+    val op = TableLoad(sel.table, payload)
+    target.apply(op)
+    op
+  }
+
+  /** Rows of `df`, summed over its partitions: one job, without the
+    * single-partition shuffle (a job of its own) that `count()` adds. */
+  private def partitionCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
 
   /** Delete-tree export (`deleteSelections`, `CopyUtils.java:23-31`):
     * one DeleteByPk op per selection, emitted child-first (reverse walk
@@ -189,23 +212,54 @@ object DumpStore {
     } finally out.close()
   }
 
-  /** Read the manifest back as ordered Operations. Parsed by Spark's own
-    * JSON reader — no extra dependency, schema-checked. */
+  private val json = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** Read the manifest back as Operations in `seq` order. Parsed on the
+    * driver, through the same Hadoop FS stream [[writeManifest]] uses:
+    * a manifest is a few lines of metadata, not worth a Spark job. A
+    * malformed line fails the read, naming the line. */
   def readManifest(spark: SparkSession, dumpDir: String): Seq[Operation] = {
-    val df = spark.read
-      .schema("seq INT, kind STRING, table STRING, pk STRING, payload STRING, ddl STRING, statements ARRAY<STRING>")
-      .json(s"$dumpDir/manifest.jsonl")
-    df.orderBy("seq").collect().toSeq.map(rowToOp)
+    val path = new Path(s"$dumpDir/manifest.jsonl")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = new BufferedReader(new InputStreamReader(fs.open(path), StandardCharsets.UTF_8))
+    val lines = try Iterator.continually(in.readLine()).takeWhile(_ != null).toVector
+      finally in.close()
+    lines.zipWithIndex.filter(_._1.trim.nonEmpty).map { case (line, n) =>
+      try parseOp(json.readTree(line))
+      catch {
+        case e: Exception =>
+          throw new IllegalArgumentException(s"Malformed line ${n + 1} of $path: ${e.getMessage}", e)
+      }
+    }.sortBy(_._1).map(_._2)
   }
 
-  private def rowToOp(r: Row): Operation = r.getAs[String]("kind") match {
-    case "sql_list" => SqlList(r.getAs[scala.collection.Seq[String]]("statements").toSeq)
-    case "constraint_ddl" => ConstraintDdl(r.getAs[scala.collection.Seq[String]]("statements").toSeq)
-    case "table_load" => TableLoad(r.getAs[String]("table"), r.getAs[String]("payload"))
-    case "table_upsert" => TableUpsert(r.getAs[String]("table"), r.getAs[String]("pk"), r.getAs[String]("payload"))
-    case "delete_by_pk" => DeleteByPk(r.getAs[String]("table"), r.getAs[String]("pk"), r.getAs[String]("payload"))
-    case "create_or_replace" => CreateOrReplace(r.getAs[String]("table"), r.getAs[String]("ddl"))
-    case k => sys.error(s"Unknown operation kind in manifest: $k")
+  /** One manifest line → (seq, Operation); a missing or mistyped field
+    * is an error. */
+  private def parseOp(j: JsonNode): (Int, Operation) = {
+    def field(name: String): JsonNode =
+      Option(j.get(name)).filterNot(_.isNull).getOrElse(sys.error(s"missing field '$name'"))
+    def str(node: JsonNode, name: String): String = {
+      require(node.isTextual, s"'$name' must be a string, got $node")
+      node.textValue
+    }
+    def text(name: String): String = str(field(name), name)
+    def stmts: Seq[String] = {
+      val a = field("statements")
+      require(a.isArray, s"'statements' must be an array, got $a")
+      (0 until a.size).map(i => str(a.get(i), "statements"))
+    }
+    val seq = field("seq")
+    require(seq.isInt, s"'seq' must be an integer, got $seq")
+    val op = text("kind") match {
+      case "sql_list" => SqlList(stmts)
+      case "constraint_ddl" => ConstraintDdl(stmts)
+      case "table_load" => TableLoad(text("table"), text("payload"))
+      case "table_upsert" => TableUpsert(text("table"), text("pk"), text("payload"))
+      case "delete_by_pk" => DeleteByPk(text("table"), text("pk"), text("payload"))
+      case "create_or_replace" => CreateOrReplace(text("table"), text("ddl"))
+      case k => sys.error(s"Unknown operation kind in manifest: $k")
+    }
+    seq.intValue -> op
   }
 
   // ---- replay ----

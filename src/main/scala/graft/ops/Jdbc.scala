@@ -93,6 +93,23 @@ object Jdbc {
     * (`Operation.TableUpsert`/`DeleteByPk` docs). */
   private def pkCols(pk: String): Seq[String] = pk.split(",").map(_.trim).toSeq
 
+  /** Run `body` in one transaction on its own connection: commit on
+    * success; on failure roll back before closing, so the statement's
+    * own error surfaces — Derby refuses to close a connection with an
+    * open transaction, and that refusal would otherwise replace it. */
+  private def transaction(url: String)(body: Connection => Unit): Unit = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      conn.setAutoCommit(false)
+      try { body(conn); conn.commit() }
+      catch {
+        case e: Throwable =>
+          try conn.rollback() catch { case r: Exception => e.addSuppressed(r) }
+          throw e
+      }
+    } finally conn.close()
+  }
+
   /** Upsert (K4): per row UPDATE … WHERE pk=?; 0 rows updated → queue
     * for insert; >1 → hard error (the reference's wrong-pk guard,
     * `CopyUtils.java:763-767`); queued rows bulk-inserted in batches.
@@ -112,9 +129,7 @@ object Jdbc {
     val insertSql = s"INSERT INTO ${quoted(table)} (${cols.map(quoted).mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})"
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     deduped.foreachPartition { (rows: Iterator[Row]) =>
-      val conn = DriverManager.getConnection(url)
-      conn.setAutoCommit(false)
-      try {
+      transaction(url) { conn =>
         val upd = conn.prepareStatement(updateSql)
         val ins = conn.prepareStatement(insertSql)
         var pendingInserts = 0
@@ -140,8 +155,7 @@ object Jdbc {
           }
         }
         if (pendingInserts > 0) ins.executeBatch()
-        conn.commit()
-      } finally conn.close()
+      }
     }
   }
 
@@ -157,9 +171,7 @@ object Jdbc {
     val dts = keys.schema.fields.map(_.dataType).toSeq
     val sql = s"DELETE FROM ${quoted(table)} WHERE ${pks.map(c => s"${quoted(c)} = ?").mkString(" AND ")}"
     keys.distinct().foreachPartition { (rows: Iterator[Row]) =>
-      val conn = DriverManager.getConnection(url)
-      conn.setAutoCommit(false)
-      try {
+      transaction(url) { conn =>
         val del = conn.prepareStatement(sql)
         var pending = 0
         rows.foreach { r =>
@@ -169,8 +181,7 @@ object Jdbc {
           if (pending >= batchSize) { del.executeBatch(); pending = 0 }
         }
         if (pending > 0) del.executeBatch()
-        conn.commit()
-      } finally conn.close()
+      }
     }
   }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.storage.StorageLevel
 
 import graft.model.{FkEdge, Selection}
 
@@ -22,6 +23,18 @@ import graft.model.{FkEdge, Selection}
   *   ("Could not find path to …", `CopyUtils.java:552-555`);
   * - a child table without a PK → hard error ("no PK for …", `:562-564`).
   *
+  * Every level keeps its rows (child ⋉ parent keys, all columns; the
+  * id-filtered rows for the root) next to its keys, which are derived
+  * from them. An export ([[DumpStore.exportSelection]]) pins a level's
+  * rows and then its keys, reads the pinned rows for both its invariant
+  * and its payload, and unpersists them once written: one scan of each
+  * walked table, with the key levels held until [[release]] because the
+  * next level joins through them. The exporter pins, level by level,
+  * rather than the walk: unpersisting a frame makes Spark re-plan every
+  * cached plan built on it that is not materialized yet, and a key
+  * level re-planned while its rows are not cached would read the table
+  * again.
+  *
   * The reference additionally hard-errors on multi-column PKs
   * (`CopyUtils.java:410-412`); the single-column entry points keep that
   * contract, while [[walkLinkedComposite]] extends the walk to composite
@@ -36,11 +49,12 @@ object TreeWalk {
     * @param broadcastKeys hint key sets as broadcastable (small roots —
     *   the common copy-tree case). With false, Catalyst/AQE decides.
     * @param cache persist each key level (MEMORY_AND_DISK). Use when
-    *   selections are consumed more than once (export: invariant count
-    *   + payload write) and call [[release]] when the walk's outputs
-    *   are no longer needed — persisted levels otherwise accumulate in
-    *   the session for its whole lifetime. Pass false for single-shot
-    *   query composition, where caching would only add bookkeeping.
+    *   key levels are consumed more than once (delete-tree: payload
+    *   write, then the next level's join) and call [[release]] when the
+    *   walk's outputs are no longer needed — persisted levels otherwise
+    *   accumulate in the session for its whole lifetime. Pass false for
+    *   single-shot query composition, and for an export, which pins
+    *   each level itself.
     */
   def walkLinked(
       loader: String => DataFrame,
@@ -95,18 +109,19 @@ object TreeWalk {
           s"which is not among its selected key columns ${parentKeys.columns.mkString(",")}")
       val childPk = pks.getOrElse(edge.childTable,
         sys.error(s"There is no PK for ${edge.childTable}"))
-      val parentIds = parentKeys.select(edge.parentColumn).distinct().toDF("__key")
+      // every accumulated key set is distinct already; only one column
+      // of a composite key needs deduplicating before the broadcast
+      val parentIds =
+        (if (parentKeys.columns.length == 1) parentKeys
+         else parentKeys.select(edge.parentColumn).distinct()).toDF("__key")
       val keys = if (broadcastKeys) broadcast(parentIds) else parentIds
       val child = loader(edge.childTable)
-      val childKeys = child
-        .join(keys, child(edge.childColumn) === keys("__key"), "left_semi")
-        .select(childPk.map(col): _*)
-        .distinct()
+      val childRows = child.join(keys, child(edge.childColumn) === keys("__key"), "left_semi")
+      val childKeys = childRows.select(childPk.map(col): _*).distinct()
       // persist each level when reused: the Selection keeps the SAME
       // DataFrame that was persisted, so release() can unpersist it
-      if (cache)
-        childKeys.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out += Selection(edge.childTable, childPk, childKeys)
+      if (cache) childKeys.persist(StorageLevel.MEMORY_AND_DISK)
+      out += Selection(edge.childTable, childPk, childKeys, childRows)
       acc(edge.childTable) = acc.get(edge.childTable) match {
         case Some(prev) => prev.union(childKeys).distinct()
         case None => childKeys
@@ -115,10 +130,10 @@ object TreeWalk {
     out.result()
   }
 
-  /** Unpersist every key level a walk cached. Call after the walk's
-    * selections have been fully consumed (payloads written) — a
-    * long-lived session otherwise leaks one cached level per edge per
-    * walk invocation. */
+  /** Unpersist every key level a walk or an export cached. Call after
+    * the walk's selections have been fully consumed (payloads written)
+    * — a long-lived session otherwise leaks one cached level per edge
+    * per walk invocation. */
   def release(selections: Seq[Selection]): Unit =
     selections.foreach(_.keys.unpersist(blocking = false))
 
@@ -152,13 +167,13 @@ object TreeWalk {
       s"root table $rootTable must have a single-column PK to seed from scalar ids, got ${rootPk.mkString(",")}")
     // keep only root ids that actually exist (the reference selects the
     // root rows by id too — absent ids select nothing)
-    val rootKeys = loader(rootTable)
+    val rootRows = loader(rootTable)
       .filter(col(rootPk.head).isin(rootIds.map(x => lit(x)): _*))
-      .select(col(rootPk.head))
+    val rootKeys = rootRows.select(col(rootPk.head))
     val edges = PathDsl.parseAllComposite(paths, pks)
     val walked = walkLinkedComposite(loader, edges, pks,
       Map(rootTable -> rootKeys), cache = cache)
-    Selection(rootTable, rootPk, rootKeys) +: walked
+    Selection(rootTable, rootPk, rootKeys, rootRows) +: walked
   }
 
   /** The equi-join condition matching a table's columns to a selection's

@@ -12,14 +12,45 @@ class DumpStoreSpec extends SparkSpec {
 
   test("manifest round-trips all operation kinds") {
     val dir = Files.createTempDirectory("graft-dump").toString
+    // every character class esc() rewrites, plus non-ASCII text
+    val odd = "q\"uote b\\ack\\slash new\nline ret\rurn tab\t ctl\u0001\u001f é 日本 \uD83D\uDE00"
     val ops = Seq(
       CreateOrReplace("t1", "CREATE TABLE t1 (a INT) USING parquet"),
       SqlList(Seq("SELECT 1", "SELECT 2")),
       TableLoad("t1", "payloads/t1"),
       TableUpsert("t1", "a", "payloads/t1_delta"),
-      DeleteByPk("t1", "a", "payloads/t1_del"))
+      DeleteByPk("t1", "a", "payloads/t1_del"),
+      ConstraintDdl(Seq(s"ALTER TABLE \"$odd\" ADD PRIMARY KEY (a)")),
+      CreateOrReplace(s"t$odd", s"CREATE TABLE t ($odd INT)"),
+      SqlList(Seq(odd, "", "SELECT '\\'")),
+      TableLoad(odd, s"payloads/$odd"),
+      TableUpsert("t", s"a,$odd", "payloads/u"),
+      DeleteByPk(odd, odd, odd))
     DumpStore.writeManifest(spark, dir, ops)
     assert(DumpStore.readManifest(spark, dir) == ops)
+
+    // lines are ordered by seq, not by position in the file
+    val manifest = java.nio.file.Paths.get(dir, "manifest.jsonl")
+    val lines = Files.readAllLines(manifest).toArray(Array.empty[String]).toSeq
+    Files.write(manifest, lines.reverse.mkString("\n").getBytes("UTF-8"))
+    Files.deleteIfExists(java.nio.file.Paths.get(dir, ".manifest.jsonl.crc")) // now stale
+    assert(DumpStore.readManifest(spark, dir) == ops)
+  }
+
+  test("a malformed manifest line or an unknown op kind fails the read loudly") {
+    val dir = Files.createTempDirectory("graft-dump").toString
+    val manifest = java.nio.file.Paths.get(dir, "manifest.jsonl")
+    def readWith(line: String): String = {
+      Files.write(manifest, (
+        """{"seq":0,"kind":"table_load","table":"t","payload":"p"}""" + "\n" + line + "\n").getBytes("UTF-8"))
+      intercept[IllegalArgumentException](DumpStore.readManifest(spark, dir)).getMessage
+    }
+    assert(readWith("""{"seq":1,"kind":"drop_everything"}""").contains("Unknown operation kind in manifest: drop_everything"))
+    assert(readWith("""{"seq":1,"kind":"table_load","table":"t"""").contains("line 2"))
+    assert(readWith("""{"seq":1,"kind":"table_load","table":"t"}""").contains("missing field 'payload'"))
+    assert(readWith("""{"seq":1,"kind":"sql_list","statements":"DROP"}""").contains("'statements' must be an array"))
+    assert(readWith("""{"seq":"1","kind":"sql_list","statements":[]}""").contains("'seq' must be an integer"))
+    assert(readWith("""{"seq":1,"kind":"sql_list","statements":[]} trailing""").contains("line 2"))
   }
 
   test("exportAll → replay reproduces row multisets (export≡identity property)") {
@@ -47,10 +78,23 @@ class DumpStoreSpec extends SparkSpec {
     val dump = Files.createTempDirectory("graft-dump").toString
     val sels = TreeWalk.selectAlongPath(
       spark, load, Seq("customer->orders.o_custkey"), SchemaCatalog.walkPks, "customer", 1L to 5L)
-    val ops = DumpStore.exportSelections(spark, load, sels, dump)
+    val ops = DumpStore.exportSelections(spark, sels, dump)
     assert(ops.map(_.kind).forall(_ == "table_load"))
     val expected = load("orders").filter(col("o_custkey").between(1, 5)).count()
     assert(spark.read.parquet(s"$dump/payloads/orders_1").count() == expected)
+  }
+
+  test("exportSelections: a selected key with no rows raises the invariant before any payload lands") {
+    import spark.implicits._
+    val dump = Files.createTempDirectory("graft-dump").toString
+    val rows = load("orders").filter(col("o_custkey").between(1, 5))
+    val n = rows.count()
+    val keys = rows.select("o_orderkey").union(Seq(-1L).toDF("o_orderkey"))
+    val sel = graft.model.Selection("orders", Seq("o_orderkey"), keys, rows)
+    val e = intercept[RuntimeException](DumpStore.exportSelections(spark, Seq(sel), dump))
+    assert(e.getMessage.contains(s"Only $n of ${n + 1} keys copied for orders"))
+    assert(!Files.exists(java.nio.file.Paths.get(dump, "payloads")))
+    assert(!Files.exists(java.nio.file.Paths.get(dump, "manifest.jsonl")))
   }
 
   test("replay executes upsert and delete ops against the catalog") {

@@ -154,6 +154,34 @@ class JdbcSpec extends SparkSpec {
     assert(expected > 0 && sels.head.keys.count() == expected)
   }
 
+  test("a failed upsert or delete batch surfaces the database's FK error, not a close failure") {
+    val url = freshDb()
+    Jdbc.executeSqlList(url, Seq(
+      """CREATE TABLE "par" ("id" BIGINT NOT NULL PRIMARY KEY)""",
+      """CREATE TABLE "kid" ("id" BIGINT NOT NULL PRIMARY KEY, "par_id" BIGINT,
+        | CONSTRAINT "fk_kid_par" FOREIGN KEY ("par_id") REFERENCES "par" ("id"))"""
+        .stripMargin.replace("\n", "")))
+    Jdbc.append(Seq(1L).toDF("id"), url, "par")
+    Jdbc.append(Seq((1L, 1L)).toDF("id", "par_id"), url, "kid")
+    def causes(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    // insert path of the upsert: kid 2 points at a parent that does not exist
+    val up = causes(intercept[Exception] {
+      Jdbc.upsert(Seq((2L, 99L)).toDF("id", "par_id"), url, "kid", "id")
+    })
+    assert(up.contains("foreign key constraint 'fk_kid_par'"), up)
+    assert(!up.contains("Cannot close a connection"), up)
+    // delete of a referenced parent
+    val del = causes(intercept[Exception] {
+      Jdbc.deleteByPk(Seq(1L).toDF("id"), url, "par", "id")
+    })
+    assert(del.contains("foreign key constraint 'fk_kid_par'"), del)
+    assert(!del.contains("Cannot close a connection"), del)
+    // both batches rolled back: nothing landed, nothing went
+    assert(Jdbc.read(spark, url, "kid").count() == 1)
+    assert(Jdbc.read(spark, url, "par").count() == 1)
+  }
+
   test("composite-PK upsert and delete: multi-column WHERE, 0/1-row invariant") {
     val url = freshDb()
     val duo = (1L to 10L).flatMap(a => (1 to 3).map(b => (a, b.toLong, s"v$a-$b")))
