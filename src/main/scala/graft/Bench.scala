@@ -19,6 +19,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // SPARK_GRAFT_ONLY=q48,q27 — iterate on a subset without paying for
+    // the whole suite
+    val names = QueryFilter(SparkEntry.queries.toSeq.sortBy(_._1),
+      sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -72,11 +76,6 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // SPARK_GRAFT_ONLY=q48_lsh_candidates,q27_jaccard_topk — iterate on a
-    // subset without paying for the whole suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
     val passes = 3
     val samples = (1 to passes).map { _ =>
       names.map { case (name, fn) => name -> timeOnce(name, fn) }.toMap

@@ -138,51 +138,10 @@ object PrefData {
       .groupBy("m1", "m2").agg(count(lit(1)).as("n"))
       .collect() // models²-bounded
     val effRows = fitted.collect() // |models| rows
-    // driver MM replay of the decimal contract: round-to-9dp is
-    // HALF_UP on BigDecimal.valueOf (Spark's Round for doubles,
-    // non-finite passed through), per-model denominators are EXACT
-    // decimal(28,9) sums of the rounded terms, casts to double are
-    // BigDecimal.doubleValue — each step bit-identical to the old
-    // per-iteration DataFrame plan and to the oracle's SQL replay
-    import java.math.{BigDecimal => JBD, RoundingMode}
-    def round9(x: Double): Double =
-      if (x.isNaN || x.isInfinite) x
-      else JBD.valueOf(x).setScale(9, RoundingMode.HALF_UP).doubleValue
+    val pairs = pairRows.toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val eff = effRows.map(r => r.getString(0) -> r.getDouble(1)).toMap
-    var p: Map[String, Double] = eff.keysIterator.map(_ -> 1.0).toMap
-    var k = 0
-    while (k < numIters) {
-      val den = scala.collection.mutable.LinkedHashMap.empty[String, JBD]
-      pairRows.foreach { r =>
-        val m1 = r.getString(0); val m2 = r.getString(1); val n = r.getLong(2)
-        // an endpoint can drop out of the p table mid-fit (no finite
-        // denominator in an earlier round) — the old inner joins
-        // dropped such pair rows; replicate
-        (p.get(m1), p.get(m2)) match {
-          case (Some(p1), Some(p2)) =>
-            val term = round9(n.toDouble / (p1 + p2))
-            if (!term.isNaN && !term.isInfinite)
-              den.update(m1, den.getOrElse(m1, JBD.ZERO)
-                .add(JBD.valueOf(term).setScale(9, RoundingMode.HALF_UP)))
-          case _ => ()
-        }
-      }
-      val upd = p.keysIterator.flatMap { m =>
-        den.get(m).map(d => m -> round9(eff(m) / d.doubleValue))
-      }.toMap
-      val nm = upd.size
-      // non-finite strengths (a denominator that rounded to exactly 0
-      // makes eff/0 = Infinity) are SKIPPED in the sum, replicating
-      // the old plan's double→decimal(28,9) cast degrading them to
-      // null — JBD.valueOf(Infinity) would throw instead
-      val tot = upd.valuesIterator
-        .filterNot(v => v.isNaN || v.isInfinite)
-        .foldLeft(JBD.ZERO)((acc, v) =>
-          acc.add(JBD.valueOf(v).setScale(9, RoundingMode.HALF_UP)))
-      p = upd.map { case (m, v) =>
-        m -> round9(v * nm.toDouble / tot.doubleValue)
-      }
-      k += 1
+    val p = (0 until numIters).foldLeft(eff.map { case (m, _) => m -> 1.0 }) {
+      (q, _) => mmRound(pairs, eff, q)
     }
     val strength = map_from_arrays(
       array(p.keys.toSeq.sorted.map(lit(_)): _*),
@@ -191,6 +150,49 @@ object PrefData {
       .select(col("model"), col("n_wins"), col("n_ties"), col("n_comps"),
         (if (p.isEmpty) lit(null).cast("double")
          else element_at(strength, col("model"))).as("strength"))
+  }
+
+  /** One Bradley-Terry MM round on the driver, replaying the decimal
+    * contract of the old per-iteration DataFrame plan and of the
+    * oracle's SQL: round-to-9dp is HALF_UP on BigDecimal.valueOf
+    * (Spark's Round for doubles, non-finite passed through),
+    * per-model denominators are EXACT decimal(28,9) sums of the rounded
+    * terms, casts to double are BigDecimal.doubleValue. `pairs` holds
+    * the directed (m1, m2, n) comparison counts between fitted models,
+    * `eff` each model's effective wins, `p` the current strengths. */
+  private[ext] def mmRound(pairs: Seq[(String, String, Long)],
+                           eff: Map[String, Double],
+                           p: Map[String, Double]): Map[String, Double] = {
+    import java.math.{BigDecimal => JBD, RoundingMode}
+    def round9(x: Double): Double =
+      if (x.isNaN || x.isInfinite) x
+      else JBD.valueOf(x).setScale(9, RoundingMode.HALF_UP).doubleValue
+    def finite(x: Double): Boolean = !x.isNaN && !x.isInfinite
+    val den = scala.collection.mutable.LinkedHashMap.empty[String, JBD]
+    pairs.foreach { case (m1, m2, n) =>
+      // an endpoint can drop out of the p table mid-fit (no finite
+      // denominator or strength in an earlier round) — the old inner
+      // joins dropped such pair rows; replicate
+      (p.get(m1), p.get(m2)) match {
+        case (Some(p1), Some(p2)) =>
+          val term = round9(n.toDouble / (p1 + p2))
+          if (finite(term))
+            den.update(m1, den.getOrElse(m1, JBD.ZERO)
+              .add(JBD.valueOf(term).setScale(9, RoundingMode.HALF_UP)))
+        case _ => ()
+      }
+    }
+    // a non-finite strength (a denominator that rounded to exactly 0
+    // makes eff/0 = Infinity) leaves the fit here, as the old plan's
+    // double→decimal(28,9) cast degraded it to null: it neither counts
+    // in the renormalization nor reaches the next round's pairs
+    val upd = p.keysIterator.flatMap { m =>
+      den.get(m).map(d => m -> round9(eff(m) / d.doubleValue))
+    }.filter { case (_, v) => finite(v) }.toMap
+    val nm = upd.size
+    val tot = upd.valuesIterator.foldLeft(JBD.ZERO)((acc, v) =>
+      acc.add(JBD.valueOf(v).setScale(9, RoundingMode.HALF_UP)))
+    upd.map { case (m, v) => m -> round9(v * nm.toDouble / tot.doubleValue) }
   }
 
   /** Fleiss' kappa over a rating table (`item`, `annotator`,

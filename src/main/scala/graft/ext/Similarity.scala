@@ -672,12 +672,15 @@ object Similarity {
     // NEGATED PARTIALS and the affected-cell list — aggregating them
     // here, BEFORE the rewrite consumes their source files, replaces
     // the old corpus-sized checkpoint of the dead rows themselves
-    val sub = centroidPartials(assigned.join(tomb, Seq(tCol), "left_semi"),
-        vecCol)
+    val dead = assigned.join(tomb, Seq(tCol), "left_semi")
+    val sub = centroidPartials(dead, vecCol)
       .select(col("__cell"), col("__pos"),
         (-col("__sum")).as("__sum"), (-col("__cnt")).as("__cnt"))
       .localCheckpoint()
-    val affected = sub.select(col("__cell")).distinct()
+    // from the dead rows themselves, not their partials: a dead row
+    // with a null or empty embedding has no partials, and its cell
+    // must still be rewritten or the row outlives its tombstone
+    val affected = dead.select(col("__cell")).distinct()
       .collect().map(_.getInt(0))
     val base0 = readPartials(spark, path, vecCol)
     // pre-partials legacy index: the migration partials derive from

@@ -1,8 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types._
 
 import graft.ext.Dedup
 
@@ -19,7 +25,12 @@ import graft.ext.Dedup
   * Scale contract (inherited from the batch form, q96): the accumulated
   * corpus is never re-shingled and its band index is never reshuffled —
   * per batch, the only per-corpus work is the band-index scan probing
-  * the broadcast batch bands. State lives entirely in two parquet
+  * the broadcast batch bands. Everything batch-sized (content hashes,
+  * band keys, exact and within-batch near-dup collapse, the dropped
+  * ids) is screened on the driver: the broadcast probe already commits
+  * the driver to `bands × |batch|` band rows, and these facts add one
+  * hash per doc to it, so a micro-batch costs a fixed handful of Spark
+  * jobs however many docs collapse. State lives entirely in two parquet
   * tables (the band index and the curated corpus); the streaming
   * checkpoint holds only source offsets, so the loop resumes after a
   * crash without rescreening delivered batches.
@@ -58,7 +69,18 @@ object CurationStream {
     * rebuild's connected components would drop it too. The cure is
     * periodic [[compact]]: pass `droppedBandsPath` so dropped docs'
     * bands accumulate, and compaction replays the full component
-    * structure to evict such admissions. */
+    * structure to evict such admissions.
+    *
+    * Scale: one job pins the batch, one collects its screening facts
+    * (per doc its id and content hash, per band its key) to the
+    * driver, where exact dedup and the within-batch union-find run;
+    * the index probe is a scan joined against the broadcast kept
+    * bands (the index is never shuffled), and the dropped ids come
+    * back to the driver deduplicated per partition. Driver memory is
+    * bounded like the broadcast probe's, `bands × |batch|` rows, so
+    * size batches with `maxFilesPerTrigger` upstream. The index and
+    * graveyard appends are written from the driver's rows, the corpus
+    * append is the pinned batch minus the dropped ids. */
   def screenBatch(batch: DataFrame, indexPath: String, corpusPath: String,
                   bands: Int, rowsPerBand: Int, shingleN: Int = 3,
                   idCol: String = "doc_id", textCol: String = "text",
@@ -113,37 +135,99 @@ object CurationStream {
         graft.ext.TextAnalysis.gopherRules(incoming, idCol = idCol, textCol = textCol)
           .filter(col("keep")).select(idCol),
         Seq(idCol), "left_semi").localCheckpoint()
-    val b =
-      if (!dedupWithinBatch) raw
-      else {
-        val keep = Dedup.exactByContent(raw, idCol, Seq(textCol))
-          .select(col("keep_id").as(idCol))
-        raw.join(keep, Seq(idCol), "left_semi")
-      }
-    // the batch's bands, computed ONCE: they feed within-batch pair
-    // generation, the index probe, and the survivors' index append
-    val bBands = Dedup.lshBands(
-        Dedup.minhash(b, bands * rowsPerBand, shingleN, idCol, textCol),
+    val idType = raw.schema(idCol).dataType
+    val bandSchema = StructType(Seq(StructField(idCol, idType),
+      StructField("band", IntegerType), StructField("band_key", StringType)))
+    val pairSchema = StructType(Seq(StructField("doc_a", idType),
+      StructField("doc_b", idType)))
+    def local(rows: Iterable[Row], schema: StructType): DataFrame =
+      spark.createDataFrame(rows.toSeq.asJava, schema)
+    // the screening facts, collected in ONE job: a (id, content hash)
+    // row per doc and an (id, band, band_key) row per band of each
+    // shingleable doc — the exact expressions of `Dedup.exactByContent`
+    // and `Dedup.lshBands(Dedup.minhash(…))`, so every key is
+    // bit-identical to the distributed form's
+    val docFacts = raw.select(col(idCol),
+      md5(concat_ws("\u0000", col(textCol))).as("content_hash"),
+      lit(null).cast(IntegerType).as("band"), lit(null).cast(StringType).as("band_key"))
+    val bandFacts = Dedup.lshBands(
+        Dedup.minhash(raw, bands * rowsPerBand, shingleN, idCol, textCol),
         bands, rowsPerBand, idCol)
-      .localCheckpoint()
-    // within-batch near-dup collapse: (rep, dropped) per non-singleton
-    // component member; skipped entirely when the batch self-pairs are
-    // empty (the common case — CC's driver loop never starts)
-    val selfPairs =
-      if (dedupWithinBatch) Dedup.candidatePairs(bBands, idCol).localCheckpoint()
-      else Dedup.candidatePairs(bBands.limit(0), idCol)
-    val selfDrops =
-      if (selfPairs.isEmpty) selfPairs.select(col("doc_a"), col("doc_b"))
-      else Dedup.connectedComponents(selfPairs, idCol = idCol)
-        .filter(col("comp") =!= col(idCol))
-        .select(col("comp").as("doc_a"), col(idCol).as("doc_b"))
-    val existing = spark.read.parquet(indexPath)
-    val pairs = Dedup.incrementalCandidatePairsFromBands(existing, bBands, idCol)
-      .unionByName(selfDrops)
-      .localCheckpoint()
+      .select(col(idCol), lit(null).cast(StringType).as("content_hash"),
+        col("band"), col("band_key"))
+    val (docRows, bandFactRows) = docFacts.unionByName(bandFacts).collect()
+      .toSeq.partition(_.isNullAt(2))
+    val bandRows = bandFactRows.map(r => Row(r.get(0), r.getInt(2), r.getString(3)))
+    val ord = idOrdering(idType)
+    // exact dedup: the batch keeps the docs whose id is the minimum
+    // (SQL `min`, nulls never win) of some content-hash group — by id,
+    // as the old `raw ⋉ keep_id` semi-join did, so a null id never
+    // survives it and a repeated id survives whole
+    val kept: Any => Boolean =
+      if (!dedupWithinBatch) _ => true
+      else {
+        val minId = mutable.HashMap.empty[String, Any]
+        docRows.filterNot(_.isNullAt(0)).foreach { r =>
+          val id = r.get(0)
+          minId.updateWith(r.getString(1)) {
+            case Some(m) if ord.lteq(m, id) => Some(m)
+            case _ => Some(id)
+          }
+        }
+        val keep = minId.valuesIterator.toSet
+        id => id != null && keep(id)
+      }
+    // the batch's bands, one row per kept doc row and band: they feed
+    // the within-batch collapse, the index probe and the index append
+    val bBands = bandRows.filter(r => kept(r.get(0)))
+    // within-batch near-dup collapse: (rep, dropped) per non-rep member
+    // of every component of the shared-bucket graph, rep = min id —
+    // the `candidatePairs` → `connectedComponents` result, with each
+    // bucket star-linked through one member (O(bucket), not the O(n²)
+    // pair expansion) into a driver union-find whose roots are minima
+    val selfDrops: Seq[Row] =
+      if (!dedupWithinBatch) Nil
+      else {
+        val parent = mutable.HashMap.empty[Any, Any]
+        def find(x: Any): Any = {
+          var r = x
+          while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+          var y = x
+          while (y != r) { val next = parent(y); parent(y) = r; y = next }
+          r
+        }
+        bBands.groupBy(r => (r.getInt(1), r.getString(2))).valuesIterator
+          .filter(_.length > 1)
+          .foreach { members =>
+            val first = members.head.get(0)
+            members.tail.foreach { m =>
+              val (ra, rb) = (find(first), find(m.get(0)))
+              if (ra != rb) {
+                if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
+              }
+            }
+          }
+        parent.keysIterator.toSeq.flatMap { id =>
+          val rep = find(id)
+          if (rep == id) None else Some(Row(rep, id))
+        }
+      }
+    // the index probe: the one per-corpus scan, read with the known
+    // band schema (no per-batch inference job) and joined against the
+    // broadcast kept bands
+    val existing = spark.read.schema(bandSchema).parquet(indexPath)
+    val pairs = Dedup.incrementalCandidatePairsFromBands(existing,
+        local(bBands.distinct, bandSchema), idCol)
+      .unionByName(local(selfDrops, pairSchema))
+      .localCheckpoint(eager = false)
+    // every dropped doc_b, deduplicated per partition: bounded by the
+    // batch, like the probe's broadcast side; this job also pins the
+    // pairs. Null ids (possible only with `dedupWithinBatch = false`)
+    // match no join key: such docs are never dropped and never indexed.
+    val dupIds = pairs.select(col("doc_b")).rdd
+      .mapPartitions(_.map(_.get(0)).filter(_ != null).toSet.iterator)
+      .collect().toSet
     pairsPath.foreach(p => pairs.write.mode("append").parquet(p))
-    val dupIds = pairs.select(col("doc_b").as(idCol)).distinct()
-    val survivors = b.join(dupIds, Seq(idCol), "left_anti").localCheckpoint()
     // band graveyard (opt-in, feeds `compact`): the DROPPED docs'
     // bands, persisted so a periodic compaction can replay transitive
     // chains that route through a dropped doc — batch₁→batch₂→index
@@ -153,7 +237,7 @@ object CurationStream {
     // bands are identical to the kept twin's, so any chain through
     // them also runs through the twin. Bounded by the duplicate mass.
     droppedBandsPath.foreach { gp =>
-      bBands.join(dupIds, Seq(idCol), "left_semi")
+      local(bBands.filter(r => dupIds(r.get(0))), bandSchema)
         .write.mode("append").parquet(gp)
     }
     // append order: bands first, corpus second — a crash between the
@@ -162,10 +246,28 @@ object CurationStream {
     // re-running the batch after restart is idempotent for screening
     // (same pairs) though the sinks append — dedupe downstream readers
     // on idCol or use a transactional table format in production
-    bBands.join(survivors.select(idCol), Seq(idCol), "left_semi")
-      .write.mode("append").parquet(indexPath)
-    survivors.write.mode("append").parquet(corpusPath)
+    // one file per batch: every later batch's probe scans these files
+    local(bBands.filter(r => r.get(0) != null && !dupIds(r.get(0))), bandSchema)
+      .coalesce(1).write.mode("append").parquet(indexPath)
+    // the corpus keeps the batch's kept rows minus the drops, as the old
+    // `b ⋉anti dupIds` did; the dropped ids filter as an in-set literal
+    // (a broadcast of a driver-local frame would cost one more job)
+    val droppedIds = (dupIds ++ docRows.iterator.map(_.get(0))
+      .filter(id => id != null && !kept(id))).toSeq
+    val notDropped = !col(idCol).isin(droppedIds: _*)
+    raw.filter(
+        if (dedupWithinBatch) col(idCol).isNotNull && notDropped
+        else col(idCol).isNull || notDropped)
+      .write.mode("append").parquet(corpusPath)
     pairs
+  }
+
+  /** Spark's own ordering of `t` over external (Row) values, so a
+    * driver-side minimum picks the id SQL `min` would. */
+  private def idOrdering(t: DataType): Ordering[Any] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(t)
+    val ord = TypeUtils.getInterpretedOrdering(t)
+    (a, b) => ord.compare(toCatalyst(a), toCatalyst(b))
   }
 
   /** The committed baseline-histogram versions under `dp/hist_v`:

@@ -2287,6 +2287,32 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.readPartials(spark, p, "embedding").collect().toSet == wantPartials)
   }
 
+  test("ivfCompactDeletes drops a tombstoned row with a null or empty embedding") {
+    // such rows have no centroid partials, so only the dead rows' own
+    // cells can say which cell files to rewrite
+    val emb = load("embeddings")
+    val vec = emb.schema("embedding").dataType
+    val p = java.nio.file.Files.createTempDirectory("graft-ivf-del-empty").toString
+    Similarity.ivfWrite(Similarity.ivfBuildDeterministic(
+      emb.withColumn("embedding",
+        when(col("vec_id") =!= 3L, col("embedding")).otherwise(lit(null).cast(vec))),
+      planes = 4, dim = 64), p)
+    // the build rejects an empty embedding (dot_product lengths), so
+    // that row lands in a cell directly, as a foreign writer could
+    Similarity.ivfRead(spark, p).assigned.filter(col("vec_id") === 4L)
+      .withColumn("vec_id", lit(100000L))
+      .withColumn("embedding", array().cast(vec))
+      .localCheckpoint()
+      .write.mode("append").partitionBy("__cell").parquet(s"$p/assigned")
+    Similarity.ivfDeleteWrite(p, Seq(3L, 100000L).toDF("vec_id"))
+    Similarity.ivfCompactDeletes(spark, p)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p, "tombstones")))
+    val assigned = Similarity.ivfRead(spark, p).assigned
+    val left = assigned.filter(col("vec_id").isin(3L, 100000L)).count()
+    assert(left == 0, s"$left tombstoned rows came back after compaction")
+    assert(assigned.count() == emb.count() - 1)
+  }
+
   test("ivfDeleteWrite renames any id column; compaction rejects a foreign one") {
     val emb = load("embeddings")
     val p = java.nio.file.Files.createTempDirectory("graft-ivf-del-col").toString

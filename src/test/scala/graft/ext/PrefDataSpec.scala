@@ -48,6 +48,22 @@ class PrefDataSpec extends SparkSpec {
     assert(z.isNullAt(z.fieldIndex("win_frac"))) // 0 decisive comps
   }
 
+  test("bradleyTerry MM round: a strength whose denominator rounds to 0 " +
+    "(eff/0) leaves the fit") {
+    // a's huge strength rounds every term against it to 0, so a and b
+    // (who plays only a) get eff/0 = Infinity: both leave, and c and d
+    // renormalize alone — c: den = r9(1/2) + 0 = 0.5, upd 3.0;
+    // d: den 0.5, upd 1.0; nm = 2, tot = 4
+    val pairs = Seq(("a", "b", 1L), ("b", "a", 1L), ("a", "c", 1L),
+      ("c", "a", 1L), ("c", "d", 1L), ("d", "c", 1L))
+    val eff = Map("a" -> 1.0, "b" -> 1.0, "c" -> 1.5, "d" -> 0.5)
+    val p = Map("a" -> 1e12, "b" -> 1.0, "c" -> 1.0, "d" -> 1.0)
+    val next = PrefData.mmRound(pairs, eff, p)
+    assert(next == Map("c" -> 1.5, "d" -> 0.5))
+    // the next round skips every pair through a or b
+    assert(PrefData.mmRound(pairs, eff, next) == Map("c" -> 1.5, "d" -> 0.5))
+  }
+
   test("bradleyTerry matches a JVM reference MM fit round for " +
     "round; a stronger model ranks higher; zero-win models are " +
     "excluded with null strength") {

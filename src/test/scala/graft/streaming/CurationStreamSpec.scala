@@ -2,7 +2,11 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.ext.Dedup
@@ -428,5 +432,144 @@ class CurationStreamSpec extends SparkSpec {
     assert(got == want,
       s"compacted stream corpus diverges from the full rebuild: " +
         s"extra=${got -- want} missing=${want -- got}")
+  }
+
+  /** The distributed composition `screenBatch` replaced, built from the
+    * unchanged `Dedup` primitives: exact dedup by content hash, bands,
+    * within-batch candidate pairs collapsed by `connectedComponents`,
+    * the broadcast index probe, then the graveyard, index and corpus
+    * appends. The equivalence tests hold the driver-side form to it. */
+  private def referenceScreen(raw: DataFrame, indexPath: String, corpusPath: String,
+                              pairsPath: String, droppedBandsPath: String,
+                              dedupWithinBatch: Boolean): DataFrame = {
+    val (bands, rowsPerBand, idCol) = (3, 2, "doc_id")
+    val b =
+      if (!dedupWithinBatch) raw
+      else raw.join(Dedup.exactByContent(raw, idCol, Seq("text"))
+        .select(col("keep_id").as(idCol)), Seq(idCol), "left_semi")
+    val bBands = Dedup.lshBands(Dedup.minhash(b, bands * rowsPerBand), bands, rowsPerBand)
+      .localCheckpoint()
+    val selfPairs =
+      if (dedupWithinBatch) Dedup.candidatePairs(bBands, idCol).localCheckpoint()
+      else Dedup.candidatePairs(bBands.limit(0), idCol)
+    val selfDrops =
+      if (selfPairs.isEmpty) selfPairs.select(col("doc_a"), col("doc_b"))
+      else Dedup.connectedComponents(selfPairs, idCol = idCol)
+        .filter(col("comp") =!= col(idCol))
+        .select(col("comp").as("doc_a"), col(idCol).as("doc_b"))
+    val pairs = Dedup.incrementalCandidatePairsFromBands(
+        spark.read.parquet(indexPath), bBands, idCol)
+      .unionByName(selfDrops)
+      .localCheckpoint()
+    pairs.write.mode("append").parquet(pairsPath)
+    val dupIds = pairs.select(col("doc_b").as(idCol)).distinct()
+    val survivors = b.join(dupIds, Seq(idCol), "left_anti").localCheckpoint()
+    bBands.join(dupIds, Seq(idCol), "left_semi")
+      .write.mode("append").parquet(droppedBandsPath)
+    bBands.join(survivors.select(idCol), Seq(idCol), "left_semi")
+      .write.mode("append").parquet(indexPath)
+    survivors.write.mode("append").parquet(corpusPath)
+    pairs
+  }
+
+  /** Rows as a sorted multiset, nulls included. */
+  private def bag(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.mkString("|")).sorted
+
+  /** A drop with every case the screen must keep apart: exact twins (of
+    * each other and of an indexed doc), a bucket of 220 near-identical
+    * docs, a near-dup of an indexed doc, docs too short to shingle, a
+    * null text, a repeated doc_id (same and different text), and null
+    * doc_ids (one an exact copy of an indexed doc). */
+  private def edgeBatch(existing: DataFrame): DataFrame = {
+    val indexed = existing.orderBy("doc_id").select("text").as[String].take(2)
+    val base = (0 until 60).map(i => s"base$i").mkString(" ")
+    val other = (0 until 40).map(i => s"other$i").mkString(" ")
+    val near = indexed(1).split(' ').updated(0, "perturbed").mkString(" ")
+    val rows: Seq[(java.lang.Long, String)] =
+      Seq[(java.lang.Long, String)](
+        (100001L, other), (100002L, other), (100003L, indexed(0)),
+        (100004L, near),
+        (100005L, "too short"), (100006L, "too short"), (100007L, ""),
+        (100008L, null), (100009L, null),
+        (100010L, other + " again"), (100010L, other + " again"),
+        (100011L, "word " * 3 + "x"), (100011L, other),
+        (null, indexed(1)), (null, "a lone null id doc with enough words"),
+        (100012L, other + " once more")) ++
+      (0 until 220).map(i => (java.lang.Long.valueOf(100100L + i), s"$base tail$i"))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.map(Row.fromTuple), 3),
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+  }
+
+  private def equivalence(idType: DataType, dedupWithinBatch: Boolean): Unit = {
+    val docs = load("documents").select(col("doc_id").cast(idType).as("doc_id"), col("text"))
+    val existing = docs.filter(col("doc_id") < 300)
+    val batch = edgeBatch(existing).select(col("doc_id").cast(idType).as("doc_id"), col("text"))
+      .localCheckpoint()
+    val root = Files.createTempDirectory("graft-screen-eq").toString
+    val bootIndex = Dedup.lshBands(Dedup.minhash(existing, k = 6), bands = 3, rowsPerBand = 2)
+    Seq("got", "want").foreach { side =>
+      bootIndex.write.parquet(s"$root/$side/index")
+      existing.limit(10).write.parquet(s"$root/$side/corpus")
+    }
+    def dir(side: String, t: String) = s"$root/$side/$t"
+    val got = CurationStream.screenBatch(batch, dir("got", "index"), dir("got", "corpus"),
+      bands = 3, rowsPerBand = 2, pairsPath = Some(dir("got", "pairs")),
+      dedupWithinBatch = dedupWithinBatch,
+      droppedBandsPath = Some(dir("got", "dropped")))
+    val want = referenceScreen(batch, dir("want", "index"), dir("want", "corpus"),
+      dir("want", "pairs"), dir("want", "dropped"), dedupWithinBatch)
+    assert(got.schema.map(_.dataType) == Seq(idType, idType))
+    assert(bag(got) == bag(want), "returned pairs")
+    // premise: the drop reaches the index probe and, when on, the
+    // within-batch collapse of the near-identical bucket; without it a
+    // null-id doc near-dups the index
+    val drops = want.collect().map(_.get(1))
+    if (dedupWithinBatch) assert(drops.length > 200, s"${drops.length} drops")
+    else assert(drops.contains(null), "no null-id drop")
+    Seq("pairs", "dropped", "index", "corpus").foreach { t =>
+      val (g, w) = (spark.read.parquet(dir("got", t)), spark.read.parquet(dir("want", t)))
+      assert(g.schema == w.schema, s"$t schema")
+      assert(bag(g) == bag(w), s"$t rows")
+    }
+  }
+
+  test("screenBatch ≡ the distributed Dedup composition: exact twins, a 220-doc " +
+    "near-dup bucket, short, null-text, repeated-id and null-id docs") {
+    equivalence(LongType, dedupWithinBatch = true)
+  }
+
+  test("screenBatch ≡ the distributed Dedup composition with dedupWithinBatch = false") {
+    equivalence(LongType, dedupWithinBatch = false)
+  }
+
+  test("screenBatch ≡ the distributed Dedup composition on Int ids") {
+    equivalence(IntegerType, dedupWithinBatch = true)
+    equivalence(IntegerType, dedupWithinBatch = false)
+  }
+
+  test("screenBatch screens a micro-batch in at most 8 Spark jobs") {
+    val docs = load("documents")
+    val existing = docs.filter(col("doc_id") < 300)
+    val batch = edgeBatch(existing).localCheckpoint()
+    val root = Files.createTempDirectory("graft-screen-jobs").toString
+    Dedup.lshBands(Dedup.minhash(existing, k = 6), bands = 3, rowsPerBand = 2)
+      .write.parquet(s"$root/index")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      CurationStream.screenBatch(batch, s"$root/index", s"$root/corpus",
+        bands = 3, rowsPerBand = 2)
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() <= 8, s"screenBatch ran ${jobs.get()} jobs")
+    // and it screened: the twins, the bucket and the index near-dups went
+    val sunk = spark.read.parquet(s"$root/corpus").select("doc_id").as[Long].collect().toSet
+    assert(sunk(100001L) && !sunk(100002L) && !sunk(100003L) && sunk(100100L) &&
+      !sunk(100101L))
   }
 }
