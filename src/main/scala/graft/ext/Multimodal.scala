@@ -866,9 +866,9 @@ object Multimodal {
 
   /** [[tarList]] over an xz-compressed tarball — `.tar.xz`, the
     * other shape source releases ship: one bounded
-    * [[graft.functions.XzPayload]] decode (checks verified, capped,
-    * fail-closed) feeds the checksummed ustar walk, aliased so the
-    * walk shares ONE decode per row. Corrupt xz OR corrupt tar ⇒ no
+    * [[graft.functions.XzPayload]] decode (xz-java; checks verified,
+    * capped, fail-closed) feeds the checksummed ustar walk, aliased so
+    * the walk shares ONE decode per row. Corrupt xz OR corrupt tar ⇒ no
     * rows. */
   def tarXzList(docs: DataFrame, idCol: String = "doc_id",
                 payloadCol: String = "payload",
@@ -881,9 +881,10 @@ object Multimodal {
 
   /** [[tarList]] over the remaining wrapper matrix — `.tar.zst`
     * (the modern default), `.tar.bz2` (the long tail of releases),
-    * `.tar.lz4` and `.tar.sz`: one bounded from-format
-    * decompression feeding the same header walk; corrupt archives
-    * contribute no rows (the kernels' fail-closed nulls). */
+    * `.tar.lz4` and `.tar.sz`: one bounded decompression (zstd and
+    * LZ4 by the repo's own kernels, bzip2 by commons-compress)
+    * feeding the same header walk; corrupt archives contribute no
+    * rows (the decoders' fail-closed nulls). */
   def tarZstList(docs: DataFrame, idCol: String = "doc_id",
                  payloadCol: String = "payload",
                  maxOut: Int = 1 << 26,
@@ -950,8 +951,8 @@ object Multimodal {
     graft.functions.MidiMeta(payload, maxEvents)
 
   /** Legacy `.lzma`-alone decompression — both the known-size and
-    * the marker-terminated unknown-size forms, through the repo's
-    * own LZMA machinery ([[graft.functions.LzmaAlonePayload]];
+    * the marker-terminated unknown-size forms, through xz-java's
+    * `LZMAInputStream` ([[graft.functions.LzmaAlonePayload]];
     * fail-closed, bomb-capped). The format carries no magic, so it
     * never joins `sniffFormat` — route by extension upstream. */
   def lzmaAlone(payload: Column, maxOut: Int = 1 << 24): Column =
@@ -1096,8 +1097,9 @@ object Multimodal {
 
   /** [[tarList]] over a `.tar.Z` (Unix compress) tarball — the
     * pre-gzip source-drop shape old FTP mirrors still serve: one
-    * bounded [[graft.functions.LzwUncompress]] decode feeds the
-    * checksummed ustar walk. Corrupt LZW OR corrupt tar ⇒ no rows. */
+    * bounded [[graft.functions.LzwUncompress]] decode (commons-compress)
+    * feeds the checksummed ustar walk. Corrupt LZW OR corrupt tar ⇒ no
+    * rows. */
   def tarZList(docs: DataFrame, idCol: String = "doc_id",
                payloadCol: String = "payload",
                maxOut: Int = 1 << 26,
@@ -1240,9 +1242,10 @@ object Multimodal {
     * zips read instead of nulling. Remaining tiers: `pdf` →
     * [[pdfText]], `gzip` → bounded
     * [[graft.functions.GunzipPayload]] + UTF-8, `bzip2` →
-    * [[graft.functions.Bunzip2]], `zstd` →
+    * [[graft.functions.Bunzip2]] (commons-compress), `zstd` →
     * [[graft.functions.ZstdPayload]], `xz` →
-    * [[graft.functions.XzPayload]] (all bounded, fail-closed),
+    * [[graft.functions.XzPayload]] (xz-java) (all bounded,
+    * fail-closed),
     * `7z` → the first member whose single-coder folder decodes to
     * UTF-8 text ([[graft.functions.SevenZipMembers]]),
     * `cfb` → the legacy Word piece-table tier

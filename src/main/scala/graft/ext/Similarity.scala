@@ -435,9 +435,8 @@ object Similarity {
   // (job + task + output-commit rename) per lifecycle operation for
   // kilobyte tables (guide §6: small-file/commit cost). Tombstones
   // stay their own APPEND-ONLY dataset: ivfDeleteWrite must be
-  // O(batch) and must not rewrite anything. Indexes persisted by the
-  // old layout read back via the legacy fallbacks below; the on-disk
-  // layout is internal — the read-back query results are the contract.
+  // O(batch) and must not rewrite anything. The on-disk layout is
+  // internal — the read-back query results are the contract.
   // ------------------------------------------------------------------
 
   private def hPath(spark: org.apache.spark.sql.SparkSession,
@@ -449,11 +448,26 @@ object Similarity {
                      path: String): Boolean =
     hPath(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
-  /** Does `path` hold a persisted index (either layout)? */
+  /** Does `path` hold a persisted index? A torn one — a corpus whose
+    * `meta` is gone — counts, so an append to it fails loudly in
+    * [[requireMeta]] instead of overwriting the corpus with a fresh
+    * build. */
   private[graft] def ivfIndexExists(
       spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    pathExists(spark, s"$path/meta") || pathExists(spark, s"$path/quantizer") ||
-      pathExists(spark, s"$path/centroids")
+    pathExists(spark, s"$path/meta") || pathExists(spark, s"$path/assigned")
+
+  /** The index's `meta` dataset; a missing one is a torn index — its
+    * quantizer kind is unknown, so nothing may guess it and rewrite
+    * the centroids. */
+  private def requireMeta(spark: org.apache.spark.sql.SparkSession,
+                          path: String): String = {
+    val meta = s"$path/meta"
+    if (!pathExists(spark, meta))
+      throw new IllegalStateException(s"IVF index at $path has no meta " +
+        s"dataset ($meta): its partials, centroids and quantizer kind are " +
+        "lost; rebuild the index")
+    meta
+  }
 
   /** The three side tables as one meta-row stream (side, __cell,
     * __pos, __sum, __cnt, __centroid, q). */
@@ -493,36 +507,21 @@ object Similarity {
     val rows0 = metaRows(partials, cents, kind)
     val rows = if (materializeFirst) rows0.localCheckpoint() else rows0
     rows.coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    // drop the legacy side datasets a migrated index leaves behind, so
-    // the two layouts can never disagree
-    val fs = hPath(rows.sparkSession, path)
-    Seq("partials", "centroids", "quantizer").foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$t")
-      if (fs.exists(p)) fs.delete(p, true)
-    }
   }
 
-  /** Persisted centroid partials (meta layout, legacy dataset, or the
-    * one-time migration scan of a pre-partials index). */
+  /** Persisted centroid partials. */
   private[graft] def readPartials(spark: org.apache.spark.sql.SparkSession,
-                           path: String, vecCol: String): DataFrame =
-    if (pathExists(spark, s"$path/meta"))
-      spark.read.parquet(s"$path/meta").filter(col("side") === "partials")
-        .select(col("__cell"), col("__pos"), col("__sum"), col("__cnt"))
-    else if (pathExists(spark, s"$path/partials"))
-      spark.read.parquet(s"$path/partials")
-    else // index persisted before partials existed: one-time
-      // migration scan of the corpus; every later append is O(batch)
-      centroidPartials(spark.read.parquet(s"$path/assigned")
-        .withColumn("__cell", col("__cell").cast("int")), vecCol)
+                                  path: String): DataFrame =
+    spark.read.parquet(requireMeta(spark, path))
+      .filter(col("side") === "partials")
+      .select(col("__cell"), col("__pos"), col("__sum"), col("__cnt"))
 
-  /** Persisted centroids (either layout). */
+  /** Persisted centroids. */
   private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
-                            path: String): DataFrame =
-    if (pathExists(spark, s"$path/meta"))
-      spark.read.parquet(s"$path/meta").filter(col("side") === "centroid")
-        .select(col("__cell"), col("__centroid"))
-    else spark.read.parquet(s"$path/centroids")
+                                   path: String): DataFrame =
+    spark.read.parquet(requireMeta(spark, path))
+      .filter(col("side") === "centroid")
+      .select(col("__cell"), col("__centroid"))
 
   /** Append a batch to a PERSISTED deterministic IVF index: the batch
     * rows land in their cell partitions via parquet append (existing
@@ -553,7 +552,7 @@ object Similarity {
         pmod(hash(newAssigned.columns.map(col): _*), lit(filesPerCell)))
     clustered.write.mode("append").partitionBy("__cell")
       .parquet(s"$path/assigned")
-    val base = readPartials(spark, path, vecCol)
+    val base = readPartials(spark, path)
     // merged is nLists·dim rows, consumed twice in the meta write (as
     // rows + the centroid derivation) — the lazy checkpoint evaluates
     // it once; writeMeta's eager materialization runs before the
@@ -580,7 +579,7 @@ object Similarity {
     * (at 100 TB each cell holds corpus/nLists bytes).
     *
     * Also persists the per-(cell, pos) exact-integer centroid
-    * partials (`path/partials`, nLists·dim rows) so
+    * partials (nLists·dim rows, in `path/meta`) so
     * [[ivfAppendWrite]]'s centroid refresh merges the batch's
     * partials instead of re-scanning the corpus. */
   def ivfWrite(index: IvfIndex, path: String, filesPerCell: Int = 1,
@@ -657,6 +656,7 @@ object Similarity {
                         path: String, vecCol: String = "embedding"): Unit = {
     val fs = hPath(spark, path)
     val tPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
+    requireMeta(spark, path)
     if (!fs.exists(tPath)) return
     val kind = quantizerKind(spark, path)
     val tomb = spark.read.parquet(s"$path/tombstones")
@@ -682,15 +682,9 @@ object Similarity {
     // must still be rewritten or the row outlives its tombstone
     val affected = dead.select(col("__cell")).distinct()
       .collect().map(_.getInt(0))
-    val base0 = readPartials(spark, path, vecCol)
-    // pre-partials legacy index: the migration partials derive from
-    // the CORPUS, which the rewrite below replaces — materialize them
-    // first (stored layouts read from the meta/partials file instead,
-    // which only the final writeMeta touches, after its own eager cut)
-    val base =
-      if (pathExists(spark, s"$path/meta") || pathExists(spark, s"$path/partials"))
-        base0
-      else base0.localCheckpoint()
+    // read from the meta file, which only the final writeMeta
+    // touches, after its own eager cut
+    val base = readPartials(spark, path)
     val refreshed =
       if (affected.nonEmpty) {
         val survivors = assigned
@@ -733,17 +727,13 @@ object Similarity {
     fs.delete(tPath, true)
   }
 
-  /** The persisted quantizer-kind marker; indexes written before the
-    * marker existed read back as deterministic (the only kind the
-    * original append path supported). */
+  /** The persisted quantizer-kind marker; a torn index (no `meta`)
+    * raises rather than defaulting to a kind. */
   private def quantizerKind(spark: org.apache.spark.sql.SparkSession,
                             path: String): String =
-    if (pathExists(spark, s"$path/meta"))
-      spark.read.parquet(s"$path/meta").filter(col("side") === "quantizer")
-        .select(col("q")).head().getString(0)
-    else if (pathExists(spark, s"$path/quantizer"))
-      spark.read.parquet(s"$path/quantizer").head().getString(0)
-    else IvfIndex.Deterministic
+    spark.read.parquet(requireMeta(spark, path))
+      .filter(col("side") === "quantizer")
+      .select(col("q")).head().getString(0)
 
   /** Reload a persisted IVF index. Pending [[ivfDeleteWrite]]
     * tombstones are anti-joined into the assigned view (a broadcast
@@ -828,17 +818,15 @@ object Similarity {
         pmod(hash(newAssigned.columns.map(col): _*), lit(filesPerCell)))
     clustered.write.mode("append").partitionBy("__cell")
       .parquet(s"$path/assigned")
-    if (pathExists(spark, s"$path/meta") || pathExists(spark, s"$path/partials")) {
-      val merged = readPartials(spark, path, vecCol)
-        .unionByName(centroidPartials(newAssigned, vecCol))
-        .groupBy(col("__cell"), col("__pos"))
-        .agg(sum(col("__sum")).as("__sum"), sum(col("__cnt")).as("__cnt"))
-      // centroid ROWS ride along byte-identical (FAISS add semantics:
-      // the quantizer never retrains); writeMeta's eager checkpoint
-      // materializes merged + cents before the meta overwrite
-      writeMeta(path, merged, cents, IvfIndex.Trained,
-        materializeFirst = true)
-    }
+    val merged = readPartials(spark, path)
+      .unionByName(centroidPartials(newAssigned, vecCol))
+      .groupBy(col("__cell"), col("__pos"))
+      .agg(sum(col("__sum")).as("__sum"), sum(col("__cnt")).as("__cnt"))
+    // centroid ROWS ride along byte-identical (FAISS add semantics:
+    // the quantizer never retrains); writeMeta's eager checkpoint
+    // materializes merged + cents before the meta overwrite
+    writeMeta(path, merged, cents, IvfIndex.Trained,
+      materializeFirst = true)
   }
 
   /** Query an IVF index: each query vector is scored only against its

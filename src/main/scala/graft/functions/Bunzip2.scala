@@ -1,5 +1,8 @@
 package graft.functions
 
+import java.io.ByteArrayInputStream
+
+import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -8,36 +11,24 @@ import org.apache.spark.sql.types._
 
 /** Bounded bzip2 decompression — the wrapper Wikipedia dumps (and a
   * long tail of scientific/archive corpora) actually ship in; the JDK
-  * has gzip/deflate but no bzip2, so this is a from-the-format kernel
-  * (the public bzip2 format: BWT + MTF + RLE + canonical Huffman; cf.
-  * the format notes the reference's docs never needed — reference
-  * `CopyUtils.java` copies rows, not archives).
-  *
-  * Full pipeline per block: `BZh[1-9]` stream header; 48-bit block
-  * magic; block CRC; deprecated `randomized` bit REJECTED (fail
-  * closed, never guess); 24-bit origPtr; sparse symbol map; 2..6
-  * Huffman groups with 15-bit selector count, MTF-decoded selectors,
-  * delta-coded code lengths; canonical-by-length decode in 50-symbol
-  * groups; RUNA/RUNB bijective base-2 run lengths through the MTF
-  * queue; inverse BWT via the standard counting-sort successor walk;
-  * final RLE1 (4 equal bytes + count) expansion; and BOTH CRCs
-  * verified — per-block and the combined stream CRC (bzip2's
-  * MSB-first CRC32 variant, not zlib's).
+  * has gzip/deflate but no bzip2, so this decodes through
+  * commons-compress's `BZip2CompressorInputStream` (on Spark's
+  * classpath; the reference's `CopyUtils.java` copies rows, not
+  * archives). Both CRCs are verified — per block and the combined
+  * stream CRC.
   *
   * CONCATENATED streams are accepted and decode back-to-back — after
-  * an end-of-stream record and its zero bit-padding to the byte
-  * boundary, a following `BZh[1-9]` header starts a fresh stream
-  * (its own level and stream CRC), exactly as stock `bunzip2`
-  * behaves. That is the shape pbzip2/lbzip2 emit and Wikipedia's
-  * pages-articles-multistream dumps are made of, and it mirrors
-  * [[GunzipPayload]]'s concatenated-member handling.
+  * an end-of-stream record, a following `BZh[1-9]` header starts a
+  * fresh stream, exactly as stock `bunzip2` behaves. That is the shape
+  * pbzip2/lbzip2 emit and Wikipedia's pages-articles-multistream dumps
+  * are made of, and it mirrors [[GunzipPayload]]'s concatenated-member
+  * handling.
   *
-  * FAIL-CLOSED NULL on every malformed shape: wrong magic, randomized
-  * blocks, selector/length/origPtr out of range, Huffman overrun,
-  * output past `maxOut` (decompression-bomb guard — rejected, never
-  * clipped; the cap is AGGREGATE across concatenated streams),
-  * truncated stream, CRC mismatch, nonzero padding or non-`BZh`
-  * trailing bytes after an end-of-stream record. Per-row bounded
+  * FAIL-CLOSED NULL on every shape commons-compress refuses — wrong
+  * magic or level, corrupt Huffman tables or selectors, truncated
+  * stream, CRC mismatch, non-`BZh` trailing bytes — and on output past
+  * `maxOut` (decompression-bomb guard — rejected, never clipped; the
+  * cap is AGGREGATE across concatenated streams). Per-row bounded
   * work, zero shuffle, codegen'd. */
 case class Bunzip2(child: Expression, maxOut: Int)
     extends UnaryExpression {
@@ -69,316 +60,12 @@ case class Bunzip2(child: Expression, maxOut: Int)
 
 object Bunzip2 {
 
-  private object Bad extends Exception with scala.util.control.NoStackTrace
-
-  /** bzip2's CRC32: polynomial 0x04c11db7 MSB-first (bit-reversed
-    * relative to zlib's), table-driven. */
-  private val crcTable: Array[Int] = {
-    val t = new Array[Int](256)
-    var i = 0
-    while (i < 256) {
-      var c = i << 24
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 0x80000000) != 0) (c << 1) ^ 0x04c11db7 else c << 1
-        k += 1
-      }
-      t(i) = c
-      i += 1
+  /** The per-row kernel — public static so generated code can call it. */
+  def compute(bytes: Array[Byte], maxOut: Int): Array[Byte] =
+    if (bytes == null) null
+    else BoundedDecode(maxOut) {
+      new BZip2CompressorInputStream(new ByteArrayInputStream(bytes), true)
     }
-    t
-  }
-
-  /** MSB-first bit reader over the payload. */
-  private final class Bits(bytes: Array[Byte]) {
-    private var pos = 0 // bit position
-    private val nBits = bytes.length * 8
-    def take(n: Int): Int = {
-      if (pos + n > nBits) throw Bad
-      var v = 0
-      var k = 0
-      while (k < n) {
-        val b = bytes(pos >>> 3)
-        v = (v << 1) | ((b >> (7 - (pos & 7))) & 1)
-        pos += 1
-        k += 1
-      }
-      v
-    }
-    def takeLong(n: Int): Long = {
-      var v = 0L
-      var k = 0
-      while (k < n) { v = (v << 1) | take(1); k += 1 }
-      v
-    }
-    /** After an EOS record: the padding bits to the byte boundary
-      * must be zero (anything else is trailing garbage, not a
-      * concatenated stream). */
-    def alignToByteZeroPadded(): Unit =
-      while ((pos & 7) != 0) if (take(1) != 0) throw Bad
-    def remainingBits: Int = nBits - pos
-  }
-
-  private final val GroupSize = 50
-  private final val MaxGroups = 6
-  private final val MaxAlpha = 258
-  private final val MaxSelectors = 2 + (900000 / GroupSize)
-
-  /** The per-row kernel — public static so generated code can call it.
-    * Returns null for every malformed/over-cap shape (fail closed). */
-  def compute(bytes: Array[Byte], maxOut: Int): Array[Byte] = {
-    try {
-      if (bytes.length < 10) return null
-      val in = new Bits(bytes)
-      val out = new java.io.ByteArrayOutputStream(math.min(maxOut, 1 << 16))
-      var moreStreams = true
-      while (moreStreams) {
-      val hdr = in.take(32)
-      if ((hdr >>> 8) != (('B' << 16) | ('Z' << 8) | 'h')) return null
-      val level = (hdr & 0xff) - '0'
-      if (level < 1 || level > 9) return null
-      val blockMax = level * 100000
-      var streamCrc = 0
-      var sawEos = false
-      while (!sawEos) {
-        val magic = in.takeLong(48)
-        if (magic == 0x177245385090L) {
-          val declaredStreamCrc = in.takeLong(32).toInt
-          if (declaredStreamCrc != streamCrc) return null
-          sawEos = true
-        } else if (magic != 0x314159265359L) return null
-        else {
-          val blockCrc = in.takeLong(32).toInt
-          if (in.take(1) != 0) return null // randomized: deprecated, refuse
-          val origPtr = in.take(24)
-          // symbol map
-          val used16 = in.take(16)
-          val inUse = new Array[Boolean](256)
-          var nInUse = 0
-          var i = 0
-          while (i < 16) {
-            if ((used16 & (0x8000 >>> i)) != 0) {
-              val m = in.take(16)
-              var j = 0
-              while (j < 16) {
-                if ((m & (0x8000 >>> j)) != 0) {
-                  inUse(i * 16 + j) = true; nInUse += 1
-                }
-                j += 1
-              }
-            }
-            i += 1
-          }
-          if (nInUse == 0) return null
-          val seqToUnseq = new Array[Int](nInUse)
-          var k = 0
-          i = 0
-          while (i < 256) {
-            if (inUse(i)) { seqToUnseq(k) = i; k += 1 }
-            i += 1
-          }
-          val alphaSize = nInUse + 2
-          val nGroups = in.take(3)
-          if (nGroups < 2 || nGroups > MaxGroups) return null
-          val nSelectors = in.take(15)
-          if (nSelectors < 1 || nSelectors > MaxSelectors) return null
-          // selectors, MTF-coded unary
-          val selMtf = Array.tabulate(nGroups)(identity)
-          val selectors = new Array[Int](nSelectors)
-          i = 0
-          while (i < nSelectors) {
-            var j = 0
-            while (in.take(1) == 1) {
-              j += 1
-              if (j >= nGroups) return null
-            }
-            val v = selMtf(j)
-            while (j > 0) { selMtf(j) = selMtf(j - 1); j -= 1 }
-            selMtf(0) = v
-            selectors(i) = v
-            i += 1
-          }
-          // Huffman code lengths per group, delta-coded
-          val lens = Array.ofDim[Int](nGroups, alphaSize)
-          var g = 0
-          while (g < nGroups) {
-            var cur = in.take(5)
-            var s = 0
-            while (s < alphaSize) {
-              var looping = true
-              while (looping) {
-                if (cur < 1 || cur > 20) return null
-                if (in.take(1) == 0) looping = false
-                else cur += (if (in.take(1) == 0) 1 else -1)
-              }
-              lens(g)(s) = cur
-              s += 1
-            }
-            g += 1
-          }
-          // canonical decode tables: limit/base/perm per group
-          val limit = Array.ofDim[Int](nGroups, 24)
-          val base = Array.ofDim[Int](nGroups, 24)
-          val perm = Array.ofDim[Int](nGroups, MaxAlpha)
-          val minLens = new Array[Int](nGroups)
-          g = 0
-          while (g < nGroups) {
-            var minLen = 32; var maxLen = 0
-            var s = 0
-            while (s < alphaSize) {
-              if (lens(g)(s) > maxLen) maxLen = lens(g)(s)
-              if (lens(g)(s) < minLen) minLen = lens(g)(s)
-              s += 1
-            }
-            minLens(g) = minLen
-            // perm: symbols ordered by (length, symbol)
-            var pp = 0
-            var l = minLen
-            while (l <= maxLen) {
-              s = 0
-              while (s < alphaSize) {
-                if (lens(g)(s) == l) { perm(g)(pp) = s; pp += 1 }
-                s += 1
-              }
-              l += 1
-            }
-            val cnt = new Array[Int](24)
-            s = 0
-            while (s < alphaSize) { cnt(lens(g)(s) + 1) += 1; s += 1 }
-            var t = 1
-            while (t < 23) { cnt(t) += cnt(t - 1); t += 1 }
-            System.arraycopy(cnt, 0, base(g), 0, 23)
-            var vec = 0
-            l = minLen
-            while (l <= maxLen) {
-              vec += cnt(l + 1) - cnt(l)
-              limit(g)(l) = vec - 1
-              vec <<= 1
-              l += 1
-            }
-            l = minLen + 1
-            while (l <= maxLen) {
-              base(g)(l) = ((limit(g)(l - 1) + 1) << 1) - base(g)(l)
-              l += 1
-            }
-            g += 1
-          }
-          // decode the MTF/RLE2 symbol stream into the BWT buffer
-          val eob = alphaSize - 1
-          val mtf = Array.tabulate(nInUse)(identity)
-          val bwt = new Array[Byte](blockMax)
-          val counts = new Array[Int](256)
-          var bwtLen = 0
-          var groupNo = -1
-          var groupPos = 0
-          var gSel = 0
-          def nextSym(): Int = {
-            if (groupPos == 0) {
-              groupNo += 1
-              if (groupNo >= nSelectors) throw Bad
-              groupPos = GroupSize
-              gSel = selectors(groupNo)
-            }
-            groupPos -= 1
-            var l = minLens(gSel)
-            var v = in.take(l)
-            while (l <= 20 && v > limit(gSel)(l)) {
-              l += 1
-              v = (v << 1) | in.take(1)
-            }
-            if (l > 20) throw Bad
-            val idx = v - base(gSel)(l)
-            if (idx < 0 || idx >= alphaSize) throw Bad
-            perm(gSel)(idx)
-          }
-          var sym = nextSym()
-          while (sym != eob) {
-            if (sym <= 1) { // RUNA/RUNB: bijective base-2 run of mtf[0]
-              var run = 0
-              var n = 1
-              while (sym <= 1) {
-                run += (sym + 1) * n
-                n <<= 1
-                if (n < 0 || run > blockMax) throw Bad
-                sym = nextSym()
-              }
-              val b = seqToUnseq(mtf(0)).toByte
-              if (bwtLen + run > blockMax) throw Bad
-              var r = 0
-              while (r < run) { bwt(bwtLen) = b; bwtLen += 1; r += 1 }
-              counts(b & 0xff) += run
-            } else {
-              // MTF value sym-1: move to front, emit
-              var j = sym - 1
-              if (j >= nInUse) throw Bad
-              val v = mtf(j)
-              while (j > 0) { mtf(j) = mtf(j - 1); j -= 1 }
-              mtf(0) = v
-              if (bwtLen + 1 > blockMax) throw Bad
-              val b = seqToUnseq(v).toByte
-              bwt(bwtLen) = b; bwtLen += 1
-              counts(b & 0xff) += 1
-              sym = nextSym()
-            }
-          }
-          if (origPtr >= bwtLen) return null
-          // inverse BWT: successor-vector walk
-          val cftab = new Array[Int](257)
-          i = 0
-          while (i < 256) { cftab(i + 1) = cftab(i) + counts(i); i += 1 }
-          val tt = new Array[Int](bwtLen)
-          i = 0
-          while (i < bwtLen) {
-            val b = bwt(i) & 0xff
-            tt(cftab(b)) = i
-            cftab(b) += 1
-            i += 1
-          }
-          // RLE1 decode while walking, CRC on the fly
-          var crc = 0xffffffff
-          var p = tt(origPtr)
-          var emitted = 0
-          var runByte = -1
-          var runLen = 0
-          def emit(b: Int): Unit = {
-            if (out.size() >= maxOut) throw Bad // bomb guard
-            out.write(b)
-            crc = (crc << 8) ^ crcTable(((crc >>> 24) ^ b) & 0xff)
-          }
-          while (emitted < bwtLen) {
-            val b = bwt(p) & 0xff
-            p = tt(p)
-            emitted += 1
-            if (runLen == 4) {
-              // the count byte: b more copies of runByte
-              var r = 0
-              while (r < b) { emit(runByte); r += 1 }
-              runLen = 0
-              runByte = -1
-            } else {
-              if (b == runByte) runLen += 1
-              else { runByte = b; runLen = 1 }
-              emit(b)
-            }
-          }
-          if (runLen == 4) return null // dangling run with no count byte
-          crc = ~crc
-          if (crc != blockCrc) return null
-          streamCrc = ((streamCrc << 1) | (streamCrc >>> 31)) ^ blockCrc
-        }
-      }
-      // zero padding to the byte boundary, then either clean EOF or a
-      // concatenated follow-on stream's BZh header (pbzip2/multistream)
-      in.alignToByteZeroPadded()
-      if (in.remainingBits == 0) moreStreams = false
-      else if (in.remainingBits < 32) return null // trailing garbage
-      }
-      out.toByteArray
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
-    }
-  }
 
   import org.apache.spark.sql.graftshim.ColumnShim
 

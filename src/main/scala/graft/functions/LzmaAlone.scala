@@ -1,30 +1,32 @@
 package graft.functions
 
+import java.io.ByteArrayInputStream
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
+import org.tukaani.xz.LZMAInputStream
 
 /** Legacy `.lzma` (LZMA-alone) decompression — the pre-xz wrapper old
   * kernel sources, wikis and mirror trees still carry: a 13-byte
   * header (1 props byte lc/lp/pb, 4-byte LE dictionary size, 8-byte
   * LE uncompressed size where all-FF means UNKNOWN) followed by one
-  * raw LZMA1 stream. Both size modes decode through the repo's own
-  * LZMA machinery ([[XzPayload]]'s, shared with the xz and 7z
-  * kernels): a known size decodes exactly that many bytes; the
-  * unknown-size form — what liblzma's alone encoder emits — runs to
-  * the dist-0xFFFFFFFF end marker and requires the range coder to
-  * finish clean.
+  * raw LZMA1 stream. Decoded by xz-java's `LZMAInputStream`: a known
+  * size decodes exactly that many bytes; the unknown-size form — what
+  * liblzma's alone encoder emits — runs to the end marker and
+  * requires the range coder to finish clean.
   *
   * FAIL-CLOSED NULL for: payload shorter than the header, a props
-  * byte ≥ 225 (not a valid lc/lp/pb encoding), lc+lp combinations
-  * outside the shared decoder's 7z-compatible bound, a known size
-  * past `maxOut` (the decompression-bomb guard — rejected, never
-  * clipped), corrupt stream data, a marker-mode stream that runs out
-  * of bytes before its marker. The format has NO checksum — stream
-  * structure is the only corruption signal, exactly as the reference
-  * decoders behave. Per-row bounded work, zero shuffle, codegen'd. */
+  * byte ≥ 225 (not a valid lc/lp/pb encoding), a declared dictionary
+  * needing more memory than `xz -9` or `maxOut` (refused before it is
+  * allocated), output past `maxOut` (the decompression-bomb guard —
+  * rejected, never clipped), corrupt stream data, a marker-mode stream
+  * that runs out of bytes before its marker. The format has NO
+  * checksum — stream structure is the only corruption signal, exactly
+  * as the reference decoders behave. Per-row bounded work, zero
+  * shuffle, codegen'd. */
 case class LzmaAlonePayload(child: Expression, maxOut: Int)
     extends UnaryExpression {
   require(maxOut > 0, "output cap must be positive")
@@ -55,21 +57,12 @@ case class LzmaAlonePayload(child: Expression, maxOut: Int)
 object LzmaAlonePayload {
 
   /** The per-row kernel — public static so generated code can call it. */
-  def compute(b: Array[Byte], maxOut: Int): Array[Byte] = {
-    if (b == null || b.length < 13) return null
-    val props = b(0) & 0xff
-    if (props >= 9 * 5 * 5) return null
-    var size = 0L
-    var i = 0
-    while (i < 8) { size |= (b(5 + i) & 0xffL) << (8 * i); i += 1 }
-    if (size == -1L) {
-      // unknown size: marker-terminated stream
-      XzPayload.lzma1Marker(b, 13, b.length - 13, props, maxOut)
-    } else {
-      if (size < 0 || size > maxOut) return null
-      XzPayload.lzma1(b, 13, b.length - 13, size.toInt, props, maxOut)
+  def compute(b: Array[Byte], maxOut: Int): Array[Byte] =
+    if (b == null) null
+    else BoundedDecode(maxOut) {
+      new LZMAInputStream(new ByteArrayInputStream(b),
+        BoundedDecode.xzMemoryLimitKiB(maxOut), BoundedDecode.xzArrays)
     }
-  }
 
   import org.apache.spark.sql.graftshim.ColumnShim
 

@@ -1,5 +1,8 @@
 package graft.functions
 
+import java.io.ByteArrayInputStream
+
+import org.apache.commons.compress.compressors.z.ZCompressorInputStream
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -8,35 +11,23 @@ import org.apache.spark.sql.types._
 
 /** Unix compress(1) `.Z` decompression — the LZW wrapper the oldest
   * tier of web/software corpora still ships (`.tar.Z` source drops,
-  * pre-gzip FTP mirrors, old man-page trees). From the public format
-  * (the ncompress/gzip-unlzw semantics, there is no RFC): magic
-  * `1F 9D`, a flags byte carrying maxbits (9..16) and the block-mode
-  * bit, then LSB-first variable-width LZW codes starting at 9 bits.
+  * pre-gzip FTP mirrors, old man-page trees). Decoded by
+  * commons-compress's `ZCompressorInputStream` (on Spark's classpath),
+  * which implements the ncompress/gzip-unlzw semantics: magic
+  * `1F 9D`, a flags byte carrying maxbits and the block-mode bit,
+  * LSB-first variable-width codes with the group padding on every
+  * width change and CLEAR, and the decoder's lagging table.
   *
-  * The two quirks that make naive LZW readers fail on real files are
-  * implemented exactly:
+  * The library reads maxbits without checking it and ignores the
+  * reserved flag bits, so the flags byte is checked here: reserved
+  * bits (0x60) set or maxbits outside 9..16 is refused. A truncated
+  * stream yields the decodable prefix, as the reference decoder does
+  * (.Z carries no checksum or length).
   *
-  *  - GROUP PADDING: codes are written in groups of 8; on every code
-  *    width change AND every CLEAR the bit cursor rounds up to the
-  *    next multiple of `n_bits` BYTES from the current group origin
-  *    (gzip unlzw.c's posbits realignment) — skipping the pad bits a
-  *    real compressor emitted;
-  *  - LAGGING TABLE: the width bumps when the DECODER's table (one
-  *    entry behind the compressor's) passes `(1<<n_bits)-1`, and at
-  *    `maxbits` the ceiling freezes so only an explicit CLEAR (code
-  *    256 in block mode) resets to 9 bits.
-  *
-  * KwK (`code == free_ent`) resolves as prev+prev[0]; prefix chains
-  * are strictly decreasing so corrupt input cannot cycle; a cleared
-  * table zeroes its prefixes. Trailing sub-code bits are discarded
-  * exactly as the reference decoder does.
-  *
-  * FAIL-CLOSED NULL for: wrong magic, reserved flag bits set,
-  * maxbits outside 9..16, a first code >= 256, any code above the
-  * live table (`code > free_ent`), and output past `maxOut` (the
-  * decompression-bomb guard — rejected, never clipped; .Z carries no
-  * checksum, so structural desync is the only corruption signal the
-  * format offers). Per-row bounded work, zero shuffle, codegen'd. */
+  * FAIL-CLOSED NULL for: wrong magic, a bad flags byte, any code
+  * above the live table, and output past `maxOut` (the
+  * decompression-bomb guard — rejected, never clipped). Per-row
+  * bounded work, zero shuffle, codegen'd. */
 case class LzwUncompress(child: Expression, maxOut: Int)
     extends UnaryExpression {
   require(maxOut > 0, "output cap must be positive")
@@ -69,90 +60,10 @@ object LzwUncompress {
   /** The per-row kernel — public static so generated code can call it. */
   def compute(b: Array[Byte], maxOut: Int): Array[Byte] = {
     if (b == null || b.length < 3) return null
-    if (b(0) != 0x1f.toByte || b(1) != 0x9d.toByte) return null
     val flags = b(2) & 0xff
-    if ((flags & 0x60) != 0) return null // reserved bits must be zero
     val maxbits = flags & 0x1f
-    val block = (flags & 0x80) != 0
-    if (maxbits < 9 || maxbits > 16) return null
-    val maxmax = 1 << maxbits
-    var nBits = 9
-    var maxcode = (1 << nBits) - 1
-    var freeEnt = if (block) 257 else 256
-    val prefix = new Array[Int](maxmax)
-    val suffix = new Array[Byte](maxmax)
-    var i = 0
-    while (i < 256) { suffix(i) = i.toByte; i += 1 }
-    var base = 3L // byte origin of the current code-group run
-    var bitpos = 0L // bits since base
-    val totalBits = b.length.toLong << 3
-    var oldcode = -1
-    var finchar = 0
-    val out = new java.io.ByteArrayOutputStream()
-    val stack = new Array[Byte](maxmax)
-
-    // round the cursor up to the next n_bits-byte group boundary
-    def realign(width: Int): Unit = {
-      val g = width.toLong << 3
-      if (bitpos % g != 0) bitpos = (bitpos / g + 1) * g
-      base += bitpos >> 3
-      bitpos = 0
-    }
-
-    while ((base << 3) + bitpos + nBits <= totalBits) {
-      if (freeEnt > maxcode) {
-        realign(nBits)
-        nBits += 1
-        maxcode = if (nBits == maxbits) maxmax else (1 << nBits) - 1
-        if (nBits > maxbits) return null // corrupt: spill past maxbits
-      } else {
-        val bp = (base << 3) + bitpos
-        val byteIdx = (bp >> 3).toInt
-        val bitOff = (bp & 7).toInt
-        var raw = b(byteIdx) & 0xff
-        if (byteIdx + 1 < b.length) raw |= (b(byteIdx + 1) & 0xff) << 8
-        if (byteIdx + 2 < b.length) raw |= (b(byteIdx + 2) & 0xff) << 16
-        val code = (raw >> bitOff) & ((1 << nBits) - 1)
-        bitpos += nBits
-        if (oldcode == -1) {
-          if (code >= 256) return null
-          finchar = code
-          oldcode = code
-          out.write(code)
-          if (out.size > maxOut) return null
-        } else if (block && code == 256) {
-          java.util.Arrays.fill(prefix, 0)
-          freeEnt = 256
-          realign(nBits)
-          nBits = 9
-          maxcode = (1 << 9) - 1
-        } else {
-          val incode = code
-          var c = code
-          var sp = 0
-          if (c >= freeEnt) {
-            if (c > freeEnt) return null
-            stack(sp) = finchar.toByte; sp += 1
-            c = oldcode
-          }
-          while (c >= 256) {
-            stack(sp) = suffix(c); sp += 1
-            c = prefix(c)
-          }
-          finchar = suffix(c) & 0xff
-          stack(sp) = finchar.toByte; sp += 1
-          if (out.size + sp > maxOut) return null
-          while (sp > 0) { sp -= 1; out.write(stack(sp)) }
-          if (freeEnt < maxmax) {
-            prefix(freeEnt) = oldcode
-            suffix(freeEnt) = finchar.toByte
-            freeEnt += 1
-          }
-          oldcode = incode
-        }
-      }
-    }
-    out.toByteArray
+    if ((flags & 0x60) != 0 || maxbits < 9 || maxbits > 16) return null
+    BoundedDecode(maxOut)(new ZCompressorInputStream(new ByteArrayInputStream(b)))
   }
 
   import org.apache.spark.sql.graftshim.ColumnShim

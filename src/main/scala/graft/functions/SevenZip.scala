@@ -463,7 +463,7 @@ object SevenZipList {
         out
       case "21" => // LZMA2: props = 1 byte dictSize code
         val out = XzPayload.lzma2Raw(bytes, start.toInt,
-          (start + packLen).toInt, maxOut)
+          (start + packLen).toInt, unpack.toInt)
         if (out == null || out.length != unpack) throw Bad
         out
       case "040202" => // BZIP2

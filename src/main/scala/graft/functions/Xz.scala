@@ -1,42 +1,30 @@
 package graft.functions
 
+import java.io.ByteArrayInputStream
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
+import org.tukaani.xz.{LZMA2InputStream, LZMAInputStream, XZInputStream}
 
 /** Bounded `.xz` decompression — the wrapper source releases and
-  * scientific archives ship in (`.tar.xz`), from the public xz file
-  * format and LZMA specifications (the JDK has neither; this is the
-  * [[Bunzip2]]/[[ZstdPayload]] sibling closing the last wrapper gap):
+  * scientific archives ship in (`.tar.xz`). Decoded by xz-java's
+  * `XZInputStream` (on Spark's classpath): stream header/footer and
+  * block-header CRCs, declared block sizes, the index, block and
+  * stream padding, concatenated streams, and the integrity check of
+  * each block (CRC32, CRC64, SHA-256 or none) all verified; the
+  * LZMA2 filter with the delta and BCJ filters in front of it.
   *
-  *  - the xz CONTAINER: stream header/footer with flag CRCs and the
-  *    backward-size cross-check, block headers (filter list, optional
-  *    declared sizes — enforced when present), block padding, the
-  *    INDEX (each block's unpadded + uncompressed size re-checked
-  *    against what was actually decoded), stream padding, and
-  *    concatenated streams;
-  *  - integrity checks VERIFIED per the declared type: CRC32, CRC64
-  *    (ECMA-182 reflected, table-driven), SHA-256 via the JDK digest,
-  *    or none;
-  *  - LZMA2 chunking: uncompressed chunks, dictionary/state/props
-  *    reset semantics, per-chunk unpack/pack sizes enforced exactly;
-  *  - the LZMA range decoder in full: 11-bit adaptive probabilities,
-  *    literal decoding in both plain and matched modes, match/rep
-  *    machinery with the 4-slot distance history, position slots +
-  *    aligned/direct distance bits, and the 2/10/18-base length
-  *    coder.
-  *
-  * Only the LZMA2 filter (0x21) is supported — delta/BCJ filter
-  * chains fail closed (refusal, never a guess); they are rare in
-  * corpus archives. FAIL-CLOSED NULL on every malformed shape:
-  * magic/flag/CRC mismatches, reserved bits, declared-size
-  * disagreement, range-coder desync (a chunk not consuming exactly
-  * its packed bytes), distances past the dictionary, output past
-  * `maxOut` (AGGREGATE decompression-bomb guard — rejected, never
-  * clipped), truncation, trailing garbage. Per-row bounded work,
-  * zero shuffle, codegen'd. */
+  * FAIL-CLOSED NULL on every shape xz-java refuses — magic, flag or
+  * CRC mismatches, reserved bits, declared-size disagreement,
+  * range-coder desync, distances past the dictionary, truncation,
+  * trailing garbage — and on output past `maxOut` (AGGREGATE
+  * decompression-bomb guard — rejected, never clipped). A block whose
+  * dictionary needs more memory than `xz -9` or `maxOut` is refused
+  * before it is allocated. Per-row bounded work, zero shuffle,
+  * codegen'd. */
 case class XzPayload(child: Expression, maxOut: Int)
     extends UnaryExpression {
   require(maxOut > 0, "output cap must be positive")
@@ -67,661 +55,56 @@ case class XzPayload(child: Expression, maxOut: Int)
 
 object XzPayload {
 
-  private object Bad extends Exception with scala.util.control.NoStackTrace
-  private object Finished extends Exception with scala.util.control.NoStackTrace
-
-  // ---------------------------------------------------------------
-  // checks
-  // ---------------------------------------------------------------
-
-  /** CRC64/ECMA-182 reflected (xz's default check), table-driven. */
-  private val crc64Table: Array[Long] = {
-    val poly = 0xC96C5795D7870F42L // reflected ECMA-182
-    val t = new Array[Long](256)
-    var i = 0
-    while (i < 256) {
-      var c = i.toLong
-      var k = 0
-      while (k < 8) {
-        c = if ((c & 1L) != 0) (c >>> 1) ^ poly else c >>> 1
-        k += 1
-      }
-      t(i) = c
-      i += 1
-    }
-    t
-  }
-
-  private def crc64(b: Array[Byte], off: Int, len: Int): Long = {
-    var c = -1L
-    var i = off
-    val end = off + len
-    while (i < end) {
-      c = crc64Table(((c ^ b(i)) & 0xff).toInt) ^ (c >>> 8)
-      i += 1
-    }
-    ~c
-  }
-
-  private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
-    val c = new java.util.zip.CRC32
-    c.update(b, off, len)
-    c.getValue
-  }
-
-  private def le32(b: Array[Byte], p: Int): Long =
-    (b(p) & 0xffL) | ((b(p + 1) & 0xffL) << 8) |
-      ((b(p + 2) & 0xffL) << 16) | ((b(p + 3) & 0xffL) << 24)
-
-  // ---------------------------------------------------------------
-  // output buffer = the LZMA dictionary (random access for matches)
-  // ---------------------------------------------------------------
-
-  private final class Out(maxOut: Int) {
-    var buf = new Array[Byte](math.max(64, math.min(maxOut, 1 << 16)))
-    var len = 0
-    def put(b: Byte): Unit = {
-      if (len >= maxOut) throw Bad
-      if (len >= buf.length)
-        buf = java.util.Arrays.copyOf(buf,
-          math.min(maxOut, math.max(buf.length * 2, len + 1)))
-      buf(len) = b
-      len += 1
-    }
-    def append(src: Array[Byte], off: Int, n: Int): Unit = {
-      if (len + n > maxOut) throw Bad
-      if (len + n > buf.length)
-        buf = java.util.Arrays.copyOf(buf,
-          math.min(maxOut, math.max(buf.length * 2, len + n)))
-      System.arraycopy(src, off, buf, len, n)
-      len += n
-    }
-  }
-
-  // ---------------------------------------------------------------
-  // LZMA range decoder over one chunk's packed bytes
-  // ---------------------------------------------------------------
-
-  private final class RangeDec(buf: Array[Byte], var pos: Int, val end: Int) {
-    var range: Long = 0xFFFFFFFFL
-    var code: Long = 0L
-    // init: one zero byte then 4 code bytes
-    if (pos >= end || buf(pos) != 0) throw Bad
-    pos += 1
-    var k = 0
-    while (k < 4) { code = (code << 8) | next(); k += 1 }
-
-    private def next(): Long = {
-      if (pos >= end) throw Bad
-      val b = buf(pos) & 0xffL
-      pos += 1
-      b
-    }
-    private def normalize(): Unit =
-      if (range < (1L << 24)) { range <<= 8; code = ((code << 8) | next()) & 0xFFFFFFFFL }
-
-    def bit(probs: Array[Short], i: Int): Int = {
-      val p = probs(i)
-      val bound = (range >>> 11) * p
-      if (code < bound) {
-        range = bound
-        probs(i) = (p + ((2048 - p) >>> 5)).toShort
-        normalize()
-        0
-      } else {
-        code -= bound
-        range -= bound
-        probs(i) = (p - (p >>> 5)).toShort
-        normalize()
-        1
-      }
-    }
-
-    def tree(probs: Array[Short], off: Int, nBits: Int): Int = {
-      var m = 1
-      var i = 0
-      while (i < nBits) { m = (m << 1) | bit(probs, off + m); i += 1 }
-      m - (1 << nBits)
-    }
-
-    def reverseTree(probs: Array[Short], off: Int, nBits: Int): Int = {
-      var m = 1
-      var sym = 0
-      var i = 0
-      while (i < nBits) {
-        val b = bit(probs, off + m)
-        m = (m << 1) | b
-        sym |= b << i
-        i += 1
-      }
-      sym
-    }
-
-    def direct(nBits: Int): Long = {
-      var res = 0L
-      var i = 0
-      while (i < nBits) {
-        range >>>= 1
-        res <<= 1
-        if (code >= range) { code -= range; res |= 1L }
-        normalize()
-        i += 1
-      }
-      res
-    }
-  }
-
-  // ---------------------------------------------------------------
-  // LZMA model state (reset semantics owned by the LZMA2 layer)
-  // ---------------------------------------------------------------
-
-  private final class Lzma {
-    var lc = 0
-    var lp = 0
-    var pb = 0
-    var state = 0
-    var rep0 = 0
-    var rep1 = 0
-    var rep2 = 0
-    var rep3 = 0
-    var isMatch: Array[Short] = _
-    var isRep: Array[Short] = _
-    var isRepG0: Array[Short] = _
-    var isRepG1: Array[Short] = _
-    var isRepG2: Array[Short] = _
-    var isRep0Long: Array[Short] = _
-    var posSlot: Array[Short] = _ // 4 * 64
-    var specPos: Array[Short] = _ // 115
-    var align: Array[Short] = _ // 16
-    var lenChoice: Array[Short] = _ // 2 (choice, choice2)
-    var lenLow: Array[Short] = _ // 16 * 8
-    var lenMid: Array[Short] = _ // 16 * 8
-    var lenHigh: Array[Short] = _ // 256
-    var repChoice: Array[Short] = _
-    var repLow: Array[Short] = _
-    var repMid: Array[Short] = _
-    var repHigh: Array[Short] = _
-    var lits: Array[Short] = _ // 0x300 << (lc+lp)
-
-    def setProps(prop: Int): Unit = {
-      if (prop >= 9 * 5 * 5) throw Bad
-      lc = prop % 9
-      val r = prop / 9
-      lp = r % 5
-      pb = r / 5
-      if (lc + lp > 4 || pb > 4) throw Bad // the LZMA2 restriction
-    }
-
-    private def fresh(n: Int): Array[Short] = {
-      val a = new Array[Short](n)
-      java.util.Arrays.fill(a, 1024.toShort)
-      a
-    }
-
-    def resetState(): Unit = {
-      state = 0; rep0 = 0; rep1 = 0; rep2 = 0; rep3 = 0
-      isMatch = fresh(12 << 4)
-      isRep = fresh(12)
-      isRepG0 = fresh(12)
-      isRepG1 = fresh(12)
-      isRepG2 = fresh(12)
-      isRep0Long = fresh(12 << 4)
-      posSlot = fresh(4 * 64)
-      specPos = fresh(115)
-      align = fresh(16)
-      lenChoice = fresh(2); lenLow = fresh(16 * 8); lenMid = fresh(16 * 8)
-      lenHigh = fresh(256)
-      repChoice = fresh(2); repLow = fresh(16 * 8); repMid = fresh(16 * 8)
-      repHigh = fresh(256)
-      lits = fresh(0x300 << (lc + lp))
-    }
-  }
-
-  private def decodeLen(rc: RangeDec, choice: Array[Short],
-                        low: Array[Short], mid: Array[Short],
-                        high: Array[Short], posState: Int): Int =
-    if (rc.bit(choice, 0) == 0) 2 + rc.tree(low, posState << 3, 3)
-    else if (rc.bit(choice, 1) == 0) 10 + rc.tree(mid, posState << 3, 3)
-    else 18 + rc.tree(high, 0, 8)
-
-  /** One LZMA chunk: produce exactly `unpackSize` bytes, consuming
-    * exactly `packSize` packed bytes. `dictBase` is where this LZMA2
-    * stream's dictionary began in `out` (matches may not reach
-    * before it). */
-  private def lzmaChunk(bytes: Array[Byte], off: Int, packSize: Int,
-                        unpackSize: Int, out: Out, dictBase: Int,
-                        m: Lzma, exact: Boolean = true,
-                        allowMarker: Boolean = false): Unit = {
-    val rc = new RangeDec(bytes, off, off + packSize)
-    val target = out.len + unpackSize
-    val pbMask = (1 << m.pb) - 1
-    val lpMask = (1 << m.lp) - 1
-    while (out.len < target) {
-      val totalPos = out.len - dictBase
-      val posState = totalPos & pbMask
-      if (rc.bit(m.isMatch, (m.state << 4) | posState) == 0) {
-        // literal
-        val prev = if (out.len > dictBase) out.buf(out.len - 1) & 0xff else 0
-        val litState = ((totalPos & lpMask) << m.lc) | (prev >>> (8 - m.lc))
-        val base = 0x300 * litState
-        var symbol = 1
-        if (m.state < 7) {
-          while (symbol < 0x100)
-            symbol = (symbol << 1) | rc.bit(m.lits, base + symbol)
-        } else {
-          if (out.len - m.rep0 - 1 < dictBase) throw Bad
-          var matchByte = out.buf(out.len - m.rep0 - 1) & 0xff
-          var broke = false
-          while (!broke && symbol < 0x100) {
-            val matchBit = (matchByte >>> 7) & 1
-            matchByte = (matchByte << 1) & 0xff
-            val b = rc.bit(m.lits, base + ((1 + matchBit) << 8) + symbol)
-            symbol = (symbol << 1) | b
-            if (matchBit != b) {
-              while (symbol < 0x100)
-                symbol = (symbol << 1) | rc.bit(m.lits, base + symbol)
-              broke = true
-            }
-          }
-        }
-        out.put((symbol & 0xff).toByte)
-        m.state =
-          if (m.state < 4) 0 else if (m.state < 10) m.state - 3
-          else m.state - 6
-      } else {
-        var len = 0
-        if (rc.bit(m.isRep, m.state) == 0) {
-          // plain match: new distance
-          m.rep3 = m.rep2; m.rep2 = m.rep1; m.rep1 = m.rep0
-          len = decodeLen(rc, m.lenChoice, m.lenLow, m.lenMid, m.lenHigh,
-            posState)
-          val lenClass = math.min(len - 2, 3)
-          val slot = rc.tree(m.posSlot, lenClass * 64, 6)
-          var dist = 0L
-          if (slot < 4) dist = slot
-          else {
-            val nd = (slot >>> 1) - 1
-            dist = (2L | (slot & 1)) << nd
-            if (slot < 14)
-              dist += rc.reverseTree(m.specPos, (dist - slot).toInt, nd)
-            else {
-              dist += rc.direct(nd - 4) << 4
-              dist += rc.reverseTree(m.align, 0, 4)
-            }
-          }
-          if (dist == 0xFFFFFFFFL) {
-            // end marker: legal only for the .lzma-alone caller, and
-            // only with the range coder in its finished state
-            if (allowMarker && rc.code == 0) throw Finished
-            throw Bad
-          }
-          if (dist > Int.MaxValue - 1) throw Bad
-          m.rep0 = dist.toInt
-          m.state = if (m.state < 7) 7 else 10
-        } else {
-          // rep match
-          if (rc.bit(m.isRepG0, m.state) == 0) {
-            if (rc.bit(m.isRep0Long, (m.state << 4) | posState) == 0) {
-              // short rep: one byte at rep0
-              if (out.len - m.rep0 - 1 < dictBase) throw Bad
-              m.state = if (m.state < 7) 9 else 11
-              out.put(out.buf(out.len - m.rep0 - 1))
-              len = -1 // handled
-            }
-          } else {
-            val dist =
-              if (rc.bit(m.isRepG1, m.state) == 0) m.rep1
-              else if (rc.bit(m.isRepG2, m.state) == 0) {
-                val d = m.rep2; m.rep2 = m.rep1; d
-              } else {
-                val d = m.rep3; m.rep3 = m.rep2; m.rep2 = m.rep1; d
-              }
-            m.rep1 = m.rep0
-            m.rep0 = dist
-          }
-          if (len == 0) {
-            len = decodeLen(rc, m.repChoice, m.repLow, m.repMid, m.repHigh,
-              posState)
-            m.state = if (m.state < 7) 8 else 11
-          }
-        }
-        if (len > 0) {
-          if (out.len + len > target) throw Bad // overruns the chunk
-          if (out.len - m.rep0 - 1 < dictBase) throw Bad
-          var k = 0
-          while (k < len) {
-            out.put(out.buf(out.len - m.rep0 - 1))
-            k += 1
-          }
-        }
-      }
-    }
-    // the chunk must consume its packed bytes exactly AND leave the
-    // range coder in the finished state (code == 0) — the liblzma
-    // end-of-chunk check that catches tampered trailing bytes the
-    // decoding path never branches on. RAW LZMA1 callers (7z headers)
-    // relax it: their encoders' final flush legitimately leaves
-    // normalization slack the decoder never reads.
-    if (exact && (rc.pos != off + packSize || rc.code != 0)) throw Bad
-    if (!exact && rc.pos > off + packSize) throw Bad
-  }
-
-  /** One LZMA2 stream: chunks until the 0x00 terminator. Returns the
-    * position after the terminator. */
-  /** Raw LZMA1 decode for OTHER containers (the 7z header tier):
+  /** Raw LZMA1 decode for OTHER containers (7z coders, ZIP method 14):
     * `props` is the classic 1-byte lc/lp/pb encoding, the stream's
     * packed bytes are `[off, off+packSize)` and exactly `unpackSize`
-    * bytes come out. The 7z restriction to lc+lp ≤ 4 carries over
-    * (the shared probability-array layout assumes it — 7z's default
-    * lc3 lp0 pb2 fits). Fail-closed null on any malformed shape. */
+    * bytes come out, through xz-java's raw `LZMAInputStream`. The
+    * range coder must finish clean at the declared size; the relaxed
+    * end condition lets an end marker follow it (writers that emit
+    * both). The dictionary is the output itself. Fail-closed null on
+    * any malformed shape. */
   private[functions] def lzma1(bytes: Array[Byte], off: Int, packSize: Int,
                                unpackSize: Int, props: Int,
-                               maxOut: Int): Array[Byte] = {
-    try {
-      if (unpackSize < 0 || unpackSize > maxOut) return null
-      if (off < 0 || packSize < 0 || off + packSize > bytes.length)
-        return null
-      val out = new Out(maxOut)
-      val m = new Lzma
-      m.setProps(props)
-      m.resetState()
-      lzmaChunk(bytes, off, packSize, unpackSize, out, 0, m,
-        exact = false)
-      java.util.Arrays.copyOf(out.buf, out.len)
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
+                               maxOut: Int): Array[Byte] =
+    if (unpackSize < 0 || unpackSize > maxOut) null
+    else BoundedDecode(unpackSize) {
+      val in = new LZMAInputStream(BoundedDecode.slice(bytes, off, packSize),
+        unpackSize.toLong, props.toByte, unpackSize, null, BoundedDecode.xzArrays)
+      in.enableRelaxedEndCondition()
+      in
     }
-  }
 
-  /** Marker-terminated LZMA1 decode for the `.lzma`-alone container
-    * (unknown-size streams end with the dist=0xFFFFFFFF marker and a
-    * finished range coder). Fail-closed null; over-`maxOut` refused
-    * by the output guard, a missing marker by the packed bytes
-    * running out. */
+  /** Marker-terminated raw LZMA1 decode (ZIP method 14 writers that
+    * emit the end marker): the stream must end with the marker and a
+    * finished range coder, within `maxOut` bytes — the dictionary
+    * size. Fail-closed null. */
   private[functions] def lzma1Marker(bytes: Array[Byte], off: Int,
                                      packSize: Int, props: Int,
-                                     maxOut: Int): Array[Byte] = {
-    try {
-      if (off < 0 || packSize < 0 || off + packSize > bytes.length)
-        return null
-      val out = new Out(maxOut)
-      val m = new Lzma
-      m.setProps(props)
-      m.resetState()
-      try {
-        lzmaChunk(bytes, off, packSize, Int.MaxValue - 16, out, 0, m,
-          exact = false, allowMarker = true)
-        null // target unreachable: ending WITHOUT a marker is corrupt
-      } catch {
-        case Finished => java.util.Arrays.copyOf(out.buf, out.len)
-      }
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
+                                     maxOut: Int): Array[Byte] =
+    BoundedDecode(maxOut) {
+      new LZMAInputStream(BoundedDecode.slice(bytes, off, packSize), -1L,
+        props.toByte, maxOut, null, BoundedDecode.xzArrays)
     }
-  }
 
   /** Raw LZMA2 chunk-stream decode for OTHER containers (7z folders
-    * use it without the xz framing). Fail-closed null. */
+    * use it without the xz framing), through xz-java's
+    * `LZMA2InputStream` with a `maxOut`-sized dictionary. Fail-closed
+    * null. */
   private[functions] def lzma2Raw(bytes: Array[Byte], off: Int, end: Int,
-                                  maxOut: Int): Array[Byte] = {
-    try {
-      if (off < 0 || end > bytes.length || off > end) return null
-      val out = new Out(maxOut)
-      lzma2(bytes, off, end, out)
-      java.util.Arrays.copyOf(out.buf, out.len)
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
+                                  maxOut: Int): Array[Byte] =
+    BoundedDecode(maxOut) {
+      new LZMA2InputStream(BoundedDecode.slice(bytes, off, end - off),
+        math.max(maxOut, LZMA2InputStream.DICT_SIZE_MIN))
     }
-  }
-
-  private def lzma2(bytes: Array[Byte], start: Int, end: Int,
-                    out: Out): Int = {
-    var pos = start
-    val dictBase = out.len
-    val m = new Lzma
-    var havePropsEver = false
-    var needDictReset = true
-    def u8(): Int = {
-      if (pos >= end) throw Bad
-      val b = bytes(pos) & 0xff
-      pos += 1
-      b
-    }
-    var done = false
-    while (!done) {
-      val ctrl = u8()
-      if (ctrl == 0) done = true
-      else if (ctrl < 3) {
-        // uncompressed chunk: 1 = with dict reset, 2 = without
-        if (ctrl == 1) needDictReset = false
-        else if (needDictReset) throw Bad
-        val size = ((u8() << 8) | u8()) + 1
-        if (pos + size > end) throw Bad
-        out.append(bytes, pos, size)
-        pos += size
-        // an uncompressed chunk resets the LZMA state per the spec
-        if (havePropsEver) m.resetState()
-      } else if (ctrl >= 0x80) {
-        val unpack = (((ctrl & 0x1f) << 16) | (u8() << 8) | u8()) + 1
-        val pack = ((u8() << 8) | u8()) + 1
-        val reset = (ctrl >>> 5) & 3
-        if (reset >= 2) {
-          m.setProps(u8())
-          havePropsEver = true
-          m.resetState()
-        } else if (reset == 1) {
-          if (!havePropsEver) throw Bad
-          m.resetState()
-        } else if (!havePropsEver) throw Bad
-        if (reset == 3) needDictReset = false
-        else if (needDictReset) throw Bad
-        if (pos + pack > end) throw Bad
-        lzmaChunk(bytes, pos, pack, unpack, out, dictBase, m)
-        pos += pack
-      } else throw Bad // reserved control values
-    }
-    pos
-  }
-
-  // ---------------------------------------------------------------
-  // the xz container
-  // ---------------------------------------------------------------
-
-  /** xz variable-length integer (7 bits/byte, LE, max 9 bytes). */
-  private def vli(bytes: Array[Byte], posRef: Array[Int]): Long = {
-    var pos = posRef(0)
-    var v = 0L
-    var shift = 0
-    var cont = true
-    while (cont) {
-      if (pos >= bytes.length || shift > 62) throw Bad
-      val b = bytes(pos) & 0xff
-      pos += 1
-      v |= (b & 0x7fL) << shift
-      shift += 7
-      cont = (b & 0x80) != 0
-    }
-    posRef(0) = pos
-    if (v < 0) throw Bad
-    v
-  }
-
-  /** One xz STREAM starting at `start`; returns position after the
-    * footer. */
-  private def stream(bytes: Array[Byte], start: Int, out: Out): Int = {
-    val n = bytes.length
-    var pos = start
-    if (pos + 12 > n) throw Bad
-    if (bytes(pos) != 0xFD.toByte || bytes(pos + 1) != '7' ||
-      bytes(pos + 2) != 'z' || bytes(pos + 3) != 'X' ||
-      bytes(pos + 4) != 'Z' || bytes(pos + 5) != 0) throw Bad
-    val flag0 = bytes(pos + 6) & 0xff
-    val check = bytes(pos + 7) & 0xff
-    if (flag0 != 0) throw Bad // reserved
-    if (crc32(bytes, pos + 6, 2) != le32(bytes, pos + 8)) throw Bad
-    val checkLen = check match {
-      case 0x00 => 0
-      case 0x01 => 4
-      case 0x04 => 8
-      case 0x0A => 32
-      case _ => throw Bad // reserved/unsupported check ids
-    }
-    pos += 12
-    // blocks until the index indicator (0x00 where a header size byte
-    // would be)
-    final case class BlockRec(unpaddedSize: Long, uncompressed: Long)
-    val blocks = new java.util.ArrayList[BlockRec]
-    var atIndex = false
-    while (!atIndex) {
-      if (pos >= n) throw Bad
-      val hdrSizeField = bytes(pos) & 0xff
-      if (hdrSizeField == 0) atIndex = true
-      else {
-        val blockStart = pos
-        val hdrSize = (hdrSizeField + 1) * 4
-        if (pos + hdrSize > n) throw Bad
-        if (crc32(bytes, pos, hdrSize - 4) != le32(bytes, pos + hdrSize - 4))
-          throw Bad
-        val flags = bytes(pos + 1) & 0xff
-        val nFilters = (flags & 3) + 1
-        if ((flags & 0x3c) != 0) throw Bad // reserved bits
-        val p = Array(pos + 2)
-        var declaredComp = -1L
-        var declaredUnc = -1L
-        if ((flags & 0x40) != 0) declaredComp = vli(bytes, p)
-        if ((flags & 0x80) != 0) declaredUnc = vli(bytes, p)
-        var f = 0
-        var sawLzma2 = false
-        while (f < nFilters) {
-          val fid = vli(bytes, p)
-          val propsLen = vli(bytes, p)
-          if (fid == 0x21 && propsLen == 1) {
-            // LZMA2 dictionary-size property: validated for shape,
-            // not enforced (output is maxOut-bounded regardless)
-            if (p(0) >= n) throw Bad
-            val d = bytes(p(0)) & 0xff
-            if (d > 40) throw Bad
-            p(0) += 1
-            sawLzma2 = true
-          } else {
-            // any other filter (delta/BCJ): refusal, never a guess
-            throw Bad
-          }
-          f += 1
-        }
-        if (!sawLzma2 || nFilters != 1) throw Bad
-        // header padding must be zeros up to the CRC
-        var z = p(0)
-        while (z < pos + hdrSize - 4) {
-          if (bytes(z) != 0) throw Bad
-          z += 1
-        }
-        pos += hdrSize
-        val outBefore = out.len
-        val dataStart = pos
-        pos = lzma2(bytes, pos, n, out)
-        val compSize = pos - dataStart
-        val uncSize = out.len - outBefore
-        if (declaredComp >= 0 && declaredComp != compSize) throw Bad
-        if (declaredUnc >= 0 && declaredUnc != uncSize) throw Bad
-        // block padding to a multiple of 4 (zeros)
-        while (((pos - blockStart) & 3) != 0) {
-          if (pos >= n || bytes(pos) != 0) throw Bad
-          pos += 1
-        }
-        // the check over the UNCOMPRESSED data
-        if (pos + checkLen > n) throw Bad
-        check match {
-          case 0x01 =>
-            if (crc32(out.buf, outBefore, uncSize) != le32(bytes, pos))
-              throw Bad
-          case 0x04 =>
-            var want = 0L
-            var i = 7
-            while (i >= 0) { want = (want << 8) | (bytes(pos + i) & 0xffL); i -= 1 }
-            if (crc64(out.buf, outBefore, uncSize) != want) throw Bad
-          case 0x0A =>
-            val md = java.security.MessageDigest.getInstance("SHA-256")
-            md.update(out.buf, outBefore, uncSize)
-            val got = md.digest()
-            var i = 0
-            while (i < 32) {
-              if (got(i) != bytes(pos + i)) throw Bad
-              i += 1
-            }
-          case _ => ()
-        }
-        pos += checkLen
-        // unpadded size per spec: header + compressed + check, NO padding
-        blocks.add(BlockRec(hdrSize.toLong + compSize + checkLen,
-          uncSize.toLong))
-      }
-    }
-    // index: indicator already seen at `pos`
-    val indexStart = pos
-    pos += 1
-    val p = Array(pos)
-    val count = vli(bytes, p)
-    if (count != blocks.size()) throw Bad
-    var i = 0
-    while (i < count) {
-      val unpadded = vli(bytes, p)
-      val unc = vli(bytes, p)
-      val rec = blocks.get(i)
-      if (unpadded != rec.unpaddedSize || unc != rec.uncompressed) throw Bad
-      i += 1
-    }
-    pos = p(0)
-    while (((pos - indexStart) & 3) != 0) {
-      if (pos >= n || bytes(pos) != 0) throw Bad
-      pos += 1
-    }
-    if (pos + 4 > n) throw Bad
-    if (crc32(bytes, indexStart, pos - indexStart) != le32(bytes, pos))
-      throw Bad
-    pos += 4
-    val indexSize = (pos - indexStart).toLong
-    // footer: CRC32(backward+flags), backward size, flags, "YZ"
-    if (pos + 12 > n) throw Bad
-    if (crc32(bytes, pos + 4, 6) != le32(bytes, pos)) throw Bad
-    val backward = (le32(bytes, pos + 4) + 1) * 4
-    if (backward != indexSize) throw Bad
-    if ((bytes(pos + 8) & 0xff) != flag0 ||
-      (bytes(pos + 9) & 0xff) != check) throw Bad // flags must match
-    if (bytes(pos + 10) != 'Y' || bytes(pos + 11) != 'Z') throw Bad
-    pos + 12
-  }
 
   /** The per-row kernel — public static so generated code can call it.
     * Returns null for every malformed/over-cap shape (fail closed). */
-  def compute(bytes: Array[Byte], maxOut: Int): Array[Byte] = {
-    try {
-      if (bytes == null || bytes.length < 32) return null
-      val out = new Out(maxOut)
-      var pos = 0
-      var sawStream = false
-      while (pos < bytes.length) {
-        if (!sawStream || bytes(pos) != 0) {
-          pos = stream(bytes, pos, out)
-          sawStream = true
-        } else {
-          // stream padding: 4-byte zero runs between streams
-          val padStart = pos
-          while (pos < bytes.length && bytes(pos) == 0) pos += 1
-          if (((pos - padStart) & 3) != 0) throw Bad
-        }
-      }
-      if (!sawStream) throw Bad
-      java.util.Arrays.copyOf(out.buf, out.len)
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
-      case _: NegativeArraySizeException => null
+  def compute(bytes: Array[Byte], maxOut: Int): Array[Byte] =
+    if (bytes == null) null
+    else BoundedDecode(maxOut) {
+      new XZInputStream(new ByteArrayInputStream(bytes),
+        BoundedDecode.xzMemoryLimitKiB(maxOut), BoundedDecode.xzArrays)
     }
-  }
 
   import org.apache.spark.sql.graftshim.ColumnShim
 

@@ -311,7 +311,7 @@ object ZipEntryBytes {
       var out = XzPayload.lzma1(bytes, dOff, dLen, usize.toInt, prop,
         maxOut)
       if (out == null)
-        out = XzPayload.lzma1Marker(bytes, dOff, dLen, prop, maxOut)
+        out = XzPayload.lzma1Marker(bytes, dOff, dLen, prop, usize.toInt)
       return if (out != null && out.length == usize) out else null
     }
     if (method == 93) { // zstd member

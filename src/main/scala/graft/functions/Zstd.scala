@@ -9,8 +9,12 @@ import org.apache.spark.sql.types._
 /** Bounded zstd (RFC 8878) decompression — the de-facto interchange
   * codec of public LLM corpora (`.jsonl.zst`) and the modern default
   * for parquet/ORC writers; the JDK has no zstd, so this is a
-  * from-the-format kernel like [[Bunzip2]] (the reference's
-  * `CopyUtils.java` copies rows, not archives — no counterpart).
+  * from-the-format kernel (the reference's `CopyUtils.java` copies
+  * rows, not archives — no counterpart). It stays hand-written
+  * although zstd-jni is on Spark's classpath: libzstd refuses a
+  * compressed block larger than the frame's Block_Maximum_Size
+  * (min(Window_Size, 128 KiB), RFC 8878 §3.1.1.2.3), which the
+  * hand-built direct-Huffman-weights frame in `ZstdSpec` has.
   *
   * Scope: the NO-DICTIONARY subset — every frame a real encoder emits
   * without `--train`: frame header (window descriptor, single-segment,
@@ -31,7 +35,9 @@ import org.apache.spark.sql.types._
   * bits/block type, dictionary reference, FSE table corruption
   * (probabilities not summing to the table, accuracy log past the
   * per-table cap), Huffman weight overflow, a bitstream not consumed
-  * exactly, offsets past the decoded window, regenerated size
+  * exactly, offsets past the decoded window, a window descriptor
+  * above `2^max(27, ceil(log2 maxOut))` (libzstd's default window
+  * cap, raised for larger caps), regenerated size
   * disagreeing with the declared content size, checksum mismatch,
   * output past `maxOut` (decompression-bomb guard, AGGREGATE across
   * frames — rejected, never clipped), truncation anywhere, trailing
@@ -729,6 +735,8 @@ object ZstdPayload {
       p += 1
       val base = 1L << (10 + (wd >>> 3))
       windowSize = base + (base >>> 3) * (wd & 7)
+      if (windowSize > (1L << windowLogMax(maxOut)))
+        throw Bad // libzstd's window cap: a frame only a --memory decoder opens
     }
     val dictBytes = dictFlag match {
       case 0 => 0; case 1 => 1; case 2 => 2; case _ => 4
@@ -807,6 +815,12 @@ object ZstdPayload {
     }
     p
   }
+
+  /** Largest window log accepted for a call capped at `maxOut`:
+    * libzstd's default of 27, raised to ceil(log2(maxOut)) for callers
+    * with a larger cap. */
+  private[functions] def windowLogMax(maxOut: Int): Int =
+    math.max(27, 32 - Integer.numberOfLeadingZeros(math.max(maxOut, 1) - 1))
 
   /** The per-row kernel — public static so generated code can call it.
     * Returns null for every malformed/over-cap shape (fail closed). */

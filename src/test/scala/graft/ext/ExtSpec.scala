@@ -2255,7 +2255,7 @@ class SimilaritySpec extends SparkSpec {
     // layout-agnostic side-table readers (the on-disk layout is
     // internal; the row contract is what compaction must preserve)
     def table(p: String, t: String) =
-      if (t == "partials") Similarity.readPartials(spark, p, "embedding")
+      if (t == "partials") Similarity.readPartials(spark, p)
       else Similarity.readCentroids(spark, p)
     assert(table(p1, "partials").exceptAll(table(p2, "partials")).isEmpty &&
       table(p2, "partials").exceptAll(table(p1, "partials")).isEmpty,
@@ -2284,7 +2284,7 @@ class SimilaritySpec extends SparkSpec {
     val want = spark.read.parquet(s"$p/assigned")
       .withColumn("__cell", col("__cell").cast("int"))
     val wantPartials = Similarity.centroidPartials(want, "embedding").collect().toSet
-    assert(Similarity.readPartials(spark, p, "embedding").collect().toSet == wantPartials)
+    assert(Similarity.readPartials(spark, p).collect().toSet == wantPartials)
   }
 
   test("ivfCompactDeletes drops a tombstoned row with a null or empty embedding") {
@@ -2435,11 +2435,42 @@ class SimilaritySpec extends SparkSpec {
     val idx = Similarity.ivfRead(spark, p)
     assert(idx.assigned.count() == emb.count())
     // partials ≡ centroidPartials(assigned) even on the trained path
-    val stored = Similarity.readPartials(spark, p, "embedding")
+    val stored = Similarity.readPartials(spark, p)
     val recomputed = Similarity.centroidPartials(
       idx.assigned.withColumn("__cell", col("__cell").cast("int")), "embedding")
     assert(stored.exceptAll(recomputed).isEmpty &&
       recomputed.exceptAll(stored).isEmpty)
+  }
+
+  test("a torn IVF index (meta deleted) fails loudly: trained append, " +
+    "deterministic append and compaction all raise and rewrite nothing") {
+    val emb = load("embeddings")
+    val a = emb.filter(col("vec_id") % 3 =!= 0)
+    val b = emb.filter(col("vec_id") % 3 === 0)
+    val p = java.nio.file.Files.createTempDirectory("graft-ivf-torn").toString
+    Similarity.ivfWrite(Similarity.ivfBuild(a, nLists = 4), p)
+    Similarity.ivfDeleteWrite(p, b.select("vec_id").limit(1))
+    val meta = new java.io.File(p, "meta")
+    org.apache.commons.io.FileUtils.deleteDirectory(meta)
+    def assignedFiles() = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(p, "assigned"))
+        .iterator().asScala.filter(_.toString.endsWith(".parquet"))
+        .map(_.toString).toSet
+    }
+    val before = assignedFiles()
+    val calls = Seq[(String, () => Unit)](
+      "ivfAppendWriteTrained" -> (() => Similarity.ivfAppendWriteTrained(p, b)),
+      "ivfAppendWrite" -> (() => Similarity.ivfAppendWrite(p, b, planes = 4, dim = 64)),
+      "ivfCompactDeletes" -> (() => Similarity.ivfCompactDeletes(spark, p)))
+    for ((name, call) <- calls) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(s"$p/meta"), s"$name: ${e.getMessage}")
+      assert(!meta.exists(), s"$name wrote a meta dataset")
+      assert(assignedFiles() == before, s"$name touched the corpus")
+    }
+    assert(Similarity.ivfIndexExists(spark, p),
+      "a torn index still exists, so IndexStream appends to it and raises")
   }
 
   test("deterministic IVF: cells are the sign buckets; hits are real neighbors with exact sims") {

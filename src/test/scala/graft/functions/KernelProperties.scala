@@ -176,6 +176,105 @@ object KernelProperties extends Properties("graft.functions.kernels") {
         java.util.Arrays.equals(got, data)
     }
 
+  // ---- codecs against the real encoders on the classpath ----------
+
+  /** A plaintext drawn from `seed`: compressible text over a small
+    * alphabet, or incompressible bytes, up to 6000 bytes. */
+  private def plaintext(seed: Long): Array[Byte] = {
+    val r = new scala.util.Random(seed)
+    val n = r.nextInt(6000)
+    if (r.nextBoolean()) {
+      val alpha = 1 + r.nextInt(12)
+      Array.fill(n)(('a' + r.nextInt(alpha)).toByte)
+    } else Array.fill(n)(r.nextInt(256).toByte)
+  }
+
+  private val seedGen: Gen[Long] = Gen.choose(0L, Long.MaxValue)
+
+  private def encode(data: Array[Byte])(
+      open: java.io.OutputStream => java.io.OutputStream): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = open(bos)
+    out.write(data); out.close()
+    bos.toByteArray
+  }
+
+  private def xzEncode(data: Array[Byte], check: Int): Array[Byte] =
+    encode(data)(new org.tukaani.xz.XZOutputStream(_,
+      new org.tukaani.xz.LZMA2Options(1), check))
+
+  private def zstdEncode(data: Array[Byte], level: Int): Array[Byte] =
+    encode(data)(o => new com.github.luben.zstd.ZstdOutputStreamNoFinalizer(o)
+      .setChecksum(true).setLevel(level))
+
+  private def bzip2Encode(data: Array[Byte], block: Int): Array[Byte] =
+    encode(data)(new org.apache.commons.compress.compressors.bzip2
+      .BZip2CompressorOutputStream(_, block))
+
+  private val xzChecks = Seq(org.tukaani.xz.XZ.CHECK_NONE,
+    org.tukaani.xz.XZ.CHECK_CRC32, org.tukaani.xz.XZ.CHECK_CRC64,
+    org.tukaani.xz.XZ.CHECK_SHA256)
+
+  property("xz decodes XZOutputStream output under every check type") =
+    forAll(seedGen, Gen.oneOf(xzChecks)) { (seed, check) =>
+      val x = plaintext(seed)
+      java.util.Arrays.equals(XzPayload.compute(xzEncode(x, check), 1 << 20), x)
+    }
+
+  property("lzma_alone decodes LZMAOutputStream output, sized and marker-ended") =
+    forAll(seedGen, Gen.oneOf(true, false)) { (seed, known) =>
+      val x = plaintext(seed)
+      val z = encode(x)(new org.tukaani.xz.LZMAOutputStream(_,
+        new org.tukaani.xz.LZMA2Options(1), if (known) x.length.toLong else -1L))
+      java.util.Arrays.equals(LzmaAlonePayload.compute(z, 1 << 20), x)
+    }
+
+  property("zstd decodes zstd-jni output with a content checksum") =
+    forAll(seedGen, Gen.choose(1, 9)) { (seed, level) =>
+      val x = plaintext(seed)
+      java.util.Arrays.equals(ZstdPayload.compute(zstdEncode(x, level), 1 << 20), x)
+    }
+
+  property("bunzip2 decodes BZip2CompressorOutputStream output") =
+    forAll(seedGen, Gen.choose(1, 9)) { (seed, block) =>
+      val x = plaintext(seed)
+      java.util.Arrays.equals(Bunzip2.compute(bzip2Encode(x, block), 1 << 20), x)
+    }
+
+  // a checked stream cut short or with one byte changed decodes to
+  // null or to exactly the plaintext — never to other bytes
+  private val checkedCodecs: Seq[(String, Array[Byte] => Array[Byte],
+      Array[Byte] => Array[Byte])] = Seq(
+    ("xz", xzEncode(_, org.tukaani.xz.XZ.CHECK_CRC64), XzPayload.compute(_, 1 << 20)),
+    ("zstd", zstdEncode(_, 3), ZstdPayload.compute(_, 1 << 20)),
+    ("bzip2", bzip2Encode(_, 1), Bunzip2.compute(_, 1 << 20)))
+
+  property("a truncated or byte-flipped checked stream gives null or the plaintext") =
+    forAll(seedGen, Gen.oneOf(checkedCodecs), Gen.choose(0L, Long.MaxValue)) {
+      case (seed, (_, enc, dec), mutSeed) =>
+        val x = plaintext(seed)
+        val z = enc(x)
+        val r = new scala.util.Random(mutSeed)
+        val mutated =
+          if (r.nextBoolean()) z.take(r.nextInt(z.length))
+          else {
+            val c = z.clone(); val i = r.nextInt(c.length)
+            c(i) = (c(i) ^ (1 + r.nextInt(255))).toByte
+            c
+          }
+        val got = dec(mutated)
+        got == null || java.util.Arrays.equals(got, x)
+    }
+
+  property("xz with the x86 BCJ filter in front of LZMA2 decodes") =
+    forAll(seedGen) { seed =>
+      val x = plaintext(seed)
+      val z = encode(x)(new org.tukaani.xz.XZOutputStream(_,
+        Array[org.tukaani.xz.FilterOptions](new org.tukaani.xz.X86Options(),
+          new org.tukaani.xz.LZMA2Options(1))))
+      java.util.Arrays.equals(XzPayload.compute(z, 1 << 20), x)
+    }
+
   // Misra–Gries recall guarantee: for ANY partitioning of the stream
   // into partials, every token with count > n/k survives the merged
   // sketch of capacity 4k.
