@@ -15,8 +15,91 @@ import org.apache.spark.sql.SparkSession
   * Failures are loud: the stack trace goes to stderr, the query is
   * reported in an `errors` object, and the process exits non-zero —
   * a broken query must never silently improve the total.
+  *
+  * Output: every stdout line is at most 2 KB of complete JSON, so any
+  * tail capture of ~2 KB parses — the short total line, then the
+  * `errors_part` lines, then the per-query map LAST as `queries_part`
+  * lines (`i` of `of`; `queries` holds each query's min over the
+  * passes, `max` its max). The same facts land as one line in the
+  * artifact (`SPARK_GRAFT_BENCH_OUT`, default `BENCH_LAST.json`). The
+  * total line and the artifact record the cores, the passes and the
+  * git sha of the checkout.
   */
 object Bench {
+
+  /** The longest stdout line, in bytes. */
+  private[graft] val MaxLine = 2048
+
+  /** One query's seconds over the passes that succeeded. */
+  private[graft] final case class Timing(min: Double, max: Double)
+
+  // 3-decimal values keep the lines short; Locale.ROOT: the
+  // default-locale formatter writes "57,117" on comma-decimal
+  // locales — invalid JSON
+  private def jnum(v: Double): String =
+    if (v.isNaN || v.isInfinite) "-1"
+    else "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  private def jstr(v: String): String =
+    "\"" + v.replaceAll("[\"\\\\\n\r\t]", " ") + "\""
+
+  private def jmap(kv: Seq[(String, String)]): String =
+    kv.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** `rows` (key, one JSON value per field) as
+    * `{"metric":…,"i":…,"of":…,field:{key:value,…},…}` lines of at
+    * most [[MaxLine]] bytes, each row whole inside one line. */
+  private[graft] def chunked(metric: String, fields: Seq[String],
+                             rows: Seq[(String, Seq[String])]): Seq[String] = {
+    val empty = fields.map(_ -> Seq.empty[(String, String)])
+    val room = MaxLine - line(metric, 99999, 99999, empty).length
+    val chunks = scala.collection.mutable.ArrayBuffer(Vector.empty[(String, Seq[String])])
+    var used = 0
+    for (row @ (k, vs) <- rows) {
+      val cost = vs.map(jstr(k).length + 2 + _.length).sum
+      if (chunks.last.nonEmpty && used + cost > room) {
+        chunks += Vector.empty; used = 0
+      }
+      chunks(chunks.size - 1) = chunks.last :+ row
+      used += cost
+    }
+    chunks.toSeq.zipWithIndex.map { case (c, i) =>
+      line(metric, i, chunks.size, fields.zipWithIndex.map { case (f, j) =>
+        f -> c.map { case (k, vs) => k -> vs(j) } })
+    }
+  }
+
+  private def line(metric: String, i: Int, of: Int,
+                   fields: Seq[(String, Seq[(String, String)])]): String =
+    s"""{"metric":${jstr(metric)},"i":$i,"of":$of""" +
+      fields.map { case (f, kv) => "," + jstr(f) + ":" + jmap(kv) }.mkString + "}"
+
+  /** The stdout lines and the artifact line of one bench run. */
+  private[graft] def report(timings: Seq[(String, Timing)],
+                            errors: Seq[(String, String)], sf: String,
+                            cores: String, passes: Int,
+                            sha: String): (Seq[String], String) = {
+    val total = timings.map(_._2.min).filterNot(_.isNaN).sum
+    val facts = s""""sf":${jstr(sf)},"cores":${jstr(cores)},"passes":$passes,"git_sha":${jstr(sha)}"""
+    val mins = timings.map { case (k, t) => k -> jnum(t.min) }
+    val maxs = timings.map { case (k, t) => k -> jnum(t.max) }
+    val errs = errors.map { case (k, m) => k -> jstr(m) }
+    val artifact = s"""{"metric":"total","value":${jnum(total)},"unit":"sec",""" +
+      s""""queries":${jmap(mins)},"max":${jmap(maxs)},"errors":${jmap(errs)},$facts}"""
+    val stdout =
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":${timings.size},"errors":${errors.size},$facts}""" +:
+        ((if (errs.isEmpty) Nil else chunked("errors_part", Seq("errors"), errs.map { case (k, v) => k -> Seq(v) })) ++
+          chunked("queries_part", Seq("queries", "max"),
+            timings.map { case (k, t) => k -> Seq(jnum(t.min), jnum(t.max)) }))
+    (stdout, artifact)
+  }
+
+  /** The checkout's commit, or "unknown" outside a git work tree. */
+  private def gitSha(): String =
+    try scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+      .!!(scala.sys.process.ProcessLogger(_ => ())).trim
+    catch { case _: Exception => "unknown" }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_ONLY=q48,q27 — iterate on a subset without paying for
@@ -80,40 +163,18 @@ object Bench {
     val samples = (1 to passes).map { _ =>
       names.map { case (name, fn) => name -> timeOnce(name, fn) }.toMap
     }
-    val results = names.map { case (name, _) =>
+    val timings = names.map { case (name, _) =>
       val xs = samples.map(_(name)).filterNot(_.isNaN)
-      name -> (if (xs.isEmpty) -1.0 else xs.min)
+      name -> (if (xs.isEmpty) Timing(Double.NaN, Double.NaN)
+        else Timing(xs.min, xs.max))
     }
-
-    // 3-decimal values keep the single JSON line short enough that a
-    // tail capture cannot truncate away the total (r4 lost q01-q15 and
-    // the "metric" key to exactly that)
-    // Locale.ROOT: the default-locale formatter writes "57,117" on
-    // comma-decimal locales — invalid JSON in the artifact
-    def jnum(v: Double): String =
-      if (v.isNaN || v.isInfinite) "-1"
-      else "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + jnum(v) }
-      .mkString("{", ",", "}")
-    val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, m) => "\"" + k + "\":\"" + m.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\"" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val line =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"errors":$errJson,"sf":"$sfDir"}"""
-    println(line)
-    // tail-capture safety: a 372-query suite makes the line above
-    // ~11 KB, and a harness that keeps only the last ~2 KB of stdout
-    // truncates away its head — including the total (r15 and r16 both
-    // lost it exactly that way). A complete SHORT summary line printed
-    // LAST survives any tail window; the full per-query line and the
-    // on-disk artifact below stay unchanged for full-width consumers.
-    println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":${results.size},"errors":${errors.size},"sf":"$sfDir"}""")
-    // belt-and-braces artifact: the full line on disk, immune to any
-    // stdout capture window
+    val (lines, artifact) = report(timings, errors.toSeq.sortBy(_._1), sfDir,
+      cpus, passes, gitSha())
+    lines.foreach(println)
+    // the full facts on disk, immune to any stdout capture window
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")), line + "\n")
+        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")), artifact + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)

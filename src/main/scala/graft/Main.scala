@@ -80,7 +80,7 @@ object Main {
     |  ingest-avro  --path DIR --target DIR [--ddl "a BIGINT, b STRING"]
     |  ingest-bson/-msgpack/-cbor --path DIR --ddl "a BIGINT, t STRING" --target DIR
     |  ingest-jsonl-zst --path DIR --target DIR
-    |                (.jsonl.zst shards via the bounded zstd kernel)
+    |                (.jsonl.zst shards via the bounded zstd decoder)
     |  delta-snapshot --table DIR --target DIR   (live-file census)
     |  delta-history  --table DIR --target DIR   (per-commit audit)
     |  delta-meta     --table DIR --target DIR   (schema/protocol/size)

@@ -16,6 +16,8 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  private lazy val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
+
   /** Exact dedup: keep one row (smallest id) per identical content
     * hash. `dropDuplicates` on the raw columns is the narrow form;
     * this form also reports multiplicity. */
@@ -361,7 +363,6 @@ object Dedup {
         .contains(idType.simpleString),
       s"connectedComponents needs integral ids; doc_a is " +
         s"${idType.simpleString} — rank a numeric surrogate and join back")
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     // symmetric (label-source, label-target) edge RDD: (a,b) produces
     // a→b and b→a, keyed by the node whose label the round READS
     val symRaw = pairs
@@ -433,13 +434,13 @@ object Dedup {
         }
       }.persist(StorageLevel.MEMORY_AND_DISK)
       next.count()
-      if (debug) System.err.println(s"[cc] round=$i changed=${changed.value}")
+      log.debug("connected components round {}: {} labels changed", i, changed.value)
       labels.unpersist(blocking = false)
       labels = next
       converged = changed.value == 0L
       i += 1
     }
-    if (debug) System.err.println(s"[cc] rounds=$i converged=$converged")
+    log.debug("connected components: {} rounds, converged {}", i, converged)
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     edges.unpersist(blocking = false)
     val out = spark.createDataFrame(

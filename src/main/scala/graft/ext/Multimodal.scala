@@ -881,8 +881,8 @@ object Multimodal {
 
   /** [[tarList]] over the remaining wrapper matrix — `.tar.zst`
     * (the modern default), `.tar.bz2` (the long tail of releases),
-    * `.tar.lz4` and `.tar.sz`: one bounded decompression (zstd and
-    * LZ4 by the repo's own kernels, bzip2 by commons-compress)
+    * `.tar.lz4` and `.tar.sz`: one bounded decompression (zstd by
+    * zstd-jni; bzip2, LZ4 and Snappy by commons-compress)
     * feeding the same header walk; corrupt archives contribute no
     * rows (the decoders' fail-closed nulls). */
   def tarZstList(docs: DataFrame, idCol: String = "doc_id",
@@ -981,8 +981,8 @@ object Multimodal {
   /** Debian package census — the `.deb` onboarding step a software
     * corpus needs: `.deb` IS an ar archive, so the walk is
     * `arEntries → control.tar.{gz,xz,zst} member → decompress by its
-    * own extension → ustar walk → ./control text`, every stage the
-    * repo's own fail-closed kernel. Yields
+    * own extension → ustar walk → ./control text`, every stage a
+    * bounded fail-closed kernel. Yields
     * `(deb_version, control_text, package, version, architecture)` —
     * the three header fields parsed from the control text (RFC-822
     * style `Key: value` lines); anything corrupt along the chain
@@ -1243,7 +1243,7 @@ object Multimodal {
     * [[pdfText]], `gzip` → bounded
     * [[graft.functions.GunzipPayload]] + UTF-8, `bzip2` →
     * [[graft.functions.Bunzip2]] (commons-compress), `zstd` →
-    * [[graft.functions.ZstdPayload]], `xz` →
+    * [[graft.functions.ZstdPayload]] (zstd-jni), `xz` →
     * [[graft.functions.XzPayload]] (xz-java) (all bounded,
     * fail-closed),
     * `7z` → the first member whose single-coder folder decodes to
@@ -1498,7 +1498,7 @@ object Multimodal {
     * out of raw file bytes, no reader stack: row group 0's page
     * chain, the dictionary/PLAIN encodings, RLE/bit-packed
     * definition levels, and the uncompressed/snappy/gzip/zstd page
-    * codecs all through the repo's own from-spec kernels
+    * codecs through the bounded codec shells
     * ([[graft.functions.ParquetPageValues]]). Null slots stay null
     * in the values array; nested/repeated columns refuse. */
   def parquetPageValues(payload: Column, column: String,

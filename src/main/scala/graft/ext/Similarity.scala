@@ -454,19 +454,21 @@ object Similarity {
     * build. */
   private[graft] def ivfIndexExists(
       spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    pathExists(spark, s"$path/meta") || pathExists(spark, s"$path/assigned")
+    pathExists(spark, s"$path/meta") || pathExists(spark, s"$path/meta.prev") ||
+      pathExists(spark, s"$path/assigned")
 
-  /** The index's `meta` dataset; a missing one is a torn index — its
-    * quantizer kind is unknown, so nothing may guess it and rewrite
-    * the centroids. */
+  /** The index's `meta` dataset — or `meta.prev`, where a crash between
+    * [[writeMeta]]'s two renames left the committed one. With neither,
+    * the index is torn: its quantizer kind is unknown, so nothing may
+    * guess it and rewrite the centroids. */
   private def requireMeta(spark: org.apache.spark.sql.SparkSession,
                           path: String): String = {
     val meta = s"$path/meta"
-    if (!pathExists(spark, meta))
-      throw new IllegalStateException(s"IVF index at $path has no meta " +
-        s"dataset ($meta): its partials, centroids and quantizer kind are " +
-        "lost; rebuild the index")
-    meta
+    if (pathExists(spark, meta)) meta
+    else if (pathExists(spark, s"$meta.prev")) s"$meta.prev"
+    else throw new IllegalStateException(s"IVF index at $path has no meta " +
+      s"dataset ($meta): its partials, centroids and quantizer kind are " +
+      "lost; rebuild the index")
   }
 
   /** The three side tables as one meta-row stream (side, __cell,
@@ -497,16 +499,40 @@ object Similarity {
         lit(kind).as("q")))
   }
 
-  /** ONE commit for all three side tables. `materializeFirst` is
-    * required whenever the rows read from the meta file being
-    * replaced (append/compact refresh): the eager checkpoint computes
-    * them before the overwrite deletes its source. */
+  /** Called with the step number after each step of [[writeMeta]]
+    * but the last; tests throw from it to crash the write there. */
+  @volatile private[ext] var afterMetaStep: Int => Unit = _ => ()
+
+  /** ONE commit for all three side tables, swapped in by renames so
+    * that a crash at any step leaves the old or the new `meta`
+    * readable, never neither:
+    *  1. the rows land in `meta.next`; the current `meta` stays in
+    *     place, so rows read from it need no materializing first;
+    *  2. a stale `meta.prev` (a crash after step 4 left it) goes;
+    *  3. `meta` moves to `meta.prev`, where [[requireMeta]] finds it;
+    *  4. `meta.next` moves to `meta`;
+    *  5. `meta.prev` goes.
+    * After a crash between 3 and 4, `meta` is missing and `meta.prev`
+    * holds the committed rows; the next write skips 2 and 3. */
   private def writeMeta(path: String, partials: DataFrame,
-                        cents: DataFrame, kind: String,
-                        materializeFirst: Boolean): Unit = {
-    val rows0 = metaRows(partials, cents, kind)
-    val rows = if (materializeFirst) rows0.localCheckpoint() else rows0
-    rows.coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+                        cents: DataFrame, kind: String): Unit = {
+    val fs = hPath(partials.sparkSession, path)
+    def at(name: String) = new org.apache.hadoop.fs.Path(s"$path/$name")
+    def rename(from: String, to: String): Unit =
+      if (!fs.rename(at(from), at(to)))
+        throw new java.io.IOException(s"cannot rename $path/$from to $path/$to")
+    metaRows(partials, cents, kind).coalesce(1).write.mode("overwrite")
+      .parquet(s"$path/meta.next")
+    afterMetaStep(1)
+    if (fs.exists(at("meta"))) {
+      fs.delete(at("meta.prev"), true)
+      afterMetaStep(2)
+      rename("meta", "meta.prev")
+      afterMetaStep(3)
+    }
+    rename("meta.next", "meta")
+    afterMetaStep(4)
+    fs.delete(at("meta.prev"), true)
   }
 
   /** Persisted centroid partials. */
@@ -555,14 +581,12 @@ object Similarity {
     val base = readPartials(spark, path)
     // merged is nLists·dim rows, consumed twice in the meta write (as
     // rows + the centroid derivation) — the lazy checkpoint evaluates
-    // it once; writeMeta's eager materialization runs before the
-    // overwrite deletes the meta file the base partials read from
+    // it once
     val merged = base.unionByName(centroidPartials(newAssigned, vecCol))
       .groupBy(col("__cell"), col("__pos"))
       .agg(sum(col("__sum")).as("__sum"), sum(col("__cnt")).as("__cnt"))
       .localCheckpoint(eager = false)
-    writeMeta(path, merged, centroidsFromPartials(merged), kind,
-      materializeFirst = true)
+    writeMeta(path, merged, centroidsFromPartials(merged), kind)
   }
 
   /** Persist an IVF index: the assigned corpus lands PARTITIONED BY
@@ -599,8 +623,7 @@ object Similarity {
     // re-aggregation of the corpus at any scale — the old form
     // scanned the assigned lineage three times (write, centroids,
     // partials). A trained index keeps its KMeans centers verbatim.
-    // The checkpoint is LAZY: a fresh meta write has no
-    // overwrite-source hazard, so the partials materialize inside the
+    // The checkpoint is LAZY: the partials materialize inside the
     // single meta-write job (no separate up-front job) and the
     // centroid subtree reuses the stored blocks.
     val partials = centroidPartials(a, vecCol).localCheckpoint(eager = false)
@@ -608,8 +631,7 @@ object Similarity {
       if (index.quantizer == IvfIndex.Deterministic)
         centroidsFromPartials(partials)
       else index.centroids
-    writeMeta(path, partials, cents, index.quantizer,
-      materializeFirst = false)
+    writeMeta(path, partials, cents, index.quantizer)
   }
 
   /** Tombstone-delete vectors from a persisted IVF index: the ids
@@ -682,8 +704,8 @@ object Similarity {
     // must still be rewritten or the row outlives its tombstone
     val affected = dead.select(col("__cell")).distinct()
       .collect().map(_.getInt(0))
-    // read from the meta file, which only the final writeMeta
-    // touches, after its own eager cut
+    // read from the meta file, which the final writeMeta leaves in
+    // place until its new rows are written
     val base = readPartials(spark, path)
     val refreshed =
       if (affected.nonEmpty) {
@@ -718,18 +740,16 @@ object Similarity {
     // path carries the stored centroid rows forward byte-identical
     // (FAISS remove_ids semantics — deletion never retrains), the
     // deterministic path re-derives them from the refreshed partials.
-    // writeMeta's eager checkpoint materializes everything (including
-    // the old-meta reads) before the overwrite.
     val cents =
       if (kind == IvfIndex.Deterministic) centroidsFromPartials(refreshed)
       else readCentroids(spark, path)
-    writeMeta(path, refreshed, cents, kind, materializeFirst = true)
+    writeMeta(path, refreshed, cents, kind)
     fs.delete(tPath, true)
   }
 
   /** The persisted quantizer-kind marker; a torn index (no `meta`)
     * raises rather than defaulting to a kind. */
-  private def quantizerKind(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def quantizerKind(spark: org.apache.spark.sql.SparkSession,
                             path: String): String =
     spark.read.parquet(requireMeta(spark, path))
       .filter(col("side") === "quantizer")
@@ -823,10 +843,8 @@ object Similarity {
       .groupBy(col("__cell"), col("__pos"))
       .agg(sum(col("__sum")).as("__sum"), sum(col("__cnt")).as("__cnt"))
     // centroid ROWS ride along byte-identical (FAISS add semantics:
-    // the quantizer never retrains); writeMeta's eager checkpoint
-    // materializes merged + cents before the meta overwrite
-    writeMeta(path, merged, cents, IvfIndex.Trained,
-      materializeFirst = true)
+    // the quantizer never retrains)
+    writeMeta(path, merged, cents, IvfIndex.Trained)
   }
 
   /** Query an IVF index: each query vector is scored only against its

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.util.zip.{DataFormatException, Inflater}
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -26,9 +24,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (negative count + byte size form included), fixed, and named-type
   * REFERENCES (a schema naming "LinkedList"-style recursion is
   * resolved through the registry, depth-capped). All six spec codecs
-  * decode through the engine's own kernels: null, deflate (raw,
-  * `Inflater(nowrap)`), snappy (raw block + the 4-byte big-endian
-  * CRC32 suffix avro appends, VERIFIED), bzip2, xz, zstandard.
+  * decode through the codec shells' bounded decoders: null, deflate
+  * (raw, [[BoundedDecode.inflate]]), snappy (raw block + the 4-byte
+  * big-endian CRC32 suffix avro appends, VERIFIED), bzip2, xz,
+  * zstandard.
   *
   * JSON rendering (documented, deterministic): strings/enums as JSON
   * strings; bytes/fixed as the spec's latin1-escaped string form
@@ -549,26 +548,9 @@ object AvroRecordsJson {
     codec match {
       case "null" => java.util.Arrays.copyOfRange(b, from, from + len)
       case "deflate" => // RAW deflate per the spec (no zlib wrapper)
-        val inf = new Inflater(true)
-        try {
-          inf.setInput(b, from, len)
-          var out = new Array[Byte](math.max(64, math.min(maxOut, len * 4)))
-          var total = 0
-          while (!inf.finished()) {
-            if (total == out.length) {
-              if (out.length >= maxOut) throw Bad
-              out = java.util.Arrays.copyOf(out,
-                math.min(maxOut.toLong, out.length.toLong * 2).toInt)
-            }
-            val got = inf.inflate(out, total, out.length - total)
-            if (got == 0 && !inf.finished()) throw Bad
-            total += got
-            if (total > maxOut) throw Bad
-          }
-          java.util.Arrays.copyOf(out, total)
-        } catch {
-          case _: DataFormatException => throw Bad
-        } finally inf.end()
+        val raw = BoundedDecode.inflate(b, from, len, nowrap = true, maxOut)
+        if (raw == null) throw Bad
+        raw
       case "snappy" =>
         // avro appends a 4-byte BIG-ENDIAN CRC32 of the UNCOMPRESSED
         // data after the raw snappy block — verified, never skipped

@@ -1,169 +1,46 @@
 package graft.functions
 
-/** Raw-block decoders for the two simple LZ77-family codecs lake
-  * formats default to — Snappy and LZ4 (block format, not the frame)
-  * — implemented from their public format descriptions; the JDK has
-  * neither. Both are FAIL-CLOSED: any malformed tag, out-of-range
-  * copy offset, truncated input or output past the cap returns null
-  * rather than partial bytes. Used by [[OrcFooterMeta]] to decode
-  * SNAPPY/LZ4 footers chunk by chunk (ORC compresses each chunk as
-  * one raw block); standalone use follows the same contract. */
+import java.io.ByteArrayInputStream
+
+import org.apache.commons.compress.compressors.lz4.BlockLZ4CompressorInputStream
+import org.apache.commons.compress.compressors.snappy.SnappyCompressorInputStream
+
+/** Raw-block decoders for the two LZ77-family codecs lake formats
+  * default to — Snappy and LZ4 (block format, not the frame) — through
+  * commons-compress (`SnappyCompressorInputStream`,
+  * `BlockLZ4CompressorInputStream`, on Spark's classpath) behind
+  * [[BoundedDecode]]. Both are FAIL-CLOSED: any malformed tag,
+  * out-of-range copy offset, truncated input, input left over after the
+  * block, or output past the cap returns null rather than partial
+  * bytes. Used by [[OrcFooterMeta]] (one raw block per ORC chunk),
+  * [[AvroRecordsJson]] and [[ParquetPageValues]]; standalone use
+  * follows the same contract. */
 object BlockCodecs {
 
-  /** Snappy raw block: a varint uncompressed length, then a tag
-    * stream — `00` literals (6-bit length, 60..63 meaning 1-4 extra
-    * LE length bytes), `01` short copies (3-bit len+4, 11-bit
-    * offset), `10`/`11` copies with LE16/LE32 offsets. Overlapping
-    * copies are byte-serial by design. */
-  def snappy(bytes: Array[Byte], off: Int, len: Int,
-             maxOut: Int): Array[Byte] = {
-    try {
-      val end = off + len
-      if (off < 0 || len < 0 || end > bytes.length) return null
-      var pos = off
-      // uncompressed length varint
-      var expect = 0L
-      var shift = 0
-      var b = 0
-      do {
-        if (pos >= end || shift > 35) return null
-        b = bytes(pos) & 0xff
-        pos += 1
-        expect |= (b & 0x7fL) << shift
-        shift += 7
-      } while ((b & 0x80) != 0)
-      if (expect > maxOut) return null
-      val out = new Array[Byte](expect.toInt)
-      var o = 0
-      while (pos < end) {
-        val tag = bytes(pos) & 0xff
-        pos += 1
-        (tag & 3) match {
-          case 0 => // literal
-            var n = (tag >>> 2) + 1
-            if (n > 60) {
-              val extra = n - 60 // 1..4 LE bytes hold length-1
-              if (pos + extra > end) return null
-              n = 0
-              var i = 0
-              while (i < extra) {
-                n |= (bytes(pos + i) & 0xff) << (8 * i)
-                i += 1
-              }
-              n += 1
-              pos += extra
-            }
-            if (n < 0 || pos + n > end || o + n > out.length) return null
-            System.arraycopy(bytes, pos, out, o, n)
-            pos += n
-            o += n
-          case c => // copy
-            var n = 0
-            var offset = 0
-            if (c == 1) {
-              if (pos + 1 > end) return null
-              n = ((tag >>> 2) & 0x7) + 4
-              offset = ((tag >>> 5) << 8) | (bytes(pos) & 0xff)
-              pos += 1
-            } else if (c == 2) {
-              if (pos + 2 > end) return null
-              n = (tag >>> 2) + 1
-              offset = (bytes(pos) & 0xff) | ((bytes(pos + 1) & 0xff) << 8)
-              pos += 2
-            } else {
-              if (pos + 4 > end) return null
-              n = (tag >>> 2) + 1
-              offset = (bytes(pos) & 0xff) | ((bytes(pos + 1) & 0xff) << 8) |
-                ((bytes(pos + 2) & 0xff) << 16) |
-                ((bytes(pos + 3) & 0xff) << 24)
-              pos += 4
-            }
-            if (offset <= 0 || offset > o || o + n > out.length) return null
-            var i = 0
-            while (i < n) { // byte-serial: overlap is the feature
-              out(o) = out(o - offset)
-              o += 1
-              i += 1
-            }
-        }
-      }
-      if (o != out.length) return null // must fill exactly
-      out
-    } catch {
-      case _: ArrayIndexOutOfBoundsException => null
-    }
-  }
+  /** Snappy's back-reference reach: the reference encoder matches
+    * within 64 KiB fragments, and the framing format caps chunks there. */
+  private final val SnappyWindow = 1 << 16
 
-  /** LZ4 block: token byte (high nibble literal length, low nibble
-    * match length − 4, 15 meaning 255-continued extension bytes),
-    * literals, LE16 match offset (> 0), match. The final sequence
-    * carries literals only. Output size is not encoded — the caller
-    * caps it. */
-  def lz4(bytes: Array[Byte], off: Int, len: Int,
-          maxOut: Int): Array[Byte] = {
-    try {
-      val end = off + len
-      if (off < 0 || len < 0 || end > bytes.length) return null
-      // growing output buffer: O(1) backrefs for the match copies
-      var buf = new Array[Byte](8192)
-      var o = 0
-      def ensure(n: Int): Boolean = {
-        if (o + n > maxOut) return false
-        if (o + n > buf.length) {
-          var cap = buf.length
-          while (cap < o + n) cap *= 2
-          buf = java.util.Arrays.copyOf(buf, math.min(cap, maxOut))
-        }
-        true
-      }
-      var pos = off
-      var done = false
-      while (!done) {
-        if (pos >= end) return null
-        val token = bytes(pos) & 0xff
-        pos += 1
-        var litLen = token >>> 4
-        if (litLen == 15) {
-          var b = 0
-          do {
-            if (pos >= end) return null
-            b = bytes(pos) & 0xff
-            pos += 1
-            litLen += b
-          } while (b == 255)
-        }
-        if (pos + litLen > end || !ensure(litLen)) return null
-        System.arraycopy(bytes, pos, buf, o, litLen)
-        pos += litLen
-        o += litLen
-        if (pos == end) done = true // last sequence: literals only
-        else {
-          if (pos + 2 > end) return null
-          val offset = (bytes(pos) & 0xff) | ((bytes(pos + 1) & 0xff) << 8)
-          pos += 2
-          if (offset <= 0 || offset > o) return null
-          var matchLen = (token & 0xf) + 4
-          if ((token & 0xf) == 15) {
-            var b = 0
-            do {
-              if (pos >= end) return null
-              b = bytes(pos) & 0xff
-              pos += 1
-              matchLen += b
-            } while (b == 255)
-          }
-          if (!ensure(matchLen)) return null
-          var i = 0
-          while (i < matchLen) {
-            buf(o) = buf(o - offset)
-            o += 1
-            i += 1
-          }
-        }
-      }
-      java.util.Arrays.copyOf(buf, o)
-    } catch {
-      case _: ArrayIndexOutOfBoundsException => null
+  /** Decode `len` bytes at `off` with `open`, requiring the decoder to
+    * take every one of them. */
+  private def whole(bytes: Array[Byte], off: Int, len: Int, maxOut: Int)(
+      open: ByteArrayInputStream => java.io.InputStream): Array[Byte] =
+    if (!BoundedDecode.inRange(bytes, off, len)) null
+    else {
+      val src = new ByteArrayInputStream(bytes, off, len)
+      val out = BoundedDecode(maxOut)(open(src))
+      if (src.available() != 0) null else out
     }
-  }
+
+  /** Snappy raw block: a varint uncompressed length, then the tag
+    * stream, which must produce exactly that length. */
+  def snappy(bytes: Array[Byte], off: Int, len: Int,
+             maxOut: Int): Array[Byte] =
+    whole(bytes, off, len, maxOut)(new SnappyCompressorInputStream(_, SnappyWindow))
+
+  /** LZ4 block: sequences up to the end of the input, the last one
+    * literals only. Output size is not encoded — the caller caps it. */
+  def lz4(bytes: Array[Byte], off: Int, len: Int,
+          maxOut: Int): Array[Byte] =
+    whole(bytes, off, len, maxOut)(new BlockLZ4CompressorInputStream(_))
 }

@@ -1,5 +1,9 @@
 package graft.functions
 
+import java.io.ByteArrayInputStream
+
+import org.apache.commons.compress.compressors.lz4.FramedLZ4CompressorInputStream
+import org.apache.commons.compress.compressors.snappy.{FramedSnappyCompressorInputStream, FramedSnappyDialect}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -7,279 +11,95 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 
 /** The two FRAME formats wrapping the raw blocks [[BlockCodecs]]
-  * already decodes — `.lz4` (the lz4 frame spec: magic, FLG/BD
-  * descriptor with an xxh32 header checksum, 4-byte-length blocks
-  * with an uncompressed flag bit, optional block/content checksums,
-  * block-DEPENDENT mode where matches reach back into previously
-  * decoded blocks) and `.sz` (the snappy framing format: `sNaPpY`
-  * stream identifier, chunked compressed/uncompressed data, each
-  * chunk carrying the MASKED CRC32C of its uncompressed bytes).
-  * Every checksum is VERIFIED, never skipped; dictionary-ID frames
-  * are refused (no dictionary to resolve against, a refusal beats a
-  * wrong answer). Fail-closed null on every malformed shape, output
+  * decodes — `.lz4` (the lz4 frame format: FLG/BD descriptor with an
+  * xxh32 header checksum, optional block and content checksums,
+  * block-DEPENDENT mode where matches reach back into earlier blocks)
+  * and `.sz` (the snappy framing format: `sNaPpY` stream identifier,
+  * chunks carrying the masked CRC32C of their uncompressed bytes).
+  * Both decode through commons-compress (`FramedLZ4CompressorInputStream`,
+  * `FramedSnappyCompressorInputStream`, on Spark's classpath) behind
+  * [[BoundedDecode]]: every checksum is verified, concatenated frames
+  * and streams decode back-to-back, skippable frames and chunks are
+  * skipped. Before the library runs, a walk over the frame headers and
+  * block (chunk) lengths — decoding nothing — requires the input to
+  * split into whole frames, and refuses an lz4 frame with the DictID
+  * flag (there is no dictionary to resolve against). The library
+  * checks neither: it does not parse that flag, and it reads a block
+  * cut off by the end of the input as the end of the stream. A `.lz4`
+  * input of skippable frames only decodes to an empty array. Fail-closed
+  * null on every shape the walk or the library refuses, output
   * bomb-capped. Per-row bounded work, zero shuffle, codegen'd. */
 object FrameCodecs {
 
-  private object Bad extends Exception with scala.util.control.NoStackTrace
+  /** The snappy framing format's largest chunk (64 KiB uncompressed)
+    * — the window a chunk's back-references may reach across. */
+  private final val SnappyChunkMax = 1 << 16
 
-  // ---------- xxh32 (the lz4 frame checksum, public spec) ----------
-  private final val P1 = 0x9E3779B1
-  private final val P2 = 0x85EBCA77
-  private final val P3 = 0xC2B2AE3D
-  private final val P4 = 0x27D4EB2F
-  private final val P5 = 0x165667B1
-
-  private def rotl(x: Int, r: Int): Int = (x << r) | (x >>> (32 - r))
-
-  private def le32i(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-      ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-
-  private[functions] def xxh32(b: Array[Byte], off: Int, len: Int,
-                               seed: Int): Int = {
-    var p = off
-    val end = off + len
-    var h =
-      if (len >= 16) {
-        var v1 = seed + P1 + P2
-        var v2 = seed + P2
-        var v3 = seed
-        var v4 = seed - P1
-        val limit = end - 16
-        while (p <= limit) {
-          v1 = rotl(v1 + le32i(b, p) * P2, 13) * P1; p += 4
-          v2 = rotl(v2 + le32i(b, p) * P2, 13) * P1; p += 4
-          v3 = rotl(v3 + le32i(b, p) * P2, 13) * P1; p += 4
-          v4 = rotl(v4 + le32i(b, p) * P2, 13) * P1; p += 4
-        }
-        rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)
-      } else seed + P5
-    h += len
-    while (p + 4 <= end) {
-      h = rotl(h + le32i(b, p) * P3, 17) * P4
-      p += 4
-    }
-    while (p < end) {
-      h = rotl(h + (b(p) & 0xff) * P5, 11) * P1
-      p += 1
-    }
-    h ^= h >>> 15
-    h *= P2
-    h ^= h >>> 13
-    h *= P3
-    h ^= h >>> 16
-    h
+  private def le32(b: Array[Byte], p: Long): Long = {
+    val i = p.toInt
+    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |
+      ((b(i + 3) & 0xffL) << 24)
   }
 
-  // ---------- lz4 frame ------------------------------------------
-  /** Decode one lz4 FRAME (plus concatenated follow-on frames, the
-    * `lz4` CLI's cat shape). Public static for generated code. */
-  def lz4Frame(bytes: Array[Byte], maxOut: Int): Array[Byte] = {
-    try {
-      val n = bytes.length
-      var p = 0
-      var out = new Array[Byte](8192)
-      var o = 0
-      def ensure(m: Int): Unit = {
-        // long arithmetic: o + m can exceed Int.MaxValue/2 when callers
-        // raise maxOut past 1 GiB, and the doubling loop must not wrap
-        val need = o.toLong + m
-        if (need > maxOut) throw Bad
-        if (need > out.length) {
-          var cap = out.length.toLong
-          while (cap < need) cap <<= 1
-          out = java.util.Arrays.copyOf(out, math.min(cap, maxOut.toLong).toInt)
+  /** The number of lz4 frames in `b`, or -1 unless `b` is whole lz4
+    * frames and skippable frames, none with the DictID flag. Walks FLG
+    * (bit 0 DictID, bit 4 block checksums, bit 3 content size, bit 2
+    * content checksum), then each block's 4-byte length (high bit:
+    * stored) up to the zero EndMark. */
+  private def lz4Frames(b: Array[Byte]): Int = {
+    val n = b.length
+    var p = 0L
+    var frames = 0
+    while (p + 4 <= n) {
+      val magic = le32(b, p)
+      if ((magic & 0xfffffff0L) == 0x184d2a50L) { // skippable frame
+        if (p + 8 > n) return -1
+        p += 8 + le32(b, p + 4)
+      } else {
+        if (magic != 0x184d2204L || p + 7 > n) return -1
+        val flg = b(p.toInt + 4)
+        if ((flg & 0x01) != 0) return -1
+        p += 7 + (if ((flg & 0x08) != 0) 8 else 0) // magic FLG BD [size] HC
+        var len = -1L
+        while (len != 0) {
+          if (p + 4 > n) return -1
+          len = le32(b, p) & 0x7fffffffL
+          p += 4 + len + (if (len != 0 && (flg & 0x10) != 0) 4 else 0)
         }
+        if ((flg & 0x04) != 0) p += 4
+        frames += 1
       }
-      if (n < 7) throw Bad
-      while (p < n) {
-        if (p + 4 > n) throw Bad
-        val magic = le32i(bytes, p)
-        if ((magic & 0xFFFFFFF0) == 0x184D2A50) { // skippable frame
-          if (p + 8 > n) throw Bad
-          val sz = le32i(bytes, p + 4).toLong & 0xFFFFFFFFL
-          if (p + 8 + sz > n) throw Bad
-          p += (8 + sz).toInt
-        } else {
-          if (magic != 0x184D2204) throw Bad
-          p += 4
-          if (p + 2 > n) throw Bad
-          val flg = bytes(p) & 0xff
-          val bd = bytes(p + 1) & 0xff
-          if ((flg >>> 6) != 1) throw Bad // version bits must be 01
-          if ((flg & 0x02) != 0) throw Bad // reserved bit
-          if ((flg & 0x01) != 0) throw Bad // DictID: refuse, no dict
-          val bIndep = (flg & 0x20) != 0
-          val bChecksum = (flg & 0x10) != 0
-          val cSize = (flg & 0x08) != 0
-          val cChecksum = (flg & 0x04) != 0
-          val bmax = (bd >>> 4) & 0x07
-          if (bmax < 4 || bmax > 7 || (bd & 0x8F) != 0) throw Bad
-          val hdrStart = p
-          p += 2
-          var declared = -1L
-          if (cSize) {
-            if (p + 8 > n) throw Bad
-            var v = 0L
-            var i = 7
-            while (i >= 0) { v = (v << 8) | (bytes(p + i) & 0xffL); i -= 1 }
-            declared = v
-            p += 8
-          }
-          if (p + 1 > n) throw Bad
-          val hc = bytes(p) & 0xff
-          if (((xxh32(bytes, hdrStart, p - hdrStart, 0) >>> 8) & 0xff) != hc)
-            throw Bad
-          p += 1
-          val frameStart = o
-          var endMark = false
-          while (!endMark) {
-            if (p + 4 > n) throw Bad
-            val raw = le32i(bytes, p)
-            p += 4
-            if (raw == 0) endMark = true
-            else {
-              val uncompressed = (raw & 0x80000000) != 0
-              val len = raw & 0x7FFFFFFF
-              if (len < 0 || p + len > n) throw Bad
-              if (uncompressed) {
-                ensure(len)
-                System.arraycopy(bytes, p, out, o, len)
-                o += len
-              } else {
-                // lz4 block decode INTO the running buffer: matches may
-                // reach back into earlier blocks (block-dependent mode)
-                val blockBase = if (bIndep) o else frameStart
-                var q = p
-                val qEnd = p + len
-                var done = false
-                while (!done) {
-                  if (q >= qEnd) throw Bad
-                  val token = bytes(q) & 0xff
-                  q += 1
-                  var litLen = token >>> 4
-                  if (litLen == 15) {
-                    var b255 = 255
-                    while (b255 == 255) {
-                      if (q >= qEnd) throw Bad
-                      b255 = bytes(q) & 0xff
-                      q += 1
-                      litLen += b255
-                    }
-                  }
-                  if (q + litLen > qEnd) throw Bad
-                  ensure(litLen)
-                  System.arraycopy(bytes, q, out, o, litLen)
-                  o += litLen
-                  q += litLen
-                  if (q == qEnd) done = true
-                  else {
-                    if (q + 2 > qEnd) throw Bad
-                    val offset = (bytes(q) & 0xff) | ((bytes(q + 1) & 0xff) << 8)
-                    q += 2
-                    if (offset == 0 || o - offset < blockBase) throw Bad
-                    var mLen = token & 0x0F
-                    if (mLen == 15) {
-                      var b255 = 255
-                      while (b255 == 255) {
-                        if (q >= qEnd) throw Bad
-                        b255 = bytes(q) & 0xff
-                        q += 1
-                        mLen += b255
-                      }
-                    }
-                    mLen += 4
-                    ensure(mLen)
-                    var k = 0
-                    val src = o - offset
-                    while (k < mLen) { out(o + k) = out(src + k); k += 1 }
-                    o += mLen
-                  }
-                }
-              }
-              if (bChecksum) {
-                if (p + len + 4 > n) throw Bad
-                if (xxh32(bytes, p, len, 0) != le32i(bytes, p + len))
-                  throw Bad
-                p += len + 4
-              } else p += len
-            }
-          }
-          if (declared >= 0 && o - frameStart != declared) throw Bad
-          if (cChecksum) {
-            if (p + 4 > n) throw Bad
-            if (xxh32(out, frameStart, o - frameStart, 0) != le32i(bytes, p))
-              throw Bad
-            p += 4
-          }
-        }
-      }
-      java.util.Arrays.copyOf(out, o)
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
     }
+    if (p == n) frames else -1
   }
 
-  // ---------- snappy framing format ------------------------------
-  private def maskedCrc32c(b: Array[Byte], off: Int, len: Int): Int = {
-    val c = new java.util.zip.CRC32C()
-    c.update(b, off, len)
-    val crc = c.getValue.toInt
-    ((crc >>> 15) | (crc << 17)) + 0xa282ead8
+  /** True when the snappy chunks' 3-byte lengths tile `b` exactly. */
+  private def snappyChunksWhole(b: Array[Byte]): Boolean = {
+    var p = 0L
+    while (p + 4 <= b.length) p += 4 + (le32(b, p) >>> 8)
+    p == b.length
   }
+
+  /** Decode `.lz4` frames (concatenated frames, the `lz4` CLI's cat
+    * shape, decode back-to-back). Public static for generated code. */
+  def lz4Frame(bytes: Array[Byte], maxOut: Int): Array[Byte] =
+    if (bytes == null) null
+    else lz4Frames(bytes) match {
+      case -1 => null
+      case 0 => Array.emptyByteArray // skippable frames only: the library wants one frame
+      case _ => BoundedDecode(maxOut) {
+        new FramedLZ4CompressorInputStream(new ByteArrayInputStream(bytes), true)
+      }
+    }
 
   /** Decode a snappy framing-format stream. Public static for
     * generated code. */
-  def snappyFrame(bytes: Array[Byte], maxOut: Int): Array[Byte] = {
-    try {
-      val n = bytes.length
-      if (n < 10) throw Bad
-      // stream identifier: ff 06 00 00 "sNaPpY"
-      if ((bytes(0) & 0xff) != 0xff || bytes(1) != 6 || bytes(2) != 0 ||
-        bytes(3) != 0 || bytes(4) != 's' || bytes(5) != 'N' ||
-        bytes(6) != 'a' || bytes(7) != 'P' || bytes(8) != 'p' ||
-        bytes(9) != 'Y') throw Bad
-      var p = 10
-      val bos = new java.io.ByteArrayOutputStream()
-      while (p < n) {
-        if (p + 4 > n) throw Bad
-        val t = bytes(p) & 0xff
-        val len = (bytes(p + 1) & 0xff) | ((bytes(p + 2) & 0xff) << 8) |
-          ((bytes(p + 3) & 0xff) << 16)
-        p += 4
-        if (p + len > n) throw Bad
-        t match {
-          case 0x00 => // compressed: masked crc32c + raw snappy
-            if (len < 4) throw Bad
-            val raw = BlockCodecs.snappy(bytes, p + 4, len - 4,
-              maxOut - bos.size())
-            if (raw == null) throw Bad
-            if (maskedCrc32c(raw, 0, raw.length) != le32i(bytes, p))
-              throw Bad
-            bos.write(raw)
-          case 0x01 => // uncompressed: masked crc32c + data
-            if (len < 4) throw Bad
-            if (bos.size() + len - 4 > maxOut) throw Bad
-            if (maskedCrc32c(bytes, p + 4, len - 4) != le32i(bytes, p))
-              throw Bad
-            bos.write(bytes, p + 4, len - 4)
-          case 0xfe => () // padding
-          case 0xff => // repeated stream identifier: validate then skip
-            if (len != 6 || bytes(p) != 's' || bytes(p + 1) != 'N' ||
-              bytes(p + 2) != 'a' || bytes(p + 3) != 'P' ||
-              bytes(p + 4) != 'p' || bytes(p + 5) != 'Y') throw Bad
-          case x if x >= 0x80 && x <= 0xfd => () // skippable
-          case _ => throw Bad // unskippable reserved chunk
-        }
-        p += len
-      }
-      bos.toByteArray
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
+  def snappyFrame(bytes: Array[Byte], maxOut: Int): Array[Byte] =
+    if (bytes == null || !snappyChunksWhole(bytes)) null
+    else BoundedDecode(maxOut) {
+      new FramedSnappyCompressorInputStream(new ByteArrayInputStream(bytes),
+        SnappyChunkMax, FramedSnappyDialect.STANDARD)
     }
-  }
 }
 
 /** `.lz4` frame decompression — see [[FrameCodecs]]. */

@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.util.zip.{CRC32, DataFormatException, Inflater}
+import java.util.zip.CRC32
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -18,11 +18,11 @@ import org.apache.spark.sql.types._
   * Parses the full RFC 1952 framing in one pass: magic `1F 8B`,
   * DEFLATE method byte, FLG-driven optional fields skipped in order
   * (FEXTRA with its LE length, null-terminated FNAME and FCOMMENT,
-  * 2-byte FHCRC), then the raw-DEFLATE stream via
-  * `java.util.zip.Inflater(nowrap)` — the public JVM machinery
-  * [[PngDhash]] already leans on — and finally the mandatory 8-byte
-  * trailer: the member is accepted only if the CRC32 of the inflated
-  * bytes and ISIZE (length mod 2³²) both match.
+  * 2-byte FHCRC), then the raw-DEFLATE stream via the JDK's
+  * `Inflater(nowrap)` behind [[BoundedDecode.inflateCounted]] (which
+  * also reports where the stream ended), and finally the mandatory
+  * 8-byte trailer: the member is accepted only if the CRC32 of the
+  * inflated bytes and ISIZE (length mod 2³²) both match.
   *
   * FAIL-CLOSED NULL on every malformed shape: wrong magic, non-DEFLATE
   * method, header truncated mid-field, corrupt DEFLATE data, stream
@@ -187,38 +187,22 @@ object GunzipPayload {
     // at least 2 bytes of deflate + the 8-byte trailer must remain
     // (also catches optional-field skips that ran past the buffer)
     if (pos < 0 || pos + 10 > n) return null
-    val inf = new Inflater(true)
-    try {
-      inf.setInput(bytes, pos, n - pos)
-      var out = new Array[Byte](math.min(maxOut, math.max(64, (n - pos) * 4)))
-      var total = 0
-      while (!inf.finished()) {
-        if (total == out.length) {
-          if (out.length >= maxOut) return null // decompression bomb
-          out = java.util.Arrays.copyOf(out,
-            math.min(maxOut, out.length * 2))
-        }
-        val got = inf.inflate(out, total, out.length - total)
-        if (got == 0 && !inf.finished()) return null // truncated/needs dict
-        total += got
-        if (total > maxOut) return null
-      }
-      // mandatory trailer: CRC32 then ISIZE, both LE, right after the
-      // deflate stream
-      val tpos = pos + inf.getBytesRead.toInt
-      if (tpos + 8 > n) return null
-      def le32(p: Int): Long =
-        (bytes(p) & 0xffL) | ((bytes(p + 1) & 0xffL) << 8) |
-          ((bytes(p + 2) & 0xffL) << 16) | ((bytes(p + 3) & 0xffL) << 24)
-      val crc = new CRC32()
-      crc.update(out, 0, total)
-      if (crc.getValue != le32(tpos)) return null
-      if ((total.toLong & 0xffffffffL) != le32(tpos + 4)) return null
-      (java.util.Arrays.copyOf(out, total), tpos + 8)
-    } catch {
-      case _: DataFormatException => null
-      case _: ArrayIndexOutOfBoundsException => null
-    } finally inf.end()
+    val r = BoundedDecode.inflateCounted(bytes, pos, n - pos, nowrap = true,
+      maxOut)
+    if (r == null) return null
+    val out = r._1
+    // mandatory trailer: CRC32 then ISIZE, both LE, right after the
+    // deflate stream
+    val tpos = pos + r._2
+    if (tpos + 8 > n) return null
+    def le32(p: Int): Long =
+      (bytes(p) & 0xffL) | ((bytes(p + 1) & 0xffL) << 8) |
+        ((bytes(p + 2) & 0xffL) << 16) | ((bytes(p + 3) & 0xffL) << 24)
+    val crc = new CRC32()
+    crc.update(out)
+    if (crc.getValue != le32(tpos)) return null
+    if ((out.length.toLong & 0xffffffffL) != le32(tpos + 4)) return null
+    (out, tpos + 8)
   }
 
   import org.apache.spark.sql.graftshim.ColumnShim

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.util.zip.{DataFormatException, Inflater}
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -20,10 +18,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * the protobuf wire format from the public spec (varints, packed
   * repeated fields, length-delimited messages, generic unknown-field
   * skip) and the ORC chunked-compression framing (3-byte LE chunk
-  * headers, isOriginal bit) for NONE, ZLIB (raw-DEFLATE via the JDK
-  * Inflater), SNAPPY and LZ4 footers (one [[BlockCodecs]] raw block
-  * per chunk), and ZSTD footers (one [[ZstdPayload]] frame per chunk
-  * — the modern writer default).
+  * headers, isOriginal bit) for NONE, ZLIB (raw DEFLATE through the
+  * JDK's `Inflater`, [[BoundedDecode.inflate]]), SNAPPY and LZ4
+  * footers (one [[BlockCodecs]] raw block per chunk, decoded by
+  * commons-compress), and ZSTD footers (one [[ZstdPayload]] frame per
+  * chunk, decoded by zstd-jni — the modern writer default).
   *
   * Output struct: `(compression, writer_version, num_rows, n_stripes,
   * content_length, columns array<(name, otype)>)` — `columns` is the
@@ -133,8 +132,8 @@ object OrcFooterMeta {
   /** ORC chunked stream → raw bytes (NONE handled by the caller):
     * 3-byte LE header `h`, isOriginal = h&1, chunkLen = h>>>1;
     * non-original chunks decode per the postscript codec — raw
-    * DEFLATE (zlib), or one Snappy/LZ4 raw block per chunk via
-    * [[BlockCodecs]]. */
+    * DEFLATE (zlib), one Snappy/LZ4 raw block per chunk via
+    * [[BlockCodecs]], or one zstd frame. */
   private[functions] def inflateChunks(bytes: Array[Byte], start: Int, end: Int,
                             maxOut: Int, codec: Int): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(math.min(maxOut, 1 << 16))
@@ -150,23 +149,11 @@ object OrcFooterMeta {
       if (orig) {
         if (out.size() + clen > maxOut) throw Bad
         out.write(bytes, pos, clen)
-      } else if (codec == 1) {
-        val inf = new Inflater(true)
-        try {
-          inf.setInput(bytes, pos, clen)
-          val buf = new Array[Byte](8192)
-          while (!inf.finished()) {
-            val got = inf.inflate(buf)
-            if (got == 0 && !inf.finished()) throw Bad
-            if (out.size() + got > maxOut) throw Bad
-            out.write(buf, 0, got)
-          }
-        } catch {
-          case _: DataFormatException => throw Bad
-        } finally inf.end()
       } else {
         val block =
-          if (codec == 2) BlockCodecs.snappy(bytes, pos, clen,
+          if (codec == 1) BoundedDecode.inflate(bytes, pos, clen,
+            nowrap = true, maxOut - out.size())
+          else if (codec == 2) BlockCodecs.snappy(bytes, pos, clen,
             maxOut - out.size())
           else if (codec == 4) BlockCodecs.lz4(bytes, pos, clen,
             maxOut - out.size())

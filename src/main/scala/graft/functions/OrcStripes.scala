@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * each stripe's offset, index/data/footer byte lengths and EXACT
   * row count — the numbers a skew audit or a split planner reads
   * without touching stripe data. Same postscript walk, chunked
-  * footer decompression (NONE/ZLIB/SNAPPY/LZ4/ZSTD via the engine's
-  * own kernels), protobuf wire decode.
+  * footer decompression (NONE/ZLIB/SNAPPY/LZ4/ZSTD via the bounded
+  * codec shells, as in [[OrcFooterMeta]]), protobuf wire decode.
   *
   * Output: array of `(offset, index_length, data_length,
   * footer_length, number_of_rows)` in stripe order.

@@ -15,11 +15,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * and a top-level column name, walk row group 0's page chain for
   * that chunk (thrift compact `PageHeader`s read with the footer
   * kernel's own Reader), decompress each page (uncompressed, raw
-  * snappy block, gzip member, zstd frame — all via the repo's own
-  * from-spec codecs), decode the RLE/bit-packed definition levels,
-  * and materialize the values: PLAIN for all physical types
-  * (booleans bit-packed LSB-first, INT32/INT64/FLOAT/DOUBLE
-  * little-endian, BYTE_ARRAY length-prefixed) and the dictionary
+  * snappy block, gzip member, zstd frame — all via the bounded codec
+  * shells: commons-compress, the JDK's `Inflater`, zstd-jni), decode
+  * the RLE/bit-packed definition levels, and materialize the values:
+  * PLAIN for all physical types (booleans bit-packed LSB-first,
+  * INT32/INT64/FLOAT/DOUBLE little-endian, BYTE_ARRAY
+  * length-prefixed) and the dictionary
   * pair — a PLAIN dictionary page resolved through
   * RLE_DICTIONARY / PLAIN_DICTIONARY index pages (1-byte bit width +
   * the hybrid runs). V1 and V2 data pages both decode (V2 keeps its

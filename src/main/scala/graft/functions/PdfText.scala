@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.util.zip.{DataFormatException, Inflater}
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -14,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Simple-PDF text extraction — the parser `pdfMeta`'s token census
   * deliberately is not: walk every `<< … >> stream … endstream`
   * object, decode each stream through its FULL `/Filter` chain —
-  * FlateDecode (`java.util.zip.Inflater`, zlib framing), LZWDecode
+  * FlateDecode (zlib framing, [[BoundedDecode.inflate]]), LZWDecode
   * (MSB-first 9→12-bit codes, `/EarlyChange` honored), ASCII85Decode,
   * ASCIIHexDecode and RunLengthDecode, singly or as a `/Filter`
   * ARRAY applied in sequence (`[/ASCII85Decode /FlateDecode]`), with
@@ -354,7 +352,8 @@ object PdfTextExtract {
     for (f <- chain) {
       if (cur == null) return null
       cur = f match {
-        case "FlateDecode" | "Fl" => predicted(dict, inflateZlib(cur, maxOut))
+        case "FlateDecode" | "Fl" => predicted(dict,
+          BoundedDecode.inflate(cur, 0, cur.length, nowrap = false, maxOut))
         case "LZWDecode" | "LZW" =>
           val ec = intValueAt(dict, "/EarlyChange") match {
             case 0 => 0
@@ -689,30 +688,6 @@ object PdfTextExtract {
       }
     }
     null // input exhausted without the 128 EOD tag: corrupt
-  }
-
-  /** zlib inflate with the [[GunzipPayload]] cap discipline. */
-  private def inflateZlib(data: Array[Byte], maxOut: Int): Array[Byte] = {
-    val inf = new Inflater()
-    try {
-      inf.setInput(data)
-      var out = new Array[Byte](math.min(maxOut,
-        math.max(64, data.length * 4)))
-      var total = 0
-      while (!inf.finished()) {
-        if (total == out.length) {
-          if (out.length >= maxOut) return null
-          out = java.util.Arrays.copyOf(out, math.min(maxOut, out.length * 2))
-        }
-        val got = inf.inflate(out, total, out.length - total)
-        if (got == 0 && !inf.finished()) return null
-        total += got
-        if (total > maxOut) return null
-      }
-      java.util.Arrays.copyOf(out, total)
-    } catch {
-      case _: DataFormatException => null
-    } finally inf.end()
   }
 
   /** Shown strings of one content stream under the joining contract.

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.util.zip.{DataFormatException, Inflater}
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -10,7 +8,7 @@ import org.apache.spark.sql.types._
 
 /** Native perceptual dHash over PNG bytes — the codec gap's real
   * closing for the format web corpora are actually made of: the IDAT
-  * stream is zlib (`java.util.zip.Inflater`, public JVM machinery),
+  * stream is zlib (the JDK's `Inflater`, [[BoundedDecode.inflate]]),
   * the per-scanline filters (None/Sub/Up/Average/Paeth, PNG spec
   * §9) are byte arithmetic, and the sampled 9×8 grid / integer luma /
   * gradient-bit packing are EXACTLY [[BmpDhash]]'s — so a PNG and a
@@ -177,24 +175,11 @@ object PngDhash {
     val expected = passDims.map { case (pw, ph) =>
       if (pw > 0 && ph > 0) ph * (1 + pw * ch) else 0
     }.sum
-    val filtered = new Array[Byte](expected)
-    val inf = new Inflater()
-    try {
-      inf.setInput(compressed)
-      var total = 0
-      while (total < expected && !inf.finished() && !inf.needsInput() &&
-        !inf.needsDictionary()) {
-        val n = inf.inflate(filtered, total, expected - total)
-        total += n
-        if (n == 0 && !inf.finished() && !inf.needsInput()) return null
-      }
-      if (total != expected) return null
-      // the stream must END here: extra pixel data = corrupt geometry
-      val probe = new Array[Byte](1)
-      if (!inf.finished() && inf.inflate(probe) > 0) return null
-    } catch {
-      case _: DataFormatException => return null
-    } finally inf.end()
+    // the stream must END at the geometry's size: extra pixel data =
+    // corrupt geometry
+    val filtered = BoundedDecode.inflate(compressed, 0, compressed.length,
+      nowrap = false, expected)
+    if (filtered == null || filtered.length != expected) return null
     // defilter each pass with a rolling previous-row buffer (spec §9)
     // and SCATTER its pixels onto the final grid at
     // (xo + i·xStep, yo + j·yStep) — the non-interlaced image is the

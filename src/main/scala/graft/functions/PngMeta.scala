@@ -199,23 +199,8 @@ object PngMeta {
   /** Bounded zlib inflate of `b[from, until)`; null on corruption or
     * overflow past `maxOut`. */
   private def inflate(b: Array[Byte], from: Int, until: Int,
-                      maxOut: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(b, from, until - from)
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      while (!inf.finished()) {
-        val got = inf.inflate(buf)
-        if (got == 0 && !inf.finished()) return null
-        out.write(buf, 0, got)
-        if (out.size() > maxOut) return null
-      }
-      out.toByteArray
-    } catch {
-      case _: java.util.zip.DataFormatException => null
-    } finally inf.end()
-  }
+                      maxOut: Int): Array[Byte] =
+    BoundedDecode.inflate(b, from, until - from, nowrap = false, maxOut)
 
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.graftshim.ColumnShim

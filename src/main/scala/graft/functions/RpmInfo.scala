@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * `payload_offset` points at the first byte AFTER the main header
   * store — the compressed cpio stream — so a pipeline chains
-  * `rpm → {gzip|xz|zstd} → CpioEntries` with the repo's own codecs,
+  * `rpm → {gzip|xz|zstd} → CpioEntries` with the bounded codec shells,
   * selected by the package's OWN payload_compressor tag
   * ([[graft.ext.Multimodal.rpmFiles]]). Absent optional tags stay
   * null; compressor defaults to gzip per rpmlib only in the WRAPPER,

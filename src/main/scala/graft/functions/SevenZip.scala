@@ -472,21 +472,10 @@ object SevenZipList {
         if (out == null || out.length != unpack) throw Bad
         out
       case "040108" => // DEFLATE (raw)
-        val inf = new java.util.zip.Inflater(true)
-        try {
-          inf.setInput(bytes, start.toInt, packLen.toInt)
-          val out = new Array[Byte](unpack.toInt)
-          var total = 0
-          while (total < unpack && !inf.finished()) {
-            val got = inf.inflate(out, total, out.length - total)
-            if (got == 0 && !inf.finished()) throw Bad
-            total += got
-          }
-          if (total != unpack) throw Bad
-          out
-        } catch {
-          case _: java.util.zip.DataFormatException => throw Bad
-        } finally inf.end()
+        val out = BoundedDecode.inflate(bytes, start.toInt, packLen.toInt,
+          nowrap = true, unpack.toInt)
+        if (out == null || out.length != unpack) throw Bad
+        out
       case _ => throw Bad // multi-coder/filtered headers: refuse
     }
   }

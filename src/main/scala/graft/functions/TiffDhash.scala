@@ -353,7 +353,10 @@ object TiffDhash {
   }
 
   /** zlib inflate of one strip (Compression 8 Adobe Deflate or the
-    * legacy 32946 code — both zlib-framed). */
+    * legacy 32946 code — both zlib-framed) into `dst[at, at + want)`.
+    * Its own loop, not [[BoundedDecode.inflate]]: a truncated strip
+    * keeps the pixels it did decode (the count is returned), where the
+    * shared helper refuses a stream that ends early. */
   private def inflate(src: Array[Byte], off: Int, len: Int,
                       dst: Array[Byte], at: Int, want: Int): Int = {
     val inf = new java.util.zip.Inflater()

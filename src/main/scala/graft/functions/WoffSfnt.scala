@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.util.zip.Inflater
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -82,18 +80,9 @@ object WoffSfnt {
           off.toLong + compLen > b.length || origLen > maxOut) throw Bad
         datas(i) =
           if (compLen < origLen) {
-            val inf = new Inflater()
-            inf.setInput(b, off, compLen)
-            val out = new Array[Byte](origLen)
-            var got = 0
-            while (got < origLen && !inf.finished()) {
-              val k = inf.inflate(out, got, origLen - got)
-              if (k == 0 && inf.needsInput()) throw Bad
-              got += k
-            }
-            val ok = got == origLen && inf.finished()
-            inf.end()
-            if (!ok) throw Bad
+            val out = BoundedDecode.inflate(b, off, compLen, nowrap = false,
+              origLen)
+            if (out == null || out.length != origLen) throw Bad
             out
           } else if (compLen == origLen)
             java.util.Arrays.copyOfRange(b, off, off + origLen)
@@ -129,7 +118,6 @@ object WoffSfnt {
     } catch {
       case Bad => null
       case _: ArrayIndexOutOfBoundsException => null
-      case _: java.util.zip.DataFormatException => null
     }
   }
 

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.util.zip.{DataFormatException, Inflater}
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -12,10 +10,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** ZIP member content extraction — the step [[graft.ext.Multimodal]]'s
   * `zipMeta` walk stops short of: resolve the entry named `entryName`
   * and yield its bytes — stored members (method 0) sliced directly,
-  * DEFLATE members (method 8) inflated with `Inflater(nowrap)`, and
-  * (round 16) the modern methods through the repo's own from-spec
-  * decoders: bzip2 (12), LZMA (14, the APPNOTE version+props
-  * preamble with sized or end-marker streams), zstd (93), xz (95).
+  * DEFLATE members (method 8) inflated by the JDK's `Inflater(nowrap)`
+  * ([[BoundedDecode.inflate]]), and the modern methods through the
+  * library-backed codec shells: bzip2 (12, commons-compress), LZMA
+  * (14, xz-java; the APPNOTE version+props preamble with sized or
+  * end-marker streams), zstd (93, zstd-jni), xz (95, xz-java).
   * This is what turns a crawled OOXML payload into text:
   * `word/document.xml` is one extraction away from the document
   * corpus.
@@ -326,23 +325,10 @@ object ZipEntryBytes {
     }
     if (method != 8) return null
     if (usize == 0) return Array.empty[Byte] // empty member
-    val inf = new Inflater(true)
-    try {
-      inf.setInput(bytes, dataStart, csize.toInt)
-      val out = new Array[Byte](usize.toInt)
-      var total = 0
-      while (total < out.length && !inf.finished()) {
-        val got = inf.inflate(out, total, out.length - total)
-        if (got == 0 && !inf.finished()) return null // truncated
-        total += got
-      }
-      // the member must inflate to EXACTLY the declared size
-      if (total != usize || !inf.finished()) return null
-      out
-    } catch {
-      case _: DataFormatException => null
-      case _: ArrayIndexOutOfBoundsException => null
-    } finally inf.end()
+    // the member must inflate to EXACTLY the declared size
+    val out = BoundedDecode.inflate(bytes, dataStart, csize.toInt,
+      nowrap = true, usize.toInt)
+    if (out != null && out.length == usize) out else null
   }
 
   private def le64(bytes: Array[Byte], p: Int): Long = {

@@ -90,10 +90,10 @@ object CorpusIO {
     * the format is not splittable, and corpora ship thousands of
     * shards, so parallelism comes from file count exactly as it does
     * on a real cluster) → the bounded fail-closed
-    * [[graft.functions.ZstdPayload]] kernel → line split →
-    * `from_json` under the same explicit-schema + `_corrupt`
+    * [[graft.functions.ZstdPayload]] (libzstd through zstd-jni) → line
+    * split → `from_json` under the same explicit-schema + `_corrupt`
     * quarantine contract as [[readJsonl]]. A corrupt or truncated
-    * archive vanishes WHOLE (the kernel nulls it), never as silent
+    * archive vanishes WHOLE (the decoder nulls it), never as silent
     * partial rows; a malformed line inside a healthy archive lands in
     * `_corrupt`. Decode-only: writing zstd would need an encoder —
     * egress stays [[writeJsonl]]. */

@@ -2473,6 +2473,41 @@ class SimilaritySpec extends SparkSpec {
       "a torn index still exists, so IndexStream appends to it and raises")
   }
 
+  test("the IVF meta write survives a crash between any two of its steps: " +
+    "the old or the new meta stays readable, and a rerun completes it") {
+    val emb = load("embeddings")
+    val dead = emb.filter(col("vec_id") % 5 === 0).select("vec_id")
+    def fresh(): String = {
+      val p = java.nio.file.Files.createTempDirectory("graft-ivf-crash").toString
+      Similarity.ivfWrite(Similarity.ivfBuildDeterministic(emb, planes = 4, dim = 64), p)
+      Similarity.ivfDeleteWrite(p, dead)
+      p
+    }
+    def state(p: String) = (Similarity.readCentroids(spark, p).collect().toSet,
+      Similarity.quantizerKind(spark, p))
+    // a clean compaction: the meta before and after it
+    val clean = fresh()
+    val before = state(clean)
+    Similarity.ivfCompactDeletes(spark, clean)
+    val after = state(clean)
+    assert(before != after, "the compaction must move the centroids")
+    object Crash extends RuntimeException
+    for (step <- 1 to 4) {
+      val p = fresh()
+      Similarity.afterMetaStep = s => if (s == step) throw Crash
+      try intercept[Crash.type](Similarity.ivfCompactDeletes(spark, p))
+      finally Similarity.afterMetaStep = _ => ()
+      // steps 1-3 leave the old meta (in meta or meta.prev), 4 the new
+      assert(state(p) == (if (step < 4) before else after), s"crash after step $step")
+      // the tombstones outlive the crash; the rerun rebuilds the
+      // partials from the rewritten corpus and swaps its meta in
+      Similarity.ivfCompactDeletes(spark, p)
+      assert(state(p) == after, s"rerun after a crash at step $step")
+      for (left <- Seq("meta.next", "meta.prev"))
+        assert(!new java.io.File(p, left).exists(), s"step $step left $left")
+    }
+  }
+
   test("deterministic IVF: cells are the sign buckets; hits are real neighbors with exact sims") {
     val emb = load("embeddings")
     val idx = Similarity.ivfBuildDeterministic(emb, planes = 3, dim = 64)

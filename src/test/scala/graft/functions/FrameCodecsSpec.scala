@@ -15,6 +15,16 @@ class FrameCodecsSpec extends SparkSpec {
   private val text = ("the quick brown fox jumps over the lazy dog — " +
     "padding pad pad ") * 3000 // ~200 KB: multiple 64 KB blocks
 
+  /** The lz4 frame header checksum byte: bits 8..15 of xxh32 (seed 0)
+    * over the descriptor bytes. */
+  private def headerCheck(desc: Array[Byte]): Byte = {
+    val h = new org.apache.commons.codec.digest.XXHash32(0)
+    h.update(desc, 0, desc.length)
+    ((h.getValue >>> 8) & 0xff).toByte
+  }
+
+  private val lz4Magic = Array[Byte](0x04, 0x22, 0x4d, 0x18)
+
   test("lz4 frame: real LZ4FrameOutputStream output round-trips — " +
     "multi-block, content checksum verified; concatenated frames") {
     import net.jpountz.lz4.LZ4FrameOutputStream
@@ -33,7 +43,7 @@ class FrameCodecsSpec extends SparkSpec {
   test("lz4 frame: hand-framed block-DEPENDENT frame — a match in " +
     "block 2 reaches back into block 1's decoded output") {
     val hdr = Array[Byte](0x40, 0x40) // FLG: v01, dependent; BD: 64KB
-    val hc = ((FrameCodecs.xxh32(hdr, 0, 2, 0) >>> 8) & 0xff).toByte
+    val hc = headerCheck(hdr)
     val frame = Array[Byte](0x04, 0x22, 0x4d, 0x18) ++ hdr ++ Array(hc) ++
       Array[Byte](0x08, 0x00, 0x00, 0x80.toByte) ++ // raw block, 8 bytes
       "abcdefgh".getBytes ++
@@ -42,6 +52,27 @@ class FrameCodecsSpec extends SparkSpec {
       Array[Byte](0, 0, 0, 0) // EndMark
     val got = FrameCodecs.lz4Frame(frame, 1 << 20)
     assert(got != null && new String(got) == "abcdefgh" + "abcdefgh" + "z")
+  }
+
+  test("lz4 frame: the DictID flag is refused on purpose, in every " +
+    "frame, not through a misread header checksum") {
+    // one stored block "abc" (high bit set on its length) and the EndMark
+    val body = Array[Byte](0x03, 0x00, 0x00, 0x80.toByte) ++ "abc".getBytes ++
+      Array[Byte](0, 0, 0, 0)
+    val plain = Array[Byte](0x40, 0x40) // version 01, 64 KB blocks
+    val ok = lz4Magic ++ plain ++ Array(headerCheck(plain)) ++ body
+    assert(new String(FrameCodecs.lz4Frame(ok, 1 << 20)) == "abc")
+    // DictID bit set, and the checksum of the 2-byte descriptor right
+    // after BD — where a decoder that ignores DictID looks for it, so
+    // such a decoder (commons-compress) reads this frame as "abc"
+    val withId = Array[Byte](0x41, 0x40)
+    val dict = lz4Magic ++ withId ++ Array(headerCheck(withId)) ++ body
+    val lib = new org.apache.commons.compress.compressors.lz4
+      .FramedLZ4CompressorInputStream(new java.io.ByteArrayInputStream(dict))
+    assert(new String(lib.readAllBytes()) == "abc")
+    assert(FrameCodecs.lz4Frame(dict, 1 << 20) == null)
+    // the flag is checked on a later concatenated frame too
+    assert(FrameCodecs.lz4Frame(ok ++ dict, 1 << 20) == null)
   }
 
   test("snappy framing format: real snappy-java framed output " +
@@ -80,7 +111,7 @@ class FrameCodecsSpec extends SparkSpec {
         s"cut $cut")
     // DictID flag refused even with a VALID header checksum
     val hdr = Array[Byte](0x41, 0x40) // version 01 + DictID bit
-    val hc = ((FrameCodecs.xxh32(hdr, 0, 2, 0) >>> 8) & 0xff).toByte
+    val hc = headerCheck(hdr)
     val dict = Array[Byte](0x04, 0x22, 0x4d, 0x18) ++ hdr ++
       Array[Byte](1, 2, 3, 4) ++ Array(hc) ++ Array[Byte](0, 0, 0, 0)
     assert(FrameCodecs.lz4Frame(dict, 1 << 20) == null)

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** The zstd kernel graded against the REAL format: every pinned
+/** The zstd decoder graded against the REAL format: every pinned
   * stream below is stock `zstd` CLI (v1.5.7) output embedded as
   * constants, chosen to cover each block/literals/sequence shape the
   * no-dictionary format can emit — raw/RLE/compressed blocks,
@@ -143,7 +143,7 @@ class ZstdSpec extends SparkSpec {
     // direct Huffman weights: weights are per BYTE VALUE from 0, so
     // "abcd" needs 100 stored weights (zeros up to 'a'; 'd' = symbol
     // 0x64 carries the implied last weight), literals "abcd", nbSeq=0
-    val direct = "28b52ffd2004" + // magic, fhd, content 4
+    val direct = "28b52ffd0000" + // magic, fhd 0 (no size), window 1 KiB
       "cd0100" + // block header: last, compressed, size 57
       "42400d" + // lit hdr: type Compressed sf0, rs=4 cs=53
       "e3" + "00" * 48 + "01" + "11" + // tree: 100 4-bit weights —
@@ -179,6 +179,13 @@ class ZstdSpec extends SparkSpec {
     assert(ZstdPayload.compute(dict, 1 << 20) == null)
     // reserved block type (3)
     assert(ZstdPayload.compute(un("28b52ffd2000" + "070000"), 1 << 20) == null)
+    // a compressed block larger than Block_Maximum_Size = min(Window_Size,
+    // 128 KiB) (RFC 8878 §3.1.1.2.3): the direct-weights frame above
+    // re-headed as single-segment with content size 4, so Window_Size 4
+    // against its 57-byte block
+    val overBlock = un("28b52ffd2004" + "cd0100" + "42400d" + "e3" +
+      "00" * 48 + "01" + "11" + "1b01" + "00")
+    assert(ZstdPayload.compute(overBlock, 1 << 20) == null)
     // checksum flip (last byte)
     val badCk = ok.clone(); badCk(ok.length - 1) = (badCk(ok.length - 1) ^ 1).toByte
     assert(ZstdPayload.compute(badCk, 1 << 20) == null)
