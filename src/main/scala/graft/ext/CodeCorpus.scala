@@ -87,10 +87,11 @@ object CodeCorpus {
     val interp0 = element_at(split(element_at(toks, 1), "/"), -1)
     val interp = when(interp0 === "env",
       coalesce(try_element_at(toks, lit(2)), lit(""))).otherwise(interp0)
+    // the first listed prefix that matches (regex alternation tries
+    // its branches in order), then a literal map lookup like byName's
+    val pfx = regexp_extract(interp, shebangLang.map(_._1).mkString("^(", "|", ")"), 1)
     val shebang = when(firstLine.startsWith("#!"),
-      shebangLang.foldRight(lit(null: String)) { case ((pfx, lang), acc) =>
-        when(interp.startsWith(pfx), lit(lang)).otherwise(acc)
-      }).otherwise(lit(null: String))
+      try_element_at(typedlit(shebangLang.toMap), pfx))
 
     val byName = try_element_at(typedlit(nameLang), fname)
     val byExt = try_element_at(typedlit(extLang), ext)

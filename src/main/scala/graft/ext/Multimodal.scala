@@ -1410,9 +1410,10 @@ object Multimodal {
     * format lakes are made of ([[avroSchema]]'s parquet sibling):
     * version, EXACT row count, row-group count, writer string and
     * the schema tree's leaf columns (dotted paths, physical types,
-    * repetition) straight from the Thrift compact-protocol footer
-    * via [[graft.functions.ParquetFooterMeta]] — no table read, no
-    * library probe. `sniff → parquet_meta → explicit read`. */
+    * repetition) straight from the footer, read by parquet-format's
+    * `FileMetaData` over a bounded compact protocol
+    * ([[graft.functions.ParquetFooterMeta]]) — no table read, no
+    * reader stack. `sniff → parquet_meta → explicit read`. */
   def parquetMeta(payload: Column, maxColumns: Int = 4096): Column =
     graft.functions.ParquetFooterMeta(payload, maxColumns)
 
@@ -1443,18 +1444,12 @@ object Multimodal {
   /** Parquet column-chunk statistics — the pruning/skew/NULL-rate
     * census [[parquetMeta]] stops short of: per (row group × column)
     * rows/bytes/value counts and the Statistics null_count/min/max
-    * decoded per physical type, straight from the same Thrift footer
-    * ([[graft.functions.ParquetColumnStats]]) — no table read. */
+    * decoded per physical type, straight from the same parquet-format
+    * footer read ([[graft.functions.ParquetColumnStats]]) — no table
+    * read. */
   def parquetStats(payload: Column, maxChunks: Int = 16384): Column =
     graft.functions.ParquetColumnStats(payload, maxChunks)
 
-  /** Parquet PAGE-INDEX census — the scan-planning grain below
-    * [[parquetStats]]: per-PAGE first_row_index/offset/size from the
-    * OffsetIndex and null_page/null_count/min/max/boundary_order from
-    * the ColumnIndex (what predicate-pushdown page skipping actually
-    * reads; parquet-mr ≥ 1.11 writes them by default). Files without
-    * page indexes yield an EMPTY array; malformed index regions fail
-    * the row closed ([[graft.functions.ParquetPageIndex]]). */
   /** MP4 per-TRACK sample-table census — the costing grain of a
     * video corpus: samples/bytes/chunks per trak with handler,
     * timescale and language, no codec decode
@@ -1470,9 +1465,6 @@ object Multimodal {
   def pngMeta(payload: Column, maxText: Int = 1 << 20): Column =
     graft.functions.PngMeta(payload, maxText)
 
-  /** Parquet bloom-filter census: one row per (row group, column)
-    * carrying a bloom, header facts verified at their offsets
-    * ([[graft.functions.ParquetBloomInfo]]). */
   /** ORC bloom-filter membership probe — BLOOM_FILTER_UTF8 index
     * streams tested with ORC's own Murmur3-64 double hashing; null
     * when the column has no bloom ([[graft.functions.OrcBloomCheck]]). */
@@ -1480,25 +1472,37 @@ object Multimodal {
                            probe: Column): Column =
     graft.functions.OrcBloom.mightContain(payload, colName, probe)
 
+  /** Parquet bloom-filter census: one row per (row group, column)
+    * carrying a bloom, each BloomFilterHeader read at its offset by
+    * parquet-format ([[graft.functions.ParquetBloomInfo]]). */
   def parquetBloomInfo(payload: Column, maxColumns: Int = 4096): Column =
     graft.functions.ParquetBloom.bloomInfo(payload, maxColumns)
 
   /** Parquet bloom-filter membership probe — the split-block xxHash64
-    * check a scan planner runs before opening a row group; null when
-    * the file or column has no bloom
-    * ([[graft.functions.ParquetBloomCheck]]). */
+    * check a scan planner runs before opening a row group, run by
+    * parquet-column's `BlockSplitBloomFilter`; null when the file or
+    * column has no bloom ([[graft.functions.ParquetBloomCheck]]). */
   def parquetBloomMightContain(payload: Column, colName: String,
                                probe: Column): Column =
     graft.functions.ParquetBloom.mightContain(payload, colName, probe)
 
+  /** Parquet PAGE-INDEX census — the scan-planning grain below
+    * [[parquetStats]]: per-PAGE first_row_index/offset/size from the
+    * OffsetIndex and null_page/null_count/min/max/boundary_order from
+    * the ColumnIndex, both read by parquet-format (what
+    * predicate-pushdown page skipping actually reads; parquet-mr ≥ 1.11
+    * writes them by default). Files without page indexes yield an EMPTY
+    * array; malformed index regions fail the row closed
+    * ([[graft.functions.ParquetPageIndex]]). */
   def parquetPageIndex(payload: Column, maxPages: Int = 1 << 16): Column =
     graft.functions.ParquetPageIndex(payload, maxPages)
 
   /** Parquet DATA decode — sample a top-level column's real values
     * out of raw file bytes, no reader stack: row group 0's page
-    * chain, the dictionary/PLAIN encodings, RLE/bit-packed
-    * definition levels, and the uncompressed/snappy/gzip/zstd page
-    * codecs through the bounded codec shells
+    * chain (parquet-format page headers), the uncompressed/snappy/
+    * gzip/zstd page codecs through the bounded codec shells, and
+    * parquet-column's level and value decoders for the PLAIN,
+    * dictionary, DELTA and BYTE_STREAM_SPLIT encodings
     * ([[graft.functions.ParquetPageValues]]). Null slots stay null
     * in the values array; nested/repeated columns refuse. */
   def parquetPageValues(payload: Column, column: String,

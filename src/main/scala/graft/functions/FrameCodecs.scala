@@ -22,10 +22,12 @@ import org.apache.spark.sql.types._
   * and streams decode back-to-back, skippable frames and chunks are
   * skipped. Before the library runs, a walk over the frame headers and
   * block (chunk) lengths — decoding nothing — requires the input to
-  * split into whole frames, and refuses an lz4 frame with the DictID
-  * flag (there is no dictionary to resolve against). The library
-  * checks neither: it does not parse that flag, and it reads a block
-  * cut off by the end of the input as the end of the stream. A `.lz4`
+  * split into whole frames, refuses an lz4 frame with the DictID flag
+  * (there is no dictionary to resolve against), and refuses an lz4
+  * match offset that reaches before the start of its frame. The library
+  * checks none of these: it does not parse that flag, it reads a block
+  * cut off by the end of the input as the end of the stream, and it
+  * copies zeros from its pre-filled window for such an offset. A `.lz4`
   * input of skippable frames only decodes to an empty array. Fail-closed
   * null on every shape the walk or the library refuses, output
   * bomb-capped. Per-row bounded work, zero shuffle, codegen'd. */
@@ -45,7 +47,8 @@ object FrameCodecs {
     * frames and skippable frames, none with the DictID flag. Walks FLG
     * (bit 0 DictID, bit 4 block checksums, bit 3 content size, bit 2
     * content checksum), then each block's 4-byte length (high bit:
-    * stored) up to the zero EndMark. */
+    * stored) up to the zero EndMark, and each compressed block's
+    * sequences ([[BlockCodecs.lz4Length]]). */
   private def lz4Frames(b: Array[Byte]): Int = {
     val n = b.length
     var p = 0L
@@ -60,10 +63,24 @@ object FrameCodecs {
         val flg = b(p.toInt + 4)
         if ((flg & 0x01) != 0) return -1
         p += 7 + (if ((flg & 0x08) != 0) 8 else 0) // magic FLG BD [size] HC
+        // block-dependent frames (FLG bit 5 clear) match into the
+        // output of the frame's earlier blocks
+        val dependent = (flg & 0x20) == 0
+        var history = 0L
         var len = -1L
         while (len != 0) {
           if (p + 4 > n) return -1
-          len = le32(b, p) & 0x7fffffffL
+          val word = le32(b, p)
+          len = word & 0x7fffffffL
+          if (len != 0) {
+            if (p + 4 + len > n) return -1
+            val out =
+              if ((word & 0x80000000L) != 0) len // stored block
+              else BlockCodecs.lz4Length(b, (p + 4).toInt, (p + 4 + len).toInt,
+                if (dependent) history else 0)
+            if (out < 0) return -1
+            history += out
+          }
           p += 4 + len + (if (len != 0 && (flg & 0x10) != 0) 4 else 0)
         }
         if ((flg & 0x04) != 0) p += 4

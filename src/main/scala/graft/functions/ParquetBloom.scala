@@ -8,28 +8,27 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import ParquetFooterMeta.{Bad, Reader, TStop, listHeader, skipValue}
-
 /** Parquet BLOOM-FILTER surface — the row-group point-lookup skip
   * index real scans use at fleet scale: a predicate `col = v` that
   * misses every row group's bloom never opens a data page. Two
   * expressions over raw file bytes, no reader stack:
   *
   *   - [[ParquetBloomInfo]]: one row per (row group, column) carrying
-  *     a bloom — footer-declared offset/length plus the
-  *     BloomFilterHeader facts (numBytes, algorithm, hash,
-  *     compression), header VERIFIED at its offset.
+  *     a bloom — footer-declared offset plus the BloomFilterHeader
+  *     facts (numBytes, algorithm, hash, compression), header VERIFIED
+  *     at its offset.
   *   - [[ParquetBloomCheck]]: the actual membership probe — the
-  *     public split-block bloom from the parquet spec (xxHash64 of
-  *     the plain-encoded value, upper 32 bits pick the 32-byte
-  *     block, eight salted-multiply bits within it), ORed across row
+  *     split-block bloom of the parquet spec, probed by parquet-column's
+  *     `BlockSplitBloomFilter` (its xxHash64 of the plain-encoded
+  *     value, `findHash` over the file's bitset), ORed across row
   *     groups the way a scan planner would. Null when the file or
   *     column has no bloom — absence of an index is not `false`.
   *
-  * Only BLOCK/XXHASH/UNCOMPRESSED filters (the only combination the
-  * format defines today) answer; anything else refuses. xxHash64
-  * comes from Spark's own codegen'd XXH64 — the same public
-  * algorithm parquet-mr uses.
+  * The footer and each `BloomFilterHeader` are read by parquet-format's
+  * generated classes through [[ParquetThrift]]; a bitset must lie inside
+  * the payload before it is copied out. Only BLOCK/XXHASH/UNCOMPRESSED
+  * filters (the only combination the format defines today) answer;
+  * anything else refuses.
   *
   * Reference behavior anchor: oracle-schema-copy's keyed IN-list scan
   * (CopyUtils.java:517-523) is the semantic cousin — deciding which
@@ -101,6 +100,10 @@ case class ParquetBloomInfo(child: Expression, maxColumns: Int)
 }
 
 object ParquetBloom {
+  import ParquetThrift._
+  import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
+  import org.apache.parquet.format.BloomFilterHeader
+  import org.apache.parquet.io.api.Binary
 
   val InfoSchema: StructType = StructType(Seq(
     StructField("row_group", IntegerType, nullable = false),
@@ -111,206 +114,37 @@ object ParquetBloom {
     StructField("hash", StringType, nullable = false),
     StructField("compression", StringType, nullable = false)))
 
-  /** The split-block salt constants from the parquet format spec. */
-  private val Salt = Array(0x47b6137b, 0x44974d91, 0x8824ad5b,
-    0xa2b7289d, 0x705495c7, 0x2df1424b, 0x9efc4947, 0x5c6bfb31)
+  private final case class BloomRef(rowGroup: Int, column: String, offset: Long)
 
-  private final case class BloomRef(rowGroup: Int, column: String,
-                                    offset: Long, length: Long)
-
-  /** Footer walk → bloom references: (row group, dotted column path,
-    * bloom_filter_offset, bloom_filter_length or -1). */
+  /** Footer → bloom references (row group, dotted column path,
+    * bloom_filter_offset), at most `maxColumns`. */
   private def bloomRefs(bytes: Array[Byte],
                         maxColumns: Int): Array[BloomRef] = {
-    if (bytes.length < 12 ||
-      bytes(0) != 'P' || bytes(1) != 'A' || bytes(2) != 'R' ||
-      bytes(3) != '1') throw Bad
-    val n = bytes.length
-    if (bytes(n - 4) != 'P' || bytes(n - 3) != 'A' ||
-      bytes(n - 2) != 'R' || bytes(n - 1) != '1') throw Bad
-    val flen = (bytes(n - 8) & 0xff) | ((bytes(n - 7) & 0xff) << 8) |
-      ((bytes(n - 6) & 0xff) << 16) | ((bytes(n - 5) & 0xff) << 24)
-    if (flen <= 0 || flen > n - 12) throw Bad
-    val r = new Reader(bytes, n - 8 - flen, n - 8)
     val out = new scala.collection.mutable.ArrayBuffer[BloomRef]
-    // FileMetaData
-    var lastFid = 0
-    var done = false
-    while (!done) {
-      val b = r.u8()
-      if (b == TStop) done = true
-      else {
-        val delta = (b >> 4) & 0x0f
-        val tpe = b & 0x0f
-        val fid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-        lastFid = fid
-        if (fid == 4 && tpe == ParquetFooterMeta.TList) {
-          val (_, count) = listHeader(r)
-          var rg = 0
-          while (rg < count) {
-            readRowGroup(r, rg, out, maxColumns)
-            rg += 1
-          }
-        } else skipValue(r, tpe, 0)
+    val rgs = footer(bytes)._1.getRow_groups
+    var rg = 0
+    while (rg < rgs.size) {
+      rgs.get(rg).getColumns.forEach { c =>
+        val m = c.getMeta_data
+        if (m != null && m.isSetBloom_filter_offset &&
+          m.getBloom_filter_offset >= 0 && out.size < maxColumns)
+          out += BloomRef(rg, String.join(".", m.getPath_in_schema),
+            m.getBloom_filter_offset)
       }
+      rg += 1
     }
     out.toArray
   }
 
-  private final val TStruct12 = 12
-
-  private def readRowGroup(r: Reader, rg: Int,
-                           out: scala.collection.mutable
-                             .ArrayBuffer[BloomRef],
-                           maxColumns: Int): Unit = {
-    var lastFid = 0
-    var done = false
-    while (!done) {
-      val b = r.u8()
-      if (b == TStop) done = true
-      else {
-        val delta = (b >> 4) & 0x0f
-        val tpe = b & 0x0f
-        val fid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-        lastFid = fid
-        if (fid == 1 && tpe == ParquetFooterMeta.TList) {
-          val (_, count) = listHeader(r)
-          var c = 0
-          while (c < count) {
-            readColumnChunk(r, rg, out, maxColumns)
-            c += 1
-          }
-        } else skipValue(r, tpe, 0)
-      }
-    }
-  }
-
-  private def readColumnChunk(r: Reader, rg: Int,
-                              out: scala.collection.mutable
-                                .ArrayBuffer[BloomRef],
-                              maxColumns: Int): Unit = {
-    var lastFid = 0
-    var done = false
-    while (!done) {
-      val b = r.u8()
-      if (b == TStop) done = true
-      else {
-        val delta = (b >> 4) & 0x0f
-        val tpe = b & 0x0f
-        val fid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-        lastFid = fid
-        if (fid == 3 && tpe == TStruct12)
-          readColumnMeta(r, rg, out, maxColumns)
-        else skipValue(r, tpe, 0)
-      }
-    }
-  }
-
-  private def readColumnMeta(r: Reader, rg: Int,
-                             out: scala.collection.mutable
-                               .ArrayBuffer[BloomRef],
-                             maxColumns: Int): Unit = {
-    var lastFid = 0
-    var done = false
-    var path: String = null
-    var bloomOff = -1L
-    var bloomLen = -1L
-    while (!done) {
-      val b = r.u8()
-      if (b == TStop) done = true
-      else {
-        val delta = (b >> 4) & 0x0f
-        val tpe = b & 0x0f
-        val fid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-        lastFid = fid
-        if (fid == 3 && tpe == ParquetFooterMeta.TList) {
-          val (_, count) = listHeader(r)
-          val parts = new Array[String](count)
-          var i = 0
-          while (i < count) { parts(i) = r.string(); i += 1 }
-          path = parts.mkString(".")
-        } else if (fid == 14 && tpe == ParquetFooterMeta.TI64)
-          bloomOff = r.zigzag()
-        else if (fid == 15 && tpe == ParquetFooterMeta.TI32)
-          bloomLen = r.zigzag()
-        else skipValue(r, tpe, 0)
-      }
-    }
-    if (path != null && bloomOff >= 0 && out.size < maxColumns)
-      out += BloomRef(rg, path, bloomOff, bloomLen)
-  }
-
-  /** Parsed bloom at `offset`: (bitset start, numBytes, algorithm,
-    * hash, compression). Union fields read as "the set field id". */
-  private def readBloomHeader(bytes: Array[Byte], offset: Long)
-      : (Int, Int, Int, Int, Int) = {
+  /** The header at `offset` and where its bitset starts. */
+  private def readBloomHeader(bytes: Array[Byte],
+                              offset: Long): (BloomFilterHeader, Int) = {
     if (offset < 0 || offset + 4 > bytes.length) throw Bad
-    val r = new Reader(bytes, offset.toInt, bytes.length)
-    var lastFid = 0
-    var done = false
-    var numBytes = -1
-    var alg = -1
-    var hsh = -1
-    var cmp = -1
-    def unionFieldId(): Int = {
-      var lf = 0
-      var id = -1
-      var d = false
-      while (!d) {
-        val b = r.u8()
-        if (b == TStop) d = true
-        else {
-          val delta = (b >> 4) & 0x0f
-          val tpe = b & 0x0f
-          val fid = if (delta == 0) r.zigzag().toInt else lf + delta
-          lf = fid
-          id = fid
-          skipValue(r, tpe, 0)
-        }
-      }
-      id
-    }
-    while (!done) {
-      val b = r.u8()
-      if (b == TStop) done = true
-      else {
-        val delta = (b >> 4) & 0x0f
-        val tpe = b & 0x0f
-        val fid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-        lastFid = fid
-        fid match {
-          case 1 if tpe == ParquetFooterMeta.TI32 =>
-            numBytes = r.zigzag().toInt
-          case 2 if tpe == TStruct12 => alg = unionFieldId()
-          case 3 if tpe == TStruct12 => hsh = unionFieldId()
-          case 4 if tpe == TStruct12 => cmp = unionFieldId()
-          case _ => skipValue(r, tpe, 0)
-        }
-      }
-    }
-    if (numBytes <= 0 || numBytes % 32 != 0) throw Bad
-    if (r.pos + numBytes > bytes.length) throw Bad
-    (r.pos, numBytes, alg, hsh, cmp)
-  }
-
-  /** Split-block membership of `h` in the bitset at `bs`. */
-  private def blockCheck(bytes: Array[Byte], bs: Int, numBytes: Int,
-                         h: Long): Boolean = {
-    val numBlocks = numBytes / 32
-    val blockIdx = (((h >>> 32) * numBlocks) >>> 32).toInt
-    val base = bs + blockIdx * 32
-    val x = h.toInt
-    var i = 0
-    while (i < 8) {
-      val bit = (x * Salt(i)) >>> 27
-      val word = (bytes(base + i * 4) & 0xff) |
-        ((bytes(base + i * 4 + 1) & 0xff) << 8) |
-        ((bytes(base + i * 4 + 2) & 0xff) << 16) |
-        ((bytes(base + i * 4 + 3) & 0xff) << 24)
-      if (((word >>> bit) & 1) == 0) return false
-      i += 1
-    }
-    true
+    val h = new BloomFilterHeader
+    val bs = offset.toInt + read(h, bytes, offset, bytes.length - offset)
+    val nb = h.getNumBytes
+    if (nb <= 0 || nb % 32 != 0 || bs.toLong + nb > bytes.length) throw Bad
+    (h, bs)
   }
 
   /** Per-row probe kernel — public static for generated code. Null
@@ -318,58 +152,43 @@ object ParquetBloom {
     * otherwise the OR across row groups (a scan planner opens a row
     * group when ITS bloom answers true). */
   def check(bytes: Array[Byte], col: String,
-            probe: Array[Byte]): java.lang.Boolean = {
-    try {
-      val refs = bloomRefs(bytes, 1 << 14)
-      var found = false
-      var any = false
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUnsafeBytes(probe,
-          org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-          probe.length, 0L)
-      var i = 0
-      while (i < refs.length && !found) {
-        val ref = refs(i)
-        if (ref.column == col) {
-          val (bs, nb, alg, hsh, cmp) = readBloomHeader(bytes, ref.offset)
-          // BLOCK(1) + XXHASH(1) + UNCOMPRESSED(1): the only defined
-          // combination — anything else refuses, never guesses
-          if (alg != 1 || hsh != 1 || cmp != 1) throw Bad
-          any = true
-          if (blockCheck(bytes, bs, nb, h)) found = true
-        }
-        i += 1
+            probe: Array[Byte]): java.lang.Boolean = orNull {
+    val refs = bloomRefs(bytes, 1 << 14)
+    var found = false
+    var any = false
+    var i = 0
+    while (i < refs.length && !found) {
+      val ref = refs(i)
+      if (ref.column == col) {
+        val (h, bs) = readBloomHeader(bytes, ref.offset)
+        // BLOCK + XXHASH + UNCOMPRESSED: the only defined combination —
+        // anything else refuses, never guesses
+        if (!h.getAlgorithm.isSetBLOCK || !h.getHash.isSetXXHASH ||
+          !h.getCompression.isSetUNCOMPRESSED) throw Bad
+        any = true
+        val bloom = new BlockSplitBloomFilter(
+          java.util.Arrays.copyOfRange(bytes, bs, bs + h.getNumBytes))
+        if (bloom.findHash(bloom.hash(Binary.fromConstantByteArray(probe))))
+          found = true
       }
-      if (!any) null else java.lang.Boolean.valueOf(found)
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
+      i += 1
     }
+    if (!any) null else java.lang.Boolean.valueOf(found)
   }
 
   /** Census kernel — public static for generated code. */
-  def info(bytes: Array[Byte], maxColumns: Int): GenericArrayData = {
-    try {
-      val refs = bloomRefs(bytes, maxColumns)
-      val rows = new Array[Any](refs.length)
-      var i = 0
-      while (i < refs.length) {
-        val ref = refs(i)
-        val (_, nb, alg, hsh, cmp) = readBloomHeader(bytes, ref.offset)
-        def name(v: Int, one: String): String =
-          if (v == 1) one else s"unknown_$v"
-        rows(i) = new GenericInternalRow(Array[Any](ref.rowGroup,
-          UTF8String.fromString(ref.column), ref.offset, nb,
-          UTF8String.fromString(name(alg, "block")),
-          UTF8String.fromString(name(hsh, "xxhash")),
-          UTF8String.fromString(name(cmp, "uncompressed"))))
-        i += 1
-      }
-      new GenericArrayData(rows)
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
-    }
+  def info(bytes: Array[Byte], maxColumns: Int): GenericArrayData = orNull {
+    val refs = bloomRefs(bytes, maxColumns)
+    def known(set: Boolean, one: String) =
+      UTF8String.fromString(if (set) one else "unknown")
+    new GenericArrayData(refs.map { ref =>
+      val (h, _) = readBloomHeader(bytes, ref.offset)
+      new GenericInternalRow(Array[Any](ref.rowGroup,
+        UTF8String.fromString(ref.column), ref.offset, h.getNumBytes,
+        known(h.getAlgorithm.isSetBLOCK, "block"),
+        known(h.getHash.isSetXXHASH, "xxhash"),
+        known(h.getCompression.isSetUNCOMPRESSED, "uncompressed")))
+    }.toArray[Any])
   }
 
   import org.apache.spark.sql.Column

@@ -15,12 +15,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * `le32(footer_len) + "PAR1"`, and the footer is a Thrift
   * compact-protocol `FileMetaData` struct carrying everything a
   * census needs WITHOUT a table read — version, exact row count,
-  * row-group count, writer string, and the full schema tree. This
-  * kernel implements the compact protocol from the public wire spec
-  * (zigzag varints, delta-coded field ids, typed list headers,
-  * recursive struct skip) and walks the `SchemaElement` list into
-  * LEAF columns with dotted paths (group nesting resolved via the
-  * `num_children` stack), physical type names and repetition labels.
+  * row-group count, writer string, and the full schema tree. The
+  * footer is read by parquet-format's generated `FileMetaData` over
+  * the bounded compact protocol of [[ParquetThrift]]; this kernel walks
+  * its `SchemaElement` list into LEAF columns with dotted paths (group
+  * nesting resolved via the `num_children` stack), physical type names
+  * and repetition labels.
   *
   * Output struct: `(version, num_rows, n_row_groups, created_by,
   * columns array<(path, ptype, repetition)>)` — the discovery row
@@ -28,11 +28,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * sibling of `csvInferSchema`/`jsonInferSchema`'s artifacts.
   *
   * FAIL-CLOSED NULL on: missing head/tail magic, footer length past
-  * the payload, malformed thrift (bad types, truncated varints,
-  * over-deep nesting), or a schema walk that does not consume its
-  * element list exactly. Unknown/extra thrift fields are SKIPPED
-  * generically (forward-compatible, the thrift way). Per-row bounded
-  * work, zero shuffle, codegen'd. */
+  * the payload, malformed thrift (bad types, truncated varints, a
+  * missing required field, lengths past the footer, over-deep
+  * nesting), or a schema walk that does not consume its element list
+  * exactly. Unknown/extra thrift fields are skipped by the library
+  * (forward-compatible, the thrift way); an enum value it does not know
+  * renders "unknown". Per-row bounded work, zero shuffle, codegen'd. */
 case class ParquetFooterMeta(child: Expression, maxColumns: Int)
     extends UnaryExpression {
   require(maxColumns > 0, "column walk bound must be positive")
@@ -71,267 +72,56 @@ case class ParquetFooterMeta(child: Expression, maxColumns: Int)
 }
 
 object ParquetFooterMeta {
-
-  private[functions] object Bad extends Exception with scala.util.control.NoStackTrace
-
-  // thrift compact wire types
-  private[functions] final val TStop = 0
-  private[functions] final val TTrue = 1
-  private[functions] final val TFalse = 2
-  private[functions] final val TByte = 3
-  private[functions] final val TI16 = 4
-  private[functions] final val TI32 = 5
-  private[functions] final val TI64 = 6
-  private[functions] final val TDouble = 7
-  private[functions] final val TBinary = 8
-  private[functions] final val TList = 9
-  private[functions] final val TSet = 10
-  private[functions] final val TMap = 11
-  private[functions] final val TStruct = 12
-
-  private[functions] final class Reader(bytes: Array[Byte], var pos: Int,
-                             val end: Int) {
-    def u8(): Int = {
-      if (pos >= end) throw Bad
-      val b = bytes(pos) & 0xff
-      pos += 1
-      b
-    }
-    def varint(): Long = {
-      var v = 0L
-      var shift = 0
-      var b = 0
-      do {
-        if (shift > 63) throw Bad
-        b = u8()
-        v |= (b & 0x7fL) << shift
-        shift += 7
-      } while ((b & 0x80) != 0)
-      v
-    }
-    def zigzag(): Long = { val n = varint(); (n >>> 1) ^ -(n & 1L) }
-    def skipBytes(n: Long): Unit = {
-      if (n < 0 || pos + n > end) throw Bad
-      pos += n.toInt
-    }
-    def string(): String = {
-      val len = varint()
-      if (len < 0 || pos + len > end) throw Bad
-      val s = new String(bytes, pos, len.toInt,
-        java.nio.charset.StandardCharsets.UTF_8)
-      pos += len.toInt
-      s
-    }
-    /** Length-prefixed binary, copied out (Statistics min/max blobs). */
-    def blob(): Array[Byte] = {
-      val len = varint()
-      if (len < 0 || pos + len > end) throw Bad
-      val out = java.util.Arrays.copyOfRange(bytes, pos, pos + len.toInt)
-      pos += len.toInt
-      out
-    }
-  }
-
-  /** Generic compact-protocol value skip (forward compatibility). */
-  private[functions] def skipValue(r: Reader, tpe: Int, depth: Int): Unit = {
-    if (depth > 32) throw Bad
-    tpe match {
-      case TTrue | TFalse => () // value lives in the field header
-      case TByte => r.skipBytes(1)
-      case TI16 | TI32 | TI64 => r.varint(); ()
-      case TDouble => r.skipBytes(8)
-      case TBinary => r.skipBytes(r.varint())
-      case TList | TSet =>
-        val h = r.u8()
-        val et = h & 0x0f
-        var n = (h >> 4) & 0x0f
-        if (n == 15) n = r.varint().toInt
-        if (n < 0) throw Bad
-        var i = 0
-        while (i < n) {
-          // bools inside containers are 1-byte values
-          if (et == TTrue || et == TFalse) r.skipBytes(1)
-          else skipValue(r, et, depth + 1)
-          i += 1
-        }
-      case TMap =>
-        val n = r.varint().toInt
-        if (n < 0) throw Bad
-        if (n > 0) {
-          val kv = r.u8()
-          val kt = (kv >> 4) & 0x0f
-          val vt = kv & 0x0f
-          var i = 0
-          while (i < n) {
-            if (kt == TTrue || kt == TFalse) r.skipBytes(1)
-            else skipValue(r, kt, depth + 1)
-            if (vt == TTrue || vt == TFalse) r.skipBytes(1)
-            else skipValue(r, vt, depth + 1)
-            i += 1
-          }
-        }
-      case TStruct =>
-        var lastFid = 0
-        var done = false
-        while (!done) {
-          val h = r.u8()
-          if (h == TStop) done = true
-          else {
-            val t = h & 0x0f
-            val delta = (h >> 4) & 0x0f
-            lastFid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-            skipValue(r, t, depth + 1)
-          }
-        }
-      case _ => throw Bad
-    }
-  }
-
-  /** One list header → (elemType, count). */
-  private[functions] def listHeader(r: Reader): (Int, Int) = {
-    val h = r.u8()
-    var n = (h >> 4) & 0x0f
-    if (n == 15) n = r.varint().toInt
-    if (n < 0) throw Bad
-    (h & 0x0f, n)
-  }
-
-  private[functions] def typeName(t: Int): String = t match {
-    case 0 => "boolean"
-    case 1 => "int32"
-    case 2 => "int64"
-    case 3 => "int96"
-    case 4 => "float"
-    case 5 => "double"
-    case 6 => "byte_array"
-    case 7 => "fixed_len_byte_array"
-    case _ => "unknown"
-  }
-
-  private def repName(rp: Int): String = rp match {
-    case 0 => "required"
-    case 1 => "optional"
-    case 2 => "repeated"
-    case _ => "unknown"
-  }
-
-  /** One SchemaElement: (type, repetition, name, numChildren). */
-  private def schemaElement(r: Reader): (Int, Int, String, Int) = {
-    var tpe = -1
-    var rep = -1
-    var name: String = null
-    var nChildren = 0
-    var lastFid = 0
-    var done = false
-    while (!done) {
-      val h = r.u8()
-      if (h == TStop) done = true
-      else {
-        val t = h & 0x0f
-        val delta = (h >> 4) & 0x0f
-        lastFid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-        lastFid match {
-          case 1 if t == TI32 => tpe = r.zigzag().toInt
-          case 3 if t == TI32 => rep = r.zigzag().toInt
-          case 4 if t == TBinary => name = r.string()
-          case 5 if t == TI32 => nChildren = r.zigzag().toInt
-          case _ => skipValue(r, t, 0)
-        }
-      }
-    }
-    if (name == null) throw Bad
-    (tpe, rep, name, nChildren)
-  }
+  import ParquetThrift._
 
   /** The per-row kernel — public static so generated code can call it. */
-  def compute(bytes: Array[Byte], maxColumns: Int): InternalRow = {
-    try {
-      val n = bytes.length
-      if (n < 12) return null
-      if (bytes(0) != 'P' || bytes(1) != 'A' || bytes(2) != 'R' ||
-        bytes(3) != '1') return null
-      if (bytes(n - 4) != 'P' || bytes(n - 3) != 'A' ||
-        bytes(n - 2) != 'R' || bytes(n - 1) != '1') return null
-      val flen = (bytes(n - 8) & 0xff) | ((bytes(n - 7) & 0xff) << 8) |
-        ((bytes(n - 6) & 0xff) << 16) | ((bytes(n - 5) & 0xff) << 24)
-      if (flen <= 0 || n - 8 - flen < 4) return null
-      val r = new Reader(bytes, n - 8 - flen, n - 8)
-      var version = 0
-      var numRows = 0L
-      var nRowGroups = 0
-      var createdBy: String = null
-      val cols = new java.util.ArrayList[Any]
-      var lastFid = 0
-      var done = false
-      while (!done) {
-        val h = r.u8()
-        if (h == TStop) done = true
-        else {
-          val t = h & 0x0f
-          val delta = (h >> 4) & 0x0f
-          lastFid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-          lastFid match {
-            case 1 if t == TI32 => version = r.zigzag().toInt
-            case 2 if t == TList =>
-              // the schema tree, depth-first with num_children counts;
-              // element 0 is the root group
-              val (et, cnt) = listHeader(r)
-              if (et != TStruct || cnt < 1 || cnt > maxColumns + 1)
-                throw Bad
-              // stack of (remaining children, dotted prefix)
-              var rem = List.empty[Int]
-              var prefix = List.empty[String]
-              var i = 0
-              while (i < cnt) {
-                val (tpe, rep, name, nCh) = schemaElement(r)
-                if (i == 0) {
-                  // root: its children are the top-level fields
-                  if (nCh < 0) throw Bad
-                  rem = List(nCh)
-                  prefix = List("")
-                } else {
-                  if (rem.isEmpty || rem.head <= 0) throw Bad
-                  val path = prefix.head + name
-                  rem = (rem.head - 1) :: rem.tail
-                  if (nCh > 0) { // group node: descend
-                    rem = nCh :: rem
-                    prefix = (path + ".") :: prefix
-                  } else {
-                    cols.add(new GenericInternalRow(Array[Any](
-                      UTF8String.fromString(path),
-                      UTF8String.fromString(typeName(tpe)),
-                      UTF8String.fromString(repName(rep)))))
-                  }
-                }
-                // pop exhausted groups (incl. an empty root)
-                while (rem.nonEmpty && rem.head == 0) {
-                  rem = rem.tail
-                  prefix = prefix.tail
-                }
-                i += 1
-              }
-              // the walk must consume the tree exactly (root popped too)
-              if (rem.nonEmpty) throw Bad
-            case 3 if t == TI64 => numRows = r.zigzag()
-            case 4 if t == TList =>
-              val (et, cnt) = listHeader(r)
-              if (et != TStruct || cnt < 0) throw Bad
-              var i = 0
-              while (i < cnt) { skipValue(r, TStruct, 0); i += 1 }
-              nRowGroups = cnt
-            case 6 if t == TBinary => createdBy = r.string()
-            case _ => skipValue(r, t, 0)
-          }
+  def compute(bytes: Array[Byte], maxColumns: Int): InternalRow = orNull {
+    val fm = footer(bytes)._1
+    // the schema tree, depth-first with num_children counts; element 0
+    // is the root group
+    val schema = fm.getSchema
+    if (schema.size < 1 || schema.size > maxColumns + 1) throw Bad
+    val cols = new java.util.ArrayList[Any]
+    // stack of (remaining children, dotted prefix)
+    var rem = List.empty[Int]
+    var prefix = List.empty[String]
+    var i = 0
+    while (i < schema.size) {
+      val el = schema.get(i)
+      val nCh = el.getNum_children
+      if (i == 0) {
+        // root: its children are the top-level fields
+        if (nCh < 0) throw Bad
+        rem = List(nCh)
+        prefix = List("")
+      } else {
+        if (rem.isEmpty || rem.head <= 0) throw Bad
+        val path = prefix.head + el.getName
+        rem = (rem.head - 1) :: rem.tail
+        if (nCh > 0) { // group node: descend
+          rem = nCh :: rem
+          prefix = (path + ".") :: prefix
+        } else {
+          cols.add(new GenericInternalRow(Array[Any](
+            UTF8String.fromString(path),
+            UTF8String.fromString(name(el.getType)),
+            UTF8String.fromString(name(el.getRepetition_type)))))
         }
       }
-      new GenericInternalRow(Array[Any](
-        version, numRows, nRowGroups,
-        if (createdBy == null) null else UTF8String.fromString(createdBy),
-        new GenericArrayData(cols.toArray)))
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
+      // pop exhausted groups (incl. an empty root)
+      while (rem.nonEmpty && rem.head == 0) {
+        rem = rem.tail
+        prefix = prefix.tail
+      }
+      i += 1
     }
+    // the walk must consume the tree exactly (root popped too)
+    if (rem.nonEmpty) throw Bad
+    new GenericInternalRow(Array[Any](
+      fm.getVersion, fm.getNum_rows, fm.getRow_groups.size,
+      if (fm.getCreated_by == null) null
+      else UTF8String.fromString(fm.getCreated_by),
+      new GenericArrayData(cols.toArray)))
   }
 
   import org.apache.spark.sql.graftshim.ColumnShim
@@ -345,15 +135,15 @@ object ParquetFooterMeta {
 
 /** Parquet COLUMN-CHUNK statistics — the numbers a lake-pruning
   * audit, skew census or NULL-rate report reads without touching
-  * data ([[ParquetFooterMeta]] stops at file facts; the same Thrift
-  * compact footer also carries per-row-group and per-column-chunk
-  * detail): for every (row group × column chunk) — row-group rows
-  * and byte size, the chunk's dotted path, physical type, codec,
-  * value count, compressed/uncompressed bytes, and the Statistics
-  * struct's `null_count` / `min_value` / `max_value` (the v2 fields,
-  * falling back to the deprecated min/max when a legacy writer only
-  * wrote those). Min/max decode per the column's physical type —
-  * INT32/INT64 as integers, FLOAT/DOUBLE via IEEE bits,
+  * data ([[ParquetFooterMeta]] stops at file facts; the same footer
+  * `FileMetaData`, read the same way, also carries per-row-group and
+  * per-column-chunk detail): for every (row group × column chunk) —
+  * row-group rows and byte size, the chunk's dotted path, physical
+  * type, codec, value count, compressed/uncompressed bytes, and the
+  * Statistics struct's `null_count` / `min_value` / `max_value` (the
+  * v2 fields, falling back to the deprecated min/max when a legacy
+  * writer only wrote those). Min/max decode per the column's physical
+  * type — INT32/INT64 as integers, FLOAT/DOUBLE via IEEE bits,
   * BYTE_ARRAY as UTF-8, BOOLEAN as true/false, anything else
   * (INT96, FIXED_LEN_BYTE_ARRAY) as lowercase hex so no value is
   * guessed.
@@ -365,9 +155,9 @@ object ParquetFooterMeta {
   * fields null (a census must distinguish "no stats" from zero).
   *
   * FAIL-CLOSED NULL on the same surface as [[ParquetFooterMeta]]:
-  * bad magic, footer window out of bounds, malformed thrift; the
-  * chunk walk is bounded by `maxChunks`. Per-row bounded work, zero
-  * shuffle, codegen'd. */
+  * bad magic, footer window out of bounds, malformed thrift, a chunk
+  * without its metadata; the chunk walk is bounded by `maxChunks`.
+  * Per-row bounded work, zero shuffle, codegen'd. */
 case class ParquetColumnStats(child: Expression, maxChunks: Int)
     extends UnaryExpression {
   require(maxChunks > 0, "chunk walk bound must be positive")
@@ -410,241 +200,65 @@ case class ParquetColumnStats(child: Expression, maxChunks: Int)
 }
 
 object ParquetColumnStats {
-  import ParquetFooterMeta._
+  import ParquetThrift._
+  import org.apache.parquet.format.Type
 
-  private def codecName(c: Int): String = c match {
-    case 0 => "uncompressed"
-    case 1 => "snappy"
-    case 2 => "gzip"
-    case 3 => "lzo"
-    case 4 => "brotli"
-    case 5 => "lz4"
-    case 6 => "zstd"
-    case 7 => "lz4_raw"
-    case _ => "unknown"
-  }
-
-  private def le32(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) | ((b(p + 2) & 0xff) << 16) |
-      ((b(p + 3) & 0xff) << 24)
-  private def le64(b: Array[Byte], p: Int): Long = {
-    var v = 0L
-    var i = 7
-    while (i >= 0) { v = (v << 8) | (b(p + i) & 0xffL); i -= 1 }
-    v
-  }
+  private def le64(b: Array[Byte]): Long =
+    java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
 
   /** Decode a Statistics min/max blob per the chunk's physical type;
     * unknown/odd shapes render as lowercase hex, never a guess. */
-  private[functions] def decodeStat(ptype: Int, b: Array[Byte]): String = {
+  private[functions] def decodeStat(ptype: Type, b: Array[Byte]): String = {
     def hexOf: String = b.map("%02x".format(_)).mkString
     ptype match {
-      case 0 => if (b.length == 1) (b(0) != 0).toString else hexOf
-      case 1 => if (b.length == 4) le32(b, 0).toString else hexOf
-      case 2 => if (b.length == 8) le64(b, 0).toString else hexOf
-      case 4 => if (b.length == 4)
+      case Type.BOOLEAN => if (b.length == 1) (b(0) != 0).toString else hexOf
+      case Type.INT32 => if (b.length == 4) le32(b, 0).toString else hexOf
+      case Type.INT64 => if (b.length == 8) le64(b).toString else hexOf
+      case Type.FLOAT => if (b.length == 4)
         java.lang.Float.intBitsToFloat(le32(b, 0)).toString else hexOf
-      case 5 => if (b.length == 8)
-        java.lang.Double.longBitsToDouble(le64(b, 0)).toString else hexOf
-      case 6 => new String(b, java.nio.charset.StandardCharsets.UTF_8)
+      case Type.DOUBLE => if (b.length == 8)
+        java.lang.Double.longBitsToDouble(le64(b)).toString else hexOf
+      case Type.BYTE_ARRAY => new String(b, java.nio.charset.StandardCharsets.UTF_8)
       case _ => hexOf
     }
   }
 
-  /** Statistics struct → (nullCount, minBlob, maxBlob) — v2
-    * min_value/max_value (fields 6/5) preferred, deprecated min/max
-    * (2/1) the fallback. */
-  private def statistics(r: Reader): (java.lang.Long, Array[Byte], Array[Byte]) = {
-    var nullCount: java.lang.Long = null
-    var minV: Array[Byte] = null
-    var maxV: Array[Byte] = null
-    var minOld: Array[Byte] = null
-    var maxOld: Array[Byte] = null
-    var lastFid = 0
-    var done = false
-    while (!done) {
-      val h = r.u8()
-      if (h == TStop) done = true
-      else {
-        val t = h & 0x0f
-        val delta = (h >> 4) & 0x0f
-        lastFid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-        lastFid match {
-          case 1 if t == TBinary => maxOld = r.blob()
-          case 2 if t == TBinary => minOld = r.blob()
-          case 3 if t == TI64 => nullCount = java.lang.Long.valueOf(r.zigzag())
-          case 5 if t == TBinary => maxV = r.blob()
-          case 6 if t == TBinary => minV = r.blob()
-          case _ => skipValue(r, t, 0)
-        }
-      }
-    }
-    (nullCount, if (minV != null) minV else minOld,
-      if (maxV != null) maxV else maxOld)
-  }
-
-  /** ColumnMetaData struct → the chunk facts. */
-  private def columnMeta(r: Reader): (Int, String, Int, Long, Long, Long,
-      java.lang.Long, Array[Byte], Array[Byte]) = {
-    var ptype = -1
-    var codec = -1
-    var path: String = null
-    var numValues = 0L
-    var cBytes = 0L
-    var uBytes = 0L
-    var nullCount: java.lang.Long = null
-    var minB: Array[Byte] = null
-    var maxB: Array[Byte] = null
-    var lastFid = 0
-    var done = false
-    while (!done) {
-      val h = r.u8()
-      if (h == TStop) done = true
-      else {
-        val t = h & 0x0f
-        val delta = (h >> 4) & 0x0f
-        lastFid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-        lastFid match {
-          case 1 if t == TI32 => ptype = r.zigzag().toInt
-          case 3 if t == TList =>
-            val (et, cnt) = listHeader(r)
-            if (et != TBinary || cnt < 0 || cnt > 64) throw Bad
-            val sb = new StringBuilder
-            var i = 0
-            while (i < cnt) {
-              if (i > 0) sb.append('.')
-              sb.append(r.string())
-              i += 1
-            }
-            path = sb.toString
-          case 4 if t == TI32 => codec = r.zigzag().toInt
-          case 5 if t == TI64 => numValues = r.zigzag()
-          case 6 if t == TI64 => uBytes = r.zigzag()
-          case 7 if t == TI64 => cBytes = r.zigzag()
-          case 12 if t == TStruct =>
-            val (nc, mn, mx) = statistics(r)
-            nullCount = nc; minB = mn; maxB = mx
-          case _ => skipValue(r, t, 0)
-        }
-      }
-    }
-    if (path == null) throw Bad
-    (ptype, path, codec, numValues, cBytes, uBytes, nullCount, minB, maxB)
-  }
-
-  /** The chunk's (physical type, dotted path) for [[ParquetPageIndex]]
-    * — consumes one ColumnMetaData struct. */
-  private[functions] def chunkTypePath(r: Reader): (Int, String) = {
-    val m = columnMeta(r)
-    (m._1, m._2)
-  }
+  private def stat(ptype: Type, b: Array[Byte]): UTF8String =
+    if (b == null) null else UTF8String.fromString(decodeStat(ptype, b))
 
   /** The per-row kernel — public static so generated code can call it. */
-  def compute(bytes: Array[Byte], maxChunks: Int): GenericArrayData = {
-    try {
-      val n = bytes.length
-      if (n < 12) return null
-      if (bytes(0) != 'P' || bytes(1) != 'A' || bytes(2) != 'R' ||
-        bytes(3) != '1') return null
-      if (bytes(n - 4) != 'P' || bytes(n - 3) != 'A' ||
-        bytes(n - 2) != 'R' || bytes(n - 1) != '1') return null
-      val flen = (bytes(n - 8) & 0xff) | ((bytes(n - 7) & 0xff) << 8) |
-        ((bytes(n - 6) & 0xff) << 16) | ((bytes(n - 5) & 0xff) << 24)
-      if (flen <= 0 || n - 8 - flen < 4) return null
-      val r = new Reader(bytes, n - 8 - flen, n - 8)
-      val out = new java.util.ArrayList[Any]
-      var lastFid = 0
-      var done = false
-      while (!done) {
-        val h = r.u8()
-        if (h == TStop) done = true
-        else {
-          val t = h & 0x0f
-          val delta = (h >> 4) & 0x0f
-          lastFid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-          if (lastFid == 4 && t == TList) {
-            val (et, nRg) = listHeader(r)
-            if (et != TStruct || nRg < 0) throw Bad
-            var rg = 0
-            while (rg < nRg) {
-              // RowGroup: 1 columns, 2 total_byte_size, 3 num_rows
-              var rgRows = 0L
-              var rgBytes = 0L
-              val chunks = new java.util.ArrayList[Array[Any]]
-              var fid = 0
-              var rgDone = false
-              while (!rgDone) {
-                val hh = r.u8()
-                if (hh == TStop) rgDone = true
-                else {
-                  val tt = hh & 0x0f
-                  val dd = (hh >> 4) & 0x0f
-                  fid = if (dd == 0) r.zigzag().toInt else fid + dd
-                  fid match {
-                    case 1 if tt == TList =>
-                      val (cet, nCc) = listHeader(r)
-                      if (cet != TStruct || nCc < 0) throw Bad
-                      if (out.size() + chunks.size() + nCc > maxChunks)
-                        throw Bad
-                      var c = 0
-                      while (c < nCc) {
-                        // ColumnChunk: 3 = meta_data struct
-                        var cmSeen = false
-                        var cfid = 0
-                        var ccDone = false
-                        while (!ccDone) {
-                          val ch = r.u8()
-                          if (ch == TStop) ccDone = true
-                          else {
-                            val ct = ch & 0x0f
-                            val cd = (ch >> 4) & 0x0f
-                            cfid = if (cd == 0) r.zigzag().toInt
-                              else cfid + cd
-                            if (cfid == 3 && ct == TStruct) {
-                              val (pt, path, cdc, nv, cb, ub, nc, mn, mx) =
-                                columnMeta(r)
-                              chunks.add(Array[Any](
-                                path, typeName(pt), codecName(cdc),
-                                nv, cb, ub,
-                                if (nc == null) null else nc.longValue(),
-                                if (mn == null) null
-                                else UTF8String.fromString(decodeStat(pt, mn)),
-                                if (mx == null) null
-                                else UTF8String.fromString(decodeStat(pt, mx))))
-                              cmSeen = true
-                            } else skipValue(r, ct, 0)
-                          }
-                        }
-                        if (!cmSeen) throw Bad
-                        c += 1
-                      }
-                    case 2 if tt == TI64 => rgBytes = r.zigzag()
-                    case 3 if tt == TI64 => rgRows = r.zigzag()
-                    case _ => skipValue(r, tt, 0)
-                  }
-                }
-              }
-              var c = 0
-              while (c < chunks.size()) {
-                val a = chunks.get(c)
-                out.add(new GenericInternalRow(Array[Any](
-                  rg, rgRows, rgBytes,
-                  UTF8String.fromString(a(0).asInstanceOf[String]),
-                  UTF8String.fromString(a(1).asInstanceOf[String]),
-                  UTF8String.fromString(a(2).asInstanceOf[String]),
-                  a(3), a(4), a(5), a(6), a(7), a(8))))
-                c += 1
-              }
-              rg += 1
-            }
-          } else skipValue(r, t, 0)
-        }
+  def compute(bytes: Array[Byte], maxChunks: Int): GenericArrayData = orNull {
+    val out = new java.util.ArrayList[Any]
+    val rgs = footer(bytes)._1.getRow_groups
+    var rg = 0
+    while (rg < rgs.size) {
+      val g = rgs.get(rg)
+      val chunks = g.getColumns
+      if (out.size + chunks.size > maxChunks) throw Bad
+      var c = 0
+      while (c < chunks.size) {
+        val m = chunks.get(c).getMeta_data
+        if (m == null) throw Bad
+        // v2 min_value/max_value preferred, deprecated min/max the fallback
+        val st = m.getStatistics
+        val (nullCount, minB, maxB) =
+          if (st == null) (null, null, null)
+          else (if (st.isSetNull_count) st.getNull_count else null,
+            if (st.isSetMin_value) st.getMin_value else st.getMin,
+            if (st.isSetMax_value) st.getMax_value else st.getMax)
+        out.add(new GenericInternalRow(Array[Any](
+          rg, g.getNum_rows, g.getTotal_byte_size,
+          UTF8String.fromString(String.join(".", m.getPath_in_schema)),
+          UTF8String.fromString(name(m.getType)),
+          UTF8String.fromString(name(m.getCodec)),
+          m.getNum_values, m.getTotal_compressed_size,
+          m.getTotal_uncompressed_size, nullCount,
+          stat(m.getType, minB), stat(m.getType, maxB))))
+        c += 1
       }
-      new GenericArrayData(out.toArray)
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
+      rg += 1
     }
+    new GenericArrayData(out.toArray)
   }
 
   import org.apache.spark.sql.graftshim.ColumnShim
@@ -667,13 +281,14 @@ object ParquetColumnStats {
   * boundary_order)` with min/max decoded per physical type (the
   * [[ParquetColumnStats]] rules — hex for shapes it will not guess).
   *
-  * The footer walk collects each chunk's `offset_index_offset/length`
-  * + `column_index_offset/length` (ColumnChunk fields 4-7) and its
-  * physical type/path, then parses both structures at their offsets,
-  * every region bounds-checked. Files WITHOUT page indexes yield an
-  * EMPTY array (pre-1.11 writers are not corruption); a chunk whose
-  * index regions are malformed, whose list lengths disagree, or a
-  * walk past `maxPages` fails the whole row closed to null.
+  * The footer gives each chunk's `offset_index_offset/length` and
+  * `column_index_offset/length` and its physical type/path; both index
+  * structures are read at their offsets by parquet-format's generated
+  * `OffsetIndex`/`ColumnIndex` through [[ParquetThrift]], each region
+  * bounds-checked against the footer start. Files WITHOUT page indexes
+  * yield an EMPTY array (pre-1.11 writers are not corruption); a chunk
+  * whose index regions are malformed, whose list lengths disagree, or
+  * a walk past `maxPages` fails the whole row closed to null.
   * Per-row bounded work, zero shuffle, codegen'd. */
 case class ParquetPageIndex(child: Expression, maxPages: Int)
     extends UnaryExpression {
@@ -716,262 +331,75 @@ case class ParquetPageIndex(child: Expression, maxPages: Int)
 }
 
 object ParquetPageIndex {
-  import ParquetFooterMeta._
+  import ParquetThrift._
   import ParquetColumnStats.decodeStat
-
-  private def boundaryName(b: Int): String = b match {
-    case 0 => "unordered"
-    case 1 => "ascending"
-    case 2 => "descending"
-    case x => s"order_$x"
-  }
-
-  /** One chunk's index pointers + decode context. */
-  private final class ChunkIdx(val rowGroup: Int, val path: String,
-                               val ptype: Int,
-                               var oiOff: Long, var oiLen: Int,
-                               var ciOff: Long, var ciLen: Int)
-
-  /** ColumnIndex: (nullPages, minBlobs, maxBlobs, boundaryOrder,
-    * nullCounts) — lists must agree in length with the page count. */
-  private def columnIndex(r: Reader): (Array[Boolean], Array[Array[Byte]],
-      Array[Array[Byte]], Int, Array[Long]) = {
-    var nullPages: Array[Boolean] = null
-    var minB: Array[Array[Byte]] = null
-    var maxB: Array[Array[Byte]] = null
-    var order = 0
-    var nullCounts: Array[Long] = null
-    var lastFid = 0
-    var done = false
-    while (!done) {
-      val h = r.u8()
-      if (h == TStop) done = true
-      else {
-        val t = h & 0x0f
-        val delta = (h >> 4) & 0x0f
-        lastFid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-        lastFid match {
-          case 1 if t == TList =>
-            val (et, n) = listHeader(r)
-            if ((et != TTrue && et != TFalse) || n < 0 || n > 65536)
-              throw Bad
-            nullPages = new Array[Boolean](n)
-            var i = 0
-            while (i < n) {
-              val v = r.u8()
-              // compact bools in containers: one byte, 1 = true
-              nullPages(i) = v == 1
-              i += 1
-            }
-          case 2 if t == TList =>
-            val (et, n) = listHeader(r)
-            if (et != TBinary || n < 0 || n > 65536) throw Bad
-            minB = Array.fill(n)(null: Array[Byte])
-            var i = 0
-            while (i < n) { minB(i) = r.blob(); i += 1 }
-          case 3 if t == TList =>
-            val (et, n) = listHeader(r)
-            if (et != TBinary || n < 0 || n > 65536) throw Bad
-            maxB = Array.fill(n)(null: Array[Byte])
-            var i = 0
-            while (i < n) { maxB(i) = r.blob(); i += 1 }
-          case 4 if t == TI32 => order = r.zigzag().toInt
-          case 5 if t == TList =>
-            val (et, n) = listHeader(r)
-            if (et != TI64 || n < 0 || n > 65536) throw Bad
-            nullCounts = new Array[Long](n)
-            var i = 0
-            while (i < n) { nullCounts(i) = r.zigzag(); i += 1 }
-          case _ => skipValue(r, t, 0)
-        }
-      }
-    }
-    if (nullPages == null || minB == null || maxB == null) throw Bad
-    (nullPages, minB, maxB, order, nullCounts)
-  }
-
-  /** OffsetIndex: per-page (offset, compressedPageSize, firstRowIndex). */
-  private def offsetIndex(r: Reader,
-                          maxPages: Int): Array[(Long, Int, Long)] = {
-    var pages: Array[(Long, Int, Long)] = null
-    var lastFid = 0
-    var done = false
-    while (!done) {
-      val h = r.u8()
-      if (h == TStop) done = true
-      else {
-        val t = h & 0x0f
-        val delta = (h >> 4) & 0x0f
-        lastFid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-        if (lastFid == 1 && t == TList) {
-          val (et, n) = listHeader(r)
-          if (et != TStruct || n < 0 || n > maxPages) throw Bad
-          pages = new Array[(Long, Int, Long)](n)
-          var i = 0
-          while (i < n) {
-            var off = 0L
-            var csz = 0
-            var fri = 0L
-            var fid = 0
-            var pDone = false
-            while (!pDone) {
-              val ph = r.u8()
-              if (ph == TStop) pDone = true
-              else {
-                val pt = ph & 0x0f
-                val pd = (ph >> 4) & 0x0f
-                fid = if (pd == 0) r.zigzag().toInt else fid + pd
-                fid match {
-                  case 1 if pt == TI64 => off = r.zigzag()
-                  case 2 if pt == TI32 => csz = r.zigzag().toInt
-                  case 3 if pt == TI64 => fri = r.zigzag()
-                  case _ => skipValue(r, pt, 0)
-                }
-              }
-            }
-            pages(i) = (off, csz, fri)
-            i += 1
-          }
-        } else skipValue(r, t, 0)
-      }
-    }
-    if (pages == null) throw Bad
-    pages
-  }
+  import org.apache.parquet.format.{ColumnIndex, OffsetIndex}
+  import shaded.parquet.org.apache.thrift.TBaseHelper.byteBufferToByteArray
 
   /** The per-row kernel — public static so generated code can call it. */
-  def compute(bytes: Array[Byte], maxPages: Int): GenericArrayData = {
-    try {
-      val n = bytes.length
-      if (n < 12) return null
-      if (bytes(0) != 'P' || bytes(1) != 'A' || bytes(2) != 'R' ||
-        bytes(3) != '1') return null
-      if (bytes(n - 4) != 'P' || bytes(n - 3) != 'A' ||
-        bytes(n - 2) != 'R' || bytes(n - 1) != '1') return null
-      val flen = (bytes(n - 8) & 0xff) | ((bytes(n - 7) & 0xff) << 8) |
-        ((bytes(n - 6) & 0xff) << 16) | ((bytes(n - 5) & 0xff) << 24)
-      if (flen <= 0 || n - 8 - flen < 4) return null
-      val footerStart = n - 8 - flen
-      val r = new Reader(bytes, footerStart, n - 8)
-      val chunks = new java.util.ArrayList[ChunkIdx]
-      var lastFid = 0
-      var done = false
-      while (!done) {
-        val h = r.u8()
-        if (h == TStop) done = true
-        else {
-          val t = h & 0x0f
-          val delta = (h >> 4) & 0x0f
-          lastFid = if (delta == 0) r.zigzag().toInt else lastFid + delta
-          if (lastFid == 4 && t == TList) {
-            val (et, nRg) = listHeader(r)
-            if (et != TStruct || nRg < 0) throw Bad
-            var rg = 0
-            while (rg < nRg) {
-              var fid = 0
-              var rgDone = false
-              while (!rgDone) {
-                val hh = r.u8()
-                if (hh == TStop) rgDone = true
-                else {
-                  val tt = hh & 0x0f
-                  val dd = (hh >> 4) & 0x0f
-                  fid = if (dd == 0) r.zigzag().toInt else fid + dd
-                  if (fid == 1 && tt == TList) {
-                    val (cet, nCc) = listHeader(r)
-                    if (cet != TStruct || nCc < 0 || nCc > 65536) throw Bad
-                    var c = 0
-                    while (c < nCc) {
-                      var path: String = null
-                      var ptype = -1
-                      var oiOff = -1L
-                      var oiLen = -1
-                      var ciOff = -1L
-                      var ciLen = -1
-                      var cfid = 0
-                      var ccDone = false
-                      while (!ccDone) {
-                        val ch = r.u8()
-                        if (ch == TStop) ccDone = true
-                        else {
-                          val ct = ch & 0x0f
-                          val cd = (ch >> 4) & 0x0f
-                          cfid = if (cd == 0) r.zigzag().toInt else cfid + cd
-                          cfid match {
-                            case 3 if ct == TStruct =>
-                              val meta = ParquetColumnStats.chunkTypePath(r)
-                              ptype = meta._1
-                              path = meta._2
-                            case 4 if ct == TI64 => oiOff = r.zigzag()
-                            case 5 if ct == TI32 => oiLen = r.zigzag().toInt
-                            case 6 if ct == TI64 => ciOff = r.zigzag()
-                            case 7 if ct == TI32 => ciLen = r.zigzag().toInt
-                            case _ => skipValue(r, ct, 0)
-                          }
-                        }
-                      }
-                      if (path != null)
-                        chunks.add(new ChunkIdx(rg, path, ptype,
-                          oiOff, oiLen, ciOff, ciLen))
-                      c += 1
-                    }
-                  } else skipValue(r, tt, 0)
-                }
-              }
-              rg += 1
-            }
-          } else skipValue(r, t, 0)
-        }
-      }
-      val out = new java.util.ArrayList[Any]
-      var i = 0
-      while (i < chunks.size()) {
-        val ck = chunks.get(i)
-        if (ck.oiOff >= 0 && ck.oiLen > 0) {
-          if (ck.oiOff + ck.oiLen > footerStart) throw Bad
-          val pages = offsetIndex(
-            new Reader(bytes, ck.oiOff.toInt, (ck.oiOff + ck.oiLen).toInt),
-            maxPages)
-          var ci: (Array[Boolean], Array[Array[Byte]], Array[Array[Byte]],
-            Int, Array[Long]) = null
-          if (ck.ciOff >= 0 && ck.ciLen > 0) {
-            if (ck.ciOff + ck.ciLen > footerStart) throw Bad
-            ci = columnIndex(
-              new Reader(bytes, ck.ciOff.toInt, (ck.ciOff + ck.ciLen).toInt))
-            if (ci._1.length != pages.length ||
-              ci._2.length != pages.length ||
-              ci._3.length != pages.length ||
-              (ci._5 != null && ci._5.length != pages.length)) throw Bad
+  def compute(bytes: Array[Byte], maxPages: Int): GenericArrayData = orNull {
+    val (fm, footerStart) = footer(bytes)
+    // an index region is present when it has a length; it must end
+    // before the footer
+    def region(off: Long, len: Int): Boolean = {
+      val present = off >= 0 && len > 0
+      if (present && off + len > footerStart) throw Bad
+      present
+    }
+    val out = new java.util.ArrayList[Any]
+    val rgs = fm.getRow_groups
+    var rg = 0
+    while (rg < rgs.size) {
+      val chunks = rgs.get(rg).getColumns
+      if (chunks.size > 65536) throw Bad
+      var c = 0
+      while (c < chunks.size) {
+        val ck = chunks.get(c)
+        val m = ck.getMeta_data
+        if (m != null && ck.isSetOffset_index_offset &&
+          ck.isSetOffset_index_length &&
+          region(ck.getOffset_index_offset, ck.getOffset_index_length)) {
+          val oi = new OffsetIndex
+          read(oi, bytes, ck.getOffset_index_offset, ck.getOffset_index_length)
+          val pages = oi.getPage_locations
+          if (pages.size > maxPages) throw Bad
+          var ci: ColumnIndex = null
+          if (ck.isSetColumn_index_offset && ck.isSetColumn_index_length &&
+            region(ck.getColumn_index_offset, ck.getColumn_index_length)) {
+            ci = new ColumnIndex
+            read(ci, bytes, ck.getColumn_index_offset, ck.getColumn_index_length)
+            if (ci.getNull_pages.size != pages.size ||
+              ci.getMin_values.size != pages.size ||
+              ci.getMax_values.size != pages.size ||
+              (ci.isSetNull_counts && ci.getNull_counts.size != pages.size))
+              throw Bad
           }
-          if (out.size() + pages.length > maxPages) throw Bad
+          if (out.size + pages.size > maxPages) throw Bad
+          val path = UTF8String.fromString(String.join(".", m.getPath_in_schema))
+          val order = UTF8String.fromString(
+            if (ci == null) "unordered" else name(ci.getBoundary_order))
           var pg = 0
-          while (pg < pages.length) {
-            val (off, csz, fri) = pages(pg)
-            val nullPage = ci != null && ci._1(pg)
-            val minS: Any =
-              if (ci == null || nullPage || ci._2(pg).isEmpty) null
-              else UTF8String.fromString(decodeStat(ck.ptype, ci._2(pg)))
-            val maxS: Any =
-              if (ci == null || nullPage || ci._3(pg).isEmpty) null
-              else UTF8String.fromString(decodeStat(ck.ptype, ci._3(pg)))
-            val nc: Any =
-              if (ci == null || ci._5 == null) null
-              else java.lang.Long.valueOf(ci._5(pg))
+          while (pg < pages.size) {
+            val loc = pages.get(pg)
+            val nullPage = ci != null && ci.getNull_pages.get(pg)
+            def stat(blobs: ColumnIndex => java.util.List[java.nio.ByteBuffer]): Any =
+              if (ci == null || nullPage || !blobs(ci).get(pg).hasRemaining) null
+              else UTF8String.fromString(
+                decodeStat(m.getType, byteBufferToByteArray(blobs(ci).get(pg))))
             out.add(new GenericInternalRow(Array[Any](
-              ck.rowGroup, UTF8String.fromString(ck.path), pg, fri, off,
-              csz, nullPage, nc, minS, maxS,
-              UTF8String.fromString(
-                if (ci == null) "unordered" else boundaryName(ci._4)))))
+              rg, path, pg, loc.getFirst_row_index, loc.getOffset,
+              loc.getCompressed_page_size, nullPage,
+              if (ci == null || !ci.isSetNull_counts) null
+              else ci.getNull_counts.get(pg),
+              stat(_.getMin_values), stat(_.getMax_values), order)))
             pg += 1
           }
         }
-        i += 1
+        c += 1
       }
-      new GenericArrayData(out.toArray)
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
+      rg += 1
     }
+    new GenericArrayData(out.toArray)
   }
 
   import org.apache.spark.sql.graftshim.ColumnShim

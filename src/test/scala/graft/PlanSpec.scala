@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Physical-plan regression tests: the properties that make these
@@ -513,4 +516,22 @@ class PlanSpec extends SparkSpec {
       "SparkEntry.scala" -> 1), // q30's truth row
       "nearDupPairs gained a call site — quadratic composition?")
   }
+
+  test("q225: codeLangId's projection runs whole-stage codegen'd — its " +
+    "generated Java compiles, so Spark does not fall back to interpreting") {
+    val df = SparkEntry.queries("q225_code_langid")(spark, sf)
+    df.collect() // finalizes this DataFrame's own adaptive plan
+    val stages = Aqe.collect(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec if w.exists {
+        case p: ProjectExec => p.output.exists(_.name == "lang_source")
+        case _ => false
+      } => w
+    }
+    assert(stages.nonEmpty, s"no codegen stage over the projection:\n${plan(df)}")
+    // WholeStageCodegenExec stays in the plan even when Janino refuses
+    // its source (it then runs the child interpreted): compile it here
+    for (w <- stages) CodeGenerator.compile(w.doCodeGen()._2)
+  }
 }
+
+private object Aqe extends AdaptiveSparkPlanHelper

@@ -54,6 +54,37 @@ class FrameCodecsSpec extends SparkSpec {
     assert(got != null && new String(got) == "abcdefgh" + "abcdefgh" + "z")
   }
 
+  test("lz4: a match offset before the start of the frame, or a byte " +
+    "left after a block's final literals, returns null") {
+    // the dependent frame above, its second block's match offset set to
+    // `offset`, with FLG `flg` (0x40 dependent, 0x60 independent blocks)
+    def frame(flg: Int, offset: Int): Array[Byte] = {
+      val hdr = Array[Byte](flg.toByte, 0x40)
+      lz4Magic ++ hdr ++ Array(headerCheck(hdr)) ++
+        Array[Byte](0x08, 0x00, 0x00, 0x80.toByte) ++ "abcdefgh".getBytes ++
+        Array[Byte](0x05, 0x00, 0x00, 0x00) ++
+        Array[Byte](0x04, offset.toByte, 0x00, 0x10, 'z'.toByte) ++
+        Array[Byte](0, 0, 0, 0)
+    }
+    assert(new String(FrameCodecs.lz4Frame(frame(0x40, 8), 1 << 20)) ==
+      "abcdefghabcdefghz")
+    // one byte before the frame start; offset 0; no history when the
+    // blocks are independent
+    assert(FrameCodecs.lz4Frame(frame(0x40, 9), 1 << 20) == null)
+    assert(FrameCodecs.lz4Frame(frame(0x40, 0), 1 << 20) == null)
+    assert(FrameCodecs.lz4Frame(frame(0x60, 8), 1 << 20) == null)
+    // raw blocks: "a" decodes; a token with no literals and one stray
+    // byte does not, nor does a byte after the final literals
+    def un(h: String) = h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    assert(new String(BlockCodecs.lz4(un("1061"), 0, 2, 1 << 20)) == "a")
+    assert(BlockCodecs.lz4(un("0061"), 0, 2, 1 << 20) == null)
+    assert(BlockCodecs.lz4(un("106161"), 0, 3, 1 << 20) == null)
+    // a match reaching before the block start
+    assert(BlockCodecs.lz4(un("1461020010"), 0, 5, 1 << 20) == null)
+    assert(new String(BlockCodecs.lz4(un("10610100107a"), 0, 6, 1 << 20)) ==
+      "aaaaaz")
+  }
+
   test("lz4 frame: the DictID flag is refused on purpose, in every " +
     "frame, not through a misread header checksum") {
     // one stored block "abc" (high bit set on its length) and the EndMark
