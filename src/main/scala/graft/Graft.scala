@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.catalog.SchemaCatalog
 import graft.model.{Operation, Selection, TableDef}
@@ -21,47 +22,52 @@ trait Target extends AutoCloseable {
 
 /** Dump-file target: payloads as parquet, ops accumulated into
   * `manifest.jsonl` on close (single "commit", mirroring the
-  * reference's one-transaction-per-target, `ExecuteTarget.java:26`). */
+  * reference's one-transaction-per-target, `ExecuteTarget.java:26`).
+  * The manifest records each payload's schema, so replay reads the
+  * payloads without inferring them. */
 class DumpTarget(spark: SparkSession, dumpDir: String) extends Target {
   private val ops = scala.collection.mutable.ArrayBuffer.empty[Operation]
+  private val schemas = scala.collection.mutable.Map.empty[String, StructType]
   def writePayload(name: String, df: DataFrame): String = {
     val payload = s"payloads/$name"
-    df.write.mode(SaveMode.Overwrite).parquet(s"$dumpDir/$payload")
+    schemas(payload) = DumpStore.writeParquet(df, s"$dumpDir/$payload")
     payload
   }
   def apply(op: Operation): Unit = ops += op
-  def close(): Unit = DumpStore.writeManifest(spark, dumpDir, ops.toSeq)
+  def close(): Unit = DumpStore.writeManifest(spark, dumpDir, ops.toSeq, schemas.toMap)
 }
 
 /** Live-database target: ops execute immediately over JDBC; payloads
-  * stage in a scratch directory. */
+  * stage in a scratch directory and are read back with the schema they
+  * were written with. */
 class JdbcTarget(spark: SparkSession, url: String,
                  allowProduction: Boolean = false) extends Target {
   Jdbc.guardProduction(url, allowProduction)
   private val staging =
     java.nio.file.Files.createTempDirectory("graft-staging").toString
+  private val schemas = scala.collection.mutable.Map.empty[String, StructType]
   def writePayload(name: String, df: DataFrame): String = {
     val payload = s"payloads/$name"
-    df.write.mode(SaveMode.Overwrite).parquet(s"$staging/$payload")
+    schemas(payload) = DumpStore.writeParquet(df, s"$staging/$payload")
     payload
   }
+  private def staged(payload: String): DataFrame =
+    DumpStore.readPayload(spark, staging, payload, schemas.toMap)
   def apply(op: Operation): Unit = op match {
     case CreateOrReplace(t, _) =>
-      val schema = spark.read.parquet(s"$staging/payloads/$t").schema
-      val ddl = Jdbc.ddlFor(t, schema)
+      val p = s"payloads/$t"
+      val ddl = Jdbc.ddlFor(t, schemas.getOrElse(p, staged(p).schema))
       try Jdbc.executeSqlList(url, Seq(ddl))
       catch { case _: Exception =>
         Jdbc.executeSqlList(url, Seq(s"""DROP TABLE "$t"""", ddl))
       }
     case TableLoad(t, payload) =>
-      Jdbc.append(spark.read.parquet(s"$staging/$payload"), url, t, allowProduction)
+      Jdbc.append(staged(payload), url, t, allowProduction)
     case TableUpsert(t, pk, payload) =>
-      Jdbc.upsert(spark.read.parquet(s"$staging/$payload"), url, t, pk, allowProduction)
+      Jdbc.upsert(staged(payload), url, t, pk, allowProduction)
     case DeleteByPk(t, pk, payload) =>
       val keyCols = pk.split(",").map(_.trim).toSeq
-      Jdbc.deleteByPk(
-        spark.read.parquet(s"$staging/$payload").selectExpr(keyCols: _*),
-        url, t, pk, allowProduction)
+      Jdbc.deleteByPk(staged(payload).selectExpr(keyCols: _*), url, t, pk, allowProduction)
     case SqlList(stmts) => Jdbc.executeSqlList(url, stmts)
     case ConstraintDdl(stmts) => Jdbc.executeSqlList(url, stmts)
   }
@@ -83,45 +89,49 @@ class Graft(spark: SparkSession, dataDir: String,
     new JdbcTarget(spark, url, allowProduction)
 
   /** `copyTree(conn, target, paths, rootIds)` (`Main.java:142-155`):
-    * walk the FK graph from root ids, stream each selection's rows to
-    * the target; cardinality invariant enforced per selection
-    * (`CopyUtils.java:44-46`).
+    * walk the FK graph from root ids and stream each level's rows to
+    * the target, in walk order.
     *
-    * One lake scan per walked level: each level's rows (child ⋉ parent
-    * keys, all columns) are pinned as it is exported, its keys derived
-    * from them, and the invariant and the payload write read the pinned
-    * rows, which are released as soon as their payload is written. The
-    * key levels are released when the verb returns. */
+    * The walk keeps each level's keys on the driver
+    * ([[TreeWalk.walkHeld]]), so a level costs one Spark job besides its
+    * payload write: its rows (the child filtered by the parent's keys,
+    * their range pushed down to Parquet; the id-filtered rows for the
+    * root) are pinned, their distinct keys collected in one job, the
+    * payload written from the pinned rows, and the rows released. One
+    * scan of each walked table. A level's keys are bounded as a
+    * `collect()` is, by `spark.driver.maxResultSize`; past it the walk
+    * fails, naming that setting.
+    *
+    * Returns one selection per level, its keys as a local DataFrame;
+    * `onLevel` sees each level (table, rows, keys, ms) as it is done. */
   def copyTree(target: Target, paths: Seq[String], rootTable: String,
-               rootIds: Seq[Long]): Seq[Selection] = {
-    // the export pins each level itself (TreeWalk's doc says why)
-    val sels = TreeWalk.selectAlongPath(spark, loader, paths, pks, rootTable, rootIds, cache = false)
-    try {
-      sels.zipWithIndex.foreach { case (sel, i) =>
-        DumpStore.exportSelection(target, sel, s"${sel.table}_$i")
-      }
-      sels
-    } finally TreeWalk.release(sels)
-  }
+               rootIds: Seq[Long],
+               onLevel: TreeWalk.HeldLevel => Unit = _ => ()): Seq[Selection] =
+    TreeWalk.walkHeld(loader, paths, pks, rootTable, rootIds, onLevel) { (table, pk, rows, i) =>
+      DumpStore.exportRows(target, table, Seq(pk), rows, s"${table}_$i")._2
+    }.map(_.selection(spark))
 
-  /** `deleteTree` (`Main.java:157-169`): same walk, DeleteByPk ops in
-    * child-first order. */
+  /** `deleteTree` (`Main.java:157-169`): the same driver-held walk,
+    * then one DeleteByPk op per level in child-first order, each with a
+    * payload of that level's keys. A level costs one job (its keys) and
+    * pins nothing. */
   def deleteTree(target: Target, paths: Seq[String], rootTable: String,
-                 rootIds: Seq[Long]): Seq[Selection] = {
-    val sels = TreeWalk.selectAlongPath(spark, loader, paths, pks, rootTable, rootIds)
-    try {
-      sels.reverse.zipWithIndex.foreach { case (sel, i) =>
-        val payload = target.writePayload(s"del_${sel.table}_$i",
-          sel.keys.toDF(sel.columns: _*))
-        target.apply(DeleteByPk(sel.table, sel.columns.mkString(","), payload))
-      }
-      sels
-    } finally TreeWalk.release(sels)
+                 rootIds: Seq[Long],
+                 onLevel: TreeWalk.HeldLevel => Unit = _ => ()): Seq[Selection] = {
+    val sels = TreeWalk.walkHeld(loader, paths, pks, rootTable, rootIds, onLevel) { (_, pk, rows, _) =>
+      TreeWalk.collectKeys(rows, Seq(pk))
+    }.map(_.selection(spark))
+    sels.reverse.zipWithIndex.foreach { case (sel, i) =>
+      val payload = target.writePayload(s"del_${sel.table}_$i", sel.keys)
+      target.apply(DeleteByPk(sel.table, sel.column, payload))
+    }
+    sels
   }
 
-  /** `copy` / full-schema export: DDL then data per table, in
-    * FK-dependency order when edges are known (`exportAll`,
-    * `CopyUtils.java:966-979`), with PK/FK constraint DDL emitted after
+  /** `copy` / full-schema export: DDL then data per table, in `order`
+    * (`exportAll`, `CopyUtils.java:966-979`; `TopoSort.sort` over the
+    * FK edges puts parents first, and without an order tables go in
+    * name order), with PK/FK constraint DDL for `edges` emitted after
     * all loads (`:981-994`) for targets that can execute it. */
   def copy(target: Target, tables: Seq[String],
            order: Seq[String] = Nil,

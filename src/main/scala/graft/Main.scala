@@ -25,6 +25,11 @@ import org.apache.spark.sql.SparkSession
   *                          [--pairs DIR] [--follow true]
   * }}}
   *
+  * `copy-tree` and `delete-tree` print one JSON line per walked level,
+  * `{"table","rows","keys","ms"}`, then a summary line with the verb and
+  * the totals; `copy` loads tables parents first and emits the
+  * catalog's PK/FK constraints after the data.
+  *
   * Writes against a production-looking JDBC URL require
   * `--allow-production true` (the reference's guard,
   * `CopyUtils.java:34-39`).
@@ -139,21 +144,36 @@ object Main {
     def target(g: Graft, t: String): Target =
       if (t.startsWith("jdbc:")) g.dbTarget(t, allowProd) else g.fileTarget(t)
 
+    // the level lines come from the counts the walk already holds;
+    // table names are escaped as the manifest's are
+    def walk(name: String)(verb: (Graft, Target, ops.TreeWalk.HeldLevel => Unit) => Unit): Unit = {
+      val g = graft(); val t = target(g, one("target"))
+      var (levels, rows, keys) = (0, 0L, 0L)
+      val t0 = System.nanoTime()
+      try verb(g, t, { l =>
+        println(s"""{"table":${ops.DumpStore.esc(l.table)},"rows":${l.keys.rows},"keys":${l.keys.size},"ms":${l.ms}}""")
+        levels += 1; rows += l.keys.rows; keys += l.keys.size
+      })
+      finally t.close()
+      println(s"""{"verb":${ops.DumpStore.esc(name)},"levels":$levels,"rows":$rows,"keys":$keys,""" +
+        s""""ms":${(System.nanoTime() - t0) / 1000000}}""")
+    }
+
     verb match {
       case "copy-tree" =>
-        val g = graft(); val t = target(g, one("target"))
-        try g.copyTree(t, f("path"), one("root"), ids("ids"))
-        finally t.close()
+        walk("copy-tree")(_.copyTree(_, f("path"), one("root"), ids("ids"), _))
       case "delete-tree" =>
-        val g = graft(); val t = target(g, one("target"))
-        try g.deleteTree(t, f("path"), one("root"), ids("ids"))
-        finally t.close()
+        walk("delete-tree")(_.deleteTree(_, f("path"), one("root"), ids("ids"), _))
       case "copy" =>
         // constraints come from the declared PKs: the walk's stand-in
-        // key for lineitem is not unique and cannot be a PRIMARY KEY
+        // key for lineitem is not unique and cannot be a PRIMARY KEY.
+        // Tables load parents first, and the catalog's FK edges among
+        // them become constraints after the loads.
         val g = new Graft(spark, one("data"), catalog.SchemaCatalog.starPks)
         val t = target(g, one("target"))
-        try g.copy(t, f("tables").flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
+        val tables = f("tables").flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+        val edges = catalog.SchemaCatalog.starEdges
+        try g.copy(t, tables, ops.TopoSort.sort(tables, edges), edges)
         finally t.close()
       case "update" =>
         // upsert a parquet delta into a table by pk (the reference's

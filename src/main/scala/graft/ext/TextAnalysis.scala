@@ -170,17 +170,21 @@ object TextAnalysis {
     *
     * Scale shape: the per-language total/vocab tables are model-sized
     * and broadcast; the corpus n-gram stream is aggregated once per
-    * doc and joined once against the profiles — BROADCAST when the
-    * profile table is small enough (`maxBroadcastProfileRows`),
-    * plain shuffle join above it (the [[linearScore]] dual-form
-    * precedent: a real multilingual corpus has 10⁶–10⁷ distinct char
-    * trigrams × ~100 languages, far past what an executor can hold
-    * broadcast). The two forms are value-identical — exact integer
-    * partials sum order-free (ExtSpec pins them equal). */
+    * doc and scored once against the profiles — through an in-memory
+    * profile index when that index is small enough, plain shuffle join
+    * above it (the [[linearScore]] dual-form precedent: a real
+    * multilingual corpus has 10⁶–10⁷ distinct char trigrams × ~100
+    * languages, far past what an executor can hold). The index holds
+    * one weight per distinct n-gram per language, so
+    * `maxIndexCells` bounds that product, distinct n-grams ×
+    * languages, not the profile's row count: a profile whose n-grams
+    * each belong to one language has few rows but a wide index. The
+    * two forms are value-identical — exact integer partials sum
+    * order-free (ExtSpec pins them equal). */
   def charNgramLangId(docs: DataFrame, n: Int = 3, idCol: String = "doc_id",
                       textCol: String = "text",
                       langCol: String = "lang",
-                      maxBroadcastProfileRows: Long = 4L << 20): DataFrame = {
+                      maxIndexCells: Long = 4L << 20): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val t = col(textCol)
     val base = docs.filter(length(t) >= n)
@@ -197,19 +201,15 @@ object TextAnalysis {
         (length(t) - (n - 1)).cast("long").as("ktot"))
       .localCheckpoint(eager = false)
     // LAZY cuts: the census materializes inside the profile build's
-    // job and the profile inside its own row-count probe — same
-    // single evaluations, two fewer eager checkpoint jobs
+    // job and the profile inside the vocabulary count — same single
+    // evaluations, two fewer eager checkpoint jobs
     val prof = census
       .select(col("lang_true").as("lang_cand"),
         explode(col("__cn")).as(Seq("ng", "k")))
       .groupBy(col("lang_cand"), col("ng"))
       .agg(sum(col("k")).as("c"))
       .localCheckpoint(eager = false)
-    // prof is materialized above, so the row-count probe is free of
-    // any corpus re-scan — the broadcast-vs-shuffle decision needs a
-    // real number, not a guess (linearScore decides on weights.size)
-    scoreUnderProfiles(census, prof, idCol,
-      broadcastProf = prof.count() <= maxBroadcastProfileRows)
+    scoreUnderProfiles(census, prof, idCol, maxIndexCells)
   }
 
   /** [[charNgramLangId]] with PRE-TRAINED profiles (lang_cand, ng, c)
@@ -224,7 +224,7 @@ object TextAnalysis {
                           idCol: String = "doc_id",
                           textCol: String = "text",
                           langCol: String = "lang",
-                          maxBroadcastProfileRows: Long = 4L << 20): DataFrame = {
+                          maxIndexCells: Long = 4L << 20): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val t = col(textCol)
     val base = docs.filter(length(t) >= n)
@@ -234,8 +234,7 @@ object TextAnalysis {
     val cens = base.select(col(idCol), col(langCol).as("lang_true"),
       graft.functions.CharNgramCounts(t, n).as("__cn"),
       (length(t) - (n - 1)).cast("long").as("ktot"))
-    scoreUnderProfiles(cens, profiles, idCol,
-      broadcastProf = profiles.count() <= maxBroadcastProfileRows)
+    scoreUnderProfiles(cens, profiles, idCol, maxIndexCells)
   }
 
   /** Train the per-language char-n-gram profile table (lang_cand, ng,
@@ -269,7 +268,7 @@ object TextAnalysis {
   def langIdMargin(docs: DataFrame, n: Int = 3, idCol: String = "doc_id",
                    textCol: String = "text", langCol: String = "lang",
                    confidenceMargin: Double = 50.0,
-                   maxBroadcastProfileRows: Long = 4L << 20): DataFrame = {
+                   maxIndexCells: Long = 4L << 20): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val t = col(textCol)
     val base = docs.filter(length(t) >= n)
@@ -279,16 +278,15 @@ object TextAnalysis {
         (length(t) - (n - 1)).cast("long").as("ktot"))
       .localCheckpoint(eager = false)
     // LAZY cuts: the census materializes inside the profile build's
-    // job and the profile inside its own row-count probe — same
-    // single evaluations, two fewer eager checkpoint jobs
+    // job and the profile inside the vocabulary count — same single
+    // evaluations, two fewer eager checkpoint jobs
     val prof = census
       .select(col("lang_true").as("lang_cand"),
         explode(col("__cn")).as(Seq("ng", "k")))
       .groupBy(col("lang_cand"), col("ng"))
       .agg(sum(col("k")).as("c"))
       .localCheckpoint(eager = false)
-    val scores = scoresUnderProfiles(census, prof, idCol,
-      broadcastProf = prof.count() <= maxBroadcastProfileRows)
+    val scores = scoresUnderProfiles(census, prof, idCol, maxIndexCells)
     // winner AND runner-up from ONE window pass over the |docs|×|langs|
     // score table — (score DESC, lang ASC) makes row 1 exactly the old
     // argmax (max score, ties to min language) and row 2 exactly the
@@ -321,14 +319,14 @@ object TextAnalysis {
     * entry points: Laplace per-occurrence scores with the unseen floor,
     * exact nano-nat argmax, ties to min language. `cens` is the
     * per-document census table (idCol, lang_true, __cn map, ktot);
-    * `prof` is (lang_cand, ng, c). `broadcastProf` picks the scoring
+    * `prof` is (lang_cand, ng, c). `maxIndexCells` picks the scoring
     * strategy — the per-language constant tables (|langs| rows) stay
     * driver-collected either way. */
   private def scoreUnderProfiles(cens: DataFrame,
                                  prof: DataFrame,
                                  idCol: String,
-                                 broadcastProf: Boolean): DataFrame =
-    argmaxScores(scoresUnderProfiles(cens, prof, idCol, broadcastProf),
+                                 maxIndexCells: Long): DataFrame =
+    argmaxScores(scoresUnderProfiles(cens, prof, idCol, maxIndexCells),
       idCol)
 
   /** The 9-dp per-occurrence ln score as an exact LONG count of
@@ -346,11 +344,14 @@ object TextAnalysis {
     * shared by the argmax classifiers and the margin gate. `score` is
     * exact integer NANO-NATS ([[lnNano]]); magnitudes stay below
     * ktot·4e10, so documents up to ~2·10⁸ n-grams fit a long with
-    * ANSI overflow as the loud failure mode past that. */
+    * ANSI overflow as the loud failure mode past that. The kernel path
+    * builds a dense index of distinct n-grams × languages weights; it
+    * runs when that product is at most `maxIndexCells`, the join path
+    * otherwise. */
   private def scoresUnderProfiles(cens: DataFrame,
                                   prof: DataFrame,
                                   idCol: String,
-                                  broadcastProf: Boolean): DataFrame = {
+                                  maxIndexCells: Long): DataFrame = {
     // the vocabulary size is ONE number — a driver scalar (the
     // documented bounded-action class), not a 1-row frame attached on
     // a constant key: that join had no real equi-key and planned as a
@@ -362,8 +363,7 @@ object TextAnalysis {
       .select(col("lang_cand"), col("tot"), lit(vocabV).as("V"),
         lnNano(lit(1.0) / (col("tot") + vocabV).cast("double")).as("fl"))
     // the (lang_cand, unseen-floor) constants are |languages| rows —
-    // the documented model-sized bounded-collect class (prof.count()
-    // already runs in every caller)
+    // the documented model-sized bounded-collect class
     val liRows = li.select(col("lang_cand"), col("fl")).collect()
     if (liRows.isEmpty)
       // no trainable language (empty/too-short corpus): empty scores
@@ -382,9 +382,9 @@ object TextAnalysis {
     val profW = prof.join(broadcast(li), Seq("lang_cand"))
       .select(col("lang_cand"), col("ng"), lnNano((col("c") + 1).cast("double")
         / (col("tot") + col("V")).cast("double")).as("__w"))
-    if (broadcastProf) {
-      // KERNEL path: the weighted profile is executor-memory-sized
-      // (the same bound the old broadcast join enforced), so it rides
+    if (vocabV * liRows.length <= maxIndexCells) {
+      // KERNEL path: the index — one weight slot per distinct n-gram
+      // per language — is executor-memory-sized, so it rides
       // as a reference object inside ONE codegen'd expression that
       // scores every language per census row — no (doc, ng, k)
       // explode, no |docs|·|matches|·|langs| join stream, no

@@ -28,8 +28,9 @@ final case class FkEdge(
 
 /** "The rows of `table` whose key columns ∈ keys" — the unit of
   * subsetting (`TableSelection.java:12-21`). Keys are carried as a
-  * DataFrame (not a driver-side List) so a selection scales to key sets
-  * that never fit on the driver.
+  * DataFrame either way: a lazy walk's keys are a plan over the table,
+  * which composes into a query, and a verb's walk hands back the keys
+  * it held on the driver as a local frame.
   *
   * `rows` are the selected rows themselves, every column: for a walk
   * level, child ⋉ parent keys; for the root, the id-filtered root rows.

@@ -6,8 +6,7 @@ import java.nio.charset.StandardCharsets
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.{DumpTarget, Target}
@@ -96,9 +95,10 @@ object DumpStore {
       if (order.nonEmpty) order.filter(byName.contains).map(byName)
       else tables.sortBy(_.name)
     val ddlOps = ordered.map(t => CreateOrReplace(t.name, ddlFor(t.name, t.schema)))
+    val schemas = Map.newBuilder[String, StructType]
     val loadOps = ordered.map { t =>
       val payload = s"payloads/${t.name}"
-      loader(t.name).write.mode(SaveMode.Overwrite).parquet(s"$dumpDir/$payload")
+      schemas += payload -> writeParquet(loader(t.name), s"$dumpDir/$payload")
       TableLoad(t.name, payload)
     }
     // emission order mirrors the reference stream: tables → data →
@@ -106,48 +106,56 @@ object DumpStore {
     val constraintStmts = constraintStatements(ordered, edges)
     val tailOps = if (constraintStmts.isEmpty) Nil else Seq(ConstraintDdl(constraintStmts))
     val ops = ddlOps ++ loadOps ++ tailOps
-    writeManifest(spark, dumpDir, ops)
+    writeManifest(spark, dumpDir, ops, schemas.result())
     ops
   }
 
   /** Keyed export of tree-walk selections (the reference's
     * `copySelections`, `CopyUtils.java:33-47`) into a dump: one
-    * [[exportSelection]] per selection, in walk order, then the
-    * manifest. Call [[TreeWalk.release]] on the selections afterwards. */
+    * [[exportRows]] per selection, in walk order, then the manifest.
+    * The cardinality invariant — rows exported must cover the keys
+    * selected (`CopyUtils.java:44-46`) — compares the selection's key
+    * count with the distinct keys of its pinned rows, before any bytes
+    * land. It compares distinct key counts, so a non-unique stand-in
+    * key (many rows per key) exports cleanly. Each key level is pinned
+    * over its pinned rows, for the next level's join; call
+    * [[TreeWalk.release]] on the selections afterwards. */
   def exportSelections(
       spark: SparkSession,
       selections: Seq[Selection],
       dumpDir: String): Seq[Operation] = {
     val target = new DumpTarget(spark, dumpDir)
     val ops = selections.zipWithIndex.map { case (sel, i) =>
-      exportSelection(target, sel, s"${sel.table}_$i")
+      exportRows(target, sel.table, sel.columns, sel.rows, s"${sel.table}_$i", Some {
+        if (sel.keys.storageLevel == StorageLevel.NONE) sel.keys.persist(StorageLevel.MEMORY_AND_DISK)
+        partitionCount(sel.keys)
+      })._1
     }
     target.close()
     ops
   }
 
-  /** Export one selection. Pins its rows, then its keys (so the keys
-    * read the pinned rows; a walk's already-cached key level is kept as
-    * is), and enforces the cardinality invariant — rows exported must
-    * cover the keys selected (`CopyUtils.java:44-46`) — before any bytes
-    * land. The invariant compares distinct key counts, so a non-unique
-    * stand-in key (many rows per key) exports cleanly, and it reads the
-    * rows handed to the write, never the table. The rows are
-    * unpersisted once written; the keys stay pinned for the next
-    * level's join, until [[TreeWalk.release]]. */
-  private[graft] def exportSelection(target: Target, sel: Selection, name: String): Operation = {
-    sel.rows.persist(StorageLevel.MEMORY_AND_DISK)
-    val payload = try {
-      if (sel.keys.storageLevel == StorageLevel.NONE) sel.keys.persist(StorageLevel.MEMORY_AND_DISK)
-      val nKeys = partitionCount(sel.keys)
-      val nRowKeys = partitionCount(sel.rows.select(sel.columns.map(col): _*).distinct())
-      if (nRowKeys != nKeys)
-        sys.error(s"Only $nRowKeys of $nKeys keys copied for ${sel.table} — cardinality invariant violated")
-      target.writePayload(name, sel.rows)
-    } finally sel.rows.unpersist(blocking = false)
-    val op = TableLoad(sel.table, payload)
+  /** Export one level's rows: pin them, collect their distinct keys in
+    * one job ([[TreeWalk.collectKeys]]), check the invariant on
+    * the driver against `selectedKeys` (evaluated once the rows are
+    * pinned, so a key frame over them reads them pinned), write the
+    * payload from the pinned rows, and unpersist them. One scan of the
+    * level's table. Returns the load op and the collected keys. */
+  private[graft] def exportRows(target: Target, table: String, columns: Seq[String],
+                                rows: DataFrame, name: String,
+                                selectedKeys: => Option[Long] = None): (Operation, TreeWalk.HeldKeys) = {
+    rows.persist(StorageLevel.MEMORY_AND_DISK)
+    val (payload, keys) = try {
+      val selected = selectedKeys
+      val keys = TreeWalk.collectKeys(rows, columns)
+      selected.filter(_ != keys.size).foreach { n =>
+        sys.error(s"Only ${keys.size} of $n keys copied for $table — cardinality invariant violated")
+      }
+      (target.writePayload(name, rows), keys)
+    } finally rows.unpersist(blocking = false)
+    val op = TableLoad(table, payload)
     target.apply(op)
-    op
+    (op, keys)
   }
 
   /** Rows of `df`, summed over its partitions: one job, without the
@@ -162,18 +170,20 @@ object DumpStore {
       spark: SparkSession,
       selections: Seq[Selection],
       dumpDir: String): Seq[Operation] = {
+    val schemas = Map.newBuilder[String, StructType]
     val ops = selections.reverse.zipWithIndex.map { case (sel, i) =>
       val payload = s"payloads/del_${sel.table}_$i"
-      sel.keys.toDF(sel.columns: _*).write.mode(SaveMode.Overwrite).parquet(s"$dumpDir/$payload")
+      schemas += payload -> writeParquet(sel.keys.toDF(sel.columns: _*), s"$dumpDir/$payload")
       DeleteByPk(sel.table, sel.columns.mkString(","), payload)
     }
-    writeManifest(spark, dumpDir, ops)
+    writeManifest(spark, dumpDir, ops, schemas.result())
     ops
   }
 
   // ---- manifest serialization (driver-side; metadata-sized) ----
 
-  private def esc(s: String): String =
+  /** `s` as a JSON string literal. */
+  private[graft] def esc(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -184,7 +194,28 @@ object DumpStore {
       case c => c.toString
     } + "\""
 
-  private def toJson(seq: Int, op: Operation): String = op match {
+  /** Overwrite `path` with `df` as parquet; returns the schema the files
+    * carry (Spark writes every column nullable), for the manifest. */
+  private[graft] def writeParquet(df: DataFrame, path: String): StructType = {
+    df.write.mode(SaveMode.Overwrite).parquet(path)
+    df.schema.toNullable
+  }
+
+  private def payloadOf(op: Operation): Option[String] = op match {
+    case TableLoad(_, p) => Some(p)
+    case TableUpsert(_, _, p) => Some(p)
+    case DeleteByPk(_, _, p) => Some(p)
+    case _ => None
+  }
+
+  /** One manifest line; a payload's recorded schema rides along as
+    * `"schema"`, the payload's `StructType` JSON. */
+  private def toJson(seq: Int, op: Operation, schema: Option[StructType]): String = {
+    val line = opJson(seq, op)
+    schema.fold(line)(s => line.dropRight(1) + s""","schema":${s.json}}""")
+  }
+
+  private def opJson(seq: Int, op: Operation): String = op match {
     case SqlList(stmts) =>
       s"""{"seq":$seq,"kind":"sql_list","statements":[${stmts.map(esc).mkString(",")}]}"""
     case ConstraintDdl(stmts) =>
@@ -199,13 +230,17 @@ object DumpStore {
       s"""{"seq":$seq,"kind":"create_or_replace","table":${esc(t)},"ddl":${esc(ddl)}}"""
   }
 
-  def writeManifest(spark: SparkSession, dumpDir: String, ops: Seq[Operation]): Unit = {
+  /** Write `ops` as the dump's manifest. `schemas` maps a payload path
+    * to the schema its files carry; replay reads a payload recorded with
+    * one without Spark's schema-inference job. */
+  def writeManifest(spark: SparkSession, dumpDir: String, ops: Seq[Operation],
+                    schemas: Map[String, StructType] = Map.empty): Unit = {
     val path = new Path(s"$dumpDir/manifest.jsonl")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(path, true)
     try {
       val bytes = ops.zipWithIndex
-        .map { case (op, i) => toJson(i, op) }
+        .map { case (op, i) => toJson(i, op, payloadOf(op).flatMap(schemas.get)) }
         .mkString("", "\n", "\n")
         .getBytes("UTF-8")
       out.write(bytes)
@@ -218,24 +253,38 @@ object DumpStore {
     * driver, through the same Hadoop FS stream [[writeManifest]] uses:
     * a manifest is a few lines of metadata, not worth a Spark job. A
     * malformed line fails the read, naming the line. */
-  def readManifest(spark: SparkSession, dumpDir: String): Seq[Operation] = {
+  def readManifest(spark: SparkSession, dumpDir: String): Seq[Operation] =
+    readEntries(spark, dumpDir)._1
+
+  /** [[readManifest]], plus the schema recorded for each payload (none
+    * in a manifest written before schemas were recorded). */
+  private[graft] def readEntries(spark: SparkSession, dumpDir: String): (Seq[Operation], Map[String, StructType]) = {
     val path = new Path(s"$dumpDir/manifest.jsonl")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = new BufferedReader(new InputStreamReader(fs.open(path), StandardCharsets.UTF_8))
     val lines = try Iterator.continually(in.readLine()).takeWhile(_ != null).toVector
       finally in.close()
-    lines.zipWithIndex.filter(_._1.trim.nonEmpty).map { case (line, n) =>
+    val entries = lines.zipWithIndex.filter(_._1.trim.nonEmpty).map { case (line, n) =>
       try parseOp(json.readTree(line))
       catch {
         case e: Exception =>
           throw new IllegalArgumentException(s"Malformed line ${n + 1} of $path: ${e.getMessage}", e)
       }
-    }.sortBy(_._1).map(_._2)
+    }.sortBy(_._1)
+    val ops = entries.map(_._2)
+    (ops, entries.flatMap { case (_, op, schema) => payloadOf(op).zip(schema) }.toMap)
   }
 
-  /** One manifest line → (seq, Operation); a missing or mistyped field
-    * is an error. */
-  private def parseOp(j: JsonNode): (Int, Operation) = {
+  /** A payload under `dumpDir`, read with its recorded schema when there
+    * is one: that skips the one-task schema-inference job Spark runs
+    * for every `read.parquet` without a schema. */
+  private[graft] def readPayload(spark: SparkSession, dumpDir: String, payload: String,
+                                 schemas: Map[String, StructType]): DataFrame =
+    schemas.get(payload).fold(spark.read)(spark.read.schema(_)).parquet(s"$dumpDir/$payload")
+
+  /** One manifest line → (seq, Operation, recorded payload schema); a
+    * missing or mistyped field is an error. */
+  private def parseOp(j: JsonNode): (Int, Operation, Option[StructType]) = {
     def field(name: String): JsonNode =
       Option(j.get(name)).filterNot(_.isNull).getOrElse(sys.error(s"missing field '$name'"))
     def str(node: JsonNode, name: String): String = {
@@ -259,7 +308,13 @@ object DumpStore {
       case "create_or_replace" => CreateOrReplace(text("table"), text("ddl"))
       case k => sys.error(s"Unknown operation kind in manifest: $k")
     }
-    seq.intValue -> op
+    val schema = Option(j.get("schema")).filterNot(_.isNull).map { s =>
+      DataType.fromJson(s.toString) match {
+        case st: StructType => st
+        case other => sys.error(s"'schema' must be a struct, got ${other.simpleString}")
+      }
+    }
+    (seq.intValue, op, schema)
   }
 
   // ---- replay ----
@@ -276,10 +331,12 @@ object DumpStore {
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
       spark.catalog.setCurrentDatabase(db)
     }
-    readManifest(spark, dumpDir).foreach(execute(spark, dumpDir, _))
+    val (ops, schemas) = readEntries(spark, dumpDir)
+    ops.foreach(execute(spark, dumpDir, _, schemas))
   }
 
-  def execute(spark: SparkSession, dumpDir: String, op: Operation): Unit = op match {
+  def execute(spark: SparkSession, dumpDir: String, op: Operation,
+              schemas: Map[String, StructType] = Map.empty): Unit = op match {
     case SqlList(stmts) =>
       stmts.foreach { s =>
         try spark.sql(s)
@@ -300,14 +357,14 @@ object DumpStore {
           spark.sql(ddl)
       }
     case TableLoad(t, payload) =>
-      spark.read.parquet(s"$dumpDir/$payload")
+      readPayload(spark, dumpDir, payload, schemas)
         .write.mode(SaveMode.Append).insertInto(t)
     case TableUpsert(t, pk, payload) =>
-      val delta = spark.read.parquet(s"$dumpDir/$payload")
+      val delta = readPayload(spark, dumpDir, payload, schemas)
       val merged = Writers.upsert(spark.table(t), delta, pk)
       overwriteTable(spark, t, merged, s"$dumpDir/.staging/$t")
     case DeleteByPk(t, pk, payload) =>
-      val keys = spark.read.parquet(s"$dumpDir/$payload").select(pk)
+      val keys = readPayload(spark, dumpDir, payload, schemas).select(pk)
       val remaining = spark.table(t).join(keys, Seq(pk), "left_anti")
       overwriteTable(spark, t, remaining, s"$dumpDir/.staging/$t")
   }

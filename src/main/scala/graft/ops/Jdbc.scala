@@ -249,27 +249,30 @@ object Jdbc {
 
   /** Replay a dump (SURVEY.md §1.4) into a live JDBC database — the
     * `import <dump> <alias>` path (`Main.java:84-90`) with parquet
-    * payloads instead of Java serialization. */
+    * payloads instead of Java serialization. Payloads are read with the
+    * schemas the manifest records, so replay runs no schema-inference
+    * job; a manifest without them is read by inference. */
   def replay(spark: SparkSession, dumpDir: String, url: String,
              allowProduction: Boolean = false): Unit = {
     import graft.model.Operation._
     guardProduction(url, allowProduction)
-    DumpStore.readManifest(spark, dumpDir).foreach {
+    val (ops, schemas) = DumpStore.readEntries(spark, dumpDir)
+    def payload(p: String): DataFrame = DumpStore.readPayload(spark, dumpDir, p, schemas)
+    ops.foreach {
       case CreateOrReplace(t, _) =>
-        val schema = spark.read.parquet(s"$dumpDir/payloads/$t").schema
-        val ddl = ddlFor(t, schema)
+        val p = s"payloads/$t"
+        val ddl = ddlFor(t, schemas.getOrElse(p, payload(p).schema))
         try executeSqlList(url, Seq(ddl))
         catch {
           case _: Exception =>
             executeSqlList(url, Seq(s"DROP TABLE ${quoted(t)}", ddl))
         }
-      case TableLoad(t, payload) =>
-        append(spark.read.parquet(s"$dumpDir/$payload"), url, t, allowProduction)
-      case TableUpsert(t, pk, payload) =>
-        upsert(spark.read.parquet(s"$dumpDir/$payload"), url, t, pk, allowProduction)
-      case DeleteByPk(t, pk, payload) =>
-        deleteByPk(spark.read.parquet(s"$dumpDir/$payload")
-          .select(pkCols(pk).map(col): _*), url, t, pk, allowProduction)
+      case TableLoad(t, p) =>
+        append(payload(p), url, t, allowProduction)
+      case TableUpsert(t, pk, p) =>
+        upsert(payload(p), url, t, pk, allowProduction)
+      case DeleteByPk(t, pk, p) =>
+        deleteByPk(payload(p).select(pkCols(pk).map(col): _*), url, t, pk, allowProduction)
       case SqlList(stmts) =>
         executeSqlList(url, stmts)
       case ConstraintDdl(stmts) =>

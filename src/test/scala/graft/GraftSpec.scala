@@ -3,13 +3,14 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.model.Operation
 import graft.model.Operation._
-import graft.ops.{DumpStore, Jdbc}
+import graft.catalog.SchemaCatalog
+import graft.ops.{DumpStore, Jdbc, TreeWalk}
 
 /** End-to-end tests of the user-facing DSL facade: the reference's
   * script verbs against both target kinds. */
@@ -84,8 +85,8 @@ class GraftSpec extends SparkSpec {
     assert(sels.forall(_.rows.storageLevel == StorageLevel.NONE),
       "pinned row levels must be unpersisted after the walk completes")
 
-    // deleteTree pins no row levels: the only cache it builds is its one
-    // key level (orders); pinned rows would add one per level
+    // deleteTree builds no cache at all: its key levels are held on the
+    // driver, and its payloads are local frames of those keys
     val before = spark.sparkContext.getPersistentRDDs.keySet
     var built = 0
     val delTarget = spy(g.fileTarget(Files.createTempDirectory("graft-dump").toString)) { (_, df) =>
@@ -94,7 +95,7 @@ class GraftSpec extends SparkSpec {
     }
     g.deleteTree(delTarget, Seq("customer->orders.o_custkey"), "customer", 1L to 5L)
     delTarget.close()
-    assert(built == 1, s"deleteTree built $built caches, expected its one key level")
+    assert(built == 0, s"deleteTree built $built caches, expected none")
   }
 
   test("copyTree reads each walked table once") {
@@ -124,6 +125,162 @@ class GraftSpec extends SparkSpec {
     assert(read.sum() >= tableRows.sum)
     assert(read.sum() < tableRows.sum + tableRows.min,
       s"read ${read.sum()} records; walked tables hold ${walked.zip(tableRows).mkString(", ")}")
+  }
+
+  test("copyTree runs one Spark job per walked level outside its payload writes") {
+    val walked = Seq("customer", "orders", "lineitem")
+    walked.foreach(t => load(t)) // the loader's plans, and their schema reads, exist already
+    val sc = spark.sparkContext
+    val phase = "graft.spec.phase"
+    val walkJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(phase) == "walk")) walkJobs.incrementAndGet()
+    }
+    val g = new Graft(spark, sf)
+    val inner = g.fileTarget(Files.createTempDirectory("graft-dump").toString)
+    val target = new Target {
+      def writePayload(name: String, df: DataFrame): String = {
+        sc.setLocalProperty(phase, "write")
+        try inner.writePayload(name, df) finally sc.setLocalProperty(phase, "walk")
+      }
+      def apply(op: Operation): Unit = inner.apply(op)
+      def close(): Unit = inner.close()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(phase, "walk")
+      val sels = try g.copyTree(target, Seq("customer->orders.o_custkey", "orders->lineitem.l_orderkey"),
+          "customer", 1L to 10L)
+        finally sc.setLocalProperty(phase, null)
+      target.close()
+      ListenerBusDrain(sc)
+      assert(sels.map(_.table) == walked)
+    } finally sc.removeSparkListener(listener)
+    assert(walkJobs.get == walked.length,
+      s"${walkJobs.get} jobs outside payload writes for ${walked.length} levels")
+  }
+
+  /** Row count and the sum of every row's xxhash64, columns in name order. */
+  private def digest(df: DataFrame): (Long, java.math.BigDecimal) = {
+    val r = df.agg(count(lit(1)),
+      sum(xxhash64(df.columns.sorted.toIndexedSeq.map(col): _*).cast("decimal(38,0)"))).head
+    (r.getLong(0), Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
+  }
+
+  /** Root sets and paths for the driver-held walk against the lazy one:
+    * a plain range, absent ids, duplicated ids, none, and a path that
+    * reaches lineitem twice (through orders and through supplier). */
+  private val treeCases: Seq[(String, Seq[String], String, Seq[Long])] = {
+    val toLineitem = Seq("customer->orders.o_custkey", "orders->lineitem.l_orderkey")
+    Seq(
+      ("1..10", toLineitem, "customer", 1L to 10L),
+      ("absent ids", toLineitem, "customer", Seq(-7L, 999999999L)),
+      ("duplicated ids", toLineitem, "customer", Seq(3L, 3L, 5L, 5L, 5L, 8L)),
+      ("no ids", toLineitem, "customer", Nil),
+      ("lineitem twice", Seq("nation->customer.c_nationkey", "nation->supplier.s_nationkey",
+        "customer->orders.o_custkey", "orders->lineitem.l_orderkey", "supplier->lineitem.l_suppkey"),
+        "nation", Seq(1L, 4L)))
+  }
+
+  /** copyTree into a dump; each payload's digest must equal that of the
+    * lazy walk's rows for the same level, and each level's keys the lazy
+    * walk's key count. */
+  private def matchesLazyWalk(paths: Seq[String], root: String, ids: Seq[Long]): Unit = {
+    val dump = Files.createTempDirectory("graft-dump").toString
+    val target = g0.fileTarget(dump)
+    val sels = g0.copyTree(target, paths, root, ids)
+    target.close()
+    val lazySels = TreeWalk.selectAlongPath(spark, load, paths, SchemaCatalog.walkPks, root, ids)
+    try {
+      assert(sels.map(_.table) == lazySels.map(_.table))
+      lazySels.zip(sels).zipWithIndex.foreach { case ((want, got), i) =>
+        assert(digest(spark.read.parquet(s"$dump/payloads/${want.table}_$i")) == digest(want.rows),
+          s"level $i (${want.table})")
+        assert(got.keys.count() == want.keys.count(), s"level $i (${want.table}) keys")
+      }
+    } finally TreeWalk.release(lazySels)
+  }
+  private lazy val g0 = new Graft(spark, sf)
+
+  test("copyTree payloads equal the lazy walk's rows: range, absent, duplicated and no ids, a table reached twice") {
+    treeCases.foreach { case (name, paths, root, ids) =>
+      withClue(s"$name: ")(matchesLazyWalk(paths, root, ids))
+    }
+  }
+
+  test("copyTree does not depend on the broadcast threshold: off (-1) or tiny, it matches the lazy walk") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    try Seq("-1", "8b").foreach { threshold =>
+      spark.conf.set(key, threshold)
+      treeCases.foreach { case (name, paths, root, ids) =>
+        withClue(s"threshold $threshold, $name: ")(matchesLazyWalk(paths, root, ids))
+      }
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("a walked level whose keys outgrow spark.driver.maxResultSize fails loudly, naming the setting") {
+    // every customer: their keys fit in 8 KiB, their orders' keys (about
+    // 14 serialized bytes each) do not
+    val ids = load("customer").select("c_custkey").collect().map(_.getLong(0)).toSeq
+    val paths = Seq("customer->orders.o_custkey")
+    val done = Seq.newBuilder[String]
+    def walk() = g0.copyTree(g0.fileTarget(Files.createTempDirectory("graft-dump").toString), paths, "customer", ids,
+      l => done += l.table)
+    val e = intercept[org.apache.spark.SparkException] {
+      org.apache.spark.DriverConf.withValue(spark.sparkContext, "spark.driver.maxResultSize", "8k")(walk())
+    }
+    assert(e.getMessage.contains("spark.driver.maxResultSize"), e.getMessage)
+    assert(done.result() == Seq("customer"), "the walk must stop at the orders level")
+    assert(walk().map(_.table) == Seq("customer", "orders"), "within the setting the walk completes")
+  }
+
+  /** A three-level copy-tree dump and a Derby database with its tables. */
+  private def treeDumpAndDb(): (String, String) = {
+    val dump = Files.createTempDirectory("graft-dump").toString
+    val target = g0.fileTarget(dump)
+    g0.copyTree(target, Seq("customer->orders.o_custkey", "orders->lineitem.l_orderkey"), "customer", 1L to 10L)
+    target.close()
+    val url = freshDb()
+    Jdbc.executeSqlList(url, Seq("customer", "orders", "lineitem").map(t => Jdbc.ddlFor(t, load(t).schema)))
+    (dump, url)
+  }
+
+  private def payloadRows(dump: String): Map[String, Long] =
+    Seq("customer_0", "orders_1", "lineitem_2").map { p =>
+      p.takeWhile(_ != '_') -> spark.read.parquet(s"$dump/payloads/$p").count()
+    }.toMap
+
+  test("Jdbc.replay of a three-load dump runs three jobs: payloads are read with their recorded schemas") {
+    val (dump, url) = treeDumpAndDb()
+    val (ops, schemas) = DumpStore.readEntries(spark, dump)
+    assert(ops.map(_.kind) == Seq.fill(3)("table_load"))
+    assert(schemas.keySet == Set("payloads/customer_0", "payloads/orders_1", "payloads/lineitem_2"))
+    assert(schemas("payloads/orders_1") == spark.read.parquet(s"$dump/payloads/orders_1").schema)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Jdbc.replay(spark, dump, url)
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 3, s"replay ran ${jobs.get} jobs for 3 loads")
+    payloadRows(dump).foreach { case (t, n) => assert(Jdbc.read(spark, url, t).count() == n, t) }
+  }
+
+  test("a manifest without payload schemas (the older format) still replays, by inference") {
+    val (dump, url) = treeDumpAndDb()
+    DumpStore.writeManifest(spark, dump, DumpStore.readManifest(spark, dump))
+    val manifest = new String(Files.readAllBytes(java.nio.file.Paths.get(dump, "manifest.jsonl")), "UTF-8")
+    assert(!manifest.contains("\"schema\""))
+    Jdbc.replay(spark, dump, url)
+    payloadRows(dump).foreach { case (t, n) => assert(Jdbc.read(spark, url, t).count() == n, t) }
   }
 
   test("copy + update + deleteTree → live database target") {

@@ -61,6 +61,68 @@ class MainSpec extends SparkSpec {
     }
   }
 
+  test("copy loads parents first and the Derby replay carries the PK and FK constraints") {
+    val dump = Files.createTempDirectory("graft-cli-copy").toString
+    // children named first: the dump still creates and loads parents first
+    Main.main(Array("copy", "--data", sf, "--target", dump, "--tables", "lineitem,orders,customer"))
+    val ops = graft.ops.DumpStore.readManifest(spark, dump)
+    assert(ops.collect { case graft.model.Operation.TableLoad(t, _) => t } == Seq("customer", "orders", "lineitem"))
+    val url = s"jdbc:derby:${Files.createTempDirectory("graft-cli-copy-derby")}/db;create=true"
+    Main.main(Array("replay", "--dump", dump, "--url", url))
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      val md = c.getMetaData
+      def rows(rs: java.sql.ResultSet)(f: java.sql.ResultSet => (String, String)): Set[(String, String)] =
+        try Iterator.continually(rs).takeWhile(_.next()).map(f).toSet finally rs.close()
+      def pks(t: String) = rows(md.getPrimaryKeys(null, null, t))(r => (t, r.getString("COLUMN_NAME")))
+      def fks(t: String) = rows(md.getImportedKeys(null, null, t))(r =>
+        (r.getString("FKCOLUMN_NAME"), s"${r.getString("PKTABLE_NAME")}.${r.getString("PKCOLUMN_NAME")}"))
+      assert(pks("customer") == Set(("customer", "c_custkey")))
+      assert(pks("orders") == Set(("orders", "o_orderkey")))
+      assert(pks("lineitem").isEmpty) // no declared key
+      assert(fks("orders") == Set(("o_custkey", "customer.c_custkey")))
+      // edges to tables outside the copy (part, supplier) are left out
+      assert(fks("lineitem") == Set(("l_orderkey", "orders.o_orderkey")))
+    } finally c.close()
+    Seq("customer", "orders", "lineitem").foreach { t =>
+      assert(Jdbc.read(spark, url, t).count() == load(t).count(), t)
+    }
+  }
+
+  test("copy-tree prints one JSON line per walked level and a summary; rows match the payload footers") {
+    val dump = Files.createTempDirectory("graft-cli-dump").toString
+    val out = new java.io.ByteArrayOutputStream
+    Console.withOut(out) {
+      Main.main(Array("copy-tree", "--data", sf, "--target", dump,
+        "--path", "customer->orders.o_custkey", "--path", "orders->lineitem.l_orderkey",
+        "--root", "customer", "--ids", (1L to 10L).mkString(",")))
+    }
+    val json = new com.fasterxml.jackson.databind.ObjectMapper
+    val lines = new String(out.toByteArray, "UTF-8").split("\n").toSeq
+      .filter(_.startsWith("{")).map(json.readTree)
+    assert(lines.length == 4, lines.mkString("\n"))
+    val (levels, summary) = (lines.init, lines.last)
+    assert(levels.map(_.get("table").asText) == Seq("customer", "orders", "lineitem"))
+    def footerRows(dir: String): Long = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.getPath), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+    }
+    levels.zipWithIndex.foreach { case (l, i) =>
+      val t = l.get("table").asText
+      assert(l.get("rows").asLong == footerRows(s"$dump/payloads/${t}_$i"), t)
+      assert(l.get("keys").asLong > 0 && l.get("keys").asLong <= l.get("rows").asLong, t)
+      assert(l.get("ms").asLong >= 0, t)
+    }
+    assert(levels.head.get("rows").asLong == 10)
+    assert(summary.get("verb").asText == "copy-tree" && summary.get("levels").asInt == 3)
+    assert(summary.get("rows").asLong == levels.map(_.get("rows").asLong).sum)
+    assert(summary.get("keys").asLong == levels.map(_.get("keys").asLong).sum)
+  }
+
   test("ingest-jsonl/export-jsonl round-trip a corpus through argv") {
     val jsonl = Files.createTempDirectory("graft-cli-jsonl").toString
     val pq = Files.createTempDirectory("graft-cli-pq").toString

@@ -976,8 +976,36 @@ class TextAnalysisSpec extends SparkSpec {
       .collect().map(_.toSeq).sortBy(_.toString)
     // threshold 0 forces the shuffle join; the huge default keeps broadcast
     val bc = canon(TextAnalysis.charNgramLangId(d))
-    val sh = canon(TextAnalysis.charNgramLangId(d, maxBroadcastProfileRows = 0L))
+    val sh = canon(TextAnalysis.charNgramLangId(d, maxIndexCells = 0L))
     assert(bc.length > 0 && bc.sameElements(sh))
+  }
+
+  test("charNgramLangIdWith: a narrow-row, wide-index profile takes the join path with the kernel's scores") {
+    val d = spark.read.parquet(s"$sf/documents.parquet")
+    // every n-gram kept for one language only: as many rows as n-grams,
+    // while the kernel's index still holds a slot per n-gram per language
+    val byNg = org.apache.spark.sql.expressions.Window.partitionBy("ng").orderBy("lang_cand")
+    val narrow = TextAnalysis.charNgramProfiles(d)
+      .withColumn("__r", row_number().over(byNg)).filter(col("__r") === 1).drop("__r")
+      .cache()
+    try {
+      val rows = narrow.count()
+      val langs = narrow.select("lang_cand").distinct().count()
+      assert(langs >= 2, s"fixture has $langs languages")
+      def run(max: Long) = TextAnalysis.charNgramLangIdWith(d, narrow, maxIndexCells = max)
+      def kernel(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.optimizedPlan.toString.contains("lang_profile_scores")
+      def canon(df: org.apache.spark.sql.DataFrame) = df
+        .select("doc_id", "lang_true", "lang_pred", "score", "correct")
+        .collect().map(_.toSeq).sortBy(_.toString)
+      // a bound of the profile's row count fits the rows, not the index
+      val joined = run(rows)
+      val indexed = run(rows * langs)
+      assert(!kernel(joined), "a bound below n-grams × languages must take the join path")
+      assert(kernel(indexed), "a bound of n-grams × languages must take the kernel path")
+      val (j, k) = (canon(joined), canon(indexed))
+      assert(j.length > 0 && j.sameElements(k))
+    } finally narrow.unpersist()
   }
 
   test("charNgramLangIdWith: pre-trained profiles reproduce the self-trained output") {

@@ -94,4 +94,17 @@ class TreeWalkSpec extends SparkSpec {
     val n = TreeWalk.selectRows(loader, sel).count() + TreeWalk.antiRows(loader, sel).count()
     assert(n == load("orders").count())
   }
+
+  test("held keys filter a column of another integral type by the keys that fit it") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val big = (1L << 32) + 1
+    val keys = TreeWalk.HeldKeys.ids("k", Seq(1L, -5L, big, 1L << 40))
+    assert(keys.as(IntegerType).values == Set[Any](1, -5))
+    assert(keys.as(IntegerType).as(LongType).values == Set[Any](1L, -5L))
+    // nation's key is an int: a bigint id past the int range equals no row,
+    // where a narrowing cast would have wrapped it onto n_nationkey 1
+    val nation = load("nation")
+    assert(nation.filter(TreeWalk.HeldKeys.ids("n_nationkey", Seq(big)).in(nation, "n_nationkey")).count() == 0)
+    assert(nation.filter(keys.in(nation, "n_nationkey")).select("n_nationkey").collect().map(_.getInt(0)).toSeq == Seq(1))
+  }
 }
