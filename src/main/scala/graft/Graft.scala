@@ -6,23 +6,45 @@ import org.apache.spark.sql.types.StructType
 import graft.catalog.SchemaCatalog
 import graft.model.{Operation, Selection, TableDef}
 import graft.model.Operation._
-import graft.ops.{DumpStore, Jdbc, ObjectDdl, TreeWalk}
+import graft.ops.{DumpStore, Jdbc, LevelWriter, ObjectDdl, PathDsl, TreeWalk}
 
 /** Polymorphic sink for Operations — the reference's `Target`
   * (`Target.java:3-8`): `DumpTarget` serializes ops into a portable
   * dump (≅ `OutputStreamTarget`), `JdbcTarget` executes them against a
   * live database (≅ `ExecuteTarget`). Producers stage bulk payloads
   * through [[writePayload]] so the same op stream works for both.
+  *
+  * [[close]] commits what the target holds; [[abort]] gives it up after
+  * a failed verb. [[Target.committing]] calls the one that fits.
   */
 trait Target extends AutoCloseable {
   def writePayload(name: String, df: DataFrame): String
   def apply(op: Operation): Unit
   def close(): Unit
+  /** Release what the target holds without committing it. */
+  def abort(): Unit = ()
+}
+
+object Target {
+  /** Run `verb` against `target`; commit the target ([[Target.close]])
+    * only if it succeeds, and otherwise [[Target.abort]] it and rethrow.
+    * A failed copy-tree into a dump so leaves no manifest behind, which
+    * would replay its finished levels as if they were the whole tree. */
+  def committing[A](target: Target)(verb: => A): A = {
+    val out = try verb catch {
+      case e: Throwable =>
+        try target.abort() catch { case a: Throwable => e.addSuppressed(a) }
+        throw e
+    }
+    target.close()
+    out
+  }
 }
 
 /** Dump-file target: payloads as parquet, ops accumulated into
   * `manifest.jsonl` on close (single "commit", mirroring the
-  * reference's one-transaction-per-target, `ExecuteTarget.java:26`).
+  * reference's one-transaction-per-target, `ExecuteTarget.java:26`);
+  * an aborted dump has no manifest.
   * The manifest records each payload's schema, so replay reads the
   * payloads without inferring them. */
 class DumpTarget(spark: SparkSession, dumpDir: String) extends Target {
@@ -35,11 +57,13 @@ class DumpTarget(spark: SparkSession, dumpDir: String) extends Target {
   }
   def apply(op: Operation): Unit = ops += op
   def close(): Unit = DumpStore.writeManifest(spark, dumpDir, ops.toSeq, schemas.toMap)
+  /** The ops applied so far, in order. */
+  private[graft] def operations: Seq[Operation] = ops.toSeq
 }
 
 /** Live-database target: ops execute immediately over JDBC; payloads
   * stage in a scratch directory and are read back with the schema they
-  * were written with. */
+  * were written with. Closing or aborting deletes the staging directory. */
 class JdbcTarget(spark: SparkSession, url: String,
                  allowProduction: Boolean = false) extends Target {
   Jdbc.guardProduction(url, allowProduction)
@@ -71,7 +95,8 @@ class JdbcTarget(spark: SparkSession, url: String,
     case SqlList(stmts) => Jdbc.executeSqlList(url, stmts)
     case ConstraintDdl(stmts) => Jdbc.executeSqlList(url, stmts)
   }
-  def close(): Unit = ()
+  def close(): Unit = org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
+  override def abort(): Unit = close()
 }
 
 /** The user-facing API — one verb per closure of the reference's Groovy
@@ -96,36 +121,58 @@ class Graft(spark: SparkSession, dataDir: String,
     * ([[TreeWalk.walkHeld]]), so a level costs one Spark job besides its
     * payload write: its rows (the child filtered by the parent's keys,
     * their range pushed down to Parquet; the id-filtered rows for the
-    * root) are pinned, their distinct keys collected in one job, the
-    * payload written from the pinned rows, and the rows released. One
-    * scan of each walked table. A level's keys are bounded as a
+    * root) are pinned and their distinct keys collected in one job, on
+    * the caller's thread. The level's payload write, the rows' release
+    * and its TableLoad then go to one writer thread per call
+    * ([[graft.ops.LevelWriter]]), while the walk collects the next
+    * level. Every target call runs on that thread, in walk order: a
+    * level's write, then its TableLoad. The walk waits for level i's
+    * write before it hands over level i+1, so at most two levels are
+    * pinned at once (the one being written, the one being collected).
+    * One scan of each walked table. A level's keys are bounded as a
     * `collect()` is, by `spark.driver.maxResultSize`; past it the walk
-    * fails, naming that setting.
+    * fails, naming that setting. The write jobs carry the caller's local
+    * properties (job group, pool). The first failure on either side
+    * ends the call once the other side has drained; it is rethrown, the
+    * other side's failure suppressed, and every pinned level released.
     *
     * Returns one selection per level, its keys as a local DataFrame;
-    * `onLevel` sees each level (table, rows, keys, ms) as it is done. */
+    * `onLevel` sees each level (table, rows, keys, ms) once its keys are
+    * collected and its write handed over; `ms` includes the wait for the
+    * previous level's write. */
   def copyTree(target: Target, paths: Seq[String], rootTable: String,
                rootIds: Seq[Long],
                onLevel: TreeWalk.HeldLevel => Unit = _ => ()): Seq[Selection] =
-    TreeWalk.walkHeld(loader, paths, pks, rootTable, rootIds, onLevel) { (table, pk, rows, i) =>
-      DumpStore.exportRows(target, table, Seq(pk), rows, s"${table}_$i")._2
+    LevelWriter.run(spark) { writer =>
+      TreeWalk.walkHeld(loader, paths, pks, rootTable, rootIds, onLevel) { (table, pk, rows, i) =>
+        DumpStore.exportRows(writer, target, table, Seq(pk), rows, s"${table}_$i")
+      }
     }.map(_.selection(spark))
 
-  /** `deleteTree` (`Main.java:157-169`): the same driver-held walk,
-    * then one DeleteByPk op per level in child-first order, each with a
-    * payload of that level's keys. A level costs one job (its keys) and
+  /** `deleteTree` (`Main.java:157-169`): the same driver-held walk and
+    * writer thread as [[copyTree]]. Each level's keys payload is written
+    * on the writer thread, in walk order, while the walk collects the
+    * next level; once the walk ends, the writer applies one DeleteByPk
+    * op per level, child-first, so replay never deletes a parent row
+    * still referenced by children. A level costs one job (its keys) and
     * pins nothing. */
   def deleteTree(target: Target, paths: Seq[String], rootTable: String,
                  rootIds: Seq[Long],
                  onLevel: TreeWalk.HeldLevel => Unit = _ => ()): Seq[Selection] = {
-    val sels = TreeWalk.walkHeld(loader, paths, pks, rootTable, rootIds, onLevel) { (_, pk, rows, _) =>
-      TreeWalk.collectKeys(rows, Seq(pk))
+    // payloads are numbered child-first, as the ops that read them
+    val last = PathDsl.parseAll(paths, pks).length
+    LevelWriter.run(spark) { writer =>
+      val deletes = scala.collection.mutable.ArrayBuffer.empty[DeleteByPk]
+      val levels = TreeWalk.walkHeld(loader, paths, pks, rootTable, rootIds, onLevel) { (table, pk, rows, i) =>
+        val keys = TreeWalk.collectKeys(rows, Seq(pk))
+        writer.submit {
+          deletes += DeleteByPk(table, pk, target.writePayload(s"del_${table}_${last - i}", keys.toDF(spark)))
+        }
+        keys
+      }
+      writer.submit(deletes.reverseIterator.foreach(target.apply))
+      levels
     }.map(_.selection(spark))
-    sels.reverse.zipWithIndex.foreach { case (sel, i) =>
-      val payload = target.writePayload(s"del_${sel.table}_$i", sel.keys)
-      target.apply(DeleteByPk(sel.table, sel.column, payload))
-    }
-    sels
   }
 
   /** `copy` / full-schema export: DDL then data per table, in `order`

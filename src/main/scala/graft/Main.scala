@@ -28,7 +28,9 @@ import org.apache.spark.sql.SparkSession
   * `copy-tree` and `delete-tree` print one JSON line per walked level,
   * `{"table","rows","keys","ms"}`, then a summary line with the verb and
   * the totals; `copy` loads tables parents first and emits the
-  * catalog's PK/FK constraints after the data.
+  * catalog's PK/FK constraints after the data. A verb that fails
+  * commits nothing: a dump target gets no `manifest.jsonl`, and a JDBC
+  * target's staging directory is deleted either way.
   *
   * Writes against a production-looking JDBC URL require
   * `--allow-production true` (the reference's guard,
@@ -145,16 +147,16 @@ object Main {
       if (t.startsWith("jdbc:")) g.dbTarget(t, allowProd) else g.fileTarget(t)
 
     // the level lines come from the counts the walk already holds;
-    // table names are escaped as the manifest's are
+    // table names are escaped as the manifest's are. Every verb commits
+    // its target only on success: a failed one leaves no manifest.
     def walk(name: String)(verb: (Graft, Target, ops.TreeWalk.HeldLevel => Unit) => Unit): Unit = {
       val g = graft(); val t = target(g, one("target"))
       var (levels, rows, keys) = (0, 0L, 0L)
       val t0 = System.nanoTime()
-      try verb(g, t, { l =>
+      Target.committing(t)(verb(g, t, { l =>
         println(s"""{"table":${ops.DumpStore.esc(l.table)},"rows":${l.keys.rows},"keys":${l.keys.size},"ms":${l.ms}}""")
         levels += 1; rows += l.keys.rows; keys += l.keys.size
-      })
-      finally t.close()
+      }))
       println(s"""{"verb":${ops.DumpStore.esc(name)},"levels":$levels,"rows":$rows,"keys":$keys,""" +
         s""""ms":${(System.nanoTime() - t0) / 1000000}}""")
     }
@@ -173,14 +175,12 @@ object Main {
         val t = target(g, one("target"))
         val tables = f("tables").flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
         val edges = catalog.SchemaCatalog.starEdges
-        try g.copy(t, tables, ops.TopoSort.sort(tables, edges), edges)
-        finally t.close()
+        Target.committing(t)(g.copy(t, tables, ops.TopoSort.sort(tables, edges), edges))
       case "update" =>
         // upsert a parquet delta into a table by pk (the reference's
         // `update` script closure, Main.java:181-191)
         val g = graft(); val t = target(g, one("target"))
-        try g.update(t, one("table"), spark.read.parquet(one("delta")), one("pk"))
-        finally t.close()
+        Target.committing(t)(g.update(t, one("table"), spark.read.parquet(one("delta")), one("pk")))
       case "replay" =>
         ops.Jdbc.replay(spark, one("dump"), one("url"), allowProd)
       case "ingest-jsonl" =>
@@ -786,9 +786,8 @@ object Main {
       case "other-objects" =>
         val g = new Graft(spark, f("data").headOption.getOrElse("."))
         val t = target(g, one("target"))
-        try g.copyOtherObjects(t, one("source-url"),
-          srcSchema = f("src-schema").headOption)
-        finally t.close()
+        Target.committing(t)(g.copyOtherObjects(t, one("source-url"),
+          srcSchema = f("src-schema").headOption))
       case other => sys.error(s"unknown verb '$other'\n$usageText")
     }
     // no spark.stop(): the session may be shared (tests, notebooks);

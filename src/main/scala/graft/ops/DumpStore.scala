@@ -112,7 +112,8 @@ object DumpStore {
 
   /** Keyed export of tree-walk selections (the reference's
     * `copySelections`, `CopyUtils.java:33-47`) into a dump: one
-    * [[exportRows]] per selection, in walk order, then the manifest.
+    * [[exportRows]] per selection, in walk order, through one
+    * [[LevelWriter]], then the manifest.
     * The cardinality invariant — rows exported must cover the keys
     * selected (`CopyUtils.java:44-46`) — compares the selection's key
     * count with the distinct keys of its pinned rows, before any bytes
@@ -125,37 +126,48 @@ object DumpStore {
       selections: Seq[Selection],
       dumpDir: String): Seq[Operation] = {
     val target = new DumpTarget(spark, dumpDir)
-    val ops = selections.zipWithIndex.map { case (sel, i) =>
-      exportRows(target, sel.table, sel.columns, sel.rows, s"${sel.table}_$i", Some {
-        if (sel.keys.storageLevel == StorageLevel.NONE) sel.keys.persist(StorageLevel.MEMORY_AND_DISK)
-        partitionCount(sel.keys)
-      })._1
+    LevelWriter.run(spark) { writer =>
+      selections.zipWithIndex.foreach { case (sel, i) =>
+        exportRows(writer, target, sel.table, sel.columns, sel.rows, s"${sel.table}_$i", Some {
+          if (sel.keys.storageLevel == StorageLevel.NONE) sel.keys.persist(StorageLevel.MEMORY_AND_DISK)
+          partitionCount(sel.keys)
+        })
+      }
     }
     target.close()
-    ops
+    target.operations
   }
 
   /** Export one level's rows: pin them, collect their distinct keys in
-    * one job ([[TreeWalk.collectKeys]]), check the invariant on
-    * the driver against `selectedKeys` (evaluated once the rows are
-    * pinned, so a key frame over them reads them pinned), write the
-    * payload from the pinned rows, and unpersist them. One scan of the
-    * level's table. Returns the load op and the collected keys. */
-  private[graft] def exportRows(target: Target, table: String, columns: Seq[String],
-                                rows: DataFrame, name: String,
-                                selectedKeys: => Option[Long] = None): (Operation, TreeWalk.HeldKeys) = {
+    * one job ([[TreeWalk.collectKeys]]) and check the invariant on the
+    * driver against `selectedKeys` (evaluated once the rows are pinned,
+    * so a key frame over them reads them pinned). Then hand the rest to
+    * `writer`'s thread, which writes the payload from the pinned rows,
+    * unpersists them and applies the level's TableLoad. The hand-over
+    * first waits for the previous level's write, so this level's
+    * collect overlaps it and at most two levels are pinned. One scan of
+    * the level's table. Returns the collected keys. */
+  private[graft] def exportRows(writer: LevelWriter, target: Target, table: String,
+                                columns: Seq[String], rows: DataFrame, name: String,
+                                selectedKeys: => Option[Long] = None): TreeWalk.HeldKeys = {
     rows.persist(StorageLevel.MEMORY_AND_DISK)
-    val (payload, keys) = try {
+    try {
       val selected = selectedKeys
       val keys = TreeWalk.collectKeys(rows, columns)
       selected.filter(_ != keys.size).foreach { n =>
         sys.error(s"Only ${keys.size} of $n keys copied for $table — cardinality invariant violated")
       }
-      (target.writePayload(name, rows), keys)
-    } finally rows.unpersist(blocking = false)
-    val op = TableLoad(table, payload)
-    target.apply(op)
-    (op, keys)
+      writer.submit {
+        val payload = try target.writePayload(name, rows) finally rows.unpersist(blocking = false)
+        target.apply(TableLoad(table, payload))
+      }
+      keys
+    } catch {
+      // not handed over: the walk still holds the level
+      case e: Throwable =>
+        rows.unpersist(blocking = false)
+        throw e
+    }
   }
 
   /** Rows of `df`, summed over its partitions: one job, without the

@@ -30,7 +30,11 @@ import graft.model.{FkEdge, Selection}
   * the rows' distinct keys in one job ([[collectKeys]]), and the next
   * level filters on them. A level's keys are bounded as a `collect()`
   * is, by `spark.driver.maxResultSize`; a walk past it fails loudly,
-  * naming the setting to raise.
+  * naming the setting to raise. The walk and its key collects run on
+  * the caller's thread; the verbs' visitors hand each level's payload
+  * write to a [[LevelWriter]] thread, in walk order, and go on to the
+  * next level while it runs. The hand-over waits for the previous
+  * level's write, so at most two levels are pinned at once.
   *
   * The lazy walk, [[walkLinked]] and [[selectAlongPath]], is for query
   * composition: each step is a single `left_semi` join, child ⋉
@@ -320,7 +324,8 @@ object TreeWalk {
 
   /** One level of [[walkHeld]]: the table, its key column, its rows (as
     * handed to the visitor), the keys the visitor collected from them,
-    * and the visit's wall time. */
+    * and the visit's wall time (for the verbs: the key collect plus the
+    * wait for the previous level's write, not the level's own write). */
   final case class HeldLevel(table: String, column: String, rows: DataFrame, keys: HeldKeys, ms: Long) {
     def selection(spark: SparkSession): Selection = Selection(table, Seq(column), keys.toDF(spark), rows)
   }
@@ -372,7 +377,9 @@ object TreeWalk {
     * on the driver. `visit(table, keyColumn, rows, level)` handles one
     * level's rows and returns their keys, which the next level filters
     * on; a table reached twice filters on the union of its key sets.
-    * `onLevel` sees each level as soon as it is visited. */
+    * `onLevel` sees each level as soon as it is visited. Everything here
+    * runs on the caller's thread; a visitor that hands work to a
+    * [[LevelWriter]] returns before that work is done. */
   def walkHeld(
       loader: String => DataFrame,
       paths: Seq[String],

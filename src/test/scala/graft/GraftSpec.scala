@@ -10,7 +10,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.model.Operation
 import graft.model.Operation._
 import graft.catalog.SchemaCatalog
-import graft.ops.{DumpStore, Jdbc, TreeWalk}
+import graft.ops.{DumpStore, Jdbc, LevelWriter, TreeWalk}
 
 /** End-to-end tests of the user-facing DSL facade: the reference's
   * script verbs against both target kinds. */
@@ -235,6 +235,130 @@ class GraftSpec extends SparkSpec {
     assert(e.getMessage.contains("spark.driver.maxResultSize"), e.getMessage)
     assert(done.result() == Seq("customer"), "the walk must stop at the orders level")
     assert(walk().map(_.table) == Seq("customer", "orders"), "within the setting the walk completes")
+  }
+
+  /** Each manifest line of a dump: kind, table, pk, payload and the
+    * payload's recorded schema. */
+  private def manifestLines(dump: String): Seq[(String, String, String, String, Option[String])] = {
+    val (ops, schemas) = DumpStore.readEntries(spark, dump)
+    ops.map {
+      case TableLoad(t, p) => ("table_load", t, "", p, schemas.get(p).map(_.json))
+      case DeleteByPk(t, pk, p) => ("delete_by_pk", t, pk, p, schemas.get(p).map(_.json))
+      case op => sys.error(s"unexpected op $op")
+    }
+  }
+
+  test("copyTree and deleteTree write the ops, order, schemas and payload digests of the sequential walk") {
+    // nation → customer/supplier → orders → lineitem reaches lineitem
+    // twice; the payload names number the levels as the sequential verbs
+    // did: walk order for copy-tree, child-first for delete-tree
+    val (_, paths, root, ids) = treeCases.last
+    val tables = Seq("nation", "customer", "supplier", "orders", "lineitem", "lineitem")
+    val pks = SchemaCatalog.walkPks
+    val lazySels = TreeWalk.selectAlongPath(spark, load, paths, pks, root, ids)
+    try {
+      val copyDump = Files.createTempDirectory("graft-dump").toString
+      val copyTarget = g0.fileTarget(copyDump)
+      g0.copyTree(copyTarget, paths, root, ids)
+      copyTarget.close()
+      assert(manifestLines(copyDump) == tables.zipWithIndex.map { case (t, i) =>
+        ("table_load", t, "", s"payloads/${t}_$i", Some(load(t).schema.toNullable.json))
+      })
+      lazySels.zipWithIndex.foreach { case (sel, i) =>
+        assert(digest(spark.read.parquet(s"$copyDump/payloads/${sel.table}_$i")) == digest(sel.rows), s"copy level $i")
+      }
+
+      val delDump = Files.createTempDirectory("graft-dump").toString
+      val delTarget = g0.fileTarget(delDump)
+      g0.deleteTree(delTarget, paths, root, ids)
+      delTarget.close()
+      assert(manifestLines(delDump) == tables.reverse.zipWithIndex.map { case (t, i) =>
+        val pk = pks(t)
+        ("delete_by_pk", t, pk, s"payloads/del_${t}_$i",
+          Some(org.apache.spark.sql.types.StructType(Seq(load(t).schema(pk))).toNullable.json))
+      })
+      lazySels.reverse.zipWithIndex.foreach { case (sel, i) =>
+        assert(digest(spark.read.parquet(s"$delDump/payloads/del_${sel.table}_$i")) == digest(sel.keys),
+          s"delete level ${tables.length - 1 - i}")
+      }
+    } finally TreeWalk.release(lazySels)
+  }
+
+  test("a payload write that fails at level 1 ends copyTree: rethrown, nothing left pinned, no later op, no writer thread") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val applied = scala.collection.mutable.ArrayBuffer.empty[Operation]
+    val boom = new IllegalStateException("payload store is full")
+    val inner = g0.fileTarget(Files.createTempDirectory("graft-dump").toString)
+    val target = new Target {
+      def writePayload(name: String, df: DataFrame): String =
+        if (name == "orders_1") throw boom else inner.writePayload(name, df)
+      def apply(op: Operation): Unit = applied += op
+      def close(): Unit = inner.close()
+    }
+    val e = intercept[IllegalStateException] {
+      g0.copyTree(target, Seq("customer->orders.o_custkey", "orders->lineitem.l_orderkey"), "customer", 1L to 10L)
+    }
+    assert(e eq boom)
+    assert(sc.getPersistentRDDs.keySet -- before == Set.empty, "a pinned level outlived the failed call")
+    assert(applied.toSeq == Seq(TableLoad("customer", "payloads/customer_0")))
+    val writers = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName == LevelWriter.ThreadName && t.isAlive)
+    assert(writers.isEmpty, s"${writers.length} writer threads alive")
+  }
+
+  test("copyTree pins at most two levels at once: a level's hand-over waits for the previous write") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val inner = g0.fileTarget(Files.createTempDirectory("graft-dump").toString)
+    val target = new Target {
+      def writePayload(name: String, df: DataFrame): String = {
+        // a slow first write: the walk runs ahead as far as it may
+        if (name == "customer_0") Thread.sleep(1500)
+        pinned += (sc.getPersistentRDDs.keySet -- before).size
+        inner.writePayload(name, df)
+      }
+      def apply(op: Operation): Unit = inner.apply(op)
+      def close(): Unit = inner.close()
+    }
+    g0.copyTree(target, Seq("customer->orders.o_custkey", "orders->lineitem.l_orderkey"), "customer", 1L to 10L)
+    assert(pinned.length == 3)
+    assert(pinned.max <= 2, s"levels pinned at each write: ${pinned.mkString(", ")}")
+  }
+
+  test("the payload writes carry the caller's job group") {
+    val sc = spark.sparkContext
+    val group = "graft-spec-copy-tree"
+    val writeGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val writeThreads = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val phase = "graft.spec.phase"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(phase) == "write"))
+          writeGroups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val inner = g0.fileTarget(Files.createTempDirectory("graft-dump").toString)
+    val target = new Target {
+      def writePayload(name: String, df: DataFrame): String = {
+        writeThreads.add(Thread.currentThread.getName)
+        sc.setLocalProperty(phase, "write")
+        try inner.writePayload(name, df) finally sc.setLocalProperty(phase, null)
+      }
+      def apply(op: Operation): Unit = inner.apply(op)
+      def close(): Unit = inner.close()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "copy-tree under a caller's job group")
+      try g0.copyTree(target, Seq("customer->orders.o_custkey", "orders->lineitem.l_orderkey"), "customer", 1L to 10L)
+      finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(writeThreads.toArray.toSeq == Seq.fill(3)(LevelWriter.ThreadName))
+    assert(!writeGroups.isEmpty, "no write job seen")
+    assert(writeGroups.toArray.forall(_ == group), s"write jobs in groups ${writeGroups.toArray.distinct.mkString(", ")}")
   }
 
   /** A three-level copy-tree dump and a Derby database with its tables. */

@@ -47,6 +47,32 @@ class MainSpec extends SparkSpec {
     assert(Jdbc.read(spark, url, "orders").count() == expectOrders)
   }
 
+  test("a copy-tree that fails part-way leaves no manifest behind, and a JDBC target no staging directory") {
+    // orders is walked and written before the walk reaches a table the
+    // catalog has no key for; a manifest of the finished levels would
+    // replay as if it were the whole tree
+    val dump = Files.createTempDirectory("graft-cli-dump").toString
+    val e = intercept[RuntimeException](Main.main(Array("copy-tree",
+      "--data", sf, "--target", dump,
+      "--path", "customer->orders.o_custkey", "--path", "orders->nosuch.x",
+      "--root", "customer", "--ids", "1,2,3")))
+    assert(e.getMessage.contains("nosuch"), e.getMessage)
+    assert(!new java.io.File(s"$dump/manifest.jsonl").exists(), "a failed copy-tree committed its manifest")
+
+    // a JDBC target's staging directory is deleted whether the verb fails or not
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def staging(): Set[String] = tmp.listFiles().map(_.getName).filter(_.startsWith("graft-staging")).toSet
+    val before = staging()
+    val url = s"jdbc:derby:${Files.createTempDirectory("graft-cli-derby")}/db;create=true"
+    Jdbc.executeSqlList(url, Seq("customer", "orders").map(t => Jdbc.ddlFor(t, load(t).schema)))
+    def copyTree(paths: String*): Unit = Main.main(Array("copy-tree", "--data", sf, "--target", url,
+      "--root", "customer", "--ids", "1,2,3") ++ paths.flatMap(p => Seq("--path", p)))
+    intercept[RuntimeException](copyTree("customer->orders.o_custkey", "orders->nosuch.x"))
+    assert(staging() == before, "a failed copy-tree left its staging directory")
+    copyTree("customer->orders.o_custkey")
+    assert(staging() == before, "a copy-tree left its staging directory")
+  }
+
   test("copy of customer, orders and lineitem → dump dir → replay onto Derby") {
     val dump = Files.createTempDirectory("graft-cli-copy").toString
     val tables = Seq("customer", "orders", "lineitem")
