@@ -1466,8 +1466,9 @@ object Multimodal {
     graft.functions.PngMeta(payload, maxText)
 
   /** ORC bloom-filter membership probe — BLOOM_FILTER_UTF8 index
-    * streams tested with ORC's own Murmur3-64 double hashing; null
-    * when the column has no bloom ([[graft.functions.OrcBloomCheck]]). */
+    * streams read and tested by orc-core (`OrcProto.BloomFilterIndex`,
+    * `BloomFilterUtf8` with its Murmur3-64); null when the column has
+    * no bloom ([[graft.functions.OrcBloomCheck]]). */
   def orcBloomMightContain(payload: Column, colName: String,
                            probe: Column): Column =
     graft.functions.OrcBloom.mightContain(payload, colName, probe)
@@ -1548,17 +1549,17 @@ object Multimodal {
   /** ORC tail metadata — the third leg of the lake-census trio:
     * compression codec, writer version, exact row count, stripe
     * count, content length and the root struct's top-level columns
-    * with ORC type-kind names, via the protobuf postscript/footer
-    * walk in [[graft.functions.OrcFooterMeta]] (NONE/ZLIB/SNAPPY/LZ4
-    * footers decode; the remaining codecs yield postscript facts
+    * with ORC type-kind names, from orc-core's postscript and footer
+    * messages in [[graft.functions.OrcFooterMeta]] (none, zlib,
+    * snappy, lz4 and zstd footers decode; lzo yields postscript facts
     * with null footer fields). */
   def orcMeta(payload: Column, maxFooter: Int = 1 << 24): Column =
     graft.functions.OrcFooterMeta(payload, maxFooter)
 
   /** ORC DATA decode — sample a top-level column's real values out
     * of raw file bytes, no reader stack: stripe 0's streams through
-    * the full RLEv2 reader (all four sub-formats), byte/boolean RLE,
-    * IEEE lanes, DIRECT_V2 + DICTIONARY_V2 strings, PRESENT-stream
+    * orc-core's decoders (RLEv2 integers, byte and bit-field runs,
+    * IEEE lanes), DIRECT_V2 + DICTIONARY_V2 strings, PRESENT-stream
     * nulls, every decodable codec
     * ([[graft.functions.OrcColumnValues]]) — the parquet sibling of
     * [[parquetPageValues]]. */
@@ -1616,9 +1617,9 @@ object Multimodal {
     graft.functions.ArrowFooterMeta(payload, maxColumns)
 
   /** ORC per-stripe census — offset/index/data/footer lengths and
-    * EXACT rows per stripe off the footer's StripeInformation
-    * messages ([[graft.functions.OrcStripeStats]]): the split-planner
-    * and skew-audit numbers, no stripe data touched. */
+    * EXACT rows per stripe off the footer's orc-core
+    * `StripeInformation` messages ([[graft.functions.OrcStripeStats]]):
+    * the split-planner and skew-audit numbers, no stripe data touched. */
   def orcStripes(payload: Column, maxFooter: Int = 1 << 24): Column =
     graft.functions.OrcStripeStats(payload, maxFooter)
 

@@ -14,9 +14,8 @@ import org.apache.commons.compress.compressors.snappy.SnappyCompressorInputStrea
   * block, or output past the cap returns null rather than partial
   * bytes. LZ4 sequences are walked first ([[lz4Length]]) for the two
   * shapes the library accepts: a stray trailing byte and a match offset
-  * before the start of the output. Used by [[OrcFooterMeta]] (one raw block per ORC chunk),
-  * [[AvroRecordsJson]] and [[ParquetPageValues]]; standalone use
-  * follows the same contract. */
+  * before the start of the output. Used by [[AvroRecordsJson]] and
+  * [[ParquetPageValues]]; standalone use follows the same contract. */
 object BlockCodecs {
 
   /** Snappy's back-reference reach: the reference encoder matches

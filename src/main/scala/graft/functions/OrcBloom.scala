@@ -6,26 +6,22 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import OrcFooterMeta.{Bad, Pb, inflateChunks}
-
 /** ORC BLOOM-FILTER membership probe — the parquet sibling (q372)
   * for the other columnar major: `BLOOM_FILTER_UTF8` index streams
-  * (kind 9) hold one bloom per ROW GROUP; a point predicate that
-  * misses every row group's bloom skips the stripe without touching
-  * a data stream. The probe walks EVERY stripe: stripe footer →
-  * stream layout → the column's bloom stream inside the index
-  * region, decompressed through the same chunk framing the footer
-  * uses, protobuf `BloomFilterIndex` decoded, and the answer is the
-  * OR across all row-group blooms — exactly the planner's
-  * can-this-file-contain-the-key question.
+  * (`OrcProto.Stream.Kind` 8) hold one bloom per ROW GROUP; a point
+  * predicate that misses every row group's bloom skips the stripe
+  * without touching a data stream. The probe walks the stripes (at
+  * most the first 64): stripe footer → the column's bloom stream inside
+  * the stripe → orc-core's `OrcProto.BloomFilterIndex`, all read through
+  * [[OrcProtos]] with the file's codec; the answer is the OR across all
+  * row-group blooms — exactly the planner's can-this-file-contain-the-key
+  * question.
   *
-  * The hash is Apache ORC's own published variant: 64-bit Murmur3
-  * (8-byte-block x64 flavor, seed 104729) over the UTF-8 bytes, then
-  * Kirsch–Mitzenmacher double hashing `hash1 + i·hash2` with the
-  * ORC sign-fold, `i in 1..numHashFunctions`. A wrong constant
-  * anywhere and the in-suite cross-check against files written by
-  * Spark's OWN ORC writer could not return true for every written
-  * value.
+  * Each bloom is probed by orc-core's `BloomFilterUtf8` over the
+  * `utf8bitset` as little-endian longs: `testBytes` hashes the UTF-8
+  * bytes with orc-core's `Murmur3.hash64` (seed 104729) and tests
+  * `hash1 + i·hash2`, `i in 1..numHashFunctions` — the writer's own
+  * code, checked in-suite against files Spark's ORC writer produces.
   *
   * Null when the file is malformed or the column has no bloom
   * stream — absence of an index is never a guessed `false`.
@@ -70,279 +66,51 @@ case class OrcBloomCheck(left: Expression, right: Expression,
 }
 
 object OrcBloom {
-
-  /** Apache ORC's Murmur3 hash64 (the Hive 8-byte-block x64 variant,
-    * DEFAULT_SEED = 104729) — from the published algorithm. */
-  private[functions] def murmur3Hash64(data: Array[Byte]): Long = {
-    val C1 = 0x87c37b91114253d5L
-    val C2 = 0x4cf5ad432745937fL
-    val R1 = 31
-    val R2 = 27
-    val M = 5L
-    val N1 = 0x52dce729L
-    var hash = 104729L
-    val nBlocks = data.length / 8
-    var i = 0
-    while (i < nBlocks) {
-      val p = i * 8
-      var k = (data(p) & 0xffL) | ((data(p + 1) & 0xffL) << 8) |
-        ((data(p + 2) & 0xffL) << 16) | ((data(p + 3) & 0xffL) << 24) |
-        ((data(p + 4) & 0xffL) << 32) | ((data(p + 5) & 0xffL) << 40) |
-        ((data(p + 6) & 0xffL) << 48) | ((data(p + 7) & 0xffL) << 56)
-      k *= C1
-      k = java.lang.Long.rotateLeft(k, R1)
-      k *= C2
-      hash ^= k
-      hash = java.lang.Long.rotateLeft(hash, R2) * M + N1
-      i += 1
-    }
-    var k1 = 0L
-    val tail = nBlocks * 8
-    var j = data.length - 1
-    while (j >= tail) {
-      k1 ^= (data(j) & 0xffL) << ((j - tail) * 8)
-      j -= 1
-    }
-    if (data.length > tail) {
-      k1 *= C1
-      k1 = java.lang.Long.rotateLeft(k1, R1)
-      k1 *= C2
-      hash ^= k1
-    }
-    hash ^= data.length.toLong
-    hash ^= hash >>> 33
-    hash *= 0xff51afd7ed558ccdL
-    hash ^= hash >>> 33
-    hash *= 0xc4ceb9fe1a85ec53L
-    hash ^= hash >>> 33
-    hash
-  }
-
-  /** One bloom's membership test: bitset of little-endian longs. */
-  private def bloomHit(bitset: Array[Byte], numHash: Int,
-                       h64: Long): Boolean = {
-    val numBits = bitset.length.toLong * 8
-    if (numBits <= 0 || numHash <= 0 || numHash > 64) throw Bad
-    val hash1 = h64.toInt
-    val hash2 = (h64 >>> 32).toInt
-    var i = 1
-    while (i <= numHash) {
-      var combined = hash1 + i * hash2
-      if (combined < 0) combined = ~combined
-      val pos = (combined.toLong % numBits).toInt
-      // longs are little-endian in utf8bitset: long j = bytes
-      // [8j, 8j+8) LE; bit (pos & 63) of long (pos >> 6)
-      val byteIdx = (pos >> 6) * 8 + ((pos & 63) >> 3)
-      val bit = pos & 7
-      if (((bitset(byteIdx) >> bit) & 1) == 0) return false
-      i += 1
-    }
-    true
-  }
-
-  private final val BloomFilterUtf8Kind = 8
+  import org.apache.orc.OrcProto
+  import org.apache.orc.util.BloomFilterUtf8
+  import OrcProtos.Bad
 
   /** Per-row probe kernel — public static for generated code. */
   def check(bytes: Array[Byte], column: String,
-            probe: Array[Byte]): java.lang.Boolean = {
-    try {
-      val n = bytes.length
-      if (n < 16 || column == null) return null
-      if (bytes(0) != 'O' || bytes(1) != 'R' || bytes(2) != 'C') return null
-      val psLen = bytes(n - 1) & 0xff
-      if (psLen < 4 || n - 1 - psLen < 3) return null
-      var footerLen = -1L
-      var codec = 0
-      locally {
-        val ps = new Pb(bytes, n - 1 - psLen, n - 1)
-        while (ps.hasMore) {
-          val (f, w) = ps.tag()
-          (f, w) match {
-            case (1, 0) => footerLen = ps.varint()
-            case (2, 0) => codec = ps.varint().toInt
-            case _ => ps.skip(w)
-          }
-        }
-      }
-      if (footerLen <= 0 || codec == 3) return null // lzo: refuse
-      def chunks(start: Int, end: Int, maxOut: Int): Array[Byte] = {
-        if (start < 0 || end > n || start >= end) throw Bad
-        if (codec == 0) {
-          if (end - start > maxOut) throw Bad
-          java.util.Arrays.copyOfRange(bytes, start, end)
-        } else inflateChunks(bytes, start, end, maxOut, codec)
-      }
-      val fEnd = n - 1 - psLen
-      val fStart = fEnd - footerLen.toInt
-      if (fStart < 3) return null
-      val footer = chunks(fStart, fEnd, 1 << 24)
-      // footer: ALL stripes (3), root type (4) for the column id
-      final case class Stripe(off: Long, idxLen: Long, dataLen: Long,
-                              footLen: Long)
-      val stripes = new scala.collection.mutable.ArrayBuffer[Stripe]
-      var colId = -1
-      locally {
-        val fb = new Pb(footer, 0, footer.length)
-        var typeIdx = 0
-        var rootSubtypes: Array[Int] = null
-        var rootNames: java.util.ArrayList[String] = null
-        while (fb.hasMore) {
-          val (f, w) = fb.tag()
-          (f, w) match {
-            case (3, 2) if stripes.size < 64 =>
-              val len = fb.varint().toInt
-              val end = fb.pos + len
-              if (len < 0 || end > footer.length) throw Bad
-              val sp = new Pb(footer, fb.pos, end)
-              fb.pos = end
-              var off = -1L
-              var il = 0L
-              var dl = 0L
-              var fl = -1L
-              while (sp.hasMore) {
-                val (sf, sw) = sp.tag()
-                (sf, sw) match {
-                  case (1, 0) => off = sp.varint()
-                  case (2, 0) => il = sp.varint()
-                  case (3, 0) => dl = sp.varint()
-                  case (4, 0) => fl = sp.varint()
-                  case _ => sp.skip(sw)
-                }
-              }
-              if (off < 0 || fl <= 0) throw Bad
-              stripes += Stripe(off, il, dl, fl)
-            case (4, 2) =>
-              val len = fb.varint().toInt
-              val end = fb.pos + len
-              if (len < 0 || end > footer.length) throw Bad
-              val tp = new Pb(footer, fb.pos, end)
-              fb.pos = end
-              var kind = 0
-              val subs = new java.util.ArrayList[Integer]()
-              val names = new java.util.ArrayList[String]()
-              while (tp.hasMore) {
-                val (tf, tw) = tp.tag()
-                (tf, tw) match {
-                  case (1, 0) => kind = tp.varint().toInt
-                  case (2, 0) => subs.add(tp.varint().toInt)
-                  case (2, 2) =>
-                    val l2 = tp.varint().toInt
-                    val e2 = tp.pos + l2
-                    if (l2 < 0 || e2 > footer.length) throw Bad
-                    while (tp.pos < e2) subs.add(tp.varint().toInt)
-                  case (3, 2) =>
-                    val (s2, e2) = tp.lenDelimited()
-                    names.add(tp.string(s2, e2))
-                  case _ => tp.skip(tw)
-                }
-              }
-              if (typeIdx == 0) {
-                if (kind != 12) throw Bad
-                rootSubtypes = Array.tabulate(subs.size())(subs.get(_).toInt)
-                rootNames = names
-              }
-              typeIdx += 1
-            case _ => fb.skip(w)
-          }
-        }
-        if (rootSubtypes == null || rootNames == null) throw Bad
-        var i = 0
-        while (i < rootNames.size() && colId < 0) {
-          if (rootNames.get(i) == column && i < rootSubtypes.length)
-            colId = rootSubtypes(i)
-          i += 1
-        }
-      }
-      if (colId < 0 || stripes.isEmpty) return null
-      val h64 = murmur3Hash64(probe)
+            probe: Array[Byte]): java.lang.Boolean =
+    OrcProtos.read[java.lang.Boolean](bytes) { f =>
+      if (column == null) throw Bad
+      val footer = f.footer(1 << 24)
+      val stripes = footer.getStripesList.subList(0,
+        math.min(64, footer.getStripesCount))
+      stripes.forEach(s => if (!s.hasOffset || s.getFooterLength <= 0) throw Bad)
+      val colId = OrcProtos.columnId(footer, column)
+      if (colId < 0 || stripes.isEmpty) throw Bad
       var any = false
       var found = false
-      for (st <- stripes if !found) {
-        // stripe footer → this column's bloom stream inside the
-        // index region (streams in declared order carry offsets)
-        val sfStart = (st.off + st.idxLen + st.dataLen).toInt
-        val sfEnd = sfStart + st.footLen.toInt
-        if (sfStart < 0 || sfEnd > n) throw Bad
-        val sfooter = chunks(sfStart, sfEnd, 1 << 24)
-        var bloomAt = -1L
-        var bloomLen = -1L
-        locally {
-          val sb = new Pb(sfooter, 0, sfooter.length)
-          var streamOff = st.off
-          while (sb.hasMore) {
-            val (f, w) = sb.tag()
-            (f, w) match {
-              case (1, 2) =>
-                val len = sb.varint().toInt
-                val end = sb.pos + len
-                if (len < 0 || end > sfooter.length) throw Bad
-                val s2 = new Pb(sfooter, sb.pos, end)
-                sb.pos = end
-                var kind = 0
-                var scol = -1
-                var slen = 0L
-                while (s2.hasMore) {
-                  val (sf2, sw2) = s2.tag()
-                  (sf2, sw2) match {
-                    case (1, 0) => kind = s2.varint().toInt
-                    case (2, 0) => scol = s2.varint().toInt
-                    case (3, 0) => slen = s2.varint()
-                    case _ => s2.skip(sw2)
-                  }
-                }
-                if (scol == colId && kind == BloomFilterUtf8Kind) {
-                  bloomAt = streamOff
-                  bloomLen = slen
-                }
-                streamOff += slen
-              case _ => sb.skip(w)
+      val it = stripes.iterator
+      while (it.hasNext && !found) {
+        val s = it.next()
+        val (at, len) = f.streamAt(s, f.stripeFooter(s), colId,
+          OrcProto.Stream.Kind.BLOOM_FILTER_UTF8_VALUE)
+        if (at >= 0 && len > 0) {
+          val blooms = f.parse(OrcProto.BloomFilterIndex.parser, at, len,
+            1 << 24).getBloomFilterList.iterator
+          while (blooms.hasNext && !found) {
+            val b = blooms.next()
+            val k = if (b.hasNumHashFunctions) b.getNumHashFunctions else -1
+            val bits = b.getUtf8Bitset
+            if (k > 0 && !bits.isEmpty) {
+              any = true
+              if (bits.size % 8 == 0) {
+                if (k > 64) throw Bad
+                val longs = new Array[Long](bits.size / 8)
+                bits.asReadOnlyByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+                  .asLongBuffer.get(longs)
+                found = new BloomFilterUtf8(longs, k)
+                  .testBytes(probe, 0, probe.length)
+              }
             }
-          }
-        }
-        if (bloomAt >= 0 && bloomLen > 0) {
-          val idx = chunks(bloomAt.toInt, (bloomAt + bloomLen).toInt,
-            1 << 24)
-          // BloomFilterIndex { repeated BloomFilter bloomFilter = 1 }
-          val bi = new Pb(idx, 0, idx.length)
-          while (bi.hasMore && !found) {
-            val (f, w) = bi.tag()
-            if (f == 1 && w == 2) {
-              val len = bi.varint().toInt
-              val end = bi.pos + len
-              if (len < 0 || end > idx.length) throw Bad
-              val bf = new Pb(idx, bi.pos, end)
-              bi.pos = end
-              var numHash = -1
-              var bsStart = -1
-              var bsEnd = -1
-              while (bf.hasMore) {
-                val (bf2, bw2) = bf.tag()
-                (bf2, bw2) match {
-                  case (1, 0) => numHash = bf.varint().toInt
-                  case (3, 2) =>
-                    val (s3, e3) = bf.lenDelimited()
-                    bsStart = s3
-                    bsEnd = e3
-                  case _ => bf.skip(bw2)
-                }
-              }
-              if (numHash > 0 && bsStart >= 0 && bsEnd > bsStart) {
-                any = true
-                val bitset = java.util.Arrays.copyOfRange(idx, bsStart,
-                  bsEnd)
-                if (bitset.length % 8 == 0 &&
-                  bloomHit(bitset, numHash, h64)) found = true
-              }
-            } else bi.skip(w)
           }
         }
       }
       if (!any) null else java.lang.Boolean.valueOf(found)
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
     }
-  }
 
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.graftshim.ColumnShim

@@ -11,12 +11,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** ORC file-level COLUMN statistics — the pruning/NULL-rate census
   * [[graft.functions.ParquetColumnStats]] provides for parquet, read
-  * from the ORC footer's repeated `ColumnStatistics` (field 7, one
-  * per type-tree column, index-aligned with the `types` list):
-  * value counts, the hasNull flag, integer min/max/sum (the proto's
-  * sint64 zigzag), double min/max, string min/max. Same postscript
-  * walk and chunked footer decompression as [[OrcFooterMeta]]
-  * (NONE/ZLIB/SNAPPY/LZ4/ZSTD; lzo refused).
+  * from the ORC footer's repeated `ColumnStatistics` (one per
+  * type-tree column, index-aligned with the `types` list): value
+  * counts, the hasNull flag, integer min/max/sum, double min/max,
+  * string min/max. The footer is orc-core's `OrcProto.Footer`, read
+  * as in [[OrcFooterMeta]] through [[OrcProtos]] (none, zlib, snappy,
+  * lz4, zstd; lzo refused).
   *
   * Output: array of `(column, n_values, has_null, int_min, int_max,
   * int_sum, double_min, double_max, str_min, str_max)` where
@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `orcMeta.columns` for names). Stat fields absent for a column's
   * type stay null, never guessed.
   *
-  * FAIL-CLOSED NULL on anything the footer walk refuses. Per-row
+  * FAIL-CLOSED NULL on anything the footer read refuses. Per-row
   * bounded work, zero shuffle, codegen'd. */
 case class OrcColumnStats(child: Expression, maxFooter: Int)
     extends UnaryExpression {
@@ -68,133 +68,27 @@ case class OrcColumnStats(child: Expression, maxFooter: Int)
 
 object OrcColumnStats {
 
-  import OrcFooterMeta.{Bad, Pb, inflateChunks}
-
-  private def zigzag(v: Long): Long = (v >>> 1) ^ -(v & 1L)
-
   /** The per-row kernel — public static so generated code can call it. */
-  def compute(bytes: Array[Byte], maxFooter: Int): GenericArrayData = {
-    try {
-      val n = bytes.length
-      if (n < 8) return null
-      if (bytes(0) != 'O' || bytes(1) != 'R' || bytes(2) != 'C') return null
-      val psLen = bytes(n - 1) & 0xff
-      if (psLen < 4 || n - 1 - psLen < 3) return null
-      val ps = new Pb(bytes, n - 1 - psLen, n - 1)
-      var footerLen = -1L
-      var compression = 0
-      var magicOk = false
-      while (ps.hasMore) {
-        val (f, w) = ps.tag()
-        (f, w) match {
-          case (1, 0) => footerLen = ps.varint()
-          case (2, 0) => compression = ps.varint().toInt
-          case (8000, 2) =>
-            val (s, e) = ps.lenDelimited()
-            magicOk = ps.string(s, e) == "ORC"
-          case _ => ps.skip(w)
-        }
-      }
-      if (!magicOk || footerLen <= 0) return null
-      val fEnd = n - 1 - psLen
-      val fStart = fEnd - footerLen
-      if (fStart < 3) return null
-      val footer: Array[Byte] = compression match {
-        case 0 =>
-          if (footerLen > maxFooter) return null
-          java.util.Arrays.copyOfRange(bytes, fStart.toInt, fEnd)
-        case 1 | 2 | 4 | 5 =>
-          inflateChunks(bytes, fStart.toInt, fEnd, maxFooter, compression)
-        case _ => return null
-      }
-      val fb = new Pb(footer, 0, footer.length)
-      val out = new java.util.ArrayList[Any]
-      var colIdx = 0
-      while (fb.hasMore) {
-        val (f, w) = fb.tag()
-        (f, w) match {
-          case (7, 2) => // ColumnStatistics
-            val (s, e) = fb.lenDelimited()
-            val cs = new Pb(footer, s, e)
-            var nValues: Any = null
-            var hasNull: Any = null
-            var intMin: Any = null
-            var intMax: Any = null
-            var intSum: Any = null
-            var dMin: Any = null
-            var dMax: Any = null
-            var sMin: Any = null
-            var sMax: Any = null
-            while (cs.hasMore) {
-              val (cf, cw) = cs.tag()
-              (cf, cw) match {
-                case (1, 0) => nValues = cs.varint()
-                case (10, 0) => hasNull = cs.varint() != 0
-                case (2, 2) => // IntegerStatistics (sint64 zigzag)
-                  val (is, ie) = cs.lenDelimited()
-                  val ip = new Pb(footer, is, ie)
-                  while (ip.hasMore) {
-                    val (ifd, iw) = ip.tag()
-                    (ifd, iw) match {
-                      case (1, 0) => intMin = zigzag(ip.varint())
-                      case (2, 0) => intMax = zigzag(ip.varint())
-                      case (3, 0) => intSum = zigzag(ip.varint())
-                      case _ => ip.skip(iw)
-                    }
-                  }
-                case (3, 2) => // DoubleStatistics (wire-1 doubles)
-                  val (ds, de) = cs.lenDelimited()
-                  val dp = new Pb(footer, ds, de)
-                  while (dp.hasMore) {
-                    val (dfd, dw) = dp.tag()
-                    if (dw == 1) {
-                      var bits = 0L
-                      var i = 7
-                      val at = dp.pos
-                      if (at + 8 > de) throw Bad
-                      while (i >= 0) {
-                        bits = (bits << 8) | (footer(at + i) & 0xffL)
-                        i -= 1
-                      }
-                      dp.pos = at + 8
-                      val v = java.lang.Double.longBitsToDouble(bits)
-                      dfd match {
-                        case 1 => dMin = v
-                        case 2 => dMax = v
-                        case _ => ()
-                      }
-                    } else dp.skip(dw)
-                  }
-                case (4, 2) => // StringStatistics
-                  val (ss, se) = cs.lenDelimited()
-                  val sp = new Pb(footer, ss, se)
-                  while (sp.hasMore) {
-                    val (sfd, sw) = sp.tag()
-                    (sfd, sw) match {
-                      case (1, 2) =>
-                        val (a, b) = sp.lenDelimited()
-                        sMin = UTF8String.fromString(sp.string(a, b))
-                      case (2, 2) =>
-                        val (a, b) = sp.lenDelimited()
-                        sMax = UTF8String.fromString(sp.string(a, b))
-                      case _ => sp.skip(sw)
-                    }
-                  }
-                case _ => cs.skip(cw)
-              }
-            }
-            out.add(new GenericInternalRow(Array[Any](colIdx, nValues,
-              hasNull, intMin, intMax, intSum, dMin, dMax, sMin, sMax)))
-            colIdx += 1
-          case _ => fb.skip(w)
-        }
-      }
-      new GenericArrayData(out.toArray)
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
+  def compute(bytes: Array[Byte], maxFooter: Int): GenericArrayData =
+    OrcProtos.read[GenericArrayData](bytes) { f =>
+      val stats = f.footer(maxFooter).getStatisticsList
+      new GenericArrayData(Array.tabulate[Any](stats.size) { i =>
+        val c = stats.get(i)
+        val is = c.getIntStatistics
+        val ds = c.getDoubleStatistics
+        val ss = c.getStringStatistics
+        def v(has: Boolean, x: Any): Any = if (has) x else null
+        def s(has: Boolean, x: String): Any =
+          if (has) UTF8String.fromString(x) else null
+        new GenericInternalRow(Array[Any](i,
+          v(c.hasNumberOfValues, c.getNumberOfValues),
+          v(c.hasHasNull, c.getHasNull),
+          v(is.hasMinimum, is.getMinimum), v(is.hasMaximum, is.getMaximum),
+          v(is.hasSum, is.getSum),
+          v(ds.hasMinimum, ds.getMinimum), v(ds.hasMaximum, ds.getMaximum),
+          s(ss.hasMinimum, ss.getMinimum), s(ss.hasMaximum, ss.getMaximum)))
+      })
     }
-  }
 
   import org.apache.spark.sql.graftshim.ColumnShim
 

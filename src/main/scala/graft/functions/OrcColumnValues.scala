@@ -14,29 +14,29 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[ParquetPageValues]]) for the other mainstream columnar format:
   * given whole-file bytes and a top-level column name, resolve the
   * column id through the footer's type tree, read stripe 0's footer
-  * (streams + column encodings), decompress each needed stream
-  * through the chunked codec framing ([[OrcFooterMeta.inflateChunks]]
-  * — none/zlib/snappy/lz4/zstd), and decode the values:
+  * (streams + column encodings) and decode the column's streams with
+  * orc-core's readers, each stream decompressed by orc-core's
+  * `InStream` through [[OrcProtos]] (none, zlib, snappy, lz4, zstd):
   *
-  *  - integer family (bigint/int/smallint) via the FULL RLEv2
-  *    reader — SHORT_REPEAT, DIRECT, PATCHED_BASE (base + patch-list
-  *    high-bit fix-ups) and DELTA (fixed and variable width), with
-  *    the closed 5-bit width table and zigzag where the type signs;
-  *  - tinyint via byte RLE, boolean via bit-packed byte RLE;
-  *  - float/double as little-endian IEEE;
+  *  - integer family (bigint/int/smallint): `RunLengthIntegerReaderV2`;
+  *  - tinyint: `RunLengthByteReader`; boolean: `BitFieldReader`;
+  *  - float/double: `SerializationUtils`;
   *  - string/char/varchar/binary in both DIRECT_V2 (LENGTH + DATA)
   *    and DICTIONARY_V2 (LENGTH + DICTIONARY_DATA + index DATA);
-  *  - a PRESENT stream (bit-packed byte RLE) restores null slots.
+  *  - a PRESENT stream (`BitFieldReader`) restores null slots.
   *
   * Output `(ctype, codec, encoding, n_values, values array<string>)`
   * — values render as strings the census way (ints decimal, floats
   * via shortest round-trip, text verbatim, binary as hex, booleans
   * true/false), null slots stay null. Row materialization capped by
-  * `maxVals`; `n_values` is the stripe's row count.
+  * `maxVals`; `n_values` is the stripe's row count. Every value of the
+  * stripe is decoded, so a malformed stream past the cap still fails.
   *
   * Fails closed (null): bad magic, lzo files, date/timestamp/decimal
-  * /nested columns, absent column, v0 (RLEv1) encodings, malformed
-  * streams. Per-row bounded work, zero shuffle, codegen'd. */
+  * /nested columns, absent column, v1 (RLEv1: DIRECT/DICTIONARY)
+  * integer and string encodings — orc-core reads them, this kernel
+  * refuses them — and malformed streams. Per-row bounded work, zero
+  * shuffle, codegen'd. */
 case class OrcColumnValues(child: Expression, column: String, maxVals: Int)
     extends UnaryExpression {
   require(maxVals > 0, "value cap must be positive")
@@ -74,230 +74,12 @@ case class OrcColumnValues(child: Expression, column: String, maxVals: Int)
 }
 
 object OrcColumnValues {
-  import OrcFooterMeta.{Bad, Pb, inflateChunks, compressionName}
+  import org.apache.orc.OrcProto.Stream.Kind
+  import org.apache.orc.impl.{BitFieldReader, RunLengthByteReader,
+    RunLengthIntegerReaderV2, SerializationUtils}
+  import OrcProtos.Bad
 
   private val MaxDecoded = 1 << 26
-
-  /** Smallest CLOSED width >= n (the reference getClosestFixedBits). */
-  private def closestWidth(n: Int): Int = {
-    if (n <= 24) math.max(1, n)
-    else if (n <= 26) 26
-    else if (n <= 28) 28
-    else if (n <= 30) 30
-    else if (n <= 32) 32
-    else if (n <= 40) 40
-    else if (n <= 48) 48
-    else if (n <= 56) 56
-    else 64
-  }
-
-  /** Closed 5-bit width table (ORC spec): encoded n -> bit width. */
-  private def decodeWidth(n: Int): Int =
-    if (n >= 0 && n <= 23) n + 1
-    else n match {
-      case 24 => 26; case 25 => 28; case 26 => 30; case 27 => 32
-      case 28 => 40; case 29 => 48; case 30 => 56; case 31 => 64
-      case _ => throw Bad
-    }
-
-  // ---- primitive bit/byte readers over a decompressed stream ----
-
-  private final class ByteIn(val b: Array[Byte]) {
-    var p = 0
-    def u8(): Int = {
-      if (p >= b.length) throw Bad
-      val v = b(p) & 0xff
-      p += 1
-      v
-    }
-    def hasMore: Boolean = p < b.length
-    /** Base-128 varint, unsigned (little-endian groups). */
-    def varint(): Long = {
-      var v = 0L
-      var shift = 0
-      var x = 0
-      do {
-        if (shift > 63) throw Bad
-        x = u8()
-        v |= (x & 0x7fL) << shift
-        shift += 7
-      } while ((x & 0x80) != 0)
-      v
-    }
-    def signedVarint(): Long = { val n = varint(); (n >>> 1) ^ -(n & 1L) }
-    /** Big-endian MSB-first bit-packed unsigned values. Widths over
-      * 56 bits go bit-serial so the accumulator never overflows. */
-    def bits(width: Int, count: Int, out: Array[Long], at: Int): Unit = {
-      if (width > 56) {
-        var i = 0
-        var acc = 0L
-        var nbits = 0
-        while (i < count) {
-          var v = 0L
-          var need = width
-          while (need > 0) {
-            if (nbits == 0) { acc = u8(); nbits = 8 }
-            val take = math.min(need, nbits)
-            v = (v << take) | ((acc >>> (nbits - take)) &
-              ((1L << take) - 1))
-            nbits -= take
-            need -= take
-          }
-          out(at + i) = v
-          i += 1
-        }
-        return
-      }
-      var acc = 0L
-      var nbits = 0
-      var i = 0
-      while (i < count) {
-        while (nbits < width) {
-          acc = (acc << 8) | u8()
-          nbits += 8
-        }
-        out(at + i) = (acc >>> (nbits - width)) & ((1L << width) - 1)
-        nbits -= width
-        i += 1
-      }
-    }
-  }
-
-  /** Integer RLEv2: decode exactly `count` (pre-null-restore) longs.
-    * `signed` applies zigzag to SHORT_REPEAT/DIRECT elements and
-    * varint signing to DELTA bases. */
-  private def rleV2(in: ByteIn, count: Int, signed: Boolean): Array[Long] = {
-    val out = new Array[Long](count)
-    var got = 0
-    while (got < count) {
-      val h = in.u8()
-      (h >>> 6) & 3 match {
-        case 0 => // SHORT_REPEAT: 3-bit byte width, 3-bit count
-          val w = ((h >>> 3) & 7) + 1
-          val run = (h & 7) + 3
-          if (got + run > count) throw Bad
-          var v = 0L
-          var i = 0
-          while (i < w) { v = (v << 8) | in.u8(); i += 1 }
-          val value = if (signed) (v >>> 1) ^ -(v & 1L) else v
-          java.util.Arrays.fill(out, got, got + run, value)
-          got += run
-        case 1 => // DIRECT: 5-bit width, 9-bit length
-          val w = decodeWidth((h >>> 1) & 0x1f)
-          val len = (((h & 1) << 8) | in.u8()) + 1
-          if (got + len > count) throw Bad
-          in.bits(w, len, out, got)
-          if (signed) {
-            var i = got
-            while (i < got + len) {
-              out(i) = (out(i) >>> 1) ^ -(out(i) & 1L)
-              i += 1
-            }
-          }
-          got += len
-        case 2 => // PATCHED_BASE
-          val w = decodeWidth((h >>> 1) & 0x1f)
-          val len = (((h & 1) << 8) | in.u8()) + 1
-          if (got + len > count) throw Bad
-          val third = in.u8()
-          val bw = ((third >>> 5) & 7) + 1 // base byte width
-          val pw = decodeWidth(third & 0x1f) // patch value width
-          val fourth = in.u8()
-          val pgw = ((fourth >>> 5) & 7) + 1 // patch gap width
-          val pll = fourth & 0x1f // patch list length
-          var base = 0L
-          var i = 0
-          while (i < bw) { base = (base << 8) | in.u8(); i += 1 }
-          // MSB of the base is its sign bit
-          val signBit = 1L << (bw * 8 - 1)
-          if ((base & signBit) != 0) base = -(base & (signBit - 1))
-          in.bits(w, len, out, got)
-          if (pll > 0) {
-            // the combined gap+patch entry is rounded UP to the
-            // nearest CLOSED width (the reference reader's
-            // getClosestFixedBits)
-            val pwAligned = closestWidth(pgw + pw)
-            val tmpIn = new Array[Long](pll)
-            in.bits(pwAligned, pll, tmpIn, 0)
-            var idx = got
-            var k = 0
-            while (k < pll) {
-              val gap = (tmpIn(k) >>> pw).toInt
-              val patch = tmpIn(k) & ((1L << pw) - 1)
-              idx += gap
-              if (idx - got >= len) throw Bad
-              out(idx) |= patch << w
-              k += 1
-            }
-          }
-          i = got
-          while (i < got + len) { out(i) += base; i += 1 }
-          got += len
-        case 3 => // DELTA
-          val encW = (h >>> 1) & 0x1f
-          val len = (((h & 1) << 8) | in.u8()) + 1
-          if (got + len > count) throw Bad
-          val base = if (signed) in.signedVarint() else in.varint()
-          out(got) = base
-          if (len > 1) {
-            val deltaBase = in.signedVarint()
-            out(got + 1) = base + deltaBase
-            if (len > 2) {
-              if (encW == 0) { // fixed delta
-                var i = 2
-                while (i < len) {
-                  out(got + i) = out(got + i - 1) + deltaBase
-                  i += 1
-                }
-              } else {
-                val w = decodeWidth(encW)
-                val deltas = new Array[Long](len - 2)
-                in.bits(w, len - 2, deltas, 0)
-                val sign = if (deltaBase < 0) -1L else 1L
-                var i = 2
-                while (i < len) {
-                  out(got + i) = out(got + i - 1) + sign * deltas(i - 2)
-                  i += 1
-                }
-              }
-            }
-          }
-          got += len
-      }
-    }
-    out
-  }
-
-  /** Byte RLE: runs (control 0..127 -> control+3 copies) and literal
-    * groups (control -1..-128 -> -control literals). */
-  private def byteRle(in: ByteIn, count: Int): Array[Byte] = {
-    val out = new Array[Byte](count)
-    var got = 0
-    while (got < count) {
-      if (in.p >= in.b.length) throw Bad
-      val c = in.b(in.p); in.p += 1
-      if (c >= 0) {
-        val run = c + 3
-        if (got + run > count || in.p >= in.b.length) throw Bad
-        val v = in.b(in.p); in.p += 1
-        java.util.Arrays.fill(out, got, got + run, v)
-        got += run
-      } else {
-        val lit = -c
-        if (got + lit > count || in.p + lit > in.b.length) throw Bad
-        System.arraycopy(in.b, in.p, out, got, lit)
-        in.p += lit
-        got += lit
-      }
-    }
-    out
-  }
-
-  /** Boolean stream: byte RLE over bit-packed bytes, MSB first. */
-  private def boolRle(data: Array[Byte], count: Int): Array[Boolean] = {
-    val bytes = byteRle(new ByteIn(data), (count + 7) / 8)
-    Array.tabulate(count)(i => ((bytes(i >> 3) >> (7 - (i & 7))) & 1) != 0)
-  }
 
   private def typeName(kind: Int): String = kind match {
     case 0 => "boolean"; case 1 => "tinyint"; case 2 => "smallint"
@@ -308,327 +90,118 @@ object OrcColumnValues {
   }
 
   /** The per-row kernel — public static so generated code can call it. */
-  def compute(bytes: Array[Byte], column: String, maxVals: Int): InternalRow = {
-    try {
-      val n = bytes.length
-      if (n < 16 || column == null) return null
-      if (bytes(0) != 'O' || bytes(1) != 'R' || bytes(2) != 'C') return null
-      val psLen = bytes(n - 1) & 0xff
-      if (psLen < 4 || n - 1 - psLen < 3) return null
-      var footerLen = -1L
-      var codec = 0
-      locally {
-        val ps = new Pb(bytes, n - 1 - psLen, n - 1)
-        while (ps.hasMore) {
-          val (f, w) = ps.tag()
-          (f, w) match {
-            case (1, 0) => footerLen = ps.varint()
-            case (2, 0) => codec = ps.varint().toInt
-            case _ => ps.skip(w)
-          }
-        }
-      }
-      if (footerLen <= 0 || codec == 3) return null // lzo: refuse
-      // NONE (codec 0) streams carry no chunk framing — plain copy
-      def chunks(start: Int, end: Int, maxOut: Int): Array[Byte] = {
-        if (start < 0 || end > n || start >= end) throw Bad
-        if (codec == 0) {
-          if (end - start > maxOut) throw Bad
-          java.util.Arrays.copyOfRange(bytes, start, end)
-        } else inflateChunks(bytes, start, end, maxOut, codec)
-      }
-      val fEnd = n - 1 - psLen
-      val fStart = fEnd - footerLen.toInt
-      if (fStart < 3) return null
-      val footer = chunks(fStart, fEnd, 1 << 24)
-      // footer: stripes(3), types(4)
-      var stripeOff = -1L
-      var stripeIdxLen = -1L
-      var stripeDataLen = -1L
-      var stripeFooterLen = -1L
-      var stripeRows = -1L
-      var colId = -1
-      var colKind = -1
-      locally {
-        val fb = new Pb(footer, 0, footer.length)
-        var typeIdx = 0
-        var rootSubtypes: Array[Int] = null
-        var rootNames: java.util.ArrayList[String] = null
-        val kinds = new java.util.HashMap[Integer, Integer]()
-        while (fb.hasMore) {
-          val (f, w) = fb.tag()
-          (f, w) match {
-            case (3, 2) if stripeOff < 0 => // FIRST stripe only
-              val len = fb.varint().toInt
-              val end = fb.pos + len
-              if (len < 0 || end > footer.length) throw Bad
-              val sp = new Pb(footer, fb.pos, end)
-              fb.pos = end
-              while (sp.hasMore) {
-                val (sf, sw) = sp.tag()
-                (sf, sw) match {
-                  case (1, 0) => stripeOff = sp.varint()
-                  case (2, 0) => stripeIdxLen = sp.varint()
-                  case (3, 0) => stripeDataLen = sp.varint()
-                  case (4, 0) => stripeFooterLen = sp.varint()
-                  case (5, 0) => stripeRows = sp.varint()
-                  case _ => sp.skip(sw)
-                }
-              }
-            case (4, 2) => // one Type
-              val len = fb.varint().toInt
-              val end = fb.pos + len
-              if (len < 0 || end > footer.length) throw Bad
-              val tp = new Pb(footer, fb.pos, end)
-              fb.pos = end
-              var kind = 0
-              val subs = new java.util.ArrayList[Integer]()
-              val names = new java.util.ArrayList[String]()
-              while (tp.hasMore) {
-                val (tf, tw) = tp.tag()
-                (tf, tw) match {
-                  case (1, 0) => kind = tp.varint().toInt
-                  case (2, 0) => subs.add(tp.varint().toInt)
-                  case (2, 2) => // packed repeated
-                    val l2 = tp.varint().toInt
-                    val e2 = tp.pos + l2
-                    if (l2 < 0 || e2 > footer.length) throw Bad
-                    while (tp.pos < e2) subs.add(tp.varint().toInt)
-                  case (3, 2) =>
-                    val (s2, e2) = tp.lenDelimited()
-                    names.add(tp.string(s2, e2))
-                  case _ => tp.skip(tw)
-                }
-              }
-              if (typeIdx == 0) {
-                if (kind != 12) throw Bad // root must be a struct
-                rootSubtypes = Array.tabulate(subs.size())(subs.get(_).toInt)
-                rootNames = names
-              } else kinds.put(typeIdx, kind)
-              typeIdx += 1
-            case _ => fb.skip(w)
-          }
-        }
-        if (rootSubtypes == null || rootNames == null) throw Bad
-        var i = 0
-        while (i < rootNames.size() && colId < 0) {
-          if (rootNames.get(i) == column && i < rootSubtypes.length) {
-            colId = rootSubtypes(i)
-            val k = kinds.get(colId)
-            if (k == null) throw Bad
-            colKind = k
-          }
-          i += 1
-        }
-      }
-      if (colId < 0 || stripeOff < 0 || stripeRows < 0) return null
+  def compute(bytes: Array[Byte], column: String, maxVals: Int): InternalRow =
+    OrcProtos.read[InternalRow](bytes) { f =>
+      if (column == null) throw Bad
+      val footer = f.footer(1 << 24)
+      val colId = OrcProtos.columnId(footer, column)
+      if (colId <= 0 || colId >= footer.getTypesCount ||
+        footer.getStripesCount == 0) throw Bad
+      val colKind = OrcProtos.typeKind(footer.getTypes(colId))
       val ctype = typeName(colKind)
-      if (ctype == "other") return null
-      // stripe footer: stream layout + column encodings
-      val sfStart = (stripeOff + stripeIdxLen + stripeDataLen).toInt
-      val sfEnd = sfStart + stripeFooterLen.toInt
-      if (sfStart < 0 || sfEnd > n || stripeFooterLen <= 0) return null
-      val sfooter = chunks(sfStart, sfEnd, 1 << 24)
-      // per-column encoding; streams in declared order carry offsets
-      var encKind = -1
-      var dictSize = 0
-      var presentAt = -1L
-      var presentLen = -1L
-      var dataAt = -1L
-      var dataLen = -1L
-      var lengthAt = -1L
-      var lengthLen = -1L
-      var dictAt = -1L
-      var dictLen = -1L
-      locally {
-        val sb = new Pb(sfooter, 0, sfooter.length)
-        var streamOff = stripeOff // index streams first, then data
-        var encIdx = 0
-        while (sb.hasMore) {
-          val (f, w) = sb.tag()
-          (f, w) match {
-            case (1, 2) => // Stream
-              val len = sb.varint().toInt
-              val end = sb.pos + len
-              if (len < 0 || end > sfooter.length) throw Bad
-              val st = new Pb(sfooter, sb.pos, end)
-              sb.pos = end
-              var kind = 0
-              var scol = -1
-              var slen = 0L
-              while (st.hasMore) {
-                val (sf2, sw2) = st.tag()
-                (sf2, sw2) match {
-                  case (1, 0) => kind = st.varint().toInt
-                  case (2, 0) => scol = st.varint().toInt
-                  case (3, 0) => slen = st.varint()
-                  case _ => st.skip(sw2)
-                }
-              }
-              if (scol == colId) kind match {
-                case 0 => presentAt = streamOff; presentLen = slen
-                case 1 => dataAt = streamOff; dataLen = slen
-                case 2 => lengthAt = streamOff; lengthLen = slen
-                case 3 => dictAt = streamOff; dictLen = slen
-                case _ => ()
-              }
-              streamOff += slen
-            case (2, 2) => // ColumnEncoding, in column-id order
-              val len = sb.varint().toInt
-              val end = sb.pos + len
-              if (len < 0 || end > sfooter.length) throw Bad
-              val ce = new Pb(sfooter, sb.pos, end)
-              sb.pos = end
-              var k = 0
-              var ds = 0
-              while (ce.hasMore) {
-                val (cf, cw) = ce.tag()
-                (cf, cw) match {
-                  case (1, 0) => k = ce.varint().toInt
-                  case (2, 0) => ds = ce.varint().toInt
-                  case _ => ce.skip(cw)
-                }
-              }
-              if (encIdx == colId) { encKind = k; dictSize = ds }
-              encIdx += 1
-            case _ => sb.skip(w)
-          }
+      val stripe = footer.getStripes(0) // stripe 0 only
+      if (ctype == "other" || !stripe.hasNumberOfRows) throw Bad
+      val sf = f.stripeFooter(stripe)
+      def at(kind: Kind) = f.streamAt(stripe, sf, colId, kind.getNumber)
+      val (presentAt, dataAt, lengthAt, dictAt) = (at(Kind.PRESENT),
+        at(Kind.DATA), at(Kind.LENGTH), at(Kind.DICTIONARY_DATA))
+      val (encKind, dictSize) =
+        if (colId >= sf.getColumnsCount) (-1, 0)
+        else {
+          val e = sf.getColumns(colId)
+          (OrcProtos.enumNumber(e, 1, e.getKind.getNumber), e.getDictionarySize)
         }
-      }
-      if (dataAt < 0) return null
-      // v0 (RLEv1) encodings refuse — DIRECT/DICTIONARY without _V2
+      if (dataAt._1 < 0) throw Bad
+      // v1 (RLEv1) encodings refuse — DIRECT/DICTIONARY without _V2
       // only matter for int/string; doubles use DIRECT(0) legally
       val intLike = colKind == 2 || colKind == 3 || colKind == 4
       val strLike = colKind == 7 || colKind == 8 || colKind == 16 ||
         colKind == 17
-      if ((intLike || strLike) && encKind != 2 && encKind != 3) return null
-      if (encKind == 3 && !strLike) return null
+      if ((intLike || strLike) && encKind != 2 && encKind != 3) throw Bad
+      if (encKind == 3 && !strLike) throw Bad
+      val rows = stripe.getNumberOfRows
+      if (rows < 0 || rows > (1 << 24)) throw Bad
 
-      def stream(at: Long, len: Long): Array[Byte] = {
-        if (at < 0 || len <= 0 || at + len > n) throw Bad
-        chunks(at.toInt, (at + len).toInt, MaxDecoded)
-      }
-      val rows = stripeRows.toInt
-      if (rows < 0 || rows > (1 << 24)) return null
-      val present: Array[Boolean] =
-        if (presentAt >= 0) boolRle(stream(presentAt, presentLen), rows)
-        else null
-      var nPresent = rows
-      if (present != null) {
-        nPresent = 0
-        var i = 0
-        while (i < rows) { if (present(i)) nPresent += 1; i += 1 }
-      }
-      val vals: Array[UTF8String] = colKind match {
-        case 0 => // boolean
-          val bits = boolRle(stream(dataAt, dataLen), nPresent)
-          bits.map(v => UTF8String.fromString(if (v) "true" else "false"))
-        case 1 => // tinyint: byte RLE, signed bytes
-          val bs = byteRle(new ByteIn(stream(dataAt, dataLen)), nPresent)
-          bs.map(v => UTF8String.fromString(v.toString))
+      def in(s: (Long, Long)) = f.stream(s._1, s._2, MaxDecoded)
+      def drain(s: (Long, Long)) = f.drain(s._1, s._2, MaxDecoded)
+      def utf(s: String) = UTF8String.fromString(s)
+      // each run-length stream must end with the stripe's values: a run
+      // past them, or bytes after them, is damage orc-core reads on past
+      val ends = scala.collection.mutable.ArrayBuffer[() => Boolean]()
+      def ending(r: RunLengthIntegerReaderV2) = { ends += (() => r.hasNext); r }
+      val present =
+        if (presentAt._1 < 0) null
+        else {
+          val r = new BitFieldReader(in(presentAt))
+          Array.fill(rows.toInt)(r.next() == 1)
+        }
+      // the next non-null value, decoded and rendered
+      val next: () => UTF8String = colKind match {
+        case 0 =>
+          val r = new BitFieldReader(in(dataAt))
+          () => utf(if (r.next() == 1) "true" else "false")
+        case 1 =>
+          val r = new RunLengthByteReader(in(dataAt))
+          ends += (() => r.hasNext)
+          () => utf(r.next().toString)
         case 2 | 3 | 4 =>
-          val longs = rleV2(new ByteIn(stream(dataAt, dataLen)), nPresent,
-            signed = true)
-          longs.map(v => UTF8String.fromString(v.toString))
-        case 5 => // float LE
-          val d = stream(dataAt, dataLen)
-          if (d.length < nPresent * 4) throw Bad
-          Array.tabulate(nPresent) { i =>
-            var bits = 0
-            var k = 0
-            while (k < 4) { bits |= (d(4 * i + k) & 0xff) << (8 * k); k += 1 }
-            UTF8String.fromString(java.lang.Float.intBitsToFloat(bits).toString)
-          }
-        case 6 => // double LE
-          val d = stream(dataAt, dataLen)
-          if (d.length < nPresent * 8) throw Bad
-          Array.tabulate(nPresent) { i =>
-            var bits = 0L
-            var k = 0
-            while (k < 8) {
-              bits |= (d(8 * i + k) & 0xffL) << (8 * k); k += 1
-            }
-            UTF8String.fromString(
-              java.lang.Double.longBitsToDouble(bits).toString)
-          }
-        case 7 | 8 | 16 | 17 =>
-          val isBinary = colKind == 8
+          val r = ending(new RunLengthIntegerReaderV2(in(dataAt), true, false))
+          () => utf(r.next().toString)
+        case 5 | 6 =>
+          val s = in(dataAt)
+          val u = new SerializationUtils
+          if (colKind == 5) () => utf(u.readFloat(s).toString)
+          else () => utf(u.readDouble(s).toString)
+        case _ => // string, binary, varchar, char
           def render(b: Array[Byte], from: Int, len: Int): UTF8String =
-            if (isBinary) {
-              val sb2 = new java.lang.StringBuilder(len * 2)
-              var k = 0
-              while (k < len) {
-                sb2.append("%02x".format(b(from + k) & 0xff)); k += 1
-              }
-              UTF8String.fromString(sb2.toString)
-            } else UTF8String.fromBytes(
+            if (colKind == 8)
+              utf(java.util.HexFormat.of().formatHex(b, from, from + len))
+            else UTF8String.fromBytes(
               java.util.Arrays.copyOfRange(b, from, from + len))
-          if (encKind == 2) { // DIRECT_V2
-            val lens = rleV2(new ByteIn(stream(lengthAt, lengthLen)),
-              nPresent, signed = false)
-            val blob = stream(dataAt, dataLen)
-            val out = new Array[UTF8String](nPresent)
+          /** The next length from LENGTH, as the next slice of `blob`. */
+          def slices(blob: Array[Byte]): () => UTF8String = {
+            val lens =
+              ending(new RunLengthIntegerReaderV2(in(lengthAt), false, false))
             var off = 0
-            var i = 0
-            while (i < nPresent) {
-              val l = lens(i).toInt
-              if (l < 0 || off + l > blob.length) throw Bad
-              out(i) = render(blob, off, l)
-              off += l
-              i += 1
+            () => {
+              val l = lens.next()
+              if (l < 0 || l > blob.length - off) throw Bad
+              off += l.toInt
+              render(blob, off - l.toInt, l.toInt)
             }
-            out
-          } else { // DICTIONARY_V2
-            val lens = rleV2(new ByteIn(stream(lengthAt, lengthLen)),
-              dictSize, signed = false)
-            val blob =
-              if (dictLen > 0) stream(dictAt, dictLen) else new Array[Byte](0)
-            val dict = new Array[UTF8String](dictSize)
-            var off = 0
-            var i = 0
-            while (i < dictSize) {
-              val l = lens(i).toInt
-              if (l < 0 || off + l > blob.length) throw Bad
-              dict(i) = render(blob, off, l)
-              off += l
-              i += 1
-            }
-            val idx = rleV2(new ByteIn(stream(dataAt, dataLen)), nPresent,
-              signed = false)
-            idx.map { v =>
+          }
+          if (encKind == 2) slices(drain(dataAt)) // DIRECT_V2
+          else { // DICTIONARY_V2: every entry lies in one stripe's rows
+            if (dictSize < 0 || dictSize > rows) throw Bad
+            val entry = slices(
+              if (dictAt._2 > 0) drain(dictAt) else Array.emptyByteArray)
+            val dict = Array.fill(dictSize)(entry())
+            val idx =
+              ending(new RunLengthIntegerReaderV2(in(dataAt), false, false))
+            () => {
+              val v = idx.next()
               if (v < 0 || v >= dictSize) throw Bad
               dict(v.toInt)
             }
           }
-        case _ => return null
       }
-      // restore null slots
-      val out = new java.util.ArrayList[Any]
-      var vi = 0
+      val out = new Array[Any](math.min(rows, maxVals.toLong).toInt)
       var i = 0
-      while (i < rows && out.size() < maxVals) {
-        if (present == null || present(i)) {
-          out.add(vals(vi)); vi += 1
-        } else out.add(null)
+      while (i < rows) {
+        val v = if (present == null || present(i)) next() else null
+        if (i < out.length) out(i) = v
         i += 1
       }
+      if (ends.exists(_())) throw Bad
       val encName = encKind match {
         case 0 => "direct"; case 1 => "dictionary"
         case 2 => "direct_v2"; case 3 => "dictionary_v2"
         case _ => "unknown"
       }
-      new GenericInternalRow(Array[Any](
-        UTF8String.fromString(ctype),
-        UTF8String.fromString(compressionName(codec)),
-        UTF8String.fromString(encName),
-        stripeRows,
-        new GenericArrayData(out.toArray)))
-    } catch {
-      case Bad => null
-      case _: ArrayIndexOutOfBoundsException => null
-      case _: NegativeArraySizeException => null
+      new GenericInternalRow(Array[Any](utf(ctype),
+        utf(OrcProtos.compressionName(f.compression)), utf(encName), rows,
+        new GenericArrayData(out)))
     }
-  }
 
   import org.apache.spark.sql.graftshim.ColumnShim
 

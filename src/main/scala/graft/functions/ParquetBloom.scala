@@ -20,13 +20,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - [[ParquetBloomCheck]]: the actual membership probe — the
   *     split-block bloom of the parquet spec, probed by parquet-column's
   *     `BlockSplitBloomFilter` (its xxHash64 of the plain-encoded
-  *     value, `findHash` over the file's bitset), ORed across row
-  *     groups the way a scan planner would. Null when the file or
+  *     value, `findHash` over the one 32-byte block of the file's
+  *     bitset the hash selects), ORed across row groups the way a scan
+  *     planner would. Null when the file or
   *     column has no bloom — absence of an index is not `false`.
   *
   * The footer and each `BloomFilterHeader` are read by parquet-format's
   * generated classes through [[ParquetThrift]]; a bitset must lie inside
-  * the payload before it is copied out. Only BLOCK/XXHASH/UNCOMPRESSED
+  * the payload before its probed block is copied out. Only BLOCK/XXHASH/UNCOMPRESSED
   * filters (the only combination the format defines today) answer;
   * anything else refuses.
   *
@@ -154,6 +155,8 @@ object ParquetBloom {
   def check(bytes: Array[Byte], col: String,
             probe: Array[Byte]): java.lang.Boolean = orNull {
     val refs = bloomRefs(bytes, 1 << 14)
+    lazy val hash = new BlockSplitBloomFilter(new Array[Byte](32))
+      .hash(Binary.fromConstantByteArray(probe))
     var found = false
     var any = false
     var i = 0
@@ -166,10 +169,12 @@ object ParquetBloom {
         if (!h.getAlgorithm.isSetBLOCK || !h.getHash.isSetXXHASH ||
           !h.getCompression.isSetUNCOMPRESSED) throw Bad
         any = true
-        val bloom = new BlockSplitBloomFilter(
-          java.util.Arrays.copyOfRange(bytes, bs, bs + h.getNumBytes))
-        if (bloom.findHash(bloom.hash(Binary.fromConstantByteArray(probe))))
-          found = true
+        // `findHash` reads only block ((hash >>> 32) * blocks) >>> 32 of
+        // the bitset: that 32-byte block alone, as a one-block filter
+        // (whose block index is always 0), gives the same answer
+        val at = bs + 32 * (((hash >>> 32) * (h.getNumBytes / 32)) >>> 32).toInt
+        if (new BlockSplitBloomFilter(java.util.Arrays.copyOfRange(bytes, at,
+          at + 32)).findHash(hash)) found = true
       }
       i += 1
     }

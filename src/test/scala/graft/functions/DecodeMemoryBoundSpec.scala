@@ -200,4 +200,75 @@ class DecodeMemoryBoundSpec extends AnyFunSuite {
     // an RLE run of no 1s, then a run of one 0
     assert(ParquetPageValues.compute(twoEntries("0001" + "0200"), "c", 16) == null)
   }
+
+  /** ORC chunk framing of `blocks`, each raw-DEFLATEd (zlib), with its
+    * 3-byte little-endian header `length << 1` (not original). */
+  private def zlibChunks(blocks: Iterator[Array[Byte]]): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    val buf = new Array[Byte](1 << 20)
+    for (b <- blocks) {
+      val d = new java.util.zip.Deflater(9, true)
+      d.setInput(b); d.finish()
+      val len = d.deflate(buf)
+      assert(d.finished(), "chunk buffer too small")
+      d.end()
+      val h = len << 1
+      out.write(Array[Byte](h.toByte, (h >> 8).toByte, (h >> 16).toByte))
+      out.write(buf, 0, len)
+    }
+    out.toByteArray
+  }
+
+  /** An ORC file with no stripes: `footer` (already chunked) and a zlib
+    * postscript declaring `blockSize`. */
+  private def orc(footer: Array[Byte], blockSize: Long): Array[Byte] = {
+    import org.apache.orc.OrcProto
+    val ps = OrcProto.PostScript.newBuilder.setFooterLength(footer.length)
+      .setCompression(OrcProto.CompressionKind.ZLIB)
+      .setCompressionBlockSize(blockSize).setMagic("ORC").build.toByteArray
+    "ORC".getBytes ++ footer ++ ps ++ Array(ps.length.toByte)
+  }
+
+  test("ORC: a compression block size of 2^31-1, or a footer that inflates " +
+    "to 300 MiB, returns null from all five functions without allocating it") {
+    import org.apache.orc.OrcProto
+    val footer = OrcProto.Footer.newBuilder.addTypes(OrcProto.Type.newBuilder
+        .setKind(OrcProto.Type.Kind.STRUCT).addSubtypes(1).addFieldNames("id"))
+      .addTypes(OrcProto.Type.newBuilder.setKind(OrcProto.Type.Kind.LONG))
+      .setNumberOfRows(0).build.toByteArray
+    val block = 1 << 18
+    // one unknown length-delimited field (number 100) of 300 MiB of zeros,
+    // in 256 KiB chunks: about 0.3 MB of file
+    val bombLen = 300 << 20
+    val head = Array[Byte](0xa2.toByte, 0x06) ++ {
+      val v = new ByteArrayOutputStream()
+      var x = bombLen
+      while (x >= 0x80) { v.write((x & 0x7f) | 0x80); x >>>= 7 }
+      v.write(x); v.toByteArray
+    }
+    val zeros = new Array[Byte](block)
+    val bomb = orc(zlibChunks(Iterator(head) ++
+      Iterator.fill(bombLen / block)(zeros)), block)
+    assert(bomb.length < (1 << 20), s"bomb is ${bomb.length} bytes")
+    // the undoctored shape decodes, so each refusal below is the bound
+    val ok = orc(zlibChunks(Iterator(footer)), block)
+    val meta = OrcFooterMeta.compute(ok, 1 << 24)
+    assert(meta != null && meta.getUTF8String(0).toString == "zlib" &&
+      meta.getLong(2) == 0L)
+    for ((name, file) <- Seq(
+      "block size 2^31-1" -> orc(zlibChunks(Iterator(footer)), Int.MaxValue),
+      "footer inflating to 300 MiB" -> bomb)) {
+      val rows = Seq(
+        ("orc_meta", () => OrcFooterMeta.compute(file, 1 << 24)),
+        ("orc_stripes", () => OrcStripeStats.compute(file, 1 << 24)),
+        ("orc_column_stats", () => OrcColumnStats.compute(file, 1 << 24)),
+        ("orc_column_values", () => OrcColumnValues.compute(file, "id", 16)),
+        ("orc_bloom_check", () => OrcBloom.check(file, "id", "1".getBytes)))
+      for ((fn, decode) <- rows) {
+        val (r, bytes) = allocating(decode())
+        assert(r == null, s"$fn, $name")
+        assert(bytes < (16L << 20), s"$fn, $name: allocated $bytes bytes")
+      }
+    }
+  }
 }

@@ -124,4 +124,66 @@ class OrcColumnValuesSpec extends SparkSpec {
     assert(OrcColumnValues.compute(bytes.take(40), "id", 16) == null)
     assert(OrcColumnValues.compute("junk".getBytes, "id", 16) == null)
   }
+
+  test("orc.write.format 0.11 (RLEv1, DIRECT) integers and strings refuse; " +
+    "its doubles decode") {
+    import org.apache.orc.OrcProto.ColumnEncoding.Kind
+    val bytes = onePartBytes { dir =>
+      spark.range(0, 40).selectExpr("id", "concat('v', id % 4) AS name",
+          "cast(id as double) / 2 AS x")
+        .coalesce(1).write.mode("overwrite")
+        .option("orc.write.format", "0.11")
+        .option("orc.dictionary.key.threshold", "0.0")
+        .option("compression", "zlib").orc(dir)
+    }
+    // the file really carries v1 encodings for both columns
+    val kinds = OrcProtos.read[Seq[Kind]](bytes) { f =>
+      val sf = f.stripeFooter(f.footer(1 << 24).getStripes(0))
+      Seq(sf.getColumns(1).getKind, sf.getColumns(2).getKind)
+    }
+    assert(kinds == Seq(Kind.DIRECT, Kind.DIRECT))
+    assert(OrcColumnValues.compute(bytes, "id", 1 << 16) == null)
+    assert(OrcColumnValues.compute(bytes, "name", 1 << 16) == null)
+    val x = OrcColumnValues.compute(bytes, "x", 1 << 16)
+    assert(x.getUTF8String(2).toString == "direct")
+    assert(values(x) == (0 until 40).map(i => (i / 2.0).toString))
+  }
+
+  test("a DIRECT run cut short by its stream returns null at once (orc-core " +
+    "alone retries the missing bytes about 2^32 times)") {
+    import org.apache.orc.OrcProto
+    val bytes = onePartBytes { dir =>
+      (0 until 500).map(i => (i.toLong, (i * 7919L) % 4096 - 2048))
+        .toDF("id", "mix").coalesce(1).write.mode("overwrite")
+        .option("compression", "none").orc(dir)
+    }
+    val psLen = bytes.last & 0xff
+    val ps = OrcProto.PostScript.parseFrom(bytes.slice(bytes.length - 1 - psLen,
+      bytes.length - 1))
+    val footerAt = bytes.length - 1 - psLen - ps.getFooterLength.toInt
+    val footer = OrcProto.Footer.parseFrom(bytes.slice(footerAt,
+      footerAt + ps.getFooterLength.toInt))
+    val st = footer.getStripes(0)
+    val sfAt = (st.getOffset + st.getIndexLength + st.getDataLength).toInt
+    val sf = OrcProto.StripeFooter.parseFrom(bytes.slice(sfAt,
+      sfAt + st.getFooterLength.toInt))
+    // mix's DATA stream, the stripe's last, loses its last 20 bytes,
+    // inside a DIRECT run
+    val i = (0 until sf.getStreamsCount).indexWhere { k =>
+      val s = sf.getStreams(k)
+      s.getColumn == 2 && s.getKind == OrcProto.Stream.Kind.DATA
+    }
+    val cut = sf.toBuilder.setStreams(i, sf.getStreams(i).toBuilder
+      .setLength(sf.getStreams(i).getLength - 20)).build.toByteArray
+    val newFooter = footer.toBuilder.setStripes(0, st.toBuilder
+      .setFooterLength(cut.length)).build.toByteArray
+    val newPs = ps.toBuilder.setFooterLength(newFooter.length).build.toByteArray
+    val file = bytes.take(sfAt) ++ cut ++ newFooter ++ newPs ++
+      Array(newPs.length.toByte)
+    assert(values(OrcColumnValues.compute(file, "id", 8)) ==
+      (0 until 8).map(_.toString), "the rewritten file reads")
+    val t0 = System.nanoTime
+    assert(OrcColumnValues.compute(file, "mix", 8) == null)
+    assert(System.nanoTime - t0 < 5e9, "the cut run took seconds")
+  }
 }

@@ -129,4 +129,35 @@ class OrcFooterSpec extends SparkSpec {
           .getField("num_rows").as("n")).collect()(0)
     assert(row.getString(0) == "orc" && row.getLong(1) == 10L)
   }
+
+  test("a postscript compression number orc-core does not know (9) reads " +
+    "\"unknown\" and every function returns null, never uncompressed") {
+    import org.apache.orc.OrcProto
+    val ok = onePartBytes { dir =>
+      spark.range(0, 10).coalesce(1).write.mode("overwrite")
+        .option("compression", "none").orc(dir)
+    }
+    val psLen = ok.last & 0xff
+    val ps = OrcProto.PostScript.parseFrom(ok.slice(ok.length - 1 - psLen,
+      ok.length - 1))
+    assert(ps.getCompression == OrcProto.CompressionKind.NONE)
+    // field 2 (compression), varint 9, in place of NONE
+    val ps9 = ps.toBuilder.clearCompression.build.toByteArray ++
+      Array[Byte](0x10, 0x09)
+    val nine = ok.take(ok.length - 1 - psLen) ++ ps9 ++ Array(ps9.length.toByte)
+    // the library reads the unknown number as its default, NONE
+    assert(OrcProto.PostScript.parseFrom(ps9).getCompression ==
+      OrcProto.CompressionKind.NONE)
+    assert(OrcProtos.read[String](nine)(f =>
+      OrcProtos.compressionName(f.compression)) == "unknown")
+    assert(OrcFooterMeta.compute(nine, 1 << 24) == null)
+    assert(OrcStripeStats.compute(nine, 1 << 24) == null)
+    assert(OrcColumnStats.compute(nine, 1 << 24) == null)
+    assert(OrcColumnValues.compute(nine, "id", 16) == null)
+    // the same bytes with NONE spelled out decode
+    val ps0 = ps.toBuilder.clearCompression.build.toByteArray ++
+      Array[Byte](0x10, 0x00)
+    val zero = ok.take(ok.length - 1 - psLen) ++ ps0 ++ Array(ps0.length.toByte)
+    assert(OrcFooterMeta.compute(zero, 1 << 24).getLong(2) == 10L)
+  }
 }

@@ -106,6 +106,60 @@ class ParquetBloomSpec extends SparkSpec {
     assert(got.take(8).forall(identity) && got.drop(8).forall(!_))
   }
 
+  test("the one-block probe answers as the whole-bitset probe, for hits " +
+    "and misses, over the suite's bloom files") {
+    import spark.implicits._
+    import org.apache.parquet.column.values.bloomfilter.BlockSplitBloomFilter
+    import org.apache.parquet.format.BloomFilterHeader
+    import org.apache.parquet.io.api.Binary
+    /** Row groups' whole bitsets for `name`, probed as parquet-column
+      * reads them. */
+    def whole(b: Array[Byte], probe: Array[Byte]): java.lang.Boolean = {
+      val refs = ParquetBloom.info(b, 64)
+      val hits = (0 until refs.numElements()).map(refs.getStruct(_, 7))
+        .filter(_.getUTF8String(1).toString == "name").map { r =>
+          val h = new BloomFilterHeader
+          val off = r.getLong(2)
+          val bs = off.toInt + ParquetThrift.read(h, b, off, b.length - off)
+          val f = new BlockSplitBloomFilter(
+            java.util.Arrays.copyOfRange(b, bs, bs + h.getNumBytes))
+          f.findHash(f.hash(Binary.fromConstantByteArray(probe)))
+        }
+      if (hits.isEmpty) null else java.lang.Boolean.valueOf(hits.contains(true))
+    }
+    def written(rows: Int, ndv: Option[Int]): Array[Byte] = {
+      val dir = java.nio.file.Files.createTempDirectory("bloomblk")
+        .toFile.getAbsolutePath
+      val w = (0 until rows).map(i => (s"name-$i", i.toLong)).toDF("name", "id")
+        .coalesce(1).write
+        .option("parquet.bloom.filter.enabled#name", "true")
+        .option("parquet.block.size", "16384")
+      ndv.fold(w)(n => w.option("parquet.bloom.filter.expected.ndv#name",
+        n.toString)).option("compression", "none").mode("overwrite").parquet(dir)
+      val part = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.readAllBytes(part.toPath)
+    }
+    // the pinned 32-byte bitset, a few-KiB one per row group over
+    // several row groups, and Spark's default size (1 MiB)
+    val files = Seq(hx(fixtureHex), written(2000, Some(2000)),
+      written(8, None))
+    val sizes = files.map(ParquetBloom.info(_, 64)).map(a =>
+      (0 until a.numElements()).map(a.getStruct(_, 7).getInt(3)).max)
+    assert(sizes.head == 32 && sizes(1) > 32 && sizes(2) == (1 << 20), sizes)
+    for ((b, k) <- files.zipWithIndex) {
+      var hit, miss = 0
+      for (i <- 0 until 4000) {
+        val p = s"name-$i".getBytes
+        val want = whole(b, p)
+        assert(want != null)
+        assert(ParquetBloom.check(b, "name", p) === want, s"file $k name-$i")
+        if (want) hit += 1 else miss += 1
+      }
+      assert(hit >= 8 && miss > 0, s"file $k: $hit hits, $miss misses")
+    }
+  }
+
   test("fail-closed: footer corruption and truncation answer null") {
     val b = hx(fixtureHex)
     val flip = b.clone()
