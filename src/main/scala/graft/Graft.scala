@@ -108,6 +108,7 @@ class Graft(spark: SparkSession, dataDir: String,
             pks: Map[String, String] = SchemaCatalog.walkPks) {
 
   private val loader: String => DataFrame = Tables.load(spark, dataDir, _)
+  private val walkPks = pks.map { case (t, c) => t -> Seq(c) }
 
   def fileTarget(dumpDir: String): DumpTarget = new DumpTarget(spark, dumpDir)
   def dbTarget(url: String, allowProduction: Boolean = false): JdbcTarget =
@@ -144,8 +145,8 @@ class Graft(spark: SparkSession, dataDir: String,
                rootIds: Seq[Long],
                onLevel: TreeWalk.HeldLevel => Unit = _ => ()): Seq[Selection] =
     LevelWriter.run(spark) { writer =>
-      TreeWalk.walkHeld(loader, paths, pks, rootTable, rootIds, onLevel) { (table, pk, rows, i) =>
-        DumpStore.exportRows(writer, target, table, Seq(pk), rows, s"${table}_$i")
+      TreeWalk.walkHeld(loader, paths, walkPks, rootTable, rootIds, onLevel) { (table, pk, rows, i) =>
+        DumpStore.exportRows(writer, target, table, pk, rows, s"${table}_$i")
       }
     }.map(_.selection(spark))
 
@@ -163,10 +164,10 @@ class Graft(spark: SparkSession, dataDir: String,
     val last = PathDsl.parseAll(paths, pks).length
     LevelWriter.run(spark) { writer =>
       val deletes = scala.collection.mutable.ArrayBuffer.empty[DeleteByPk]
-      val levels = TreeWalk.walkHeld(loader, paths, pks, rootTable, rootIds, onLevel) { (table, pk, rows, i) =>
-        val keys = TreeWalk.collectKeys(rows, Seq(pk))
+      val levels = TreeWalk.walkHeld(loader, paths, walkPks, rootTable, rootIds, onLevel) { (table, pk, rows, i) =>
+        val keys = TreeWalk.collectKeys(rows, pk)
         writer.submit {
-          deletes += DeleteByPk(table, pk, target.writePayload(s"del_${table}_${last - i}", keys.toDF(spark)))
+          deletes += DeleteByPk(table, pk.mkString(","), target.writePayload(s"del_${table}_${last - i}", keys.toDF(spark)))
         }
         keys
       }

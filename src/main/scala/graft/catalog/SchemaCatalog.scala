@@ -90,7 +90,8 @@ object SchemaCatalog {
     * reference's shape — it hard-errors on multi-column PKs,
     * `CopyUtils.java:410-412`, so a composite key is "no PK" to the
     * single-column walk); `pkColumns`/`compositePks` carry every
-    * discovered key, any arity, for `TreeWalk.walkLinkedComposite`.
+    * discovered key, any arity, for `TreeWalk.walkHeld`, whose leaves may
+    * have composite keys.
     * Composite FKs are skipped (the reference models only
     * single-column relationships, `ForeignKeyRelationship.java:10-31`).
     *
@@ -157,7 +158,7 @@ object SchemaCatalog {
   /** Composite-aware PK fixture: every starPks table plus lineitem's
     * natural two-column key (l_orderkey, l_linenumber) — the shape the
     * reference hard-errors on (`CopyUtils.java:410-412`) and
-    * `TreeWalk.walkLinkedComposite` supports. */
+    * `TreeWalk.walkHeld` holds as a leaf level's key. */
   val compositeWalkPks: Map[String, Seq[String]] =
     starPks.map { case (t, c) => t -> Seq(c) } +
       ("lineitem" -> Seq("l_orderkey", "l_linenumber"))

@@ -27,34 +27,21 @@ final case class FkEdge(
     childColumn: String)
 
 /** "The rows of `table` whose key columns ∈ keys" — the unit of
-  * subsetting (`TableSelection.java:12-21`). Keys are carried as a
-  * DataFrame either way: a lazy walk's keys are a plan over the table,
-  * which composes into a query, and a verb's walk hands back the keys
-  * it held on the driver as a local frame.
+  * subsetting (`TableSelection.java:12-21`): one level of a tree walk.
   *
-  * `rows` are the selected rows themselves, every column: for a walk
-  * level, child ⋉ parent keys; for the root, the id-filtered root rows.
-  * `keys` are the distinct key columns of those rows. An export writes
-  * `rows` and checks them against `keys`, so neither goes back to the
-  * table.
+  * `rows` are the level's rows, every column: the child filtered by the
+  * parent level's keys; for the root, the id-filtered root rows. `keys`
+  * are the distinct non-null key columns of those rows, which the walk
+  * held on the driver, handed back as a local DataFrame.
   *
   * The reference models single-column selections only (it hard-errors
-  * on composite PKs, `CopyUtils.java:410-412`); this engine extends the
-  * shape to multi-column keys — `columns` and the key frame's columns
-  * are positionally aligned.
+  * on composite PKs, `CopyUtils.java:410-412`); here a leaf level may
+  * carry a composite key, `columns` naming the key frame's columns in
+  * order.
   */
 final case class Selection(table: String, columns: Seq[String], keys: DataFrame, rows: DataFrame) {
   require(columns.nonEmpty && keys.columns.length == columns.length,
     s"Selection columns ${columns.mkString(",")} must align with key columns ${keys.columns.mkString(",")}")
-  /** The single selection column — most walks; composite selections
-    * must go through [[columns]]. */
-  def column: String = {
-    require(columns.length == 1,
-      s"selection on $table has a composite key (${columns.mkString(",")})")
-    columns.head
-  }
-  def keyCols: Seq[String] = keys.columns.toSeq
-  def keyCol: String = keyCols.head
 }
 
 /** Replayable unit of work — the dump stream is a sequence of these

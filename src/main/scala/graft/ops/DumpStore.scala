@@ -9,8 +9,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.{DumpTarget, Target}
-import graft.model.{FkEdge, Operation, Selection, TableDef}
+import graft.Target
+import graft.model.{FkEdge, Operation, TableDef}
 import graft.model.Operation._
 
 /** Portable snapshot ("dump") store — the Spark-native answer to the
@@ -110,53 +110,18 @@ object DumpStore {
     ops
   }
 
-  /** Keyed export of tree-walk selections (the reference's
-    * `copySelections`, `CopyUtils.java:33-47`) into a dump: one
-    * [[exportRows]] per selection, in walk order, through one
-    * [[LevelWriter]], then the manifest.
-    * The cardinality invariant — rows exported must cover the keys
-    * selected (`CopyUtils.java:44-46`) — compares the selection's key
-    * count with the distinct keys of its pinned rows, before any bytes
-    * land. It compares distinct key counts, so a non-unique stand-in
-    * key (many rows per key) exports cleanly. Each key level is pinned
-    * over its pinned rows, for the next level's join; call
-    * [[TreeWalk.release]] on the selections afterwards. */
-  def exportSelections(
-      spark: SparkSession,
-      selections: Seq[Selection],
-      dumpDir: String): Seq[Operation] = {
-    val target = new DumpTarget(spark, dumpDir)
-    LevelWriter.run(spark) { writer =>
-      selections.zipWithIndex.foreach { case (sel, i) =>
-        exportRows(writer, target, sel.table, sel.columns, sel.rows, s"${sel.table}_$i", Some {
-          if (sel.keys.storageLevel == StorageLevel.NONE) sel.keys.persist(StorageLevel.MEMORY_AND_DISK)
-          partitionCount(sel.keys)
-        })
-      }
-    }
-    target.close()
-    target.operations
-  }
-
-  /** Export one level's rows: pin them, collect their distinct keys in
-    * one job ([[TreeWalk.collectKeys]]) and check the invariant on the
-    * driver against `selectedKeys` (evaluated once the rows are pinned,
-    * so a key frame over them reads them pinned). Then hand the rest to
+  /** Export one level's rows: pin them and collect their distinct keys
+    * in one job ([[TreeWalk.collectKeys]]). Then hand the rest to
     * `writer`'s thread, which writes the payload from the pinned rows,
     * unpersists them and applies the level's TableLoad. The hand-over
     * first waits for the previous level's write, so this level's
     * collect overlaps it and at most two levels are pinned. One scan of
     * the level's table. Returns the collected keys. */
   private[graft] def exportRows(writer: LevelWriter, target: Target, table: String,
-                                columns: Seq[String], rows: DataFrame, name: String,
-                                selectedKeys: => Option[Long] = None): TreeWalk.HeldKeys = {
+                                columns: Seq[String], rows: DataFrame, name: String): TreeWalk.HeldKeys = {
     rows.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val selected = selectedKeys
       val keys = TreeWalk.collectKeys(rows, columns)
-      selected.filter(_ != keys.size).foreach { n =>
-        sys.error(s"Only ${keys.size} of $n keys copied for $table — cardinality invariant violated")
-      }
       writer.submit {
         val payload = try target.writePayload(name, rows) finally rows.unpersist(blocking = false)
         target.apply(TableLoad(table, payload))
@@ -168,28 +133,6 @@ object DumpStore {
         rows.unpersist(blocking = false)
         throw e
     }
-  }
-
-  /** Rows of `df`, summed over its partitions: one job, without the
-    * single-partition shuffle (a job of its own) that `count()` adds. */
-  private def partitionCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
-
-  /** Delete-tree export (`deleteSelections`, `CopyUtils.java:23-31`):
-    * one DeleteByPk op per selection, emitted child-first (reverse walk
-    * order) so replay never deletes a parent row still referenced by
-    * children. */
-  def exportDeleteTree(
-      spark: SparkSession,
-      selections: Seq[Selection],
-      dumpDir: String): Seq[Operation] = {
-    val schemas = Map.newBuilder[String, StructType]
-    val ops = selections.reverse.zipWithIndex.map { case (sel, i) =>
-      val payload = s"payloads/del_${sel.table}_$i"
-      schemas += payload -> writeParquet(sel.keys.toDF(sel.columns: _*), s"$dumpDir/$payload")
-      DeleteByPk(sel.table, sel.columns.mkString(","), payload)
-    }
-    writeManifest(spark, dumpDir, ops, schemas.result())
-    ops
   }
 
   // ---- manifest serialization (driver-side; metadata-sized) ----
@@ -242,21 +185,27 @@ object DumpStore {
       s"""{"seq":$seq,"kind":"create_or_replace","table":${esc(t)},"ddl":${esc(ddl)}}"""
   }
 
-  /** Write `ops` as the dump's manifest. `schemas` maps a payload path
-    * to the schema its files carry; replay reads a payload recorded with
-    * one without Spark's schema-inference job. */
+  /** Write `ops` as the dump's manifest, in one step: the bytes go to a
+    * sibling temp file, which then replaces the manifest. A crash before
+    * the replace leaves the old manifest whole, and one between its
+    * delete and rename leaves none, which reads as an uncommitted dump;
+    * no crash leaves a cut manifest, which would replay as a silent
+    * prefix. `schemas` maps a payload path to the schema its files carry; replay
+    * reads a payload recorded with one without Spark's schema-inference
+    * job. */
   def writeManifest(spark: SparkSession, dumpDir: String, ops: Seq[Operation],
                     schemas: Map[String, StructType] = Map.empty): Unit = {
     val path = new Path(s"$dumpDir/manifest.jsonl")
+    val tmp = new Path(s"$dumpDir/manifest.jsonl.tmp")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try {
-      val bytes = ops.zipWithIndex
-        .map { case (op, i) => toJson(i, op, payloadOf(op).flatMap(schemas.get)) }
-        .mkString("", "\n", "\n")
-        .getBytes("UTF-8")
-      out.write(bytes)
-    } finally out.close()
+    val bytes = ops.zipWithIndex
+      .map { case (op, i) => toJson(i, op, payloadOf(op).flatMap(schemas.get)) }
+      .mkString("", "\n", "\n")
+      .getBytes("UTF-8")
+    val out = fs.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    fs.delete(path, false)
+    if (!fs.rename(tmp, path)) throw new java.io.IOException(s"Could not rename $tmp to $path")
   }
 
   private val json = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)

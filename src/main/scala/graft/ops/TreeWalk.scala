@@ -7,224 +7,77 @@ import org.apache.spark.sql.catalyst.expressions.{And, Cast, EvalMode, Expressio
   Literal, Predicate, UnaryExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
-import graft.model.{FkEdge, Selection}
+import graft.model.Selection
 
 /** FK-graph traversal: the reference's `copyTree`/`deleteTree` core
-  * (`walkLinked`, `CopyUtils.java:533-574`; semi-join J1
-  * `findLinkedRows`, `:480-531`), in two forms.
+  * (its linked-rows walk, `CopyUtils.java:533-574`; semi-join J1
+  * `findLinkedRows`, `:480-531`), as one walk, [[walkHeld]].
   *
-  * The verbs' walk, [[walkHeld]], keeps each level's keys on the
-  * driver, as the reference does with its batched `IN`-lists of 500
-  * parent ids. A level's rows are the child filtered by the range of
-  * the parent's keys, which Parquet pushes down, and by membership in
-  * the keys, broadcast once ([[InBroadcastKeys]]); the visitor collects
-  * the rows' distinct keys in one job ([[collectKeys]]), and the next
-  * level filters on them. A level's keys are bounded as a `collect()`
-  * is, by `spark.driver.maxResultSize`; a walk past it fails loudly,
-  * naming the setting to raise. The walk and its key collects run on
-  * the caller's thread; the verbs' visitors hand each level's payload
-  * write to a [[LevelWriter]] thread, in walk order, and go on to the
-  * next level while it runs. The hand-over waits for the previous
-  * level's write, so at most two levels are pinned at once.
+  * The walk keeps each level's keys on the driver, as the reference
+  * does with its batched `IN`-lists of 500 parent ids. A level's rows
+  * are the child filtered by the range of the parent's keys, which
+  * Parquet pushes down, and by membership in the keys, broadcast once
+  * ([[InBroadcastKeys]]); the visitor collects the rows' distinct keys
+  * in one job ([[collectKeys]]), and the next level filters on them. A
+  * level's keys are bounded as a `collect()` is, by
+  * `spark.driver.maxResultSize`; a walk past it fails loudly, naming
+  * the setting to raise. The walk and its key collects run on the
+  * caller's thread. The verbs' visitors hand each level's payload write
+  * to a [[LevelWriter]] thread, in walk order, and go on to the next
+  * level while it runs; the hand-over waits for the previous level's
+  * write, so at most two levels are pinned at once. Queries and probes
+  * walk with [[collectOnly]] ([[selectAlongPath]]) and compose on a
+  * level's rows or keys, so building one runs a key collect per level.
   *
-  * The lazy walk, [[walkLinked]] and [[selectAlongPath]], is for query
-  * composition: each step is a single `left_semi` join, child ⋉
-  * accumulated-parent-keys, projecting the child PK. Its key sets stay
-  * DataFrames, so a walk plans as one query; with AQE on, small key
-  * sets become broadcast joins automatically, and the explicit
-  * `broadcast` hint is applied when the caller marks the roots as small.
-  *
-  * Reference error semantics kept by both forms:
+  * Reference error semantics:
   * - an edge whose parent has no accumulated ids yet → hard error
   *   ("Could not find path to …", `CopyUtils.java:552-555`);
   * - a child table without a PK → hard error ("no PK for …", `:562-564`).
   *
-  * Every lazy level keeps its rows (child ⋉ parent keys, all columns;
-  * the id-filtered rows for the root) next to its keys, which are
-  * derived from them. [[DumpStore.exportSelections]] pins a level's
-  * rows and then its keys, reads the pinned rows for both its invariant
-  * and its payload, and unpersists them once written: one scan of each
-  * walked table, with the key levels held until [[release]] because the
-  * next level joins through them. The exporter pins, level by level,
-  * rather than the walk: unpersisting a frame makes Spark re-plan every
-  * cached plan built on it that is not materialized yet, and a key
-  * level re-planned while its rows are not cached would read the table
-  * again.
-  *
-  * The reference additionally hard-errors on multi-column PKs
-  * (`CopyUtils.java:410-412`); the single-column entry points keep that
-  * contract, while [[walkLinkedComposite]] extends the lazy walk to
-  * composite child keys (selections then carry one key column per PK
-  * column).
+  * The reference also hard-errors on multi-column PKs
+  * (`CopyUtils.java:410-412`). Here a child may have a composite PK: its
+  * level holds the full key. Such a child is always a leaf, because
+  * [[PathDsl.parseAllComposite]] refuses an edge out of a composite-PK
+  * parent; the root's PK must be single-column, to seed from scalar ids.
   */
 object TreeWalk {
 
-  /** Walk `edges` in order from `roots` (table → single-column key DF),
-    * returning one Selection per edge, in walk order. Single-column-PK
-    * form — the reference's shape.
-    *
-    * @param broadcastKeys hint key sets as broadcastable (small roots —
-    *   the common copy-tree case). With false, Catalyst/AQE decides.
-    * @param cache persist each key level (MEMORY_AND_DISK). Use when
-    *   key levels are consumed more than once (delete-tree: payload
-    *   write, then the next level's join) and call [[release]] when the
-    *   walk's outputs are no longer needed — persisted levels otherwise
-    *   accumulate in the session for its whole lifetime. Pass false for
-    *   single-shot query composition, and for an export, which pins
-    *   each level itself.
-    */
-  def walkLinked(
-      loader: String => DataFrame,
-      edges: Seq[FkEdge],
-      pks: Map[String, String],
-      roots: Map[String, DataFrame],
-      broadcastKeys: Boolean = true,
-      cache: Boolean = true): Seq[Selection] = {
-    roots.foreach { case (t, keys) =>
-      require(keys.columns.length == 1, s"root keys for $t must be single-column")
-    }
-    val rootsNamed = roots.map { case (t, keys) =>
-      val pk = pks.getOrElse(t, sys.error(s"There is no PK for $t"))
-      t -> keys.toDF(pk)
-    }
-    walkLinkedComposite(loader, edges, pks.map { case (t, c) => t -> Seq(c) },
-      rootsNamed, broadcastKeys, cache)
-  }
+  /** Unpersist the key frames of `selections`, for a caller that pinned them. */
+  def release(selections: Seq[Selection]): Unit = selections.foreach(_.keys.unpersist(blocking = false))
 
-  /** [[walkLinked]] generalized to composite (multi-column) child PKs —
-    * the extension past the reference's single-column-PK hard error.
-    *
-    * `pks` maps each table to its ordered PK column list; `roots` key
-    * frames must carry the root table's PK columns (names aligned).
-    * Each selection's key frame holds the child's full PK; onward edges
-    * join through `edge.parentColumn`, which must be one of the parent's
-    * accumulated key columns (an FK can only reference what the walk
-    * has selected).
-    */
-  def walkLinkedComposite(
-      loader: String => DataFrame,
-      edges: Seq[FkEdge],
-      pks: Map[String, Seq[String]],
-      roots: Map[String, DataFrame],
-      broadcastKeys: Boolean = true,
-      cache: Boolean = true): Seq[Selection] = {
-
-    val acc = scala.collection.mutable.Map.empty[String, DataFrame]
-    roots.foreach { case (t, keys) =>
-      val pk = pks.getOrElse(t, sys.error(s"There is no PK for $t"))
-      require(keys.columns.toSeq == pk,
-        s"root keys for $t must carry its PK columns ${pk.mkString(",")}, got ${keys.columns.mkString(",")}")
-      acc(t) = keys.distinct()
-    }
-
-    val out = Seq.newBuilder[Selection]
-    edges.foreach { edge =>
-      val parentKeys = acc.getOrElse(edge.parentTable,
-        sys.error(s"Could not find path to ${edge.parentTable} (edge ${edge.name})"))
-      require(parentKeys.columns.contains(edge.parentColumn),
-        s"edge ${edge.name} leaves ${edge.parentTable} through ${edge.parentColumn}, " +
-          s"which is not among its selected key columns ${parentKeys.columns.mkString(",")}")
-      val childPk = pks.getOrElse(edge.childTable,
-        sys.error(s"There is no PK for ${edge.childTable}"))
-      // every accumulated key set is distinct already; only one column
-      // of a composite key needs deduplicating before the broadcast
-      val parentIds =
-        (if (parentKeys.columns.length == 1) parentKeys
-         else parentKeys.select(edge.parentColumn).distinct()).toDF("__key")
-      val keys = if (broadcastKeys) broadcast(parentIds) else parentIds
-      val child = loader(edge.childTable)
-      val childRows = child.join(keys, child(edge.childColumn) === keys("__key"), "left_semi")
-      val childKeys = childRows.select(childPk.map(col): _*).distinct()
-      // persist each level when reused: the Selection keeps the SAME
-      // DataFrame that was persisted, so release() can unpersist it
-      if (cache) childKeys.persist(StorageLevel.MEMORY_AND_DISK)
-      out += Selection(edge.childTable, childPk, childKeys, childRows)
-      acc(edge.childTable) = acc.get(edge.childTable) match {
-        case Some(prev) => prev.union(childKeys).distinct()
-        case None => childKeys
-      }
-    }
-    out.result()
-  }
-
-  /** Unpersist every key level a walk or an export cached. Call after
-    * the walk's selections have been fully consumed (payloads written)
-    * — a long-lived session otherwise leaks one cached level per edge
-    * per walk invocation. */
-  def release(selections: Seq[Selection]): Unit =
-    selections.foreach(_.keys.unpersist(blocking = false))
+  /** The [[walkHeld]] visitor that only collects each level's keys. */
+  val collectOnly: (String, Seq[String], DataFrame, Int) => HeldKeys = (_, pk, rows, _) => collectKeys(rows, pk)
 
   /** `copyTree` (`Main.java:142-155` → `selectAlongPath`,
-    * `CopyUtils.java:50-57`): parse paths, seed the root table with a
-    * literal id list, walk, and prepend the root's own selection. */
+    * `CopyUtils.java:50-57`) as selections: [[walkHeld]] with
+    * [[collectOnly]], the root's selection first. */
   def selectAlongPath(
       spark: SparkSession,
       loader: String => DataFrame,
       paths: Seq[String],
       pks: Map[String, String],
       rootTable: String,
-      rootIds: Seq[Long],
-      cache: Boolean = true): Seq[Selection] =
-    selectAlongPathComposite(spark, loader, paths,
-      pks.map { case (t, c) => t -> Seq(c) }, rootTable, rootIds, cache)
-
-  /** [[selectAlongPath]] over a composite-PK catalog. The root table
-    * must still have a single-column PK (root ids are scalars); child
-    * tables may have composite PKs. */
-  def selectAlongPathComposite(
-      spark: SparkSession,
-      loader: String => DataFrame,
-      paths: Seq[String],
-      pks: Map[String, Seq[String]],
-      rootTable: String,
-      rootIds: Seq[Long],
-      cache: Boolean = true): Seq[Selection] = {
-    val rootPk = pks.getOrElse(rootTable, sys.error(s"There is no PK for $rootTable"))
-    require(rootPk.length == 1,
-      s"root table $rootTable must have a single-column PK to seed from scalar ids, got ${rootPk.mkString(",")}")
-    // keep only root ids that actually exist (the reference selects the
-    // root rows by id too — absent ids select nothing)
-    val rootRows = loader(rootTable)
-      .filter(col(rootPk.head).isin(rootIds.map(x => lit(x)): _*))
-    val rootKeys = rootRows.select(col(rootPk.head))
-    val edges = PathDsl.parseAllComposite(paths, pks)
-    val walked = walkLinkedComposite(loader, edges, pks,
-      Map(rootTable -> rootKeys), cache = cache)
-    Selection(rootTable, rootPk, rootKeys, rootRows) +: walked
-  }
-
-  /** The equi-join condition matching a table's columns to a selection's
-    * key columns, pairwise in order. */
-  private def keyCondition(t: DataFrame, sel: Selection): Column =
-    sel.columns.zip(sel.keyCols)
-      .map { case (c, k) => t(c) === sel.keys(k) }
-      .reduce(_ && _)
-
-  /** The materialized rows of a selection — child ⋉ keys (J1 in query
-    * form). Broadcast of the key side left to AQE. */
-  def selectRows(loader: String => DataFrame, sel: Selection): DataFrame = {
-    val t = loader(sel.table)
-    t.join(sel.keys, keyCondition(t, sel), "left_semi")
-  }
+      rootIds: Seq[Long]): Seq[Selection] =
+    walkHeld(loader, paths, pks.map { case (t, c) => t -> Seq(c) }, rootTable, rootIds)(collectOnly)
+      .map(_.selection(spark))
 
   /** `deleteTree` in query form (J4): target rows whose key is NOT in
     * the selection — `left_anti` (`CopyUtils.java:23-31`,
     * `DeleteByPk.java:15-43`). */
   def antiRows(loader: String => DataFrame, sel: Selection): DataFrame = {
     val t = loader(sel.table)
-    t.join(sel.keys, keyCondition(t, sel), "left_anti")
+    t.join(sel.keys, sel.columns.map(c => t(c) === sel.keys(c)).reduce(_ && _), "left_anti")
   }
 
-  // ---- the verbs' walk: key sets held on the driver ----
+  // ---- key sets held on the driver ----
 
   /** The distinct non-null keys of one walked level, held on the driver,
     * with the number of rows they were read from. A single-column key
@@ -322,12 +175,12 @@ object TreeWalk {
     override def toString: String = s"$child IN broadcast keys ${keys.id}"
   }
 
-  /** One level of [[walkHeld]]: the table, its key column, its rows (as
+  /** One level of [[walkHeld]]: the table, its key columns, its rows (as
     * handed to the visitor), the keys the visitor collected from them,
     * and the visit's wall time (for the verbs: the key collect plus the
     * wait for the previous level's write, not the level's own write). */
-  final case class HeldLevel(table: String, column: String, rows: DataFrame, keys: HeldKeys, ms: Long) {
-    def selection(spark: SparkSession): Selection = Selection(table, Seq(column), keys.toDF(spark), rows)
+  final case class HeldLevel(table: String, columns: Seq[String], rows: DataFrame, keys: HeldKeys, ms: Long) {
+    def selection(spark: SparkSession): Selection = Selection(table, columns, keys.toDF(spark), rows)
   }
 
   /** The distinct non-null values of `columns` in `rows`, and the number
@@ -372,9 +225,10 @@ object TreeWalk {
     (n, seen.toArray)
   }
 
-  /** The verbs' walk: seed `rootTable` with `rootIds`, then follow
-    * `paths` in order, one level per edge, with each level's keys held
-    * on the driver. `visit(table, keyColumn, rows, level)` handles one
+  /** The walk: seed `rootTable` with `rootIds`, then follow `paths` in
+    * order, one level per edge, with each level's keys held on the
+    * driver. `pks` gives each table's PK columns; only a leaf may have
+    * more than one. `visit(table, keyColumns, rows, level)` handles one
     * level's rows and returns their keys, which the next level filters
     * on; a table reached twice filters on the union of its key sets.
     * `onLevel` sees each level as soon as it is visited. Everything here
@@ -383,16 +237,18 @@ object TreeWalk {
   def walkHeld(
       loader: String => DataFrame,
       paths: Seq[String],
-      pks: Map[String, String],
+      pks: Map[String, Seq[String]],
       rootTable: String,
       rootIds: Seq[Long],
       onLevel: HeldLevel => Unit = _ => ())(
-      visit: (String, String, DataFrame, Int) => HeldKeys): Seq[HeldLevel] = {
+      visit: (String, Seq[String], DataFrame, Int) => HeldKeys): Seq[HeldLevel] = {
     val rootPk = pks.getOrElse(rootTable, sys.error(s"There is no PK for $rootTable"))
-    val edges = PathDsl.parseAll(paths, pks)
+    require(rootPk.length == 1,
+      s"root table $rootTable must have a single-column PK to seed from scalar ids, got ${rootPk.mkString(",")}")
+    val edges = PathDsl.parseAllComposite(paths, pks)
     val acc = scala.collection.mutable.Map.empty[String, HeldKeys]
     val out = Seq.newBuilder[HeldLevel]
-    def level(table: String, pk: String, rows: DataFrame, i: Int): Unit = {
+    def level(table: String, pk: Seq[String], rows: DataFrame, i: Int): Unit = {
       val t0 = System.nanoTime()
       val keys = visit(table, pk, rows, i)
       val l = HeldLevel(table, pk, rows, keys, (System.nanoTime() - t0) / 1000000)
@@ -401,7 +257,7 @@ object TreeWalk {
       acc(table) = acc.get(table).fold(keys)(_ ++ keys)
     }
     val root = loader(rootTable)
-    level(rootTable, rootPk, root.filter(HeldKeys.ids(rootPk, rootIds).in(root, rootPk)), 0)
+    level(rootTable, rootPk, root.filter(HeldKeys.ids(rootPk.head, rootIds).in(root, rootPk.head)), 0)
     edges.zipWithIndex.foreach { case (edge, i) =>
       val parentKeys = acc.getOrElse(edge.parentTable,
         sys.error(s"Could not find path to ${edge.parentTable} (edge ${edge.name})"))

@@ -10,7 +10,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.model.Operation
 import graft.model.Operation._
 import graft.catalog.SchemaCatalog
-import graft.ops.{DumpStore, Jdbc, LevelWriter, TreeWalk}
+import graft.ops.{DumpStore, Jdbc, LevelWriter, PathDsl, TreeWalk}
 
 /** End-to-end tests of the user-facing DSL facade: the reference's
   * script verbs against both target kinds. */
@@ -171,36 +171,52 @@ class GraftSpec extends SparkSpec {
 
   /** Root sets and paths for the driver-held walk against the lazy one:
     * a plain range, absent ids, duplicated ids, none, and a path that
-    * reaches lineitem twice (through orders and through supplier). */
+    * reaches lineitem twice (through orders and through supplier), from
+    * nations without suppliers and from nations with some. */
   private val treeCases: Seq[(String, Seq[String], String, Seq[Long])] = {
     val toLineitem = Seq("customer->orders.o_custkey", "orders->lineitem.l_orderkey")
+    val twice = Seq("nation->customer.c_nationkey", "nation->supplier.s_nationkey",
+      "customer->orders.o_custkey", "orders->lineitem.l_orderkey", "supplier->lineitem.l_suppkey")
     Seq(
       ("1..10", toLineitem, "customer", 1L to 10L),
       ("absent ids", toLineitem, "customer", Seq(-7L, 999999999L)),
       ("duplicated ids", toLineitem, "customer", Seq(3L, 3L, 5L, 5L, 5L, 8L)),
       ("no ids", toLineitem, "customer", Nil),
-      ("lineitem twice", Seq("nation->customer.c_nationkey", "nation->supplier.s_nationkey",
-        "customer->orders.o_custkey", "orders->lineitem.l_orderkey", "supplier->lineitem.l_suppkey"),
-        "nation", Seq(1L, 4L)))
+      ("lineitem twice, suppliers", twice, "nation", Seq(1L, 3L)),
+      ("lineitem twice", twice, "nation", Seq(1L, 4L)))
+  }
+
+  /** The lazy walk as plain joins, the reference for the held one: the
+    * root's rows by id, then, per edge, the child `left_semi`-joined to
+    * every row its parent table has reached so far. (table, rows) per
+    * level. */
+  private def lazyWalk(paths: Seq[String], root: String, ids: Seq[Long],
+                       pks: Map[String, Seq[String]] = SchemaCatalog.walkPks.map { case (t, c) => t -> Seq(c) })
+      : Seq[(String, DataFrame)] = {
+    val rootRows = load(root).filter(col(pks(root).head).isin(ids: _*))
+    val reached = scala.collection.mutable.Map(root -> rootRows)
+    (root -> rootRows) +: PathDsl.parseAllComposite(paths, pks).map { e =>
+      val (child, parent) = (load(e.childTable), reached(e.parentTable))
+      val rows = child.join(parent, child(e.childColumn) === parent(e.parentColumn), "left_semi")
+      reached(e.childTable) = reached.get(e.childTable).fold(rows)(_.union(rows))
+      e.childTable -> rows
+    }
   }
 
   /** copyTree into a dump; each payload's digest must equal that of the
-    * lazy walk's rows for the same level, and each level's keys the lazy
-    * walk's key count. */
+    * lazy walk's rows for the same level, and each level's keys the
+    * distinct keys of those rows. */
   private def matchesLazyWalk(paths: Seq[String], root: String, ids: Seq[Long]): Unit = {
     val dump = Files.createTempDirectory("graft-dump").toString
     val target = g0.fileTarget(dump)
     val sels = g0.copyTree(target, paths, root, ids)
     target.close()
-    val lazySels = TreeWalk.selectAlongPath(spark, load, paths, SchemaCatalog.walkPks, root, ids)
-    try {
-      assert(sels.map(_.table) == lazySels.map(_.table))
-      lazySels.zip(sels).zipWithIndex.foreach { case ((want, got), i) =>
-        assert(digest(spark.read.parquet(s"$dump/payloads/${want.table}_$i")) == digest(want.rows),
-          s"level $i (${want.table})")
-        assert(got.keys.count() == want.keys.count(), s"level $i (${want.table}) keys")
-      }
-    } finally TreeWalk.release(lazySels)
+    val want = lazyWalk(paths, root, ids)
+    assert(sels.map(_.table) == want.map(_._1))
+    want.zip(sels).zipWithIndex.foreach { case (((table, rows), got), i) =>
+      assert(digest(spark.read.parquet(s"$dump/payloads/${table}_$i")) == digest(rows), s"level $i ($table)")
+      assert(got.keys.count() == rows.select(got.columns.map(col): _*).distinct().count(), s"level $i ($table) keys")
+    }
   }
   private lazy val g0 = new Graft(spark, sf)
 
@@ -219,6 +235,16 @@ class GraftSpec extends SparkSpec {
         withClue(s"threshold $threshold, $name: ")(matchesLazyWalk(paths, root, ids))
       }
     } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("the composite walk's lineitem keys are the plain joins' (l_orderkey, l_linenumber) pairs") {
+    val (_, paths, root, ids) = treeCases.head
+    val pks = SchemaCatalog.compositeWalkPks
+    val got = TreeWalk.walkHeld(load, paths, pks, root, ids)(TreeWalk.collectOnly).last
+    assert(got.table == "lineitem" && got.columns == Seq("l_orderkey", "l_linenumber"))
+    val want = lazyWalk(paths, root, ids, pks).last._2.select("l_orderkey", "l_linenumber").distinct().collect()
+    assert(want.nonEmpty && got.keys.size == want.length)
+    assert(got.keys.toDF(spark).collect().toSet == want.toSet)
   }
 
   test("a walked level whose keys outgrow spark.driver.maxResultSize fails loudly, naming the setting") {
@@ -252,11 +278,13 @@ class GraftSpec extends SparkSpec {
     // nation → customer/supplier → orders → lineitem reaches lineitem
     // twice; the payload names number the levels as the sequential verbs
     // did: walk order for copy-tree, child-first for delete-tree
-    val (_, paths, root, ids) = treeCases.last
-    val tables = Seq("nation", "customer", "supplier", "orders", "lineitem", "lineitem")
     val pks = SchemaCatalog.walkPks
-    val lazySels = TreeWalk.selectAlongPath(spark, load, paths, pks, root, ids)
-    try {
+    Seq(
+      (treeCases.last._2, "nation", Seq(1L, 3L), Seq("nation", "customer", "supplier", "orders", "lineitem", "lineitem")),
+      (Seq("customer->orders.o_custkey"), "customer", 1L to 3L, Seq("customer", "orders"))
+    ).foreach { case (paths, root, ids, tables) => withClue(s"${tables.mkString(",")}: ") {
+      val want = lazyWalk(paths, root, ids)
+      assert(want.map(_._1) == tables)
       val copyDump = Files.createTempDirectory("graft-dump").toString
       val copyTarget = g0.fileTarget(copyDump)
       g0.copyTree(copyTarget, paths, root, ids)
@@ -264,8 +292,8 @@ class GraftSpec extends SparkSpec {
       assert(manifestLines(copyDump) == tables.zipWithIndex.map { case (t, i) =>
         ("table_load", t, "", s"payloads/${t}_$i", Some(load(t).schema.toNullable.json))
       })
-      lazySels.zipWithIndex.foreach { case (sel, i) =>
-        assert(digest(spark.read.parquet(s"$copyDump/payloads/${sel.table}_$i")) == digest(sel.rows), s"copy level $i")
+      want.zipWithIndex.foreach { case ((t, rows), i) =>
+        assert(digest(spark.read.parquet(s"$copyDump/payloads/${t}_$i")) == digest(rows), s"copy level $i")
       }
 
       val delDump = Files.createTempDirectory("graft-dump").toString
@@ -277,11 +305,11 @@ class GraftSpec extends SparkSpec {
         ("delete_by_pk", t, pk, s"payloads/del_${t}_$i",
           Some(org.apache.spark.sql.types.StructType(Seq(load(t).schema(pk))).toNullable.json))
       })
-      lazySels.reverse.zipWithIndex.foreach { case (sel, i) =>
-        assert(digest(spark.read.parquet(s"$delDump/payloads/del_${sel.table}_$i")) == digest(sel.keys),
+      want.reverse.zipWithIndex.foreach { case ((t, rows), i) =>
+        assert(digest(spark.read.parquet(s"$delDump/payloads/del_${t}_$i")) == digest(rows.select(pks(t)).distinct()),
           s"delete level ${tables.length - 1 - i}")
       }
-    } finally TreeWalk.release(lazySels)
+    }}
   }
 
   test("a payload write that fails at level 1 ends copyTree: rethrown, nothing left pinned, no later op, no writer thread") {

@@ -39,10 +39,16 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("PushedFilters: [In(l_orderkey"))
   }
 
-  test("q03: copy-tree walk runs as broadcast left-semi joins") {
-    val p = plan(run("q03_copy_tree"))
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"))
-    assert(!p.contains("SortMergeJoin"))
+  test("q03: copy-tree walk filters lineitem by the held keys: pushed range, broadcast key set, no join") {
+    val df = run("q03_copy_tree")
+    val p = plan(df)
+    assert("""PushedFilters: \[IsNotNull\(l_orderkey\), GreaterThanOrEqual\(l_orderkey,\d+\), LessThanOrEqual\(l_orderkey,\d+\)\]""".r
+      .findFirstIn(p).isDefined, p)
+    assert(p.contains("IN broadcast keys"), p)
+    assert(!p.contains("Join"), p)
+    // the orderBy's exchange only
+    assert(shuffles(df) <= 1, p)
+    assert("""Exchange \w+""".r.findAllIn(p).forall(_ == "Exchange rangepartitioning"), p)
   }
 
   test("q06: top-k compiles to TakeOrderedAndProject (no global sort)") {

@@ -74,27 +74,49 @@ class DumpStoreSpec extends SparkSpec {
     }
   }
 
-  test("exportSelections enforces the cardinality invariant and replays") {
+  test("copyTree → replay lands the walked rows in the catalog") {
     val dump = Files.createTempDirectory("graft-dump").toString
-    val sels = TreeWalk.selectAlongPath(
-      spark, load, Seq("customer->orders.o_custkey"), SchemaCatalog.walkPks, "customer", 1L to 5L)
-    val ops = DumpStore.exportSelections(spark, sels, dump)
-    assert(ops.map(_.kind).forall(_ == "table_load"))
-    val expected = load("orders").filter(col("o_custkey").between(1, 5)).count()
-    assert(spark.read.parquet(s"$dump/payloads/orders_1").count() == expected)
+    val g = new graft.Graft(spark, sf)
+    val target = g.fileTarget(dump)
+    g.copyTree(target, Seq("customer->orders.o_custkey"), "customer", 1L to 5L)
+    target.close()
+    assert(DumpStore.readManifest(spark, dump).map(_.kind) == Seq("table_load", "table_load"))
+    val want = Map(
+      "customer" -> load("customer").filter(col("c_custkey").between(1, 5)),
+      "orders" -> load("orders").filter(col("o_custkey").between(1, 5)))
+    val db = s"graft_tree_${System.nanoTime()}"
+    spark.sql(s"CREATE DATABASE $db")
+    try {
+      want.keys.foreach(t => spark.sql(DumpStore.ddlFor(s"$db.$t", load(t).schema)))
+      DumpStore.replay(spark, dump, Some(db))
+      want.foreach { case (t, rows) =>
+        val got = spark.table(s"$db.$t")
+        assert(got.count() == rows.count(), t)
+        assert(got.exceptAll(rows).isEmpty && rows.exceptAll(got).isEmpty, t)
+      }
+    } finally {
+      spark.catalog.setCurrentDatabase("default")
+      spark.sql(s"DROP DATABASE $db CASCADE")
+    }
   }
 
-  test("exportSelections: a selected key with no rows raises the invariant before any payload lands") {
-    import spark.implicits._
-    val dump = Files.createTempDirectory("graft-dump").toString
-    val rows = load("orders").filter(col("o_custkey").between(1, 5))
-    val n = rows.count()
-    val keys = rows.select("o_orderkey").union(Seq(-1L).toDF("o_orderkey"))
-    val sel = graft.model.Selection("orders", Seq("o_orderkey"), keys, rows)
-    val e = intercept[RuntimeException](DumpStore.exportSelections(spark, Seq(sel), dump))
-    assert(e.getMessage.contains(s"Only $n of ${n + 1} keys copied for orders"))
-    assert(!Files.exists(java.nio.file.Paths.get(dump, "payloads")))
-    assert(!Files.exists(java.nio.file.Paths.get(dump, "manifest.jsonl")))
+  test("a manifest rewrite commits in one step: a failed write leaves the old manifest whole, " +
+    "a good one leaves no temp file") {
+    val dir = Files.createTempDirectory("graft-dump").toString
+    def temps = new java.io.File(dir).list().filter(_.contains(".tmp")).toSeq
+    val old = Seq(TableLoad("t", "payloads/t"), DeleteByPk("t", "a", "payloads/d"))
+    DumpStore.writeManifest(spark, dir, old)
+    assert(temps.isEmpty)
+    // the temp path cannot be written: a non-empty directory stands there
+    val tmp = java.nio.file.Paths.get(dir, "manifest.jsonl.tmp")
+    Files.createDirectories(tmp.resolve("occupied"))
+    val next = Seq(SqlList(Seq("SELECT 1")))
+    intercept[java.io.IOException](DumpStore.writeManifest(spark, dir, next))
+    assert(DumpStore.readManifest(spark, dir) == old)
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    DumpStore.writeManifest(spark, dir, next)
+    assert(DumpStore.readManifest(spark, dir) == next)
+    assert(temps.isEmpty, temps.mkString(", "))
   }
 
   test("replay executes upsert and delete ops against the catalog") {

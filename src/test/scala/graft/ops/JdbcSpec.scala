@@ -146,12 +146,12 @@ class JdbcSpec extends SparkSpec {
 
     // the discovered graph drives the same TreeWalk over the live db
     val loader = (t: String) => Jdbc.read(spark, url, t)
-    val rootKeys = load("region").filter($"r_regionkey" <= 1).select("r_regionkey")
-    val sels = TreeWalk.walkLinked(loader, cat.fkEdges, cat.primaryKeys,
-      Map("region" -> rootKeys), cache = false)
-    assert(sels.map(_.table) == Seq("nation"))
+    val sels = TreeWalk.selectAlongPath(spark, loader,
+      cat.fkEdges.map(e => s"${e.parentTable}->${e.childTable}.${e.childColumn}"), cat.primaryKeys,
+      "region", Seq(0L, 1L))
+    assert(sels.map(_.table) == Seq("region", "nation"))
     val expected = load("nation").filter($"n_regionkey" <= 1).count()
-    assert(expected > 0 && sels.head.keys.count() == expected)
+    assert(expected > 0 && sels(1).keys.count() == expected)
   }
 
   test("a failed upsert or delete batch surfaces the database's FK error, not a close failure") {
@@ -229,25 +229,20 @@ class JdbcSpec extends SparkSpec {
     // composite FK skipped; single-column FK kept
     assert(cat.fkEdges.map(_.name) == Seq("fk_kid_solo"))
     val e = intercept[RuntimeException] {
-      TreeWalk.walkLinked(
-        t => Jdbc.read(spark, url, t),
-        Seq(graft.model.FkEdge("x", "solo", "id", "duo", "a")),
-        cat.primaryKeys, Map("solo" -> spark.range(1).toDF("id")), cache = false)
+      TreeWalk.selectAlongPath(spark, t => Jdbc.read(spark, url, t), Seq("solo->duo.a"),
+        cat.primaryKeys, "solo", Seq(0L))
     }
     assert(e.getMessage.contains("no PK for duo"))
 
-    // the SAME edge drives the composite walk: the duo selection now
-    // carries its full (a, b) key, discovered — not injected
+    // the SAME edge drives the composite walk: the duo level now
+    // holds its full (a, b) key, discovered — not injected
     Jdbc.append(Seq((0L, 10), (1L, 11)).toDF("id", "x"), url, "solo")
     Jdbc.append(Seq((0L, 1L, 5), (0L, 2L, 6), (7L, 1L, 7)).toDF("a", "b", "y"), url, "duo")
-    val sels = TreeWalk.walkLinkedComposite(
-      t => Jdbc.read(spark, url, t),
-      Seq(graft.model.FkEdge("x", "solo", "id", "duo", "a")),
-      cat.compositePks,
-      Map("solo" -> Seq(0L).toDF("id")), cache = false)
-    assert(sels.map(_.table) == Seq("duo"))
-    assert(sels.head.columns == Seq("a", "b"))
-    assert(sels.head.keys.as[(Long, Long)].collect().toSet == Set((0L, 1L), (0L, 2L)))
+    val levels = TreeWalk.walkHeld(t => Jdbc.read(spark, url, t), Seq("solo->duo.a"),
+      cat.compositePks, "solo", Seq(0L))(TreeWalk.collectOnly)
+    assert(levels.map(_.table) == Seq("solo", "duo"))
+    assert(levels.last.columns == Seq("a", "b"))
+    assert(levels.last.keys.toDF(spark).as[(Long, Long)].collect().toSet == Set((0L, 1L), (0L, 2L)))
   }
 
   test("dump → JDBC replay: schema + data land in the live database (import path)") {
@@ -376,11 +371,12 @@ class SqlTextSpec extends graft.SparkSpec {
   }
 
   test("delete-tree ops are emitted child-first (reverse walk order)") {
-    import graft.catalog.SchemaCatalog
     val dump = java.nio.file.Files.createTempDirectory("graft-dump").toString
-    val sels = TreeWalk.selectAlongPath(
-      spark, load, Seq("customer->orders.o_custkey"), SchemaCatalog.walkPks, "customer", 1L to 3L)
-    val ops = DumpStore.exportDeleteTree(spark, sels, dump)
-    assert(ops.map { case graft.model.Operation.DeleteByPk(t, _, _) => t } == Seq("orders", "customer"))
+    val g = new graft.Graft(spark, sf)
+    val target = g.fileTarget(dump)
+    g.deleteTree(target, Seq("customer->orders.o_custkey"), "customer", 1L to 3L)
+    target.close()
+    assert(DumpStore.readManifest(spark, dump).map { case graft.model.Operation.DeleteByPk(t, _, _) => t } ==
+      Seq("orders", "customer"))
   }
 }

@@ -24,58 +24,58 @@ class TreeWalkSpec extends SparkSpec {
     assert(sels(2).keys.count() == expLi)
 
     // cardinality invariant on the orders selection (CopyUtils.java:44-46)
-    assert(TreeWalk.selectRows(loader, sels(1)).count() == gotOrders)
+    assert(sels(1).rows.count() == gotOrders)
   }
 
   test("unreachable path errors ('Could not find path to')") {
-    val edges = PathDsl.parseAll(Seq("orders->lineitem.l_orderkey"), SchemaCatalog.walkPks)
     val e = intercept[RuntimeException] {
-      TreeWalk.walkLinked(loader, edges, SchemaCatalog.walkPks, roots = Map.empty)
+      TreeWalk.selectAlongPath(spark, loader, Seq("orders->lineitem.l_orderkey"),
+        SchemaCatalog.walkPks, "customer", 1L to 5L)
     }
     assert(e.getMessage.contains("Could not find path to"))
   }
 
   test("missing child PK errors ('no PK for')") {
-    val edges = PathDsl.parseAll(paths, SchemaCatalog.walkPks)
-    import org.apache.spark.sql.functions.col
-    val roots = Map("customer" -> load("customer").filter(col("c_custkey") <= 5).select("c_custkey"))
     val e = intercept[RuntimeException] {
-      TreeWalk.walkLinked(loader, edges, SchemaCatalog.starPks, roots) // starPks: lineitem has no PK
+      // starPks: lineitem has no PK
+      TreeWalk.selectAlongPath(spark, loader, paths, SchemaCatalog.starPks, "customer", 1L to 5L)
     }
     assert(e.getMessage.contains("no PK for lineitem"))
   }
 
-  test("multi-parent walk accumulates key unions (part AND supplier into lineitem)") {
+  test("a table reached twice filters onward on the union of its key sets (lineitem through orders and supplier)") {
     import org.apache.spark.sql.functions.col
-    val pks = SchemaCatalog.walkPks + ("lineitem" -> "l_orderkey")
-    val edges = PathDsl.parseAll(
-      Seq("part->lineitem.l_partkey", "supplier->lineitem.l_suppkey"), pks)
-    val roots = Map(
-      "part" -> load("part").filter(col("p_partkey") <= 5).select("p_partkey"),
-      "supplier" -> load("supplier").filter(col("s_suppkey") <= 2).select("s_suppkey"))
-    val sels = TreeWalk.walkLinked(loader, edges, pks, roots)
-    assert(sels.map(_.table) == Seq("lineitem", "lineitem"))
-    val byPart = load("lineitem").filter(col("l_partkey") <= 5)
-      .select("l_orderkey").distinct().count()
-    val bySupp = load("lineitem").filter(col("l_suppkey") <= 2)
-      .select("l_orderkey").distinct().count()
-    assert(sels(0).keys.count() == byPart)
-    assert(sels(1).keys.count() == bySupp)
+    val sels = TreeWalk.selectAlongPath(spark, loader,
+      Seq("nation->customer.c_nationkey", "nation->supplier.s_nationkey", "customer->orders.o_custkey",
+        "orders->lineitem.l_orderkey", "supplier->lineitem.l_suppkey", "lineitem->orders.o_orderkey"),
+      SchemaCatalog.walkPks, "nation", Seq(1L, 3L))
+    assert(sels.map(_.table) == Seq("nation", "customer", "supplier", "orders", "lineitem", "lineitem", "orders"))
+    val custOrders = load("orders").join(load("customer").filter(col("c_nationkey").isin(1, 3)),
+      col("o_custkey") === col("c_custkey"), "left_semi").select("o_orderkey")
+    val byOrders = load("lineitem").join(custOrders, col("l_orderkey") === col("o_orderkey"), "left_semi")
+      .select("l_orderkey").distinct()
+    val bySupp = load("lineitem").join(load("supplier").filter(col("s_nationkey").isin(1, 3)),
+      col("l_suppkey") === col("s_suppkey"), "left_semi").select("l_orderkey").distinct()
+    assert(sels(4).keys.count() == byOrders.count())
+    assert(sels(5).keys.count() == bySupp.count())
+    // the last level walks out of lineitem through both of its key sets
+    val union = byOrders.union(bySupp).distinct()
+    assert(union.count() > byOrders.count() && union.count() > bySupp.count())
+    assert(sels(6).keys.count() == union.count())
   }
 
   test("composite walk: lineitem selection carries its full (l_orderkey, l_linenumber) key") {
     import org.apache.spark.sql.functions.col
-    val sels = TreeWalk.selectAlongPathComposite(
-      spark, loader, paths, SchemaCatalog.compositeWalkPks, "customer", 1L to 10L)
-    val li = sels.last
+    val li = TreeWalk.walkHeld(loader, paths, SchemaCatalog.compositeWalkPks, "customer", 1L to 10L)(
+      TreeWalk.collectOnly).last.selection(spark)
     assert(li.table == "lineitem" && li.columns == Seq("l_orderkey", "l_linenumber"))
     val orderKeys = load("orders").filter(col("o_custkey").between(1, 10)).select("o_orderkey")
     val expPairs = load("lineitem")
       .join(orderKeys, col("l_orderkey") === col("o_orderkey"), "left_semi")
       .select("l_orderkey", "l_linenumber").distinct().count()
     assert(li.keys.count() == expPairs)
-    // selectRows/antiRows partition the table on the composite key
-    val n = TreeWalk.selectRows(loader, li).count() + TreeWalk.antiRows(loader, li).count()
+    // the level's rows and antiRows partition the table on the composite key
+    val n = li.rows.count() + TreeWalk.antiRows(loader, li).count()
     assert(n == load("lineitem").count())
   }
 
@@ -87,11 +87,11 @@ class TreeWalkSpec extends SparkSpec {
     assert(e.getMessage.contains("composite"))
   }
 
-  test("antiRows is the complement of selectRows") {
+  test("antiRows is the complement of the walked level's rows") {
     val sels = TreeWalk.selectAlongPath(
       spark, loader, Seq("customer->orders.o_custkey"), SchemaCatalog.walkPks, "customer", 1L to 10L)
     val sel = sels.last
-    val n = TreeWalk.selectRows(loader, sel).count() + TreeWalk.antiRows(loader, sel).count()
+    val n = sel.rows.count() + TreeWalk.antiRows(loader, sel).count()
     assert(n == load("orders").count())
   }
 
