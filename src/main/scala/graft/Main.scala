@@ -180,7 +180,7 @@ object Main {
         // upsert a parquet delta into a table by pk (the reference's
         // `update` script closure, Main.java:181-191)
         val g = graft(); val t = target(g, one("target"))
-        Target.committing(t)(g.update(t, one("table"), spark.read.parquet(one("delta")), one("pk")))
+        Target.committing(t)(g.update(t, one("table"), Tables.parquet(spark, one("delta")), one("pk")))
       case "replay" =>
         ops.Jdbc.replay(spark, one("dump"), one("url"), allowProd)
       case "ingest-jsonl" =>
@@ -282,7 +282,7 @@ object Main {
           .write.mode("overwrite").parquet(one("target"))
       case "export-jsonl" =>
         sources.CorpusIO.writeJsonl(
-          spark.read.parquet(one("path")), one("target"))
+          Tables.parquet(spark, one("path")), one("target"))
       case "curate-stream" =>
         // the continuous-curation loop: tail a JSONL landing directory,
         // screen each micro-batch against the persisted band index,
@@ -361,7 +361,7 @@ object Main {
         // tokenizer training from the command line: corpus parquet in,
         // ordered merges table out (ext/Corpus.bpeTrain)
         val n = parsed("merges", one("merges"))(_.toInt)
-        ext.Corpus.bpeTrain(spark.read.parquet(one("corpus")), numMerges = n)
+        ext.Corpus.bpeTrain(Tables.parquet(spark, one("corpus")), numMerges = n)
           .coalesce(1).write.mode("overwrite").parquet(one("target"))
       case "unigram-train" =>
         // the other tokenizer family from the command line: seed +
@@ -370,7 +370,7 @@ object Main {
         val vs = f("vocab-size").headOption
           .map(v => parsed("vocab-size", v)(_.toInt)).getOrElse(20)
         val pr = f("prune-to").headOption.map(v => parsed("prune-to", v)(_.toInt))
-        ext.Corpus.unigramTrain(spark.read.parquet(one("corpus")),
+        ext.Corpus.unigramTrain(Tables.parquet(spark, one("corpus")),
             rounds = r, vocabSize = vs, pruneTo = pr)
           .coalesce(1).write.mode("overwrite").parquet(one("target"))
       case "encode-corpus" =>
@@ -378,15 +378,15 @@ object Main {
         // PERSISTED tokenizer (bpe-train merges / unigram-train vocab)
         // to a corpus — the merges/vocab tables are model-sized, so
         // the bpe collect is a bounded driver action
-        val corpus = spark.read.parquet(one("corpus"))
+        val corpus = Tables.parquet(spark, one("corpus"))
         val encoded = one("method") match {
           case "bpe" =>
-            val merges = spark.read.parquet(one("vocab"))
+            val merges = Tables.parquet(spark, one("vocab"))
               .orderBy("rank").select("left_sym", "right_sym")
               .collect().map(r => (r.getString(0), r.getString(1))).toSeq
             ext.Corpus.bpeEncode(corpus, merges)
           case "unigram" =>
-            ext.Corpus.unigramEncode(corpus, spark.read.parquet(one("vocab")))
+            ext.Corpus.unigramEncode(corpus, Tables.parquet(spark, one("vocab")))
           case other => sys.error(s"unknown --method '$other' (bpe|unigram)\n$usageText")
         }
         encoded.write.mode("overwrite").parquet(one("target"))
@@ -400,7 +400,7 @@ object Main {
           .map(v => parsed("steps", v)(_.toInt)).getOrElse(3)
         val lr = f("lr").headOption
           .map(v => parsed("lr", v)(_.toDouble)).getOrElse(0.5)
-        ext.TextAnalysis.logregTrain(spark.read.parquet(one("corpus")),
+        ext.TextAnalysis.logregTrain(Tables.parquet(spark, one("corpus")),
             label = org.apache.spark.sql.functions.col("source")
               .startsWith(one("label-source-prefix")),
             buckets = buckets, steps = steps, lr = lr)
@@ -414,7 +414,7 @@ object Main {
         val bands = f("bands").headOption.map(v => parsed("bands", v)(_.toInt)).getOrElse(3)
         val rpb = f("rows-per-band").headOption
           .map(v => parsed("rows-per-band", v)(_.toInt)).getOrElse(2)
-        val docs = spark.read.parquet(one("corpus")).localCheckpoint()
+        val docs = Tables.parquet(spark, one("corpus")).localCheckpoint()
         val pairs = ext.Dedup.candidatePairs(ext.Dedup.lshBands(
           ext.Dedup.minhash(docs, bands * rpb), bands, rpb)).localCheckpoint()
         val deduped = ext.Dedup.dedupCorpus(docs, pairs).localCheckpoint()
@@ -469,7 +469,7 @@ object Main {
         // ratio) or DSIR (hashed-distribution importance), keep top-k
         val method = f("method").headOption.getOrElse("moore-lewis")
         val k = parsed("k", one("k"))(_.toInt)
-        val corpus = spark.read.parquet(one("corpus"))
+        val corpus = Tables.parquet(spark, one("corpus"))
         val prefix = one("target-source-prefix")
         val inDom = corpus.filter(
           org.apache.spark.sql.functions.col("source").startsWith(prefix))
@@ -487,13 +487,13 @@ object Main {
         val cols = f("cols").flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
         if (cols.isEmpty) sys.error(s"missing --cols\n$usageText")
         ops.SnapshotDiff.diff(
-            spark.read.parquet(one("prev")), spark.read.parquet(one("next")),
+            Tables.parquet(spark, one("prev")), Tables.parquet(spark, one("next")),
             one("id"), cols)
           .coalesce(1).write.mode("overwrite").parquet(one("target"))
       case "prepare-code" =>
         // code-corpus prep: language id + license + quality stats
         // joined on the file id — one pass each, no corpus reshuffle
-        val files = spark.read.parquet(one("files"))
+        val files = Tables.parquet(spark, one("files"))
         val lang = ext.CodeCorpus.codeLangId(files)
         val out = lang
           .join(ext.CodeCorpus.licenseScan(files), "file_id")
@@ -503,26 +503,26 @@ object Main {
       case "chunk-corpus" =>
         val size = f("size").headOption.map(_.toInt).getOrElse(512)
         val ov = f("overlap").headOption.map(_.toInt).getOrElse(64)
-        ext.TextAnalysis.chunkText(spark.read.parquet(one("corpus")),
+        ext.TextAnalysis.chunkText(Tables.parquet(spark, one("corpus")),
             size = size, overlap = ov)
           .write.mode("overwrite").parquet(one("target"))
       case "score-eval" =>
-        ext.Eval.evalScores(spark.read.parquet(one("preds")))
+        ext.Eval.evalScores(Tables.parquet(spark, one("preds")))
           .write.mode("overwrite").parquet(one("target"))
       case "mine-bitext" =>
         val planes = f("planes").headOption.map(_.toInt).getOrElse(4)
         val dim = f("dim").headOption.map(_.toInt).getOrElse(64)
         val k = f("k").headOption.map(_.toInt).getOrElse(4)
         val th = f("threshold").headOption.map(_.toDouble).getOrElse(1.05)
-        ext.Similarity.bitextMine(spark.read.parquet(one("src")),
-            spark.read.parquet(one("tgt")), planes = planes, dim = dim,
+        ext.Similarity.bitextMine(Tables.parquet(spark, one("src")),
+            Tables.parquet(spark, one("tgt")), planes = planes, dim = dim,
             k = k, threshold = th)
           .write.mode("overwrite").parquet(one("target"))
       case "extract-archive" =>
         // the crawl-container tier behind one verb: each format is
         // the narrow kernel pipeline documented on its operator
         import org.apache.spark.sql.functions.{col, posexplode}
-        val docs = spark.read.parquet(one("payloads"))
+        val docs = Tables.parquet(spark, one("payloads"))
         val out = one("format") match {
           case "warc-gz" =>
             ext.TextAnalysis.warcParseGzFile(docs)

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.Tables
 import graft.model.{FkEdge, TableDef}
 
 /** Catalog over a directory of parquet tables — plays the role of the
@@ -14,7 +15,8 @@ import graft.model.{FkEdge, TableDef}
   *
   * Table discovery goes through the Hadoop FileSystem API, so the same
   * code works on local disk, HDFS, or object storage on a cluster;
-  * schemas come from parquet footers (no data read).
+  * schemas come from parquet footers read on the driver (no data
+  * read, no Spark job).
   */
 final class SchemaCatalog(spark: SparkSession, dir: String,
                           pks: Map[String, String] = SchemaCatalog.starPks,
@@ -38,7 +40,9 @@ final class SchemaCatalog(spark: SparkSession, dir: String,
 
   /** All table definitions, footer reads fanned out on the driver's
     * thread pool: each read is an independent remote metadata fetch,
-    * and a 10k-table lake would crawl through them serially. */
+    * and a 10k-table lake would crawl through them serially. Each
+    * schema is read on the driver ([[Tables.schemaOf]]), with no Spark
+    * job per table. */
   def tableDefs: Seq[TableDef] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
@@ -47,7 +51,7 @@ final class SchemaCatalog(spark: SparkSession, dir: String,
   }
 
   def schemaOf(name: String): StructType =
-    spark.read.parquet(s"$dir/$name.parquet").schema
+    Tables.schemaOf(spark, s"$dir/$name.parquet")
 
   /** S5: single-column PK per table. The reference hard-errors on
     * multi-column PKs (`CopyUtils.java:410-412`); our map encodes only

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Approximate/exact nearest-neighbor search over an embedding column
   * (`ArrayType(FloatType)`) — SURVEY.md §2.11.
   *
@@ -538,14 +540,14 @@ object Similarity {
   /** Persisted centroid partials. */
   private[graft] def readPartials(spark: org.apache.spark.sql.SparkSession,
                                   path: String): DataFrame =
-    spark.read.parquet(requireMeta(spark, path))
+    Tables.parquet(spark, requireMeta(spark, path))
       .filter(col("side") === "partials")
       .select(col("__cell"), col("__pos"), col("__sum"), col("__cnt"))
 
   /** Persisted centroids. */
   private[graft] def readCentroids(spark: org.apache.spark.sql.SparkSession,
                                    path: String): DataFrame =
-    spark.read.parquet(requireMeta(spark, path))
+    Tables.parquet(spark, requireMeta(spark, path))
       .filter(col("side") === "centroid")
       .select(col("__cell"), col("__centroid"))
 
@@ -681,10 +683,10 @@ object Similarity {
     requireMeta(spark, path)
     if (!fs.exists(tPath)) return
     val kind = quantizerKind(spark, path)
-    val tomb = spark.read.parquet(s"$path/tombstones")
+    val tomb = Tables.parquet(spark, s"$path/tombstones")
       .localCheckpoint(eager = false)
     val tCol = tomb.columns.head
-    val assigned = spark.read.parquet(s"$path/assigned")
+    val assigned = Tables.parquet(spark, s"$path/assigned")
       .withColumn("__cell", col("__cell").cast("int"))
     require(assigned.columns.contains(tCol),
       s"tombstone column '$tCol' is not a column of the assigned table " +
@@ -751,7 +753,7 @@ object Similarity {
     * raises rather than defaulting to a kind. */
   private[graft] def quantizerKind(spark: org.apache.spark.sql.SparkSession,
                             path: String): String =
-    spark.read.parquet(requireMeta(spark, path))
+    Tables.parquet(spark, requireMeta(spark, path))
       .filter(col("side") === "quantizer")
       .select(col("q")).head().getString(0)
 
@@ -760,10 +762,10 @@ object Similarity {
     * anti-join against the small tombstone table), so deleted vectors
     * never reach a probe even before [[ivfCompactDeletes]] runs. */
   def ivfRead(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-    val assigned0 = spark.read.parquet(s"$path/assigned")
+    val assigned0 = Tables.parquet(spark, s"$path/assigned")
     val assigned =
       if (pathExists(spark, s"$path/tombstones")) {
-        val tomb = spark.read.parquet(s"$path/tombstones")
+        val tomb = Tables.parquet(spark, s"$path/tombstones")
         assigned0.join(broadcast(tomb), Seq(tomb.columns.head), "left_anti")
       } else assigned0
     IvfIndex(assigned, readCentroids(spark, path), quantizerKind(spark, path))
@@ -1046,8 +1048,8 @@ object Similarity {
 
   /** Reload a persisted PQ index. */
   def pqRead(spark: org.apache.spark.sql.SparkSession, path: String): PqIndex =
-    PqIndex(spark.read.parquet(s"$path/codes"),
-      spark.read.parquet(s"$path/centroids"))
+    PqIndex(Tables.parquet(spark, s"$path/codes"),
+      Tables.parquet(spark, s"$path/centroids"))
 
   /** Per-(vector, subspace) quantization audit: the assigned code and
     * the exact squared reconstruction error of that subspace,

@@ -5,7 +5,8 @@ import java.nio.ByteBuffer
 import org.apache.hadoop.hive.common.io.DiskRangeList
 import org.apache.orc.{CompressionCodec, CompressionKind, OrcProto}
 import org.apache.orc.impl.{BufferChunk, InStream, OrcCodecPool, PositionProvider}
-import org.apache.orc.protobuf.{GeneratedMessageV3, Parser}
+import org.apache.orc.protobuf.{GeneratedMessageV3, Message, Parser}
+import org.apache.orc.protobuf.Descriptors.FieldDescriptor
 
 /** ORC's protobuf messages — `PostScript`, `Footer`, `StripeFooter`,
   * `BloomFilterIndex` — and its streams, read out of whole-file bytes by
@@ -57,7 +58,7 @@ private[functions] object OrcProtos {
     private val psLen = bytes(n - 1) & 0xff
     if (psLen < 4 || n - 1 - psLen < 3) throw Bad
     val ps: OrcProto.PostScript =
-      OrcProto.PostScript.parser.parseFrom(bytes, n - 1 - psLen, psLen)
+      noGroups(OrcProto.PostScript.parser.parseFrom(bytes, n - 1 - psLen, psLen))
     if (ps.getMagic != "ORC" || ps.getFooterLength <= 0) throw Bad
     private val footerStart = n - 1 - psLen - ps.getFooterLength
     if (footerStart < 3) throw Bad
@@ -107,11 +108,11 @@ private[functions] object OrcProtos {
     }
 
     /** The message `p` reads from the `len` file bytes at `off`, at most
-      * `cap` bytes once decompressed. */
-    def parse[T](p: Parser[T], off: Long, len: Long, cap: Int): T = {
+      * `cap` bytes once decompressed, refused if it holds a group. */
+    def parse[T <: Message](p: Parser[T], off: Long, len: Long, cap: Int): T = {
       val in = InStream.createCodedInputStream(raw(off, len, cap))
       in.setSizeLimit(cap)
-      p.parseFrom(in)
+      noGroups(p.parseFrom(in))
     }
 
     def footer(cap: Int): OrcProto.Footer =
@@ -150,6 +151,24 @@ private[functions] object OrcProtos {
       if (found._1 >= 0 && found._2 > stripeEnd(s) - found._1) throw Bad
       found
     }
+  }
+
+  /** `m`, or [[Bad]] when a proto2 group (wire type 3) sits among the
+    * unknown fields of `m` or of any message inside it. ORC's messages
+    * have no groups, so a group is a damaged tag; protobuf keeps it as
+    * one unknown field, and every field up to its end tag vanishes. */
+  private def noGroups[T <: Message](m: T): T = {
+    def walk(x: Message): Unit = {
+      if (x.getUnknownFields.asMap.values.stream.anyMatch(!_.getGroupList.isEmpty)) throw Bad
+      x.getAllFields.forEach { (f, v) =>
+        if (f.getJavaType == FieldDescriptor.JavaType.MESSAGE) v match {
+          case l: java.util.List[_] => l.forEach(e => walk(e.asInstanceOf[Message]))
+          case e => walk(e.asInstanceOf[Message])
+        }
+      }
+    }
+    walk(m)
+    m
   }
 
   /** `in`, throwing `EOFException` where it would return -1 at its end.

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.Target
+import graft.{Tables, Target}
 import graft.model.{FkEdge, Operation, TableDef}
 import graft.model.Operation._
 
@@ -236,12 +236,15 @@ object DumpStore {
     (ops, entries.flatMap { case (_, op, schema) => payloadOf(op).zip(schema) }.toMap)
   }
 
-  /** A payload under `dumpDir`, read with its recorded schema when there
-    * is one: that skips the one-task schema-inference job Spark runs
-    * for every `read.parquet` without a schema. */
+  /** A payload under `dumpDir`, read with its recorded schema; a
+    * manifest that records none (the older format) has the schema read
+    * from the payload's footer ([[Tables.parquet]]). Neither runs Spark's
+    * one-task schema-inference job. */
   private[graft] def readPayload(spark: SparkSession, dumpDir: String, payload: String,
-                                 schemas: Map[String, StructType]): DataFrame =
-    schemas.get(payload).fold(spark.read)(spark.read.schema(_)).parquet(s"$dumpDir/$payload")
+                                 schemas: Map[String, StructType]): DataFrame = {
+    val path = s"$dumpDir/$payload"
+    schemas.get(payload).fold(Tables.parquet(spark, path))(spark.read.schema(_).parquet(path))
+  }
 
   /** One manifest line → (seq, Operation, recorded payload schema); a
     * missing or mistyped field is an error. */
@@ -335,7 +338,7 @@ object DumpStore {
     * overwritten from a plan that reads them. */
   private def overwriteTable(spark: SparkSession, table: String, df: DataFrame, staging: String): Unit = {
     df.write.mode(SaveMode.Overwrite).parquet(staging)
-    spark.read.parquet(staging)
+    Tables.parquet(spark, staging)
       .write.mode(SaveMode.Overwrite).insertInto(table)
   }
 }

@@ -251,7 +251,8 @@ object Jdbc {
     * `import <dump> <alias>` path (`Main.java:84-90`) with parquet
     * payloads instead of Java serialization. Payloads are read with the
     * schemas the manifest records, so replay runs no schema-inference
-    * job; a manifest without them is read by inference. */
+    * job; a manifest without them has each schema read from the
+    * payload's parquet footer on the driver, again without a job. */
   def replay(spark: SparkSession, dumpDir: String, url: String,
              allowProduction: Boolean = false): Unit = {
     import graft.model.Operation._

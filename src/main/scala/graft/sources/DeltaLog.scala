@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Tables
+
 /** Delta-Lake transaction-log census — the lake-discovery tier for
   * the most common open table format layered over parquet (the log
   * protocol is public: `_delta_log/` holds zero-padded
@@ -137,7 +139,7 @@ object DeltaLog {
               n.endsWith(".parquet") && n.count(_ == '.') == 3).sorted
             if (uuidParquet.nonEmpty) {
               val top = new Path(logDir, uuidParquet.head).toString
-              val topDf = spark.read.parquet(top)
+              val topDf = Tables.parquet(spark, top)
               val sidecars =
                 if (!topDf.columns.contains("sidecar")) Seq.empty[String]
                 else topDf.select(col("sidecar.path"))
@@ -213,12 +215,12 @@ object DeltaLog {
       ck.select(cols: _*)
     }
     val fromCkpt = log.checkpoint.map { case (paths, v) =>
-      val top = conform(spark.read.parquet(paths: _*))
+      val top = conform(Tables.parquet(spark, paths: _*))
         .withColumn("version", lit(v))
       // v2 sidecars hold the file actions — same conform, same
       // checkpoint version, read as one distributed parquet scan
       if (log.sidecars.isEmpty) top
-      else top.unionByName(conform(spark.read.parquet(log.sidecars: _*))
+      else top.unionByName(conform(Tables.parquet(spark, log.sidecars: _*))
         .withColumn("version", lit(v)))
     }
     (fromJson, fromCkpt) match {

@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.Tables
 import graft.ext.Dedup
 
 /** The continuous-curation loop — the production composition of
@@ -295,7 +296,7 @@ object CurationStream {
     val fs = new org.apache.hadoop.fs.Path(dp)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     histVersions(fs, dp).lastOption
-      .map { case (_, p) => spark.read.parquet(p.toString) }
+      .map { case (_, p) => Tables.parquet(spark, p.toString) }
   }
 
   /** One drift-monitor tick for one micro-batch: write the psi row
@@ -321,12 +322,12 @@ object CurationStream {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val psiP = s"$dp/psi"
     val seen = fs.exists(new org.apache.hadoop.fs.Path(psiP)) &&
-      !spark.read.parquet(psiP).filter(col("batch_id") === batchId).isEmpty
+      !Tables.parquet(spark, psiP).filter(col("batch_id") === batchId).isEmpty
     if (!seen) {
       val bHist = batchHist.localCheckpoint()
       val versions = histVersions(fs, dp)
       val baseline = versions.lastOption
-        .map { case (_, p) => spark.read.parquet(p.toString) }
+        .map { case (_, p) => Tables.parquet(spark, p.toString) }
       val psiRow = baseline match {
         case Some(hist) =>
           graft.ext.Corpus.psiFromHists(hist, bHist)
@@ -382,10 +383,10 @@ object CurationStream {
               maxBucket: Int = Int.MaxValue): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(droppedBandsPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = spark.read.parquet(indexPath)
+    val live = Tables.parquet(spark, indexPath)
     val dead =
       if (fs.exists(new org.apache.hadoop.fs.Path(droppedBandsPath)))
-        spark.read.parquet(droppedBandsPath)
+        Tables.parquet(spark, droppedBandsPath)
       else live.limit(0)
     // .distinct(): at-least-once appends can duplicate graveyard rows;
     // duplicate ids in one bucket would only add self-pairs, but the
@@ -397,7 +398,7 @@ object CurationStream {
       .filter(col("comp") =!= col(idCol))
       .select(col(idCol))
       .localCheckpoint() // bounded by the duplicate mass
-    val corpus = spark.read.parquet(corpusPath)
+    val corpus = Tables.parquet(spark, corpusPath)
     val evicted = corpus.select(col(idCol))
       .join(losers, Seq(idCol), "left_semi")
       .localCheckpoint()

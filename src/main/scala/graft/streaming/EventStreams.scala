@@ -6,6 +6,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.Row
 
+import graft.Tables
+
 /** Streaming analytics over the `events` table (SURVEY.md §2.11):
   * tumbling/sliding windows, session windows, and a Structured
   * Streaming pipeline with watermarks. The same transformations run in
@@ -51,7 +53,7 @@ object EventStreams {
     }
 
   def load(spark: SparkSession, dir: String): DataFrame =
-    withEventTime(spark.read.parquet(s"$dir/events.parquet"))
+    withEventTime(Tables.parquet(spark, s"$dir/events.parquet"))
 
   /** Tumbling-window counts/sums per event type. */
   def tumbling(events: DataFrame, width: String = "10 minutes"): DataFrame =
@@ -117,7 +119,7 @@ object EventStreams {
     * stream (a plain dropDuplicates would hold every key forever). */
   def streamingDedup(spark: SparkSession, dir: String, keys: Seq[String],
                      lateness: String = "10 minutes"): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schemaOf(spark, s"$dir/events.parquet")
     val stream = withEventTime(
       spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -156,7 +158,7 @@ object EventStreams {
   def streamingSessions(spark: SparkSession, dir: String,
                         gap: String = "30 minutes",
                         lateness: String = "10 minutes"): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schemaOf(spark, s"$dir/events.parquet")
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     withEventTime(stream)
@@ -174,7 +176,7 @@ object EventStreams {
   def streamingTumbling(spark: SparkSession, dir: String,
                         width: String = "10 minutes",
                         lateness: String = "10 minutes"): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schemaOf(spark, s"$dir/events.parquet")
     // FileStreamSource wants a directory; glob-filter to the events file
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -246,7 +248,7 @@ object EventStreams {
                             leftType: String, rightType: String,
                             horizon: String = "10 minutes",
                             lateness: String = "10 minutes"): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schemaOf(spark, s"$dir/events.parquet")
     def side(tpe: String, idAs: String, tsAs: String) = withEventTime(
       spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -321,7 +323,7 @@ object EventStreams {
                         idleTimeout: Option[String] = Some("1 hour")): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schemaOf(spark, s"$dir/events.parquet")
     val stream = withEventTime(
       spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -421,7 +423,7 @@ object EventStreams {
   def streamingZscore(spark: SparkSession, dir: String, moments: DataFrame,
                       width: String = "10 minutes",
                       lateness: String = "10 minutes"): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schemaOf(spark, s"$dir/events.parquet")
     val stream = withEventTime(
       spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))

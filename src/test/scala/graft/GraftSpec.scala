@@ -411,6 +411,13 @@ class GraftSpec extends SparkSpec {
     assert(ops.map(_.kind) == Seq.fill(3)("table_load"))
     assert(schemas.keySet == Set("payloads/customer_0", "payloads/orders_1", "payloads/lineitem_2"))
     assert(schemas("payloads/orders_1") == spark.read.parquet(s"$dump/payloads/orders_1").schema)
+    val jobs = replayJobs(dump, url)
+    assert(jobs == 3, s"replay ran $jobs jobs for 3 loads")
+    payloadRows(dump).foreach { case (t, n) => assert(Jdbc.read(spark, url, t).count() == n, t) }
+  }
+
+  /** Spark jobs `Jdbc.replay` of `dump` into `url` runs. */
+  private def replayJobs(dump: String, url: String): Int = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
@@ -422,16 +429,16 @@ class GraftSpec extends SparkSpec {
       Jdbc.replay(spark, dump, url)
       ListenerBusDrain(sc)
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 3, s"replay ran ${jobs.get} jobs for 3 loads")
-    payloadRows(dump).foreach { case (t, n) => assert(Jdbc.read(spark, url, t).count() == n, t) }
+    jobs.get
   }
 
-  test("a manifest without payload schemas (the older format) still replays, by inference") {
+  test("a manifest without payload schemas (the older format) replays in three jobs: schemas come from the payload footers") {
     val (dump, url) = treeDumpAndDb()
     DumpStore.writeManifest(spark, dump, DumpStore.readManifest(spark, dump))
     val manifest = new String(Files.readAllBytes(java.nio.file.Paths.get(dump, "manifest.jsonl")), "UTF-8")
     assert(!manifest.contains("\"schema\""))
-    Jdbc.replay(spark, dump, url)
+    val jobs = replayJobs(dump, url)
+    assert(jobs == 3, s"replay ran $jobs jobs for 3 loads")
     payloadRows(dump).foreach { case (t, n) => assert(Jdbc.read(spark, url, t).count() == n, t) }
   }
 

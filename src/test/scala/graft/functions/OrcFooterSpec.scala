@@ -160,4 +160,68 @@ class OrcFooterSpec extends SparkSpec {
     val zero = ok.take(ok.length - 1 - psLen) ++ ps0 ++ Array(ps0.length.toByte)
     assert(OrcFooterMeta.compute(zero, 1 << 24).getLong(2) == 10L)
   }
+
+  test("a footer holding a proto2 group at any depth gives null from " +
+    "orc_column_stats and orc_stripes; the undamaged file's answers stay") {
+    import org.apache.orc.OrcProto
+    import org.apache.orc.protobuf.{Message, UnknownFieldSet}
+    val ok = onePartBytes { dir =>
+      spark.range(0, 100).selectExpr("id", "cast(id as string) as s")
+        .coalesce(1).write.mode("overwrite").option("compression", "none").orc(dir)
+    }
+    val psLen = ok.last & 0xff
+    val ps = OrcProto.PostScript.parseFrom(ok.slice(ok.length - 1 - psLen, ok.length - 1))
+    val footerStart = ok.length - 1 - psLen - ps.getFooterLength.toInt
+    val footerBytes = ok.slice(footerStart, footerStart + ps.getFooterLength.toInt)
+    val footer = OrcProto.Footer.parseFrom(footerBytes)
+    // the file with its footer bytes replaced
+    def withFooter(fb: Array[Byte]): Array[Byte] = {
+      val ps2 = ps.toBuilder.setFooterLength(fb.length.toLong).build.toByteArray
+      ok.take(footerStart) ++ fb ++ ps2 ++ Array(ps2.length.toByte)
+    }
+    def hasGroup(m: Message): Boolean =
+      m.getUnknownFields.asMap.values.stream.anyMatch(!_.getGroupList.isEmpty) ||
+        m.getAllFields.values.stream.anyMatch {
+          case l: java.util.List[_] => l.stream.anyMatch {
+            case e: Message => hasGroup(e)
+            case _ => false
+          }
+          case e: Message => hasGroup(e)
+          case _ => false
+        }
+    def answers(bytes: Array[Byte]) =
+      (OrcColumnStats.compute(bytes, 1 << 24), OrcStripeStats.compute(bytes, 1 << 24))
+    val (stats, stripes) = answers(ok)
+    assert(stats != null && stats.numElements() == 3 && stripes != null)
+    // the undamaged footer, re-serialized, answers as before
+    val (stats0, stripes0) = answers(withFooter(footer.toByteArray))
+    assert(stats0.toSeq[AnyRef](null).map(String.valueOf) == stats.toSeq[AnyRef](null).map(String.valueOf))
+    assert(stripes0.numElements() == stripes.numElements())
+
+    // one tag byte flipped to wire type 3, where protobuf still parses
+    // the footer: the group swallows fields up to a matching end tag
+    val flipped = footerBytes.indices.iterator.map { i =>
+      val b = footerBytes.clone()
+      b(i) = ((b(i) & ~7) | 3).toByte
+      b
+    }.find { b =>
+      try hasGroup(OrcProto.Footer.parseFrom(b))
+      catch { case _: org.apache.orc.protobuf.InvalidProtocolBufferException => false }
+    }
+    // a group nested in a repeated sub-message, and one a level deeper
+    val group = UnknownFieldSet.newBuilder().addField(15, UnknownFieldSet.Field.newBuilder()
+      .addGroup(UnknownFieldSet.newBuilder().addField(1,
+        UnknownFieldSet.Field.newBuilder().addVarint(1).build()).build()).build()).build()
+    val inStripe = footer.toBuilder.setStripes(0,
+      footer.getStripes(0).toBuilder.setUnknownFields(group)).build
+    val s1 = footer.getStatistics(1)
+    val inIntStats = footer.toBuilder.setStatistics(1, s1.toBuilder.setIntStatistics(
+      s1.getIntStatistics.toBuilder.setUnknownFields(group))).build
+    val damaged = flipped.toSeq ++ Seq(inStripe.toByteArray, inIntStats.toByteArray)
+    assert(flipped.isDefined)
+    damaged.foreach { fb =>
+      assert(hasGroup(OrcProto.Footer.parseFrom(fb)))
+      assert(answers(withFooter(fb)) == ((null, null)))
+    }
+  }
 }
